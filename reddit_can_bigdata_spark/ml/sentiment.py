@@ -239,11 +239,15 @@ def train_sentiment(docs: DataFrame, text_col: str = "text", id_col: str = "doc_
         # the UI/status store
         spark = feat_train.sparkSession
         spark.sparkContext.setJobDescription(f"sentiment fit: {mname}")
-        model = clf.fit(feat_train)
-        # per-thread evaluator copy: evaluate() is read-only over its
-        # params, but copies are free and remove any sharing question
-        acc = evaluator.copy().evaluate(model.transform(feat_test))
-        spark.sparkContext.setJobDescription(None)
+        try:
+            model = clf.fit(feat_train)
+            # per-thread evaluator copy: evaluate() is read-only over its
+            # params, but copies are free and remove any sharing question
+            acc = evaluator.copy().evaluate(model.transform(feat_test))
+        finally:
+            # the pool thread is reused: a failed fit must not leave its
+            # label on the next job submitted from this thread
+            spark.sparkContext.setJobDescription(None)
         return mname, (model, acc)
 
     with ThreadPoolExecutor(max_workers=len(classifiers)) as pool:

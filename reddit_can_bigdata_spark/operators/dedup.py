@@ -402,8 +402,8 @@ def dedup_ngram_jaccard(
     # the shingle→df-join subtree (runtime exchange reuse was not
     # evidencable and measured unreliable — round-11 verdict item #4).
     # One checkpoint pass replaces them; integer counts, values
-    # unchanged (A/B in tools/ab_lsh_quality.py: wall −28%, cpu −13%
-    # on the composed quality query).
+    # unchanged (A/B in OPTIMIZATION_r12.md change 2: wall −28%, cpu
+    # −13% on the composed quality query).
     rare = rare.localCheckpoint(eager=True)
     sizes = rare.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     r1, r2 = rare.alias("r1"), rare.alias("r2")
@@ -817,8 +817,8 @@ def dedup_lsh_quality(
     composed plan (exact arm's two self-join legs + the LSH
     signatures), and the round-11 probe measured the composition at
     5.6× the cpu of its arms combined at sf1 (477 vs 85 cpu-s) when
-    reuse broke down. The round-12 A/B at sf0.1 (tools/ab_lsh_quality
-    .py, n=3 medians, same session): reuse wall 4.15s / cpu 10.4;
+    reuse broke down. The round-12 A/B at sf0.1 (OPTIMIZATION_r12.md
+    change 2, n=3 medians, same session): reuse wall 4.15s / cpu 10.4;
     checkpointed base + checkpointed `rare` wall 3.0s / cpu 9.1 —
     checkpoint wins at bench scale too, unlike the round-11 .cache()
     experiment (InMemoryRelation columnar encode/decode cost more than

@@ -245,20 +245,20 @@ def g2_degree_centrality(
     ``GraphArrays``) lets it read degrees off the shared CSR with zero
     edge-table passes (optimization round 11)."""
     if graph is None and edges is None:
-        # Standalone call: resolve through the kernel tier like every
-        # other graph query (optimization round 12). collect_graph_raw
-        # makes the gate a filesystem stat and the edge build ~0.3s of
-        # driver numpy, so the earlier judgment that "collecting just
-        # to count row lengths costs more than it saves" no longer
-        # holds: A/B at sf0.1 (n=4, values identical) — distributed
-        # 1.88s wall / 3.4 cpu-s vs kernel 0.63s / 0.12. Above the
-        # raw/kernel gates this returns None and the one-aggregate
-        # distributed plan below is unchanged (the 100 TB path).
+        # Standalone call: take the kernel tier only through the raw
+        # collect (optimization round 12). collect_graph_raw makes the
+        # gate a filesystem stat and the edge build ~0.3s of driver
+        # numpy: A/B at sf0.1 (n=4, values identical) — distributed
+        # 1.88s wall / 3.4 cpu-s vs kernel 0.63s / 0.12. Above the raw
+        # gate the distributed edge aggregate would cost a count job
+        # plus an Arrow collect just to read row lengths, more than
+        # the one-aggregate distributed plan below that it replaces, so
+        # a raw-gate miss goes straight to that plan (the 100 TB path).
         from reddit_can_bigdata_spark.operators.graphkernel import (
-            collect_graph_auto,
+            collect_graph_raw,
         )
 
-        graph = collect_graph_auto(spark, sf_dir)
+        graph = collect_graph_raw(spark, sf_dir)
     if graph is not None:
         from reddit_can_bigdata_spark.operators.graphkernel import degree_kernel_df
 

@@ -878,8 +878,8 @@ def pretrain_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partially-aggregated groupBy (the only shuffle this adds carries
     # one (doc_id, n_grams, partial count) row per doc per partition).
     # Same md5 bit positions — the oracle's hash scheme is untouched —
-    # and A/B-identical output (tools/ab_bloom.py: cpu 6.3 -> 3.6,
-    # wall 1.65 -> 1.37, 4948 rows byte-equal).
+    # and A/B-identical output (OPTIMIZATION_r12.md change 1: cpu
+    # 6.3 -> 3.6, wall 1.65 -> 1.37, 4948 rows byte-equal).
     exploded = (
         g.where(~is_eval)
         .select(

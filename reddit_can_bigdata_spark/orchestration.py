@@ -223,7 +223,11 @@ def _pipeline_e2e_oracle() -> str:
     generator ever produced docs the assembler drops, this oracle
     hash-mismatches loudly — it asserts the stronger invariant on
     purpose."""
-    from reddit_can_bigdata_spark.operators.influencer import _influencer_oracle
+    # importing the module registers the composite and its oracle
+    from reddit_can_bigdata_spark.operators import influencer  # noqa: F401
+    from reddit_can_bigdata_spark.registry import REGISTRY
+
+    top20_oracle = REGISTRY["influencer_composite_top20"].oracle
 
     return f"""
     WITH s AS (
@@ -255,7 +259,7 @@ def _pipeline_e2e_oracle() -> str:
                       AND processed_posts > 0
                      THEN 100.0 ELSE 0.0 END AS DOUBLE) AS ml_coverage_pct,
            CAST(CASE WHEN network_branch = 'run_network_analysis'
-                     THEN (SELECT COUNT(*) FROM ({_influencer_oracle()}))
+                     THEN (SELECT COUNT(*) FROM ({top20_oracle}))
                      ELSE 0 END AS BIGINT) AS network_users
     FROM g
     """

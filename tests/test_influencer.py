@@ -26,6 +26,34 @@ def test_user_network_table_shape(spark, sf_dir):
         assert 0.0 <= c["pagerank"] <= 1.0
 
 
+def test_user_network_table_one_graph_pass(spark, sf_dir, monkeypatch):
+    """The per-user table collects the graph once and flags exactly the
+    nodes the auto-gated top-20 composite ranks."""
+    from reddit_can_bigdata_spark.operators import graphkernel
+    from reddit_can_bigdata_spark.operators.influencer import (
+        influencer_composite_top20,
+        user_network_table,
+    )
+
+    calls = []
+    raw = graphkernel.collect_graph_raw
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return raw(*a, **kw)
+
+    monkeypatch.setattr(graphkernel, "collect_graph_raw", counted)
+    flagged = {
+        r["user"]
+        for r in user_network_table(spark, sf_dir)
+        .where("is_influencer")
+        .collect()
+    }
+    assert len(calls) == 1
+    top = influencer_composite_top20(spark, sf_dir, closeness_mode=None)
+    assert flagged == {r["node"] for r in top.collect()}
+
+
 def test_network_metadata_singleton(spark, sf_dir):
     from reddit_can_bigdata_spark.operators.influencer import network_metadata
 

@@ -8,9 +8,15 @@ order-dependent, so this tolerance is belt-and-braces)."""
 from __future__ import annotations
 
 import math
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
+from reddit_can_bigdata_spark.operators.graphkernel import (
+    GRAPH_KERNEL_MAX_EDGES_CONF,
+    GRAPH_RAW_COLLECT_MAX_BYTES_CONF,
+)
 from reddit_can_bigdata_spark.registry import REGISTRY, _ensure_loaded
 
 _ensure_loaded()
@@ -43,8 +49,7 @@ def _normalize(rows, cols):
     return sorted(out, key=lambda t: tuple(str(x) for x in t))
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_matches_oracle(name, spark, duck, sf_dir):
+def _check_oracle(name, spark, duck, sf_dir):
     spec = REGISTRY[name]
     sdf = spec.fn(spark, sf_dir)
     spark_cols = sdf.columns
@@ -67,3 +72,72 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
     ns, nd = _normalize(spark_rows, spark_cols), _normalize(duck_rows, duck_cols)
     mismatches = [(a, b) for a, b in zip(ns, nd) if a != b]
     assert not mismatches, f"{name}: {len(mismatches)} mismatched rows, first 3: {mismatches[:3]}"
+
+
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_query_matches_oracle(name, spark, duck, sf_dir):
+    _check_oracle(name, spark, duck, sf_dir)
+
+
+@contextmanager
+def _conf(spark, **confs):
+    """Set session confs for the block, then restore the previous
+    values (unset where there was none)."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# the gate row decides whether the DAG's network stage runs at all
+_LOOP_TIER = sorted(n for n, s in REGISTRY.items() if "graph" in s.tags) + [
+    "pipeline_gate_report"
+]
+
+
+@pytest.mark.parametrize("name", _LOOP_TIER)
+def test_query_matches_oracle_loop_tier(name, spark, duck, sf_dir):
+    """The same comparison with the kernel tier off: every graph query
+    runs its distributed loops, and the composites take the side of
+    their dense fork that pools and checkpoints the arms."""
+    with _conf(spark, **{GRAPH_KERNEL_MAX_EDGES_CONF: "0"}):
+        _check_oracle(name, spark, duck, sf_dir)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` submits, counted through a private job group."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_g2_raw_gate_miss_adds_no_count_job(spark, duck, sf_dir):
+    """Standalone g2 above the raw-collect gate goes straight to its
+    one-aggregate distributed plan: an open kernel gate (1 edge) must
+    not add a count probe over the kernel tier being off (0)."""
+    from reddit_can_bigdata_spark.operators.graph import g2_degree_centrality
+
+    jobs = {}
+    for limit in ("0", "1"):
+        with _conf(
+            spark,
+            **{GRAPH_RAW_COLLECT_MAX_BYTES_CONF: "0", GRAPH_KERNEL_MAX_EDGES_CONF: limit},
+        ):
+            jobs[limit] = _jobs(
+                spark, lambda: g2_degree_centrality(spark, sf_dir).collect()
+            )
+            _check_oracle("g2_degree_centrality", spark, duck, sf_dir)
+    assert jobs["1"] == jobs["0"] > 0, jobs
