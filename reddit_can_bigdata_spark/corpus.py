@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from reddit_can_bigdata_spark.operators.common import tables
+from reddit_can_bigdata_spark.operators.common import materialize, tables
 from reddit_can_bigdata_spark.operators.pretrain import (
     chunk_documents,
     pretrain_keep_decision,
@@ -39,13 +39,13 @@ def build_training_shards(
     DataFrame instead of log lines)."""
     docs = tables(spark, sf_dir)["documents"]
     decision = pretrain_keep_decision(spark, sf_dir)
-    kept = (
-        docs.join(decision.where(F.col("keep")).select("doc_id"), "doc_id")
-        .select("doc_id", "source", "text")
-        # the decision table is consumed twice at most (filter + audit);
-        # checkpoint so the three-way decision join doesn't re-run per
-        # downstream action
-        .localCheckpoint(eager=True)
+    # the decision table is consumed twice at most (filter + audit);
+    # materialize so the three-way decision join doesn't re-run per
+    # downstream action
+    kept = materialize(
+        docs.join(decision.where(F.col("keep")).select("doc_id"), "doc_id").select(
+            "doc_id", "source", "text"
+        )
     )
     chunks = chunk_documents(kept).join(
         kept.select("doc_id", "source"), "doc_id"

@@ -29,6 +29,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
+from reddit_can_bigdata_spark.operators.common import materialize, materialized
+
 # Unigram polarity lexicon — common-English sentiment words in the
 # style of the Hu-Liu opinion lexicon / VADER's unigram core. Inlined
 # so the labeler stays a pure Catalyst expression and the DuckDB
@@ -165,126 +167,115 @@ def train_sentiment(docs: DataFrame, text_col: str = "text", id_col: str = "doc_
         "naive_bayes": NaiveBayes(smoothing=1.0),
     }
 
-    # Cache the labeled corpus: it feeds the split, the feature fit,
-    # and the final full-dataset transform — without the cache the
-    # lexicon-scoring lineage re-executes four times (the reference
-    # has the same shape and the same cost,
-    # `spark_ml_sentiment.py:223-296`).
-    labeled = labeled.cache()
-    train, test = labeled.randomSplit([0.8, 0.2], seed=seed)
-    evaluator = MulticlassClassificationEvaluator(
-        labelCol="label", predictionCol="prediction", metricName="accuracy"
-    )
+    # Pin the labeled corpus: it feeds the split, the feature fit, and
+    # the final full-dataset transform — unpinned, the lexicon-scoring
+    # lineage re-executes four times (the reference has the same shape
+    # and the same cost, `spark_ml_sentiment.py:223-296`).
+    with materialized(labeled) as labeled:
+        train, test = labeled.randomSplit([0.8, 0.2], seed=seed)
+        evaluator = MulticlassClassificationEvaluator(
+            labelCol="label", predictionCol="prediction", metricName="accuracy"
+        )
 
-    # Fit the six feature stages ONCE and share the featurized train /
-    # test across the three classifier fits. Semantically identical to
-    # fitting three full `Pipeline(base + [clf])`s (the reference's
-    # structure, `spark_ml_sentiment.py:223-296`): the feature stages
-    # are deterministic given `train`, so each full pipeline would fit
-    # byte-identical feature models — this just stops re-scanning and
-    # re-featurizing the corpus once per classifier.
-    #
-    # The fit itself is hand-sequenced rather than `Pipeline.fit`
-    # (optimization round 11, guide §2.6 overlap + §5 caching): the
-    # token transform is cached so the CountVectorizer and IDF fits
-    # don't each re-tokenize the corpus, and the StringIndexer fit —
-    # which reads only the untouched ``lex_label`` column, so its
-    # model is identical wherever in the sequence it fits — runs
-    # CONCURRENTLY with the CV→IDF chain. The assembled PipelineModel
-    # transforms in the exact stage order Pipeline.fit would produce
-    # (equivalence pinned by the refactor guard in
-    # tests/test_ml_sentiment.py).
-    from concurrent.futures import ThreadPoolExecutor
-    from pyspark.ml import PipelineModel
+        # Fit the six feature stages ONCE and share the featurized train /
+        # test across the three classifier fits. Semantically identical to
+        # fitting three full `Pipeline(base + [clf])`s (the reference's
+        # structure, `spark_ml_sentiment.py:223-296`): the feature stages
+        # are deterministic given `train`, so each full pipeline would fit
+        # byte-identical feature models — this just stops re-scanning and
+        # re-featurizing the corpus once per classifier.
+        #
+        # The fit itself is hand-sequenced rather than `Pipeline.fit`
+        # (optimization round 11, guide §2.6 overlap + §5 caching): the
+        # token transform is pinned so the CountVectorizer and IDF fits
+        # don't each re-tokenize the corpus, and the StringIndexer fit —
+        # which reads only the untouched ``lex_label`` column, so its
+        # model is identical wherever in the sequence it fits — runs
+        # CONCURRENTLY with the CV→IDF chain. The assembled PipelineModel
+        # transforms in the exact stage order Pipeline.fit would produce
+        # (equivalence pinned by the refactor guard in
+        # tests/test_ml_sentiment.py).
+        from concurrent.futures import ThreadPoolExecutor
+        from pyspark.ml import PipelineModel
 
-    tokenizer, remover, cv, idf, indexer, assembler = base
-    # cache only the one column the CV fit and the CV->IDF chain read
-    # (round 12, guide §5 — same trim as the featurized splits below):
-    # identical fitted models, smaller cached rows
-    toks = remover.transform(tokenizer.transform(train)).select("filtered").cache()
-    with ThreadPoolExecutor(2) as fpool:
-        f_si = fpool.submit(indexer.fit, train)
-        cv_model = cv.fit(toks)
-        idf_model = idf.fit(cv_model.transform(toks))
-        si_model = f_si.result()
-    toks.unpersist()
-    feat_model = PipelineModel(
-        stages=[tokenizer, remover, cv_model, idf_model, si_model, assembler]
-    )
-    # Cache only the two columns the fits/evaluations read (optimization
-    # round 12, guide §5): the full transform carries the text, token
-    # arrays and tf/tfidf vectors, which the columnar cache would
-    # otherwise serialize and hold for nothing — the classifier fits
-    # consume (label, features), the evaluator (label, prediction from
-    # features). Row set, order and values are untouched, so models and
-    # accuracies are bit-identical (pinned by the refactor guard).
-    feat_train = feat_model.transform(train).select("label", "features").cache()
-    feat_test = feat_model.transform(test).select("label", "features").cache()
+        tokenizer, remover, cv, idf, indexer, assembler = base
+        # pin only the one column the CV fit and the CV->IDF chain read
+        # (round 12, guide §5 — same trim as the featurized splits below):
+        # identical fitted models, smaller pinned rows
+        with materialized(
+            remover.transform(tokenizer.transform(train)).select("filtered")
+        ) as toks, ThreadPoolExecutor(2) as fpool:
+            f_si = fpool.submit(indexer.fit, train)
+            cv_model = cv.fit(toks)
+            idf_model = idf.fit(cv_model.transform(toks))
+            si_model = f_si.result()
+        feat_model = PipelineModel(
+            stages=[tokenizer, remover, cv_model, idf_model, si_model, assembler]
+        )
 
-    # The three classifier fits are independent given the shared
-    # featurized splits, so submit them CONCURRENTLY (the same
-    # concurrent-job-submission pattern as the influencer composite):
-    # LR's 100 small iteration jobs, RF's per-tree jobs, and NB's one
-    # pass interleave on the cluster instead of leaving it idle
-    # between stages. Results are identical to the serial loop — each
-    # fit's computation is self-contained and seeded — and selection
-    # stays deterministic because the reduce below walks the original
-    # registration order, never completion order.
-    from concurrent.futures import ThreadPoolExecutor
+        # The three classifier fits are independent given the shared
+        # featurized splits, so submit them CONCURRENTLY (the same
+        # concurrent-job-submission pattern as the influencer composite):
+        # LR's 100 small iteration jobs, RF's per-tree jobs, and NB's one
+        # pass interleave on the cluster instead of leaving it idle
+        # between stages. Results are identical to the serial loop — each
+        # fit's computation is self-contained and seeded — and selection
+        # stays deterministic because the reduce below walks the original
+        # registration order, never completion order.
+        def _fit_and_score(item):
+            mname, clf = item
+            # job descriptions are thread-local (guide §1.5): label each
+            # classifier's jobs so the concurrent fits are attributable in
+            # the UI/status store
+            spark = feat_train.sparkSession
+            spark.sparkContext.setJobDescription(f"sentiment fit: {mname}")
+            try:
+                model = clf.fit(feat_train)
+                # per-thread evaluator copy: evaluate() is read-only over its
+                # params, but copies are free and remove any sharing question
+                acc = evaluator.copy().evaluate(model.transform(feat_test))
+            finally:
+                # the pool thread is reused: a failed fit must not leave its
+                # label on the next job submitted from this thread
+                spark.sparkContext.setJobDescription(None)
+            return mname, (model, acc)
 
-    def _fit_and_score(item):
-        mname, clf = item
-        # job descriptions are thread-local (guide §1.5): label each
-        # classifier's jobs so the concurrent fits are attributable in
-        # the UI/status store
-        spark = feat_train.sparkSession
-        spark.sparkContext.setJobDescription(f"sentiment fit: {mname}")
-        try:
-            model = clf.fit(feat_train)
-            # per-thread evaluator copy: evaluate() is read-only over its
-            # params, but copies are free and remove any sharing question
-            acc = evaluator.copy().evaluate(model.transform(feat_test))
-        finally:
-            # the pool thread is reused: a failed fit must not leave its
-            # label on the next job submitted from this thread
-            spark.sparkContext.setJobDescription(None)
-        return mname, (model, acc)
+        # Pin only the two columns the fits/evaluations read (optimization
+        # round 12, guide §5): the full transform carries the text, token
+        # arrays and tf/tfidf vectors, which would otherwise be held for
+        # nothing — the classifier fits consume (label, features), the
+        # evaluator (label, prediction from features). Row set, order and
+        # values are untouched, so models and accuracies are bit-identical
+        # (pinned by the refactor guard).
+        with materialized(
+            feat_model.transform(train).select("label", "features")
+        ) as feat_train, materialized(
+            feat_model.transform(test).select("label", "features")
+        ) as feat_test, ThreadPoolExecutor(max_workers=len(classifiers)) as pool:
+            scored = dict(pool.map(_fit_and_score, classifiers.items()))
+        best_name, best_acc, best_clf = "", -1.0, None
+        for mname in classifiers:
+            model, acc = scored[mname]
+            if acc > best_acc:
+                best_name, best_acc, best_clf = mname, acc, model
 
-    with ThreadPoolExecutor(max_workers=len(classifiers)) as pool:
-        scored = dict(pool.map(_fit_and_score, classifiers.items()))
-    best_name, best_acc, best_clf = "", -1.0, None
-    for mname in classifiers:
-        model, acc = scored[mname]
-        if acc > best_acc:
-            best_name, best_acc, best_clf = mname, acc, model
-
-    full = best_clf.transform(feat_model.transform(labeled))
-    labels = feat_model.stages[4].labelsArray[0]  # StringIndexer stage
-    to_str = IndexToString(
-        inputCol="prediction", outputCol="ml_prediction", labels=list(labels)
-    )
-    preds = to_str.transform(full).select(
-        F.col(id_col).alias("id"), "lex_label", "ml_prediction"
-    )
-    # Lazy materialization barrier (optimization round 12): the full
-    # corpus is featurized + scored by the best model exactly ONCE —
-    # the agreement aggregate below materializes the blocks and every
-    # later consumer (run_pipeline's predictions.count, caller writes)
-    # reads them instead of re-running the transform (measured ~0.5-1s
-    # of duplicated tail per e2e run). localCheckpoint, not cache: the
-    # blocks are freed by the ContextCleaner when the frame goes out of
-    # scope, no unpersist bookkeeping for callers.
-    preds = preds.localCheckpoint(eager=False)
+        full = best_clf.transform(feat_model.transform(labeled))
+        labels = feat_model.stages[4].labelsArray[0]  # StringIndexer stage
+        to_str = IndexToString(
+            inputCol="prediction", outputCol="ml_prediction", labels=list(labels)
+        )
+        # Eager barrier inside the labeled scope (optimization round 12):
+        # the full corpus is featurized + scored by the best model exactly
+        # ONCE, before the scope releases `labeled`, and every later
+        # consumer (the agreement aggregate, run_pipeline's
+        # predictions.count, caller writes) reads the materialized rows.
+        preds = materialize(
+            to_str.transform(full).select(
+                F.col(id_col).alias("id"), "lex_label", "ml_prediction"
+            )
+        )
     agree = preds.agg(
         (F.sum((F.col("lex_label") == F.col("ml_prediction")).cast("long")) / F.count("*"))
         .alias("r")
     ).collect()[0]["r"]
-    # The featurized splits are only needed for model selection, and
-    # `preds` no longer depends on the `labeled` cache once the
-    # agreement aggregate above materialized its checkpoint blocks —
-    # unpersist all three (round 12: the labeled cache previously
-    # outlived the call and accumulated across a session's queries).
-    feat_train.unpersist()
-    feat_test.unpersist()
-    labeled.unpersist()
     return SentimentResult(best_name, float(best_acc), preds, float(agree))

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from reddit_can_bigdata_spark.operators.common import (
     DSUM_SQL,
     dsum,
-    iter_checkpoint,
+    materialize,
     standard_grand_total,
     tables,
 )
@@ -24,6 +24,7 @@ from reddit_can_bigdata_spark.operators.graph import (
     _EDGES_SQL,
     _edges,
     _join_state,
+    _sym,
     _state_mode,
     STATE_BROADCAST_MAX_ROWS,
     UNTIL_CONVERGED_MAX_ROUNDS,
@@ -75,7 +76,7 @@ def _bfs_distances(
     roots = sources if sources is not None else sym.select("src").distinct()
     dist = roots.select(
         "src", F.col("src").alias("node"), F.lit(0).cast("long").alias("dist")
-    ).transform(iter_checkpoint)
+    ).transform(materialize)
     frontier = dist
     frontier_n = None  # rows in `frontier` (known after round 1)
     edges = sym.withColumnRenamed("src", "mid")
@@ -153,7 +154,7 @@ def _bfs_distances(
                 found = found.unionByName(easy)
             improved = found.select(
                 "src", "node", F.lit(depth).cast("long").alias("dist")
-            ).transform(iter_checkpoint)
+            ).transform(materialize)
         else:
             expanded = (
                 frontier.join(edges, frontier.node == F.col("mid"))
@@ -168,7 +169,7 @@ def _bfs_distances(
                 expanded.join(old, ["src", "node"], "left")
                 .where(F.col("old").isNull() | (F.col("dist") < F.col("old")))
                 .select("src", "node", "dist")
-                .transform(iter_checkpoint)
+                .transform(materialize)
             )
         frontier_n = improved.count()
         if frontier_n == 0:
@@ -176,7 +177,7 @@ def _bfs_distances(
         dist = (
             dist.join(improved.select("src", "node"), ["src", "node"], "left_anti")
             .unionByName(improved)
-            .transform(iter_checkpoint)
+            .transform(materialize)
         )
         if unweighted:
             dist_n += frontier_n
@@ -429,14 +430,7 @@ def g5_eigenvector_centrality(
         g = collect_graph_auto(spark, sf_dir, edges, graph)
         if g is not None:
             return eigenvector_kernel_df(spark, g, EIGEN_ITERS)
-    e = edges if edges is not None else _edges(spark, sf_dir)
-    sym = e.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), F.col("weight").cast("double").alias("w")
-    ).unionAll(
-        e.select(
-            F.col("v").alias("src"), F.col("u").alias("dst"), F.col("weight").cast("double").alias("w")
-        )
-    ).repartition("src").cache()
+    sym = _sym(edges if edges is not None else _edges(spark, sf_dir), "w", key="src")
     v = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("val")
     )
@@ -449,9 +443,8 @@ def g5_eigenvector_centrality(
         )
         # m feeds both the norm and the next vector — checkpoint it or
         # the plan doubles every iteration (2^EIGEN_ITERS blowup; OOMs
-        # the driver just rendering the tree). iter_checkpoint goes
-        # reliable when spark.redditCan.iterCheckpointDir is set.
-        m = m.transform(iter_checkpoint)
+        # the driver just rendering the tree).
+        m = m.transform(materialize)
         norm = m.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
         v = m.crossJoin(F.broadcast(norm)).select(
             "node", (F.col("val") / F.col("nrm")).alias("val")
@@ -531,10 +524,7 @@ def g4b_closeness_weighted(
     Bellman-Ford; exact once rounds ≥ longest shortest path's hop
     count — true on the dense test graphs, documented bound
     otherwise). Integer distances → exact oracle parity."""
-    e = _edges(spark, sf_dir)
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst"), "weight").unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"), "weight")
-    ).cache()
+    sym = _sym(_edges(spark, sf_dir), "weight")
     dist = _bfs_distances(sym, CLOSENESS_HOPS, F.col("weight"), until_converged=until_converged)
     return (
         dist.groupBy("src")
@@ -628,10 +618,7 @@ def g4c_closeness_sampled(
         return closeness_sampled_kernel_df(
             spark, g, CLOSENESS_HOPS, sample_mod, until_converged
         )
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v")
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).cache()
+    sym = _sym(edges if edges is not None else _edges(spark, sf_dir))
     nodes = sym.select("src").distinct()
     srcs = nodes.where(F.col("src") % sample_mod == 0)
     dist = _bfs_distances(
@@ -715,10 +702,7 @@ def g4d_closeness_weighted_sampled(
     would freeze wrong distances. `_bfs_distances` enforces this
     (pull requires unweighted=True). State O(K·N); integer distances
     until one double division → exact oracle parity."""
-    e = edges if edges is not None else _edges(spark, sf_dir)
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst"), "weight").unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"), "weight")
-    ).cache()
+    sym = _sym(edges if edges is not None else _edges(spark, sf_dir), "weight")
     nodes = sym.select("src").distinct()
     srcs = nodes.where(F.col("src") % CLOSENESS_SAMPLE_MOD == 0)
     dist = _bfs_distances(
@@ -774,10 +758,7 @@ def g4_closeness_centrality(
         return closeness_kernel_df(
             spark, g, CLOSENESS_HOPS, until_converged, out_col="closeness"
         )
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v")
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).cache()
+    sym = _sym(edges if edges is not None else _edges(spark, sf_dir))
     dist = _bfs_distances(
         sym, CLOSENESS_HOPS, F.lit(1), unweighted=True, until_converged=until_converged
     )

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from reddit_can_bigdata_spark.tables import load_tables
@@ -14,38 +17,49 @@ def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 ITER_CHECKPOINT_DIR_CONF = "spark.redditCan.iterCheckpointDir"
 
 
-def iter_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Per-round lineage truncation for iterative loops (PageRank,
-    BFS/Brandes, label propagation, k-core, BPE), with a RELIABLE mode
-    for real clusters.
+def materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
+    """The engine's one materialization policy: every intermediate that
+    is read more than once is pinned here, in one of two forms.
 
-    Default: ``localCheckpoint`` — executor-local shuffle files, no
-    distributed filesystem needed, right for local mode and the bench.
-    But executor-local blocks die with the executor: at 100x scale a
-    single lost executor kills a 40-round PageRank mid-flight. Setting
-    the runtime conf ``spark.redditCan.iterCheckpointDir`` to an
-    HDFS/S3 path swaps every loop's truncation to reliable
-    ``checkpoint()`` (files survive executor loss; lineage restarts
-    from the checkpoint, not from round 0). One conf, no per-operator
-    plumbing:
+    ``materialize`` (this function) is for frames that outlive the
+    call that builds them: loop state (PageRank ranks, BFS/Brandes
+    frontiers, label rounds, k-core survivors, BPE merges), shared
+    edge lists, scalar barriers, snapshots returned to a caller. It
+    cuts the lineage of this one instance: nothing is keyed on the
+    plan, so no later call, bench rep or session can reuse the blocks,
+    and they are freed by the ContextCleaner once the frame is
+    garbage-collected. ``eager=False`` defers the write to the first
+    action over the frame.
+
+    :func:`materialized` is the scoped form for frames consumed
+    entirely inside one function (a gate probe plus its collect, the
+    featurized splits of a model fit): it persists the frame for the
+    ``with`` block and always releases it on exit, exceptions
+    included. A persisted frame keeps its lineage, so a lost block is
+    recomputed and the reliable conf below does not apply to it.
+
+    Fault tolerance: by default the cut is ``localCheckpoint`` —
+    executor-local blocks, no distributed filesystem needed, right for
+    local mode and the bench. Executor-local blocks die with their
+    executor, so at cluster scale one lost executor fails the query.
+    Setting the runtime conf ``spark.redditCan.iterCheckpointDir`` to
+    an HDFS/S3 path swaps every materialization to reliable
+    ``checkpoint()``: files survive executor loss and recovery
+    restarts from the checkpoint, not from the scan. One conf, no
+    per-operator plumbing:
 
         spark.conf.set("spark.redditCan.iterCheckpointDir", "s3://...")
 
-    The non-loop ``localCheckpoint`` sites (influencer's shared edge
-    cache, scalar barriers) intentionally stay local — they cache a
-    finished result for O(seconds) reuse, where recompute-on-loss is
-    the cheaper failure mode.
-
     Retention: reliable checkpoint files are NOT auto-deleted when a
-    round's DataFrame goes out of scope unless the session was built
-    with ``spark.cleaner.referenceTracking.cleanCheckpoints=true``;
+    frame goes out of scope unless the session was built with
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``;
     long-running services should point the conf at a scratch/TTL'd
     path or enable that cleaner. When neither is the case this helper
     warns ONCE per session (a 40-round loop otherwise grows the dir
-    silently and unboundedly). Eager per-round deletion is deliberately
-    NOT done here: loops like Brandes hold several checkpointed frames
-    live at once, and deleting a checkpoint still referenced by a live
-    plan breaks recovery — exactly what reliable mode exists for."""
+    silently and unboundedly). Eager deletion is deliberately NOT done
+    here: loops like Brandes hold several checkpointed frames live at
+    once, and deleting a checkpoint still referenced by a live plan
+    breaks recovery — exactly what reliable mode exists for."""
     spark = df.sparkSession
     ckdir = spark.conf.get(ITER_CHECKPOINT_DIR_CONF, None)
     if ckdir:
@@ -65,7 +79,7 @@ def iter_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
 
                 warnings.warn(
                     f"{ITER_CHECKPOINT_DIR_CONF}={ckdir}: checkpoint files "
-                    "accumulate per round because "
+                    "accumulate per materialization because "
                     "spark.cleaner.referenceTracking.cleanCheckpoints is not "
                     "'true' (it is session-build-time only). Point the dir at "
                     "a TTL'd scratch path or enable the cleaner when building "
@@ -74,6 +88,17 @@ def iter_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
                 )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+@contextmanager
+def materialized(df: DataFrame) -> Iterator[DataFrame]:
+    """Scoped form of :func:`materialize`: ``df`` persisted for the
+    ``with`` block and released on exit, exceptions included."""
+    pinned = df.persist()
+    try:
+        yield pinned
+    finally:
+        pinned.unpersist()
 
 
 #: conf knob: input bytes (plan-statistics estimate) each spread

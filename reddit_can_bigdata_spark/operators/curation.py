@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from reddit_can_bigdata_spark.functions.text import PORTABLE_HASH32_SQL, portable_hash32
-from reddit_can_bigdata_spark.operators.common import spread, tables
+from reddit_can_bigdata_spark.operators.common import materialize, spread, tables
 from reddit_can_bigdata_spark.registry import register
 
 SAMPLE_PCT = 10  # keep 1 in 10 of every language stratum
@@ -354,12 +354,10 @@ def curate_dsir_logweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan has no scale cliff. ln() is portable here for the same
     reason as `pretrain_unigram_logprob` (hash-green precedent);
     the sum rounds to 6 decimals per the registry's float rule."""
-    from pyspark import StorageLevel
-
     from reddit_can_bigdata_spark.operators.pretrain import _gram_expr
 
     docs = tables(spark, sf_dir)["documents"]
-    gb = (
+    gb = materialize(
         spread(docs)
         .select("doc_id", F.explode(F.expr(_gram_expr(2))).alias("gr"))
         .select(
@@ -369,7 +367,6 @@ def curate_dsir_logweight(spark: SparkSession, sf_dir: str) -> DataFrame:
                 % DSIR_BUCKETS
             ).alias("b"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     is_eval = F.col("doc_id") % DSIR_EVAL_MOD == 0
     t = gb.where(is_eval).groupBy("b").agg(F.count("*").alias("tc"))

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from reddit_can_bigdata_spark.operators.common import spread, tables
+from reddit_can_bigdata_spark.operators.common import materialize, spread, tables
 from reddit_can_bigdata_spark.registry import register
 
 # MinHash parameters — keep in sync between Spark + oracle SQL.
@@ -193,7 +193,7 @@ def dedup_minhash_lsh(
     # replaces. Integer mins, values unchanged (A/B: wall 1.30 -> 1.04
     # on the standalone query, byte-equal rows; the composed quality /
     # clusters callers inherit the cut).
-    sigs = sigs.localCheckpoint(eager=True)
+    sigs = materialize(sigs)
     # band key b = md5("m_{rb} , ... , m_{rb+r-1}") — identical string
     # to the oracle's ORDER BY i string_agg.
     band_keys = [
@@ -404,7 +404,7 @@ def dedup_ngram_jaccard(
     # One checkpoint pass replaces them; integer counts, values
     # unchanged (A/B in OPTIMIZATION_r12.md change 2: wall −28%, cpu
     # −13% on the composed quality query).
-    rare = rare.localCheckpoint(eager=True)
+    rare = materialize(rare)
     sizes = rare.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     r1, r2 = rare.alias("r1"), rare.alias("r2")
     inter = (
@@ -502,25 +502,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller than the corpus); the per-round state join inherits the
     broadcast-ceiling guard; the final mapping is one left join on
     doc_id — corpus-linear."""
-    from reddit_can_bigdata_spark.operators.graph import min_label_components
+    from reddit_can_bigdata_spark.operators.graph import _sym, min_label_components
 
     pairs = dedup_minhash_lsh(spark, sf_dir).where(
         F.col("est_jaccard") >= CLUSTER_JACCARD
     )
-    # localCheckpoint, NOT cache (optimization round 12, measurement
-    # integrity): the component loop's multi-action consumption needs
-    # the pair graph materialized once, but a .cache() here is keyed on
-    # the analyzed plan, so back-to-back runs of this query in one
-    # session (bench reps!) silently reused the first run's cached sym
-    # and skipped the whole MinHash pipeline — deflating the bench
-    # median and leaking CacheManager entries. Checkpoint blocks are
-    # per-instance (no cross-run reuse) and GC-cleaned.
-    sym = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .repartition("dst")
-        .localCheckpoint(eager=False)
-    )
+    sym = _sym(pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")), key="dst")
     labels = min_label_components(
         sym, 0, until_converged=True, shortcut=True, require_converged=True
     )
@@ -811,8 +798,8 @@ def dedup_lsh_quality(
     tests/test_sample_knob.py).
 
     The shingle base is computed ONCE and threaded through both arms,
-    materialized with an eager localCheckpoint (optimization round 12,
-    VERDICT item #3): relying on the optimizer's exchange reuse left
+    materialized eagerly (optimization round 12, VERDICT item #3):
+    relying on the optimizer's exchange reuse left
     THREE planned derivations of the explode+distinct subtree in the
     composed plan (exact arm's two self-join legs + the LSH
     signatures), and the round-11 probe measured the composition at
@@ -825,7 +812,7 @@ def dedup_lsh_quality(
     reused shuffle reads; raw checkpoint blocks don't). The count-gated
     cache crossover is therefore retired along with its corpus-count
     probe job. Output values are identical on every path."""
-    sh = _shingles(spark, sf_dir).localCheckpoint(eager=True)
+    sh = materialize(_shingles(spark, sf_dir))
     exact = dedup_ngram_jaccard(
         spark, sf_dir, sample_mod=sample_mod, shingles=sh
     ).select("doc_a", "doc_b", F.lit(1).alias("fe"))

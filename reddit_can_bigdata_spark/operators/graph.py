@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from reddit_can_bigdata_spark.operators.common import iter_checkpoint, tables
+from reddit_can_bigdata_spark.operators.common import materialize, tables
 from reddit_can_bigdata_spark.registry import register
 
 PAGERANK_ITERS = 10
@@ -28,7 +28,7 @@ PAGERANK_DAMPING = 0.85
 CC_ITERS = 8
 
 # Iterative loops (G5/G6/G7) join a |nodes|-sized state vector
-# (ranks / labels / eigenvector values) against the big cached edge
+# (ranks / labels / eigenvector values) against the big materialized edge
 # table every round. Broadcasting the state keeps the edge table
 # unshuffled — the right trade while the vector fits in driver +
 # executor memory — but at 100x nodes it is the classic broadcast
@@ -63,7 +63,7 @@ def _state_mode(n_state_rows: float, override: str | None = None) -> str:
 
 
 def _join_state(edges: DataFrame, state: DataFrame, on, mode: str) -> DataFrame:
-    """Join the (big, cached) edge table with the per-node state vector.
+    """Join the (big, materialized) edge table with the per-node state vector.
 
     'broadcast': hash map of the state on every executor, edge table
     never moves. 'shuffle': shuffle-hash join — the edge table is
@@ -171,6 +171,26 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sym(edges: DataFrame, weight: str | None = None, key: str | None = None) -> DataFrame:
+    """The loop tier's symmetric edge list: both directions of every
+    undirected (u, v) row as (src, dst), materialized once.
+
+    ``weight`` adds the edge weight: ``"w"`` as a double (the rank,
+    eigenvector and label loops) or ``"weight"`` as the raw count (the
+    weighted distance loops). ``key`` hash-partitions the list on the
+    column the caller's state join probes, so only the state side
+    moves when the join shuffles."""
+    extra = {
+        None: [],
+        "weight": [F.col("weight")],
+        "w": [F.col("weight").cast("double").alias("w")],
+    }[weight]
+    sym = edges.select(F.col("u").alias("src"), F.col("v").alias("dst"), *extra).unionAll(
+        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"), *extra)
+    )
+    return materialize(sym.repartition(key) if key else sym)
+
+
 @register(
     "g1_a14_edge_aggregation",
     oracle="""
@@ -270,10 +290,6 @@ def g2_degree_centrality(
     # the output both read it instead of re-running the edge build (the
     # before-plan showed four full lineitem→pairs subtrees; guide §2.4
     # "remove shuffles outright" / duplicated-subtree case).
-    # localCheckpoint, NOT cache (round-11 advice): a .cache() here was
-    # never unpersisted, so repeated calls in one process accumulated
-    # CacheManager entries; lazily checkpointed blocks are freed by the
-    # ContextCleaner once the frame is garbage-collected.
     both = e.select(
         F.explode(
             F.array(
@@ -282,9 +298,12 @@ def g2_degree_centrality(
             )
         ).alias("s")
     ).select("s.node", "s.weight")
-    deg = both.groupBy("node").agg(
-        F.count("*").alias("degree"), F.sum("weight").alias("weighted_degree")
-    ).localCheckpoint(eager=False)
+    deg = materialize(
+        both.groupBy("node").agg(
+            F.count("*").alias("degree"), F.sum("weight").alias("weighted_degree")
+        ),
+        eager=False,
+    )
     n = deg.agg(F.count("*").cast("double").alias("n_nodes"))
     return deg.crossJoin(F.broadcast(n)).select(
         "node",
@@ -374,7 +393,7 @@ def g9_triangles_clustering(
     neighbors of >= its own degree), so the wedge join fans out at most
     sqrt(E) per edge regardless of celebrity nodes — the skew bound the
     raw (u<v) orientation lacks. The edge list is built once and
-    cached; the wedge join and the closing-edge join shuffle on vertex
+    materialized; the wedge join and the closing-edge join shuffle on vertex
     ids.
     """
     from reddit_can_bigdata_spark.operators.graphkernel import (
@@ -400,13 +419,12 @@ def g9_triangles_clustering(
                 F.try_divide(F.sum(local_k).cast("double"), F.count("*")), 6
             ).alias("avg_clustering"),
         )
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v").cache()
-    deg = (
+    e = materialize((edges if edges is not None else _edges(spark, sf_dir)).select("u", "v"))
+    deg = materialize(
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("degree"))
-        .cache()
     )
     # Strategy switch: per-node triangle counts via the complement
     # identity T(v) = C(deg v, 2) − open_wedges(v), where an open
@@ -452,11 +470,13 @@ def _triangles_per_node_oriented(e: DataFrame, deg: DataFrame) -> DataFrame:
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = ed.select(
-        F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("ddeg"),
-    ).cache()
+    oriented = materialize(
+        ed.select(
+            F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("dst"),
+            F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("ddeg"),
+        )
+    )
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     # wedge (src->b, src->c) with pi(b) < pi(c), closed by oriented b->c
     wedge_lt = (F.col("e1.ddeg") < F.col("e2.ddeg")) | (
@@ -487,9 +507,7 @@ def _triangles_per_node_complement(e: DataFrame, deg: DataFrame) -> DataFrame:
     |missing|·deg through two broadcastable edge joins, spread across
     tasks) and subtract. Exact for any graph; chosen only when the
     missing set is small."""
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    sym = _sym(e)
     nodes = deg.select("node")
     a = nodes.select(F.col("node").alias("a"))
     b = nodes.select(F.col("node").alias("b"))
@@ -628,10 +646,8 @@ def g9b_triangles_wedge_sampled(
     memory (`network-analysis/network_analysis.py:335`); this is the
     form that survives the graph NetworkX cannot hold.
     """
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v").cache()
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    e = materialize((edges if edges is not None else _edges(spark, sf_dir)).select("u", "v"))
+    sym = _sym(e)
     hk = (F.col("dst") * F.lit(WEDGE_HASH_MULT)) % F.lit(WEDGE_HASH_MOD)
     w = Window.partitionBy("src").orderBy(hk.asc(), F.col("dst").asc())
     tested = (
@@ -695,7 +711,7 @@ def triangles_for_scale(
 
     e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v")
     if mode is None:
-        e = e.cache()
+        e = materialize(e)
         deg = (
             e.select(F.col("u").alias("node"))
             .unionAll(e.select(F.col("v").alias("node")))
@@ -783,7 +799,7 @@ def g6_pagerank(
     iterations, damping 0.85.
 
     Scale: the transition matrix (src,dst,p) is computed once and
-    cached; each iteration is one shuffle on dst. On a cluster,
+    materialized; each iteration is one shuffle on dst. On a cluster,
     checkpoint every ~5 iterations to truncate lineage, and partition
     the edge list by src so the join is co-located (G5 eigenvector
     centrality is this same loop with a normalize step instead of the
@@ -799,28 +815,20 @@ def g6_pagerank(
         g = collect_graph_auto(spark, sf_dir, edges, graph)
         if g is not None:
             return pagerank_kernel_df(spark, g, PAGERANK_ITERS, PAGERANK_DAMPING)
-    e = edges if edges is not None else _edges(spark, sf_dir)
-    sym = e.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), F.col("weight").cast("double").alias("w")
-    ).unionAll(
-        e.select(
-            F.col("v").alias("src"), F.col("u").alias("dst"), F.col("weight").cast("double").alias("w")
-        )
-    )
+    sym = _sym(edges if edges is not None else _edges(spark, sf_dir), "w")
     wdeg = sym.groupBy("src").agg(F.sum("w").alias("wd"))
     # Iterative loops pay per-task scheduler overhead EVERY round, so
-    # the cached transition matrix wants few, fat partitions (measured
+    # the materialized transition matrix wants few, fat partitions (measured
     # 2x on the 10-round loop going 32 -> 8 partitions at sf0.1). On a
     # cluster, size by bytes (~128MB/partition), not by core count.
     n_parts = max(4, spark.sparkContext.defaultParallelism // 4)
     # keyed repartition: in shuffle state-join mode the src-partitioned
-    # cache co-locates the join so only the state side moves; in
+    # table co-locates the join so only the state side moves; in
     # broadcast mode it is an equally good fat-partition layout.
-    trans = (
+    trans = materialize(
         sym.join(wdeg, "src")
         .select("src", "dst", (F.col("w") / F.col("wd")).alias("p"))
         .repartition(n_parts, "src")
-        .cache()
     )
     nodes = wdeg.select(F.col("src").alias("node"))
     n_nodes = float(nodes.count())
@@ -849,10 +857,8 @@ def g6_pagerank(
         # eager checkpoint every round: the broadcast above *executes*
         # the ranks plan, so an un-truncated lineage would re-run the
         # previous rounds on every broadcast (measured 1.7x slower when
-        # checkpointing only every 3rd round). iter_checkpoint swaps to
-        # reliable checkpoint() when spark.redditCan.iterCheckpointDir
-        # is set (survives executor loss on a cluster).
-        ranks = ranks.transform(iter_checkpoint)
+        # checkpointing only every 3rd round).
+        ranks = ranks.transform(materialize)
     return ranks.select("node", F.round("rank", 6).alias("pagerank"))
 
 
@@ -925,7 +931,7 @@ def label_prop_partition(
             votes.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("node", "label")
-            .transform(iter_checkpoint)
+            .transform(materialize)
         )
         # sync label-prop is deterministic, so an unchanged round is a
         # fixed point and every further round is a no-op — early exit
@@ -947,16 +953,9 @@ def _label_prop(
     spark: SparkSession, sf_dir: str, state_mode: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Label propagation over the event co-occurrence graph: builds
-    the cached dst-partitioned symmetric edge list, runs
+    the dst-partitioned symmetric edge list, runs
     `label_prop_partition`; returns (sym, labels)."""
-    e = _edges(spark, sf_dir)
-    sym = e.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), F.col("weight").cast("double").alias("w")
-    ).unionAll(
-        e.select(
-            F.col("v").alias("src"), F.col("u").alias("dst"), F.col("weight").cast("double").alias("w")
-        )
-    ).repartition("dst").cache()
+    sym = _sym(_edges(spark, sf_dir), "w", key="dst")
     return sym, label_prop_partition(sym, state_mode)
 
 
@@ -1072,7 +1071,7 @@ def min_label_components(
 
     Each round = one state join (broadcast under the `_state_mode`
     ceiling, co-partitioned shuffle above) + one hash aggregate —
-    linear in |E|. The caller should pass a cached, dst-partitioned
+    linear in |E|. The caller should pass a materialized, dst-partitioned
     ``sym``. Shared by G7 components and the dedup clusterer.
 
     ``shortcut=True`` adds a pointer-doubling step per round
@@ -1153,7 +1152,7 @@ def min_label_components(
         )
         # nxt is referenced twice below — checkpoint or the plan
         # doubles per iteration (2^iters blowup)
-        nxt = nxt.transform(iter_checkpoint)
+        nxt = nxt.transform(materialize)
         changed = nxt.where("chg").limit(1).count()
         labels = nxt.select("node", "label")
         # min-label is monotone: once a round changes nothing, every
@@ -1264,19 +1263,18 @@ def g7_connected_components(
 
         # the CSR's indices ARE the symmetric pair list — under the
         # kernel gate the whole sym-DataFrame build (edge aggregate +
-        # union + repartition + cache + re-collect) disappears
+        # union + repartition + materialize + re-collect) disappears
         g = collect_graph_auto(spark, sf_dir)
     if g is not None:
         labels = min_label_components(
             None, CC_ITERS, state_mode, until_converged=until_converged, graph=g
         )
     else:
-        e = _edges(spark, sf_dir).select("u", "v")
-        sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        ).repartition("dst").cache()
         labels = min_label_components(
-            sym, CC_ITERS, state_mode, until_converged=until_converged
+            _sym(_edges(spark, sf_dir), key="dst"),
+            CC_ITERS,
+            state_mode,
+            until_converged=until_converged,
         )
     return labels.groupBy(F.col("label").cast("long").alias("component")).agg(
         F.count("*").alias("n_nodes")
@@ -1315,7 +1313,7 @@ def _brandes_forward(
     """
     lvl0 = sources.select(
         F.col("node").alias("src"), F.col("node"), F.lit(1).cast("long").alias("sigma")
-    ).transform(iter_checkpoint)
+    ).transform(materialize)
     srcs_n = lvl0.count()
     all_nodes = sym.select(F.col("dst").alias("node")).distinct()
     nodes_n = all_nodes.count()
@@ -1347,7 +1345,7 @@ def _brandes_forward(
                 cand.join(fkeys, ["src", "nbr"])
                 .groupBy("src", "node")
                 .agg(F.sum("sigma").alias("sigma"))
-                .transform(iter_checkpoint)
+                .transform(materialize)
             )
         else:
             expanded = cur.join(edges, cur.node == F.col("mid")).select(
@@ -1357,13 +1355,13 @@ def _brandes_forward(
                 expanded.join(visited, ["src", "node"], "left_anti")
                 .groupBy("src", "node")
                 .agg(F.sum("sigma").alias("sigma"))
-                .transform(iter_checkpoint)
+                .transform(materialize)
             )
         nxt_n = nxt.count()
         if nxt_n == 0:
             break
         frontiers.append(nxt)
-        visited = visited.unionByName(nxt.select("src", "node")).transform(iter_checkpoint)
+        visited = visited.unionByName(nxt.select("src", "node")).transform(materialize)
         visited_n += nxt_n
         cur, cur_n = nxt, nxt_n
     return frontiers
@@ -1437,7 +1435,7 @@ def _brandes_backward(sym: DataFrame, frontiers: list[DataFrame]) -> list[DataFr
             .select(
                 "src", "node", "sigma", F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta")
             )
-            .transform(iter_checkpoint)
+            .transform(materialize)
         )
         lv_n = f_n
         out.append(lv)
@@ -1553,10 +1551,7 @@ def g3b_betweenness_sampled(
         return betweenness_kernel_df(
             spark, g, BW_LEVELS, sample_mod, until_converged
         )
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v")
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).cache()
+    sym = _sym(edges if edges is not None else _edges(spark, sf_dir))
     nodes = sym.select(F.col("src").alias("node")).distinct()
     srcs = nodes.where(F.col("node") % sample_mod == 0)
     frontiers = _brandes_forward(sym, srcs, BW_LEVELS, until_converged=until_converged)
@@ -1617,7 +1612,7 @@ def betweenness_for_scale(
             budgeted_sample_mod,
         )
 
-        e = e.cache()
+        e = materialize(e)
         stats = (
             e.select(F.col("u").alias("n"))
             .unionAll(e.select(F.col("v").alias("n")))
@@ -1831,7 +1826,7 @@ def g12_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-homogeneous graph to empty). The Spark side peels to the actual fixpoint as
     an iterative dataflow: per round, one degree aggregate over
     edges-with-both-endpoints-alive and a filter; the survivor set
-    localCheckpoints per round (same lineage discipline as
+    is materialized per round (same lineage discipline as
     PageRank/components). Each round is one shuffle on node id;
     rounds needed = peel depth, typically tiny. The DuckDB oracle
     expresses the SAME peeling as a recursive CTE unrolled to
@@ -1868,7 +1863,7 @@ def g12_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     k_med = int(k_med_row)
     k = (2 * k_med + 2) // 3
-    alive = deg.select("a").transform(iter_checkpoint)
+    alive = deg.select("a").transform(materialize)
     n_alive = alive.count()
     rounds = 0
     while True:
@@ -1880,7 +1875,7 @@ def g12_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("d") >= k)
             .select("a")
         )
-        surviving = surviving.transform(iter_checkpoint)
+        surviving = surviving.transform(materialize)
         n_new = surviving.count()
         rounds += 1
         if n_new == n_alive or n_new == 0:

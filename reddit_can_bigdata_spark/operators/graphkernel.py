@@ -45,6 +45,12 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from reddit_can_bigdata_spark.operators.common import (
+    ITER_CHECKPOINT_DIR_CONF,
+    materialize,
+    materialized,
+)
+
 #: conf knob: queries use the vectorized broadcast kernels only while
 #: the undirected edge-aggregate row count stays under this; 0 or
 #: negative disables the kernel tier entirely (pure distributed loops).
@@ -92,8 +98,6 @@ def kernel_edge_limit(spark: SparkSession) -> int:
     # PRECEDENCE: iterCheckpointDir wins over graphKernelMaxEdges; a
     # caller who explicitly set BOTH gets a one-time warning so the
     # 10-100x slower loop path is attributable (round-11 advice).
-    from reddit_can_bigdata_spark.operators.common import ITER_CHECKPOINT_DIR_CONF
-
     if spark.conf.get(ITER_CHECKPOINT_DIR_CONF, None):
         explicit = spark.conf.get(GRAPH_KERNEL_MAX_EDGES_CONF, None)
         sc = spark.sparkContext
@@ -141,10 +145,10 @@ def collect_graph(
     """Collect the (small) edge aggregate as CSR arrays, or None.
 
     The gate is a COUNT over ``edges`` — one cheap aggregate job over
-    a transient cache (so the gate probe and the Arrow transfer run
-    the edge build once; above the gate the cache is dropped
-    immediately and the caller's distributed loop proceeds with its
-    own caching). Under the gate the edge rows come back through one
+    a scoped ``materialized`` frame (so the gate probe and the Arrow
+    transfer run the edge build once; above the gate it is released
+    immediately and the caller's distributed loop materializes its
+    own edge list). Under the gate the edge rows come back through one
     Arrow transfer (`toArrow`): this is the broadcast-join build-side
     pattern — metadata rows move to the driver once, the heavy relax
     work never shuffles at all."""
@@ -152,13 +156,10 @@ def collect_graph(
     if limit <= 0:
         return None
     cols = ["u", "v", "weight"] if "weight" in edges.columns else ["u", "v"]
-    e = edges.select(*cols).persist()
-    try:
+    with materialized(edges.select(*cols)) as e:
         if e.count() > limit:
             return None
         tbl = e.toArrow()
-    finally:
-        e.unpersist()
     u = tbl.column("u").to_numpy(zero_copy_only=False).astype(np.int64)
     v = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.int64)
     if "weight" in cols:
@@ -341,13 +342,10 @@ def collect_sym(
     limit = kernel_edge_limit(spark) if max_edges is None else max_edges
     if limit <= 0:
         return None
-    e = sym.select("src", "dst").persist()
-    try:
+    with materialized(sym.select("src", "dst")) as e:
         if e.count() > limit * 2:
             return None
         tbl = e.toArrow()
-    finally:
-        e.unpersist()
     src = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
     dst = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
     nodes = np.unique(np.concatenate([src, dst]))
@@ -931,7 +929,7 @@ def betweenness_kernel_df(
         # this one is an executor job, so pin it lazily (first action
         # materializes the |V|-row result; later consumers reuse the
         # blocks instead of re-running the Brandes kernel).
-        out = out.localCheckpoint(eager=False)
+        out = materialize(out, eager=False)
     return out
 
 

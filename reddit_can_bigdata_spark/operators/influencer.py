@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 # this module is imported directly (not via registry._ensure_loaded)
 from reddit_can_bigdata_spark.operators import advanced as _advanced
 from reddit_can_bigdata_spark.operators import graph as _graph
+from reddit_can_bigdata_spark.operators.common import materialize
 from reddit_can_bigdata_spark.registry import REGISTRY, register
 
 #: influencer flag cut-off (the reference flags the top 20 users)
@@ -196,7 +197,7 @@ def _graph_inputs(spark: SparkSession, sf_dir: str):
     g = collect_graph_raw(spark, sf_dir)
     if g is not None:
         return None, g
-    ed = _graph._edges(spark, sf_dir).localCheckpoint(eager=True)
+    ed = materialize(_graph._edges(spark, sf_dir))
     return ed, collect_graph(ed, spark)
 
 
@@ -231,12 +232,7 @@ def _scored(
     else:
         with ThreadPoolExecutor(len(arms)) as pool:
             frames = list(
-                pool.map(
-                    lambda a: a.produce(spark, sf_dir, ed, g).localCheckpoint(
-                        eager=True
-                    ),
-                    arms,
-                )
+                pool.map(lambda a: materialize(a.produce(spark, sf_dir, ed, g)), arms)
             )
     m = frames[0]
     for a, f in zip(arms[1:], frames[1:]):
@@ -248,7 +244,7 @@ def _scored(
         # projection); without a barrier the join — and every arm not
         # already materialized under it — runs twice (r4 judge flagged
         # the resulting cross-host variance). It is |nodes| rows.
-        m = m.localCheckpoint(eager=True)
+        m = materialize(m)
     b = m.agg(
         *(
             agg(a.col).alias(f"{side}{i}")
@@ -379,11 +375,7 @@ def user_network_table(
     if g is not None:
         labels = min_label_components(None, CC_ITERS, graph=g)
     else:
-        e = ed.select("u", "v")
-        sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        ).cache()
-        labels = min_label_components(sym, CC_ITERS)
+        labels = min_label_components(_graph._sym(ed), CC_ITERS)
     rank = F.when(F.col("influencer_rank") <= TOP_N, F.col("influencer_rank"))
     return ranked.join(
         labels.select("node", F.col("label").alias("community_id")), "node"

@@ -29,7 +29,7 @@ from reddit_can_bigdata_spark.functions.text import (
     PORTABLE_HASH32_SQL,
     portable_hash32,
 )
-from reddit_can_bigdata_spark.operators.common import iter_checkpoint, spread, tables
+from reddit_can_bigdata_spark.operators.common import materialize, spread, tables
 from reddit_can_bigdata_spark.registry import register
 
 CHUNK_TOKENS = 16  # tokens per chunk window
@@ -562,17 +562,15 @@ def pretrain_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts); contaminated = ≥1 collision."""
     docs = tables(spark, sf_dir)["documents"]
     # `g` feeds three consumers (eval grams, collision count, final
-    # join) — cache it or the text -> tokens -> distinct-grams
+    # join) — materialize it or the text -> tokens -> distinct-grams
     # projection executes three times (measured 3.5x on the bench).
-    # MEMORY_AND_DISK: at 100 TB the gram table spills rather than
-    # evicting mid-job; it is corpus-sized but column-pruned to
-    # (doc_id, grams).
-    from pyspark import StorageLevel
-
-    g = spread(docs).select(
-        "doc_id",
-        F.array_distinct(F.expr(_gram_expr(DECONTAM_N))).alias("grams"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # It is corpus-sized but column-pruned to (doc_id, grams).
+    g = materialize(
+        spread(docs).select(
+            "doc_id",
+            F.array_distinct(F.expr(_gram_expr(DECONTAM_N))).alias("grams"),
+        )
+    )
     is_eval = F.col("doc_id") % DECONTAM_EVAL_MOD == 0
     eg = (
         g.where(is_eval)
@@ -580,7 +578,7 @@ def pretrain_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # broadcast only under the ceiling (the count is one cheap slice
-    # of the cached gram table); otherwise shuffle-hash — the corpus
+    # of the materialized gram table); otherwise shuffle-hash — the corpus
     # side is the big one, so Spark shuffles grams, not documents
     n_eval_grams = eg.count()
     if n_eval_grams <= DECONTAM_BROADCAST_MAX_GRAMS:
@@ -1175,14 +1173,10 @@ def pretrain_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, never broadcasts — same footprint as the dedup shingle
     tables. Rounded to 6dp per the registry's float-sum rule."""
     docs = tables(spark, sf_dir)["documents"]
-    from pyspark import StorageLevel
-
     d = spread(docs).select(
         "doc_id", F.expr(_gram_expr(2)).alias("grams")
     )
-    bg = d.select("doc_id", F.explode("grams").alias("gr")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    bg = materialize(d.select("doc_id", F.explode("grams").alias("gr")))
     toks = spread(docs).select(
         F.explode(F.expr(TOKENS_EXPR)).alias("term")
     )
@@ -1276,15 +1270,13 @@ def pretrain_eval_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded to 6dp; the threshold compares the same unrounded ratio
     on both sides."""
     docs = tables(spark, sf_dir)["documents"]
-    g = (
-        spread(docs)
-        .select(
+    g = materialize(
+        spread(docs).select(
             "doc_id",
             F.explode(
                 F.array_distinct(F.expr(_gram_expr(CONTAIN_N)))
             ).alias("gram"),
         )
-        .persist()
     )
     is_eval = F.col("doc_id") % DECONTAM_EVAL_MOD == 0
     ev = g.where(is_eval).select(F.col("doc_id").alias("eval_id"), "gram")
@@ -1429,7 +1421,7 @@ def bpe_learn_merges(
     (2) takes the argmax with a deterministic (count desc, l, r)
     tiebreak — a 1-row driver scalar, the same legitimate collect
     class as `ml/sentiment.py`'s agreement rate — and (3) applies the
-    merge vocab-side with the `aggregate` fold, localCheckpointing so
+    merge vocab-side with the `aggregate` fold, materializing so
     N iterations don't stack N fold plans. At 100 TB the vocab is
     ~millions of rows: every iteration is sub-second cluster work;
     this is exactly how industrial BPE trainers (HuggingFace
@@ -1442,7 +1434,7 @@ def bpe_learn_merges(
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
     vocab = wc.select("cnt", F.expr(_chars_expr("word")).alias("syms"))
-    vocab = vocab.transform(iter_checkpoint)
+    vocab = vocab.transform(materialize)
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         pairs = vocab.where(F.size("syms") >= 2).select(
@@ -1469,7 +1461,7 @@ def bpe_learn_merges(
         merges.append((l, r, total))
         vocab = vocab.select(
             "cnt", F.expr(_merge_fold_expr("syms", l, r)).alias("syms")
-        ).transform(iter_checkpoint)
+        ).transform(materialize)
     return merges
 
 

@@ -23,7 +23,7 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from reddit_can_bigdata_spark.operators.common import tables
+from reddit_can_bigdata_spark.operators.common import materialize, tables
 from reddit_can_bigdata_spark.registry import register
 
 # Persisted trained codebook (seeded spherical k-means, k=8, seed=42,
@@ -868,7 +868,7 @@ def semantic_dedup_for_scale(
 
     if emb is None:
         emb = _embedded(tables(spark, sf_dir)["embeddings"])
-    emb = emb.cache()
+    emb = materialize(emb)
     cents = spark.read.parquet(CODEBOOK_FIXTURE)
     assigned = ivf_assign(emb, cents).select("vec_id", "cid", "embedding")
     stats = (
@@ -2023,8 +2023,6 @@ def _lloyd_centroids(
     corpus-sized codebook with the verified trainer."""
     from pyspark.sql import Window
 
-    from reddit_can_bigdata_spark.operators.common import iter_checkpoint
-
     cents = emb.where(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("e").alias("cv")
     )
@@ -2053,7 +2051,7 @@ def _lloyd_centroids(
                 " round(cast(sx as double) / n, 6) as m))), s -> s.m)"
             ).alias("ncv")
         )
-        cents = iter_checkpoint(
+        cents = materialize(
             cents.join(newc, "cid", "left").select(
                 "cid", F.coalesce("ncv", "cv").alias("cv")
             )

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from reddit_can_bigdata_spark.operators.common import tables
+from reddit_can_bigdata_spark.operators.common import materialize, tables
 from reddit_can_bigdata_spark.operators.tpch import _REV_SQL, _rev
 from reddit_can_bigdata_spark.registry import register
 
@@ -313,12 +313,13 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("s_suppkey")
     )
-    val = (
+    # two consumers: threshold + filter
+    val = materialize(
         t["lineitem"]
         .join(F.broadcast(afr), F.col("s_suppkey") == F.col("l_suppkey"))
         .groupBy("l_partkey")
-        .agg(F.sum(_rev()).alias("value_dec"))
-        .localCheckpoint(eager=False)  # two consumers: threshold + filter
+        .agg(F.sum(_rev()).alias("value_dec")),
+        eager=False,
     )
     thr = val.agg(
         (F.sum("value_dec").cast("double") * F.lit(0.0008)).alias("thr")
@@ -442,15 +443,16 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop them). Decimal equality is safe precisely because the sum
     is decimal; a double sum here could miss the max by one ULP."""
     t = tables(spark, sf_dir)
-    rev = (
+    # consumed by MAX and the filter
+    rev = materialize(
         t["lineitem"]
         .where(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
         )
         .groupBy("l_suppkey")
-        .agg(F.sum(_rev()).alias("total_dec"))
-        .localCheckpoint(eager=False)  # consumed by MAX and the filter
+        .agg(F.sum(_rev()).alias("total_dec")),
+        eager=False,
     )
     mx = rev.agg(F.max("total_dec").alias("max_dec"))
     return (

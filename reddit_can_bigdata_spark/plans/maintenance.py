@@ -37,6 +37,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DateType, StructField, StructType
 
+from reddit_can_bigdata_spark.operators.common import materialize
 from reddit_can_bigdata_spark.registry import register
 
 
@@ -183,7 +184,7 @@ def maint_backfill_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("total_value"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -227,7 +228,7 @@ def maint_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("total_value"),
         )
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         # after compact_table the path is a protocol-managed pointer:
         # plain rmtree would skip the symlink and leak the generation
@@ -292,7 +293,7 @@ def maint_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("total_score"),
         )
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -359,7 +360,7 @@ def maint_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("total_value"),
         )
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         drop_table(path)
 
@@ -472,7 +473,7 @@ def maint_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("total_value"),
         )
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         drop_table(path)
 
@@ -572,7 +573,7 @@ def maint_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("bigint").alias("cnt_expired"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         drop_table(path)
 
@@ -670,6 +671,6 @@ def maint_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("change_type", "event_type")
             .agg(F.count("*").cast("bigint").alias("n"))
         )
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         drop_table(path)

@@ -471,7 +471,7 @@ def dash_community_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     member's incident edge weight (the corpus analog of the
     reference's per-user total_score).
 
-    Scale shape: one cached symmetric edge table feeds both the label
+    Scale shape: one materialized symmetric edge table feeds both the label
     loop and the degree aggregate; the summary is a |V|-sized join +
     |C|-sized aggregate; top-10 is TakeOrderedAndProject."""
     from reddit_can_bigdata_spark.operators.graph import _label_prop

@@ -30,6 +30,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from reddit_can_bigdata_spark.operators.common import materialize
 from reddit_can_bigdata_spark.registry import register
 
 
@@ -113,7 +114,7 @@ def run_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         # storage so the memory-sink view and on-disk litter can be
         # dropped before returning — repeated invocations no longer
         # accumulate temp views / checkpoint dirs in the session.
-        return spark.table(name).localCheckpoint(eager=True)
+        return materialize(spark.table(name))
     finally:
         if q is not None and q.isActive:
             q.stop()
@@ -282,7 +283,7 @@ def streaming_etl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             transform=clean_text_etl_transform,
         )
         q.awaitTermination()
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
+        return materialize(spark.read.parquet(out_dir))
     finally:
         shutil.rmtree(stream_dir, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -402,7 +403,7 @@ def streaming_click_view_attribution(spark: SparkSession, sf_dir: str) -> DataFr
             .start()
         )
         q.awaitTermination()
-        return spark.table(name).localCheckpoint(eager=True)
+        return materialize(spark.table(name))
     finally:
         if q is not None and q.isActive:
             q.stop()
@@ -532,7 +533,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        return spark.table(name).localCheckpoint(eager=True)
+        return materialize(spark.table(name))
     finally:
         if q is not None and q.isActive:
             q.stop()
@@ -625,7 +626,7 @@ def streaming_pyds_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("total_score"),
         )
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         shutil.rmtree(cap_dir, ignore_errors=True)
         shutil.rmtree(out_dir, ignore_errors=True)
@@ -723,7 +724,7 @@ def streaming_pyds_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("total_score"),
         )
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         shutil.rmtree(cap_dir, ignore_errors=True)
         shutil.rmtree(out_dir, ignore_errors=True)
@@ -801,7 +802,7 @@ def streaming_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("total_chars"),
         )
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         shutil.rmtree(stream_dir, ignore_errors=True)
         shutil.rmtree(topic_dir, ignore_errors=True)

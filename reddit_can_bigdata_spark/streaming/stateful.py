@@ -24,6 +24,7 @@ from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
+from reddit_can_bigdata_spark.operators.common import materialize
 from reddit_can_bigdata_spark.registry import register
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -136,7 +137,7 @@ def run_sessionize_stream(
     )
     try:
         q.awaitTermination()
-        return spark.table(name).localCheckpoint(eager=True)
+        return materialize(spark.table(name))
     finally:
         if q.isActive:
             q.stop()

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import LongType, StructField, StructType
 
+from reddit_can_bigdata_spark.operators.common import materialize
 from reddit_can_bigdata_spark.registry import register
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -169,7 +170,7 @@ def run_milestones_stream(
         )
         try:
             q.awaitTermination()
-            return spark.table(name).localCheckpoint(eager=True)
+            return materialize(spark.table(name))
         finally:
             if q.isActive:
                 q.stop()
@@ -368,7 +369,7 @@ def run_sessions_timer_stream(
         )
         try:
             q.awaitTermination()
-            return spark.table(name).localCheckpoint(eager=True)
+            return materialize(spark.table(name))
         finally:
             if q.isActive:
                 q.stop()

@@ -8,6 +8,7 @@ components of a path = one.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 N = 12  # path 0-1-...-11, diameter 11 > CLOSENESS_HOPS/BW_LEVELS/CC_ITERS
@@ -98,22 +99,22 @@ def test_brandes_converged_matches_closed_form(spark):
 
 
 class TestReliableCheckpointMode:
-    """iter_checkpoint: one runtime conf flips every iterative loop
-    from executor-local localCheckpoint to RELIABLE checkpoint() —
-    the 100x-scale requirement (executor-local blocks die with the
+    """materialize: one runtime conf flips every materialization from
+    executor-local localCheckpoint to RELIABLE checkpoint() — the
+    100x-scale requirement (executor-local blocks die with the
     executor; reliable checkpoints survive and restart the lineage
-    from the last round, not round 0)."""
+    from the checkpoint, not from the scan)."""
 
     def test_helper_switches_on_conf_and_truncates_lineage(self, spark, tmp_path):
         from reddit_can_bigdata_spark.operators.common import (
             ITER_CHECKPOINT_DIR_CONF,
-            iter_checkpoint,
+            materialize,
         )
 
         df = spark.range(100).selectExpr("id", "id * 2 AS v")
         try:
             spark.conf.set(ITER_CHECKPOINT_DIR_CONF, str(tmp_path / "ck"))
-            ck = iter_checkpoint(df)
+            ck = materialize(df)
             # reliable checkpoint materializes files under the dir...
             files = list((tmp_path / "ck").rglob("*"))
             assert any(f.is_file() for f in files), files
@@ -127,30 +128,51 @@ class TestReliableCheckpointMode:
             spark.conf.unset(ITER_CHECKPOINT_DIR_CONF)
         # conf unset => back to localCheckpoint (no new files appear)
         n_before = len(list((tmp_path / "ck").rglob("*")))
-        iter_checkpoint(df)
+        materialize(df)
         assert len(list((tmp_path / "ck").rglob("*"))) == n_before
 
-    def test_g6_pagerank_identical_under_reliable_checkpoints(self, spark, tmp_path):
-        """The actual loop: g6 with reliable checkpoints produces
-        bit-identical ranks to the default local mode (checkpointing
-        must never change results, only fault tolerance)."""
+    @pytest.mark.parametrize(
+        "name",
+        [
+            # a loop: per-round state
+            "g6_pagerank",
+            # sites that were not loops before the policy had one owner:
+            # the dedup shingle/rare/signature barriers
+            "dedup_lsh_quality",
+            "curate_dsir_logweight",
+            # the label loop's shared symmetric edge list
+            "g7_label_propagation",
+            # lazy scalar barriers
+            "tpch_q15_top_supplier",
+            # a streaming snapshot read back from its sink
+            "streaming_etl_sink",
+        ],
+    )
+    def test_g6_pagerank_identical_under_reliable_checkpoints(
+        self, spark, tmp_path, sf_dir, name
+    ):
+        """Reliable checkpoints produce the same rows as the default
+        local mode (materialization must never change results, only
+        fault tolerance), and every case writes checkpoint files."""
         from reddit_can_bigdata_spark.operators.common import (
             ITER_CHECKPOINT_DIR_CONF,
         )
-        from reddit_can_bigdata_spark.operators.graph import g6_pagerank
+        from reddit_can_bigdata_spark.registry import REGISTRY, _ensure_loaded
 
-        sf = "/root/testdata/sf0.001"
-        local = {
-            (r["node"],): r["pagerank"] for r in g6_pagerank(spark, sf).collect()
-        }
+        _ensure_loaded()
+        fn = REGISTRY[name].fn
+
+        def rows():
+            return sorted(map(tuple, fn(spark, sf_dir).collect()), key=repr)
+
+        local = rows()
+        ckdir = tmp_path / "ck"
         try:
-            spark.conf.set(ITER_CHECKPOINT_DIR_CONF, str(tmp_path / "g6ck"))
-            reliable = {
-                (r["node"],): r["pagerank"]
-                for r in g6_pagerank(spark, sf).collect()
-            }
-            files = [f for f in (tmp_path / "g6ck").rglob("*") if f.is_file()]
-            assert files, "loop rounds must write reliable checkpoints"
+            spark.conf.set(ITER_CHECKPOINT_DIR_CONF, str(ckdir))
+            reliable = rows()
+            files = [f for f in ckdir.rglob("*") if f.is_file()]
+            assert files, f"{name}: no reliable checkpoint written"
         finally:
             spark.conf.unset(ITER_CHECKPOINT_DIR_CONF)
+        assert local, name
         assert local == reliable

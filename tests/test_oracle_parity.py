@@ -49,11 +49,27 @@ def _normalize(rows, cols):
     return sorted(out, key=lambda t: tuple(str(x) for x in t))
 
 
+def _cache_entries(spark) -> set[int]:
+    """Identities of the entries in the JVM CacheManager. Its entry
+    list is private, so it is read through reflection."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)
+    ident = spark._jvm.java.lang.System.identityHashCode
+    return {ident(entries.apply(i)) for i in range(entries.size())}
+
+
 def _check_oracle(name, spark, duck, sf_dir):
     spec = REGISTRY[name]
+    before = _cache_entries(spark)
     sdf = spec.fn(spark, sf_dir)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
+    # a plan-keyed cache entry outliving its query is shared with every
+    # later call of the same plan (warm bench reps) and never released
+    leaked = _cache_entries(spark) - before
+    assert not leaked, f"{name}: left {len(leaked)} CacheManager entries behind"
 
     if spec.oracle is None:
         assert len(spark_rows) >= 0  # rows-only smoke
