@@ -434,7 +434,7 @@ def g5_eigenvector_centrality(
     v = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("val")
     )
-    mode = _state_mode(v.count(), state_mode)
+    mode = state_mode or _state_mode(v.count())
     for _ in range(EIGEN_ITERS):
         m = (
             _join_state(sym, v, sym.src == v.node, mode)

@@ -328,14 +328,28 @@ def g2_degree_centrality(
 )
 def g8_graph_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8: graph metadata — node count, edge count, density 2E/(N(N-1))
-    (`network-analysis/network_analysis.py:119,333`)."""
-    e = _edges(spark, sf_dir)
-    nodes = e.select(F.col("u").alias("node")).unionAll(
-        e.select(F.col("v").alias("node"))
-    ).distinct()
-    ec = e.agg(F.count("*").alias("num_edges"))
-    nc = nodes.agg(F.count("*").alias("num_nodes"))
-    return nc.crossJoin(ec).select(
+    (`network-analysis/network_analysis.py:119,333`). Under the raw
+    collect gate the counts come off the collected CSR as a 1-row
+    frame; above it, from the distributed edge aggregate."""
+    from reddit_can_bigdata_spark.operators.graphkernel import _local_df, collect_graph_raw
+
+    g = collect_graph_raw(spark, sf_dir)
+    if g is not None:
+        import pandas as pd
+
+        # a pandas frame becomes a local relation: no Python worker runs
+        counts = _local_df(spark, pd.DataFrame(
+            {"num_nodes": [g.n_nodes], "num_edges": [g.n_sym_edges // 2]}
+        ))
+    else:
+        e = _edges(spark, sf_dir)
+        nodes = e.select(F.col("u").alias("node")).unionAll(
+            e.select(F.col("v").alias("node"))
+        ).distinct()
+        ec = e.agg(F.count("*").alias("num_edges"))
+        nc = nodes.agg(F.count("*").alias("num_nodes"))
+        counts = nc.crossJoin(ec)
+    return counts.select(
         "num_nodes",
         "num_edges",
         # try_divide: an empty/one-node graph has no defined density —
@@ -863,6 +877,12 @@ def g6_pagerank(
 
 
 LP_ITERS = 4
+#: round cap of ``until_converged`` label propagation: sync label
+#: propagation can 2-cycle on bipartite-ish structure (no guaranteed
+#: fixed point), so it caps at a budget enough for any practical
+#: community structure rather than the diameter-scale backstop the
+#: monotone loops use.
+LP_CONVERGED_ROUNDS = 50
 
 
 def _labelprop_oracle() -> str:
@@ -913,14 +933,10 @@ def label_prop_partition(
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    mode = _state_mode(labels.count(), state_mode)
+    mode = state_mode or _state_mode(labels.count())
     w = Window.partitionBy("node").orderBy(F.desc("wsum"), F.asc("label"))
-    # sync LP can 2-cycle on bipartite-ish structure (no guaranteed
-    # fixed point), so `until_converged` caps at 50 rounds — enough
-    # for any practical community structure — rather than the
-    # diameter-scale backstop the monotone loops use. The early exit
-    # below fires at the first genuine fixed point.
-    rounds = 50 if until_converged else LP_ITERS
+    # the early exit below fires at the first genuine fixed point
+    rounds = LP_CONVERGED_ROUNDS if until_converged else LP_ITERS
     for _ in range(rounds):
         votes = (
             _join_state(sym, labels, sym.dst == labels.node, mode)
@@ -951,10 +967,27 @@ def label_prop_partition(
 
 def _label_prop(
     spark: SparkSession, sf_dir: str, state_mode: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Label propagation over the event co-occurrence graph: builds
-    the dst-partitioned symmetric edge list, runs
-    `label_prop_partition`; returns (sym, labels)."""
+) -> tuple[DataFrame | tuple, DataFrame]:
+    """Label propagation over the event co-occurrence graph; returns
+    (graph, labels), ``labels`` a frame with (node, label) columns.
+
+    Under the kernel gate (``state_mode`` unset) ``graph`` is
+    ``(GraphArrays, label array aligned with its nodes)``, so callers
+    sum edge weights on the driver, and ``labels`` also carries each
+    node's degree and engagement (`community_nodes_df`). Otherwise
+    ``graph`` is the dst-partitioned symmetric edge list (src, dst, w)
+    that `label_prop_partition` ran over."""
+    if state_mode is None:
+        from reddit_can_bigdata_spark.operators.graphkernel import (
+            collect_graph_auto,
+            community_nodes_df,
+            label_prop_kernel,
+        )
+
+        g = collect_graph_auto(spark, sf_dir)
+        if g is not None:
+            lab = label_prop_kernel(g, LP_ITERS)
+            return (g, lab), community_nodes_df(spark, g, lab)
     sym = _sym(_edges(spark, sf_dir), "w", key="dst")
     return sym, label_prop_partition(sym, state_mode)
 
@@ -967,12 +1000,14 @@ def _label_prop(
 def g7_label_propagation(
     spark: SparkSession, sf_dir: str, state_mode: str | None = None
 ) -> DataFrame:
-    """G7 (community structure, distributed path): weighted label
-    propagation — the scalable stand-in for Louvain
-    (`louvain_communities(G, weight, seed=42)`,
-    `network-analysis/network_analysis.py:194`), which is inherently
-    sequential; community count/membership are asserted exactly only
-    at test scale (SURVEY §7.3 risk 1). Loop in `_label_prop`."""
+    """G7 (community structure): weighted label propagation — the
+    scalable stand-in for Louvain (`louvain_communities(G, weight,
+    seed=42)`, `network-analysis/network_analysis.py:194`), which is
+    inherently sequential; community count/membership are asserted
+    exactly only at test scale (SURVEY §7.3 risk 1). Under the kernel
+    gate the rounds run on the driver (`label_prop_kernel`); above it,
+    or with ``state_mode`` pinned, as the distributed loop
+    (`label_prop_partition`). Both tiers in `_label_prop`."""
     _, labels = _label_prop(spark, sf_dir, state_mode)
     return labels.groupBy(F.col("label").cast("long").alias("community")).agg(
         F.count("*").alias("n_nodes")
@@ -1021,38 +1056,43 @@ def g7c_modularity(
     relationally: Q = Σ_c [w_in(c)/m − (deg(c)/2m)²]. This is the
     quantitative bridge to the reference's Louvain output: partitions
     are compared by Q, not by label equality (SURVEY §7.3 risk 1).
-    Two joins + two aggregates over the community assignment."""
-    sym, comm = _label_prop(spark, sf_dir, state_mode)
-    ca = comm.select(F.col("node").alias("src"), F.col("label").alias("la"))
-    cb = comm.select(F.col("node").alias("dst"), F.col("label").alias("lb"))
-    two_m = sym.agg(F.sum("w").alias("two_m"))
-    internal = (
-        sym.join(F.broadcast(ca), "src")
-        .join(F.broadcast(cb), "dst")
-        .where(F.col("la") == F.col("lb"))
-        .groupBy(F.col("la").alias("label"))
-        .agg(F.sum("w").alias("w_in2"))
-    )
-    degs = (
-        sym.join(F.broadcast(ca), "src")
-        .groupBy(F.col("la").alias("label"))
-        .agg(F.sum("w").alias("deg_c"))
-    )
-    ncomm = comm.agg(F.countDistinct("label").alias("n_communities"))
-    q = (
-        degs.join(internal, "label", "left")
-        .crossJoin(F.broadcast(two_m))
-        .agg(
-            F.round(
-                F.sum(
-                    F.coalesce(F.col("w_in2"), F.lit(0.0)) / F.col("two_m")
-                    - (F.col("deg_c") / F.col("two_m")) * (F.col("deg_c") / F.col("two_m"))
-                ).cast("double"),
-                6,
-            ).alias("modularity")
+    On the kernel tier the per-community sums come off the CSR; on
+    the loop tier they are two joins + two aggregates over the
+    community assignment. Every node has an edge, so each community
+    has one (label, deg_c, w_in2, two_m) row."""
+    graph, comm = _label_prop(spark, sf_dir, state_mode)
+    if isinstance(graph, DataFrame):
+        sym = graph
+        ca = comm.select(F.col("node").alias("src"), F.col("label").alias("la"))
+        cb = comm.select(F.col("node").alias("dst"), F.col("label").alias("lb"))
+        two_m = sym.agg(F.sum("w").alias("two_m"))
+        internal = (
+            sym.join(F.broadcast(ca), "src")
+            .join(F.broadcast(cb), "dst")
+            .where(F.col("la") == F.col("lb"))
+            .groupBy(F.col("la").alias("label"))
+            .agg(F.sum("w").alias("w_in2"))
         )
+        degs = (
+            sym.join(F.broadcast(ca), "src")
+            .groupBy(F.col("la").alias("label"))
+            .agg(F.sum("w").alias("deg_c"))
+        )
+        terms = degs.join(internal, "label", "left").crossJoin(F.broadcast(two_m))
+    else:
+        from reddit_can_bigdata_spark.operators.graphkernel import modularity_terms_df
+
+        terms = modularity_terms_df(spark, *graph)
+    return terms.agg(
+        F.count("*").alias("n_communities"),
+        F.round(
+            F.sum(
+                F.coalesce(F.col("w_in2"), F.lit(0.0)) / F.col("two_m")
+                - (F.col("deg_c") / F.col("two_m")) * (F.col("deg_c") / F.col("two_m"))
+            ).cast("double"),
+            6,
+        ).alias("modularity"),
     )
-    return ncomm.crossJoin(q)
 
 
 def min_label_components(
@@ -1114,7 +1154,7 @@ def min_label_components(
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    mode = _state_mode(labels.count(), state_mode)
+    mode = state_mode or _state_mode(labels.count())
     rounds = rounds_budget
     converged = False
     executed_rounds = 0

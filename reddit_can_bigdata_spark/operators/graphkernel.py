@@ -20,10 +20,11 @@ native code). This module supplies that kernel tier:
   ``mapInArrow`` over a chunked work list — Spark still owns
   distribution, scheduling and fault tolerance;
 - whole-graph single-vector iterations (PageRank, eigenvector,
-  min-label) run as one executor task: a graph under the broadcast
-  gate is by definition single-executor-sized, and 10 rounds of
-  gather+bincount over E_sym edges is micro-seconds-per-million-edges
-  work that the per-round shuffle barrier used to dominate.
+  min-label, weighted label propagation) run on the driver: a graph
+  under the broadcast gate is by definition single-executor-sized, and
+  10 rounds of gather+bincount over E_sym edges is
+  micro-seconds-per-million-edges work that the per-round shuffle
+  barrier used to dominate.
 
 Above the gate — or when a caller explicitly pins a ``state_mode`` —
 every operator falls back to the unchanged distributed loop, which
@@ -969,6 +970,22 @@ def triangles_kernel_df(spark: SparkSession, g: GraphArrays) -> DataFrame:
     )
 
 
+def _strength(g: GraphArrays) -> tuple[np.ndarray, np.ndarray]:
+    """Per-node degree and weighted degree off the CSR: row length and
+    row weight sum, both int64."""
+    counts = np.diff(g.indptr)
+    if (counts == 0).any():  # defensive: edge-derived graphs have none
+        wdeg = np.zeros(g.n_nodes, dtype=np.int64)
+        np.add.at(
+            wdeg,
+            np.repeat(np.arange(g.n_nodes, dtype=np.int64), counts),
+            g.weights,
+        )
+    else:
+        wdeg = np.add.reduceat(g.weights, g.indptr[:-1])
+    return counts, wdeg
+
+
 def degree_kernel_df(spark: SparkSession, g: GraphArrays) -> DataFrame:
     """Degree / weighted degree straight off the CSR (row length and
     per-row weight sum — the same integers g2's explode + hash
@@ -986,23 +1003,10 @@ def degree_kernel_df(spark: SparkSession, g: GraphArrays) -> DataFrame:
             "node long, degree long, weighted_degree long,"
             " degree_centrality double",
         )
-    counts = np.diff(g.indptr)
-    if (counts == 0).any():  # defensive: edge-derived graphs have none
-        wdeg = np.zeros(g.n_nodes, dtype=np.int64)
-        np.add.at(
-            wdeg,
-            np.repeat(np.arange(g.n_nodes, dtype=np.int64), counts),
-            g.weights,
-        )
-    else:
-        wdeg = np.add.reduceat(g.weights, g.indptr[:-1])
+    counts, wdeg = _strength(g)
     deg = _local_df(spark,
         pd.DataFrame(
-            {
-                "node": g.nodes,
-                "degree": counts.astype(np.int64),
-                "weighted_degree": wdeg.astype(np.int64),
-            }
+            {"node": g.nodes, "degree": counts, "weighted_degree": wdeg}
         )
     )
     n = deg.agg(F.count("*").cast("double").alias("n_nodes"))
@@ -1115,3 +1119,87 @@ def min_label_kernel(
             break
         labels = new
     return g.nodes, labels, executed, converged
+
+
+def label_prop_kernel(g: GraphArrays, rounds: int) -> np.ndarray:
+    """Weighted label propagation over the CSR, mirroring
+    ``label_prop_partition`` round for round: every node synchronously
+    adopts the neighbour label with the greatest summed edge weight
+    (tie → smallest label), for ``rounds`` rounds or until the first
+    round that changes nothing. The weights are integer pair counts,
+    so the vote sums stay int64 and the labels are bit-identical to
+    the loop's. Returns the labels (node ids) aligned with ``g.nodes``;
+    a node without neighbours keeps its own."""
+    nv = g.n_nodes
+    if g.n_sym_edges == 0:
+        return g.nodes.copy()
+    # labels as node POSITIONS: the node list is sorted, so positions
+    # order like the ids and the tie-break is unchanged
+    lab = np.arange(nv, dtype=np.int64)
+    rows = np.repeat(lab, np.diff(g.indptr))
+    nbrs = g.indices.astype(np.int64)
+    for _ in range(rounds):
+        # one (row, label) vote per CSR slot, summed per distinct pair
+        key = rows * nv + lab[nbrs]
+        order = np.argsort(key, kind="stable")
+        key = key[order]
+        start = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        wsum = np.add.reduceat(g.weights[order], start)
+        vrow, vlab = np.divmod(key[start], nv)
+        best = np.lexsort((vlab, -wsum, vrow))
+        best = best[np.r_[True, vrow[best][1:] != vrow[best][:-1]]]
+        new = lab.copy()
+        new[vrow[best]] = vlab[best]
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    return g.nodes[lab]
+
+
+def community_nodes_df(
+    spark: SparkSession, g: GraphArrays, labels: np.ndarray
+) -> DataFrame:
+    """(node, label, degree, engagement) per node: the label from
+    :func:`label_prop_kernel`, degree and engagement straight off the
+    CSR (row length; row weight sum as a double, the loop's ``w``)."""
+    if g.n_nodes == 0:
+        return _empty_result(
+            spark, "node long, label long, degree long, engagement double"
+        )
+    import pandas as pd
+
+    deg, wdeg = _strength(g)
+    return _local_df(spark, pd.DataFrame({
+        "node": g.nodes,
+        "label": labels,
+        "degree": deg,
+        "engagement": wdeg.astype(np.float64),
+    }))
+
+
+def modularity_terms_df(
+    spark: SparkSession, g: GraphArrays, labels: np.ndarray
+) -> DataFrame:
+    """(label, deg_c, w_in2, two_m) per community of ``labels``: the
+    summed weighted degree of its members, the weight of its internal
+    edges counted in both directions, and the graph's total weight in
+    both directions. Integer sums, emitted as doubles."""
+    if g.n_nodes == 0:
+        return _empty_result(
+            spark, "label long, deg_c double, w_in2 double, two_m double"
+        )
+    import pandas as pd
+
+    comm, ci = np.unique(labels, return_inverse=True)
+    deg_c = np.zeros(comm.shape[0], dtype=np.int64)
+    np.add.at(deg_c, ci, _strength(g)[1])
+    src = ci[np.repeat(np.arange(g.n_nodes, dtype=np.int64), np.diff(g.indptr))]
+    inside = src == ci[g.indices]
+    w_in2 = np.zeros(comm.shape[0], dtype=np.int64)
+    np.add.at(w_in2, src[inside], g.weights[inside])
+    return _local_df(spark, pd.DataFrame({
+        "label": comm,
+        "deg_c": deg_c.astype(np.float64),
+        "w_in2": w_in2.astype(np.float64),
+        "two_m": np.full(comm.shape[0], float(g.weights.sum())),
+    }))

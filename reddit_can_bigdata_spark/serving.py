@@ -471,19 +471,23 @@ def dash_community_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     member's incident edge weight (the corpus analog of the
     reference's per-user total_score).
 
-    Scale shape: one materialized symmetric edge table feeds both the label
-    loop and the degree aggregate; the summary is a |V|-sized join +
-    |C|-sized aggregate; top-10 is TakeOrderedAndProject."""
+    Scale shape: under the kernel gate the labels, degrees and
+    engagements all come off the collected CSR as one |V|-row frame;
+    above it one materialized symmetric edge table feeds both the label
+    loop and the degree aggregate, joined on node. Either way the
+    summary is a |C|-sized aggregate; top-10 is
+    TakeOrderedAndProject."""
     from reddit_can_bigdata_spark.operators.graph import _label_prop
 
-    sym, labels = _label_prop(spark, sf_dir)
-    nodedeg = sym.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("bigint").alias("degree"),
-        F.sum("w").alias("engagement"),
-    )
+    graph, labels = _label_prop(spark, sf_dir)
+    if isinstance(graph, DataFrame):
+        nodedeg = graph.groupBy(F.col("src").alias("node")).agg(
+            F.count("*").cast("bigint").alias("degree"),
+            F.sum("w").alias("engagement"),
+        )
+        labels = labels.join(nodedeg, "node")
     stats = (
-        labels.join(nodedeg, "node")
-        .groupBy(F.col("label").cast("long").alias("community"))
+        labels.groupBy(F.col("label").cast("long").alias("community"))
         .agg(
             F.count("*").cast("bigint").alias("members"),
             F.round(F.avg("degree"), 6).alias("avg_degree"),

@@ -682,3 +682,69 @@ def test_dense_blas_kernels_match_executor_kernels(spark, sf_dir):
         gk.TRIANGLE_DENSE_MAX_NODES = orig
     for k in dense:
         assert dense[k] == exe[k], f"dense vs executor kernel mismatch: {k}"
+
+
+def _lp_tie_graphs():
+    """Undirected (u, v, w) edge lists for the label-propagation
+    kernel-vs-loop check. ``random``: seeded random graphs with weights
+    1-2 (many equal vote sums, so the smallest-label tie-break decides
+    often), joined as disjoint components under node-id offsets.
+    ``swap``: the star K(1,3), on which synchronous propagation flips
+    between two labellings forever. ``single_edge``: one edge, which
+    swaps its two labels every round."""
+    rng = np.random.default_rng(20241017)
+    rand, base = [], 0
+    for _ in range(12):
+        n = int(rng.integers(4, 24))
+        for u in range(n):
+            for v in range(u + 1, n):
+                if rng.random() < 0.3:
+                    rand.append((base + u, base + v, int(rng.integers(1, 3))))
+        base += n + 5
+    return {
+        "random": rand,
+        "swap": [(10, 11, 1), (10, 12, 1), (10, 13, 1)],
+        "single_edge": [(3, 7, 2)],
+    }
+
+
+@pytest.mark.parametrize("until_converged", [False, True])
+@pytest.mark.parametrize("case", ["random", "swap", "single_edge"])
+def test_label_prop_kernel_matches_loop(spark, case, until_converged):
+    """The driver-side label-propagation kernel must return the exact
+    (node, label) map of the distributed loop it replaces under the
+    kernel gate, at the fixed LP_ITERS budget and at the
+    until_converged cap, including graphs that never converge (where
+    the round cap, not the early exit, ends both)."""
+    from reddit_can_bigdata_spark.operators.graph import (
+        LP_CONVERGED_ROUNDS,
+        LP_ITERS,
+        label_prop_partition,
+    )
+    from reddit_can_bigdata_spark.operators.graphkernel import (
+        build_arrays,
+        label_prop_kernel,
+    )
+
+    edges = _lp_tie_graphs()[case]
+    u, v, w = (np.array(c, dtype=np.int64) for c in zip(*edges))
+    g = build_arrays(u, v, w)
+    if case != "random":
+        # the graph really swaps: the labelling after one more round
+        # differs, and after two more it is back
+        once, twice = label_prop_kernel(g, 1), label_prop_kernel(g, 2)
+        assert not np.array_equal(once, twice)
+        assert np.array_equal(label_prop_kernel(g, 3), once)
+    rounds = LP_CONVERGED_ROUNDS if until_converged else LP_ITERS
+    kernel = dict(zip(g.nodes.tolist(), label_prop_kernel(g, rounds).tolist()))
+
+    sym = spark.createDataFrame(
+        [(a, b, float(c)) for a, b, c in edges]
+        + [(b, a, float(c)) for a, b, c in edges],
+        "src long, dst long, w double",
+    )
+    loop = {
+        r["node"]: r["label"]
+        for r in label_prop_partition(sym, until_converged=until_converged).collect()
+    }
+    assert kernel == loop

@@ -157,3 +157,31 @@ def test_g2_raw_gate_miss_adds_no_count_job(spark, duck, sf_dir):
             )
             _check_oracle("g2_degree_centrality", spark, duck, sf_dir)
     assert jobs["1"] == jobs["0"] > 0, jobs
+
+
+@pytest.mark.parametrize(
+    "name", ["g7_label_propagation", "dash_community_summary", "g8_graph_metadata"]
+)
+def test_network_page_graph_queries_take_few_jobs(name, spark, duck, sf_dir):
+    """On the default tier the label-propagation queries run their
+    rounds on the driver and g8 reads its counts off the raw-collected
+    graph: at most 3 jobs each, where the distributed loop submitted
+    ~40 for label propagation and the edge aggregate 7 for g8."""
+    _check_oracle(name, spark, duck, sf_dir)
+    fn = REGISTRY[name].fn
+    assert _jobs(spark, lambda: fn(spark, sf_dir).collect()) <= 3
+
+
+def test_pinned_state_mode_skips_the_count_job(spark, sf_dir):
+    """A caller that pins ``state_mode`` gets the loop without the
+    state-size count that only the unpinned choice needs, so it
+    submits fewer jobs than the unpinned loop tier."""
+    from reddit_can_bigdata_spark.operators.graph import g7_label_propagation
+
+    with _conf(spark, **{GRAPH_KERNEL_MAX_EDGES_CONF: "0"}):
+        unpinned = _jobs(spark, lambda: g7_label_propagation(spark, sf_dir).collect())
+    pinned = _jobs(
+        spark,
+        lambda: g7_label_propagation(spark, sf_dir, state_mode="broadcast").collect(),
+    )
+    assert 0 < pinned < unpinned, (pinned, unpinned)

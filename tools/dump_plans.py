@@ -70,7 +70,7 @@ SHOWCASE = {
     "cusum_changepoint_daily": "CUSUM via the prefix-sum identity: two ordered-frame window passes over a days-sized aggregate, no recursion.",
     "dash_posts_explorer": "Serving-catalog explorer: both widget predicates in PushedFilters; head-15 is TakeOrderedAndProject — an interactive page costs one pruned scan.",
     "dash_stats_timeline": "Date-range widget: the [start, end) predicate prunes at the scan (partition-pruning shape); day/type rollup in one exchange.",
-    "dash_community_summary": "Community block: one cached symmetric edge table feeds the label loop AND the degree aggregate; the summary is a |V|-sized join + |C|-sized aggregate into a top-10 heap.",
+    "dash_community_summary": "Community block, kernel tier: labels, degrees and engagement arrive as one |V|-row local table read off the collected CSR (no edge-sized operator left in the plan); the summary is a |C|-sized aggregate into a top-10 heap.",
     "sim_kmeans_lloyd": "Oracle-checkable Lloyd training: per round a K-row centroid broadcast argmin (corpus-linear, no corpus shuffle) + a (cid,dim)-keyed DECIMAL sum; rounds lineage-truncated.",
     "warehouse_scd1_upsert": "MERGE as a query: last-write-wins window over the update batch + key-only LEFT ANTI against the base — the base side is never aggregated or widened.",
     "pretrain_pack_firstfit": "No-split packing: column-pruned (doc_id, n_tokens) per shard through ONE Arrow crossing (FlatMapGroupsInPandas); bin state is two ints.",
