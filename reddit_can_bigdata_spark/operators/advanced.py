@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from reddit_can_bigdata_spark.operators import graphkernel as gk
 from reddit_can_bigdata_spark.operators.common import (
     DSUM_SQL,
     dsum,
@@ -421,16 +422,10 @@ def g5_eigenvector_centrality(
     Same Pregel-as-DataFrame loop as PageRank (G6): one shuffle per
     iteration on the destination key; the norm is a scalar aggregate
     broadcast back."""
-    if state_mode is None:
-        from reddit_can_bigdata_spark.operators.graphkernel import (
-            collect_graph_auto,
-            eigenvector_kernel_df,
-        )
-
-        g = collect_graph_auto(spark, sf_dir, edges, graph)
-        if g is not None:
-            return eigenvector_kernel_df(spark, g, EIGEN_ITERS)
-    sym = _sym(edges if edges is not None else _edges(spark, sf_dir), "w", key="src")
+    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph, kernel=state_mode is None)
+    if g is not None:
+        return gk.eigenvector_kernel_df(spark, g, EIGEN_ITERS)
+    sym = _sym(edges, "w", key="src")
     v = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("val")
     )
@@ -608,17 +603,12 @@ def g4c_closeness_sampled(
     it from a relax-row budget when the graph densifies past what
     1-in-7 affords (round-11 probe finding)."""
     sample_mod = CLOSENESS_SAMPLE_MOD if sample_mod is None else sample_mod
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        closeness_sampled_kernel_df,
-        collect_graph_auto,
-    )
-
-    g = collect_graph_auto(spark, sf_dir, edges, graph)
+    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph)
     if g is not None:
-        return closeness_sampled_kernel_df(
+        return gk.closeness_sampled_kernel_df(
             spark, g, CLOSENESS_HOPS, sample_mod, until_converged
         )
-    sym = _sym(edges if edges is not None else _edges(spark, sf_dir))
+    sym = _sym(edges)
     nodes = sym.select("src").distinct()
     srcs = nodes.where(F.col("src") % sample_mod == 0)
     dist = _bfs_distances(
@@ -702,7 +692,8 @@ def g4d_closeness_weighted_sampled(
     would freeze wrong distances. `_bfs_distances` enforces this
     (pull requires unweighted=True). State O(K·N); integer distances
     until one double division → exact oracle parity."""
-    sym = _sym(edges if edges is not None else _edges(spark, sf_dir), "weight")
+    edges, _ = gk.resolve_graph(spark, sf_dir, edges, kernel=False)
+    sym = _sym(edges, "weight")
     nodes = sym.select("src").distinct()
     srcs = nodes.where(F.col("src") % CLOSENESS_SAMPLE_MOD == 0)
     dist = _bfs_distances(
@@ -748,17 +739,12 @@ def g4_closeness_centrality(
     this becomes sampled-sources (pivot nodes) with identical code on
     a sampled src set (SURVEY §7.3 risk 2).
     """
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        closeness_kernel_df,
-        collect_graph_auto,
-    )
-
-    g = collect_graph_auto(spark, sf_dir, edges, graph)
+    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph)
     if g is not None:
-        return closeness_kernel_df(
+        return gk.closeness_kernel_df(
             spark, g, CLOSENESS_HOPS, until_converged, out_col="closeness"
         )
-    sym = _sym(edges if edges is not None else _edges(spark, sf_dir))
+    sym = _sym(edges)
     dist = _bfs_distances(
         sym, CLOSENESS_HOPS, F.lit(1), unweighted=True, until_converged=until_converged
     )
@@ -845,42 +831,16 @@ def closeness_for_scale(
     """
     import logging
 
+    # resolved ONCE here: the graph answers the gate and flows down to
+    # whichever closeness arm the gate picks (no second collect or build)
+    edges, graph = gk.resolve_graph(spark, sf_dir, edges, graph)
     sample_mod = None
     if mode is None:
-        if graph is None:
-            # resolve the kernel-tier graph ONCE here: it answers the
-            # gate for free and flows down to whichever closeness arm
-            # the gate picks (no second collect)
-            from reddit_can_bigdata_spark.operators.graphkernel import (
-                collect_graph_auto,
-            )
-
-            graph = collect_graph_auto(spark, sf_dir, edges)
-        if graph is not None:
-            # a pre-collected CSR already carries both gate inputs —
-            # no extra edge-table pass (same numbers: its node
-            # vocabulary is distinct(u ∪ v) and its symmetric slot
-            # count is 2·|E|)
-            if n_nodes is None:
-                n_nodes = graph.n_nodes
-            e_sym = graph.n_sym_edges
-        else:
-            e = edges if edges is not None else _edges(spark, sf_dir)
-            # one pass over the symmetric node column gives both gate
-            # inputs: distinct nodes and E_sym (= 2·|E|, each undirected
-            # edge relaxed in both directions every frontier pass)
-            stats = (
-                e.select(F.col("u").alias("n"))
-                .unionAll(e.select(F.col("v").alias("n")))
-                .agg(
-                    F.count_distinct(F.col("n")).alias("nn"),
-                    F.count("*").alias("e_sym"),
-                )
-                .collect()[0]
-            )
-            if n_nodes is None:
-                n_nodes = stats["nn"]
-            e_sym = stats["e_sym"]
+        # E_sym = 2·|E|: each undirected edge is relaxed in both
+        # directions every frontier pass
+        nn, e_sym, _ = gk.graph_size(edges, graph)
+        if n_nodes is None:
+            n_nodes = nn
         slots = spark.sparkContext.defaultParallelism
         relax_rows = n_nodes * e_sym
         relax_budget = CLOSENESS_RELAX_ROWS_PER_SLOT * slots

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from reddit_can_bigdata_spark.operators import graphkernel as gk
 from reddit_can_bigdata_spark.operators.common import materialize, tables
 from reddit_can_bigdata_spark.registry import register
 
@@ -274,16 +275,10 @@ def g2_degree_centrality(
         # plus an Arrow collect just to read row lengths, more than
         # the one-aggregate distributed plan below that it replaces, so
         # a raw-gate miss goes straight to that plan (the 100 TB path).
-        from reddit_can_bigdata_spark.operators.graphkernel import (
-            collect_graph_raw,
-        )
-
-        graph = collect_graph_raw(spark, sf_dir)
+        graph = gk.collect_graph_raw(spark, sf_dir)
     if graph is not None:
-        from reddit_can_bigdata_spark.operators.graphkernel import degree_kernel_df
-
-        return degree_kernel_df(spark, graph)
-    e = edges if edges is not None else _edges(spark, sf_dir)
+        return gk.degree_kernel_df(spark, graph)
+    e, _ = gk.resolve_graph(spark, sf_dir, edges, kernel=False)
     # One edge-table pass, not four: the u/v union as a generator over
     # a single scan (explode of the two endpoint structs), and the
     # |V|-row degree table materialized so the n-count broadcast job and
@@ -331,14 +326,12 @@ def g8_graph_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`network-analysis/network_analysis.py:119,333`). Under the raw
     collect gate the counts come off the collected CSR as a 1-row
     frame; above it, from the distributed edge aggregate."""
-    from reddit_can_bigdata_spark.operators.graphkernel import _local_df, collect_graph_raw
-
-    g = collect_graph_raw(spark, sf_dir)
+    g = gk.collect_graph_raw(spark, sf_dir)
     if g is not None:
         import pandas as pd
 
         # a pandas frame becomes a local relation: no Python worker runs
-        counts = _local_df(spark, pd.DataFrame(
+        counts = gk._local_df(spark, pd.DataFrame(
             {"num_nodes": [g.n_nodes], "num_edges": [g.n_sym_edges // 2]}
         ))
     else:
@@ -410,15 +403,17 @@ def g9_triangles_clustering(
     materialized; the wedge join and the closing-edge join shuffle on vertex
     ids.
     """
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        TRIANGLE_DENSE_MAX_NODES,
-        collect_graph_auto,
-        triangles_kernel_df,
-    )
+    return _triangles(spark, sf_dir, *gk.resolve_graph(spark, sf_dir, edges))
 
-    g = collect_graph_auto(spark, sf_dir, edges)
-    if g is not None and g.n_nodes <= TRIANGLE_DENSE_MAX_NODES:
-        tk = triangles_kernel_df(spark, g)
+
+def _triangles(
+    spark: SparkSession, sf_dir: str, edges: DataFrame | None, g
+) -> DataFrame:
+    """g9 over a resolved graph: the dense kernel on a CSR under
+    ``TRIANGLE_DENSE_MAX_NODES``, else the distributed count over the
+    edge frame (built here when the CSR came without one)."""
+    if g is not None and g.n_nodes <= gk.TRIANGLE_DENSE_MAX_NODES:
+        tk = gk.triangles_kernel_df(spark, g)
         local_k = F.when(
             F.col("degree") >= 2,
             2.0
@@ -433,7 +428,8 @@ def g9_triangles_clustering(
                 F.try_divide(F.sum(local_k).cast("double"), F.count("*")), 6
             ).alias("avg_clustering"),
         )
-    e = materialize((edges if edges is not None else _edges(spark, sf_dir)).select("u", "v"))
+    e, _ = gk.resolve_graph(spark, sf_dir, edges, kernel=False)
+    e = materialize(e.select("u", "v"))
     deg = materialize(
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -660,7 +656,8 @@ def g9b_triangles_wedge_sampled(
     memory (`network-analysis/network_analysis.py:335`); this is the
     form that survives the graph NetworkX cannot hold.
     """
-    e = materialize((edges if edges is not None else _edges(spark, sf_dir)).select("u", "v"))
+    e, _ = gk.resolve_graph(spark, sf_dir, edges, kernel=False)
+    e = materialize(e.select("u", "v"))
     sym = _sym(e)
     hk = (F.col("dst") * F.lit(WEDGE_HASH_MULT)) % F.lit(WEDGE_HASH_MOD)
     w = Window.partitionBy("src").orderBy(hk.asc(), F.col("dst").asc())
@@ -723,22 +720,10 @@ def triangles_for_scale(
     """
     import logging
 
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v")
+    edges, g = gk.resolve_graph(spark, sf_dir, edges)
     if mode is None:
-        e = materialize(e)
-        deg = (
-            e.select(F.col("u").alias("node"))
-            .unionAll(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("degree"))
-        )
-        row = deg.agg(
-            F.sum(F.col("degree") * F.col("degree")).alias("s"),
-            F.count("*").alias("nn"),
-            (F.sum("degree") / 2).alias("ne"),
-        ).collect()[0]
-        direct_cost = row["s"] or 0
-        n_nodes, n_edges = row["nn"], int(row["ne"] or 0)
+        n_nodes, e_sym, direct_cost = gk.graph_size(edges, g)
+        n_edges = e_sym // 2
         n_missing = n_nodes * (n_nodes - 1) // 2 - n_edges
         avg_deg = 2.0 * n_edges / max(n_nodes, 1)
         exact_cost = min(direct_cost, n_missing * avg_deg)
@@ -754,8 +739,8 @@ def triangles_for_scale(
             budget,
         )
     if mode == "exact":
-        return g9_triangles_clustering(spark, sf_dir, edges=e)
-    return g9b_triangles_wedge_sampled(spark, sf_dir, edges=e).select(
+        return _triangles(spark, sf_dir, edges, g)
+    return g9b_triangles_wedge_sampled(spark, sf_dir, edges=edges).select(
         F.round("triangles_est").cast("long").alias("total_triangles"),
         F.col("avg_clustering_est").alias("avg_clustering"),
     )
@@ -820,16 +805,10 @@ def g6_pagerank(
     teleport term). ``edges`` lets a composite share one materialized
     edge table across several centralities.
     """
-    if state_mode is None:
-        from reddit_can_bigdata_spark.operators.graphkernel import (
-            collect_graph_auto,
-            pagerank_kernel_df,
-        )
-
-        g = collect_graph_auto(spark, sf_dir, edges, graph)
-        if g is not None:
-            return pagerank_kernel_df(spark, g, PAGERANK_ITERS, PAGERANK_DAMPING)
-    sym = _sym(edges if edges is not None else _edges(spark, sf_dir), "w")
+    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph, kernel=state_mode is None)
+    if g is not None:
+        return gk.pagerank_kernel_df(spark, g, PAGERANK_ITERS, PAGERANK_DAMPING)
+    sym = _sym(edges, "w")
     wdeg = sym.groupBy("src").agg(F.sum("w").alias("wd"))
     # Iterative loops pay per-task scheduler overhead EVERY round, so
     # the materialized transition matrix wants few, fat partitions (measured
@@ -977,18 +956,11 @@ def _label_prop(
     node's degree and engagement (`community_nodes_df`). Otherwise
     ``graph`` is the dst-partitioned symmetric edge list (src, dst, w)
     that `label_prop_partition` ran over."""
-    if state_mode is None:
-        from reddit_can_bigdata_spark.operators.graphkernel import (
-            collect_graph_auto,
-            community_nodes_df,
-            label_prop_kernel,
-        )
-
-        g = collect_graph_auto(spark, sf_dir)
-        if g is not None:
-            lab = label_prop_kernel(g, LP_ITERS)
-            return (g, lab), community_nodes_df(spark, g, lab)
-    sym = _sym(_edges(spark, sf_dir), "w", key="dst")
+    edges, g = gk.resolve_graph(spark, sf_dir, kernel=state_mode is None)
+    if g is not None:
+        lab = gk.label_prop_kernel(g, LP_ITERS)
+        return (g, lab), gk.community_nodes_df(spark, g, lab)
+    sym = _sym(edges, "w", key="dst")
     return sym, label_prop_partition(sym, state_mode)
 
 
@@ -1080,9 +1052,7 @@ def g7c_modularity(
         )
         terms = degs.join(internal, "label", "left").crossJoin(F.broadcast(two_m))
     else:
-        from reddit_can_bigdata_spark.operators.graphkernel import modularity_terms_df
-
-        terms = modularity_terms_df(spark, *graph)
+        terms = gk.modularity_terms_df(spark, *graph)
     return terms.agg(
         F.count("*").alias("n_communities"),
         F.round(
@@ -1128,17 +1098,12 @@ def min_label_components(
     if state_mode is None:
         from pyspark.sql import SparkSession
 
-        from reddit_can_bigdata_spark.operators.graphkernel import (
-            collect_sym,
-            min_label_kernel,
-        )
-
         spark = (
             sym.sparkSession if sym is not None else SparkSession.getActiveSession()
         )
-        ga = graph if graph is not None else collect_sym(sym, spark)
+        ga = graph if graph is not None else gk.collect_sym(sym, spark)
         if ga is not None:
-            nodes_arr, labels_arr, executed, converged = min_label_kernel(
+            nodes_arr, labels_arr, executed, converged = gk.min_label_kernel(
                 ga, rounds_budget, shortcut=shortcut
             )
             LAST_COMPONENT_ROUNDS = executed
@@ -1297,25 +1262,17 @@ def g7_connected_components(
     which is inherently sequential; SURVEY §7.3 risk 1 keeps exact
     Louvain as a driver-side small-scale fallback (tests/test_graph).
     Output: one row per component with its size."""
-    g = None
-    if state_mode is None:
-        from reddit_can_bigdata_spark.operators.graphkernel import collect_graph_auto
-
-        # the CSR's indices ARE the symmetric pair list — under the
-        # kernel gate the whole sym-DataFrame build (edge aggregate +
-        # union + repartition + materialize + re-collect) disappears
-        g = collect_graph_auto(spark, sf_dir)
-    if g is not None:
-        labels = min_label_components(
-            None, CC_ITERS, state_mode, until_converged=until_converged, graph=g
-        )
-    else:
-        labels = min_label_components(
-            _sym(_edges(spark, sf_dir), key="dst"),
-            CC_ITERS,
-            state_mode,
-            until_converged=until_converged,
-        )
+    # the CSR's indices ARE the symmetric pair list — under the kernel
+    # gate the whole sym-DataFrame build (edge aggregate + union +
+    # repartition + materialize + re-collect) disappears
+    edges, g = gk.resolve_graph(spark, sf_dir, kernel=state_mode is None)
+    labels = min_label_components(
+        None if g is not None else _sym(edges, key="dst"),
+        CC_ITERS,
+        state_mode,
+        until_converged=until_converged,
+        graph=g,
+    )
     return labels.groupBy(F.col("label").cast("long").alias("component")).agg(
         F.count("*").alias("n_nodes")
     )
@@ -1581,17 +1538,12 @@ def g3b_betweenness_sampled(
     Scale: state is O(K·N) per phase, every round is join+agg on
     (src, node) keys — no collected adjacency, no O(N²) blowup."""
     sample_mod = BW_SAMPLE_MOD if sample_mod is None else sample_mod
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        betweenness_kernel_df,
-        collect_graph_auto,
-    )
-
-    g = collect_graph_auto(spark, sf_dir, edges, graph)
+    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph)
     if g is not None:
-        return betweenness_kernel_df(
+        return gk.betweenness_kernel_df(
             spark, g, BW_LEVELS, sample_mod, until_converged
         )
-    sym = _sym(edges if edges is not None else _edges(spark, sf_dir))
+    sym = _sym(edges)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     srcs = nodes.where(F.col("node") % sample_mod == 0)
     frontiers = _brandes_forward(sym, srcs, BW_LEVELS, until_converged=until_converged)
@@ -1644,28 +1596,15 @@ def betweenness_for_scale(
     modulus is LOGGED when it departs."""
     import logging
 
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select(
-        "u", "v"
-    )
-    if sample_mod is None:
-        from reddit_can_bigdata_spark.operators.common import (
-            budgeted_sample_mod,
-        )
+    from reddit_can_bigdata_spark.operators.common import budgeted_sample_mod
 
-        e = materialize(e)
-        stats = (
-            e.select(F.col("u").alias("n"))
-            .unionAll(e.select(F.col("v").alias("n")))
-            .agg(
-                F.count_distinct(F.col("n")).alias("nn"),
-                F.count("*").alias("e_sym"),
-            )
-            .collect()[0]
-        )
+    edges, g = gk.resolve_graph(spark, sf_dir, edges)
+    if sample_mod is None:
+        n_nodes, e_sym, _ = gk.graph_size(edges, g)
         slots = spark.sparkContext.defaultParallelism
         sample_mod = budgeted_sample_mod(
-            stats["nn"],
-            stats["e_sym"],
+            n_nodes,
+            e_sym,
             2 * BW_LEVELS,
             slots,
             BW_SAMPLE_MOD,
@@ -1675,12 +1614,12 @@ def betweenness_for_scale(
             "betweenness_for_scale: sample_mod=%d (n_nodes=%d, e_sym=%d, "
             "%d slots)",
             sample_mod,
-            stats["nn"],
-            stats["e_sym"],
+            n_nodes,
+            e_sym,
             slots,
         )
     return g3b_betweenness_sampled(
-        spark, sf_dir, edges=e, sample_mod=sample_mod
+        spark, sf_dir, edges=edges, sample_mod=sample_mod, graph=g
     )
 
 

@@ -26,16 +26,20 @@ native code). This module supplies that kernel tier:
   micro-seconds-per-million-edges work that the per-round shuffle
   barrier used to dominate.
 
-Above the gate — or when a caller explicitly pins a ``state_mode`` —
-every operator falls back to the unchanged distributed loop, which
-remains the 100 TB path. Results are IDENTICAL by construction:
-the kernels replicate the exact fixed-round semantics of the
-registered oracles (hop caps, level caps, early exits on converged /
-empty frontiers, min-label round truncation), integer state stays
-integer (int64 sigma / labels / distances), and the only float
-reorderings are the same associativity-of-double-sums freedom the
-Spark↔DuckDB parity already tolerates under the engine-wide round-6
-convention (see registry.py's float-stability rules).
+:func:`resolve_graph` is the one place that picks the tier for a graph
+query, a composite or a ``*_for_scale`` gate: the raw collect, else one
+edge aggregate probed by :func:`collect_graph`, else the distributed
+loop over that same aggregate. Above the gate — or when a caller
+explicitly pins a ``state_mode`` — every operator falls back to the
+unchanged distributed loop, which remains the 100 TB path. Results
+are IDENTICAL by construction: the kernels replicate the exact
+fixed-round semantics of the registered oracles (hop caps, level caps,
+early exits on converged / empty frontiers, min-label round
+truncation), integer state stays integer (int64 sigma / labels /
+distances), and the only float reorderings are the same
+associativity-of-double-sums freedom the Spark↔DuckDB parity already
+tolerates under the engine-wide round-6 convention (see registry.py's
+float-stability rules).
 """
 
 from __future__ import annotations
@@ -146,13 +150,15 @@ def collect_graph(
     """Collect the (small) edge aggregate as CSR arrays, or None.
 
     The gate is a COUNT over ``edges`` — one cheap aggregate job over
-    a scoped ``materialized`` frame (so the gate probe and the Arrow
-    transfer run the edge build once; above the gate it is released
-    immediately and the caller's distributed loop materializes its
-    own edge list). Under the gate the edge rows come back through one
-    Arrow transfer (`toArrow`): this is the broadcast-join build-side
-    pattern — metadata rows move to the driver once, the heavy relax
-    work never shuffles at all."""
+    a scoped ``materialized`` frame, so the gate probe and the Arrow
+    transfer read one evaluation of ``edges``. The frame
+    :func:`resolve_graph` builds is a lazy checkpoint that this count
+    writes: above the gate the caller's distributed loop reads that
+    checkpoint rather than rebuilding the edge aggregate. Under the
+    gate the edge rows come back through one Arrow transfer
+    (`toArrow`): this is the broadcast-join build-side pattern —
+    metadata rows move to the driver once, the heavy relax work never
+    shuffles at all."""
     limit = kernel_edge_limit(spark) if max_edges is None else max_edges
     if limit <= 0:
         return None
@@ -285,7 +291,8 @@ def collect_graph_raw(
             )
         except ValueError:
             max_bytes = GRAPH_RAW_COLLECT_MAX_BYTES
-    if max_bytes <= 0 or kernel_edge_limit(spark) <= 0:
+    limit = kernel_edge_limit(spark)
+    if max_bytes <= 0 or limit <= 0:
         return None
     path = os.path.join(sf_dir, "lineitem.parquet")
     if not os.path.exists(path) or _path_bytes(path) > max_bytes:
@@ -306,32 +313,80 @@ def collect_graph_raw(
     # ~1 GiB of headroom there).
     del tbl, c_ok, c_sk
     u, v, w = _edges_from_raw(ok, sk)
-    if u.shape[0] > kernel_edge_limit(spark):
+    if u.shape[0] > limit:
         return None
     return build_arrays(u, v, w)
 
 
-def collect_graph_auto(
+def resolve_graph(
     spark: SparkSession,
     sf_dir: str,
     edges: DataFrame | None = None,
     graph: GraphArrays | None = None,
-) -> GraphArrays | None:
-    """Kernel-tier graph resolution shared by every graph query: a
-    pre-collected graph wins; building from the default source tries
-    the raw-collect fast path first; an explicit ``edges`` frame (or a
-    raw-gate miss) goes through the distributed aggregate +
-    :func:`collect_graph` gate."""
-    if graph is not None:
-        return graph
-    if edges is None:
-        g = collect_graph_raw(spark, sf_dir)
-        if g is not None:
-            return g
-        from reddit_can_bigdata_spark.operators.graph import _edges
+    *,
+    kernel: bool = True,
+) -> tuple[DataFrame | None, GraphArrays | None]:
+    """The one place a graph query picks its physical tier: returns
+    ``(edges, graph)``, the edge aggregate (u, v, weight) and/or its
+    CSR, building each at most once.
 
-        edges = _edges(spark, sf_dir)
-    return collect_graph(edges, spark)
+    - ``kernel=False`` (the caller pinned ``state_mode``, or runs a
+      loop-only plan): the caller's ``edges``, else the plain lazy
+      edge aggregate — no probe, no checkpoint;
+    - a passed-in ``graph`` wins (a composite resolved it once for all
+      of its arms);
+    - no ``edges``: the raw collect (:func:`collect_graph_raw`, a
+      filesystem-stat gate) returns the CSR with no edge table built;
+    - otherwise the edge aggregate is built ONCE as a lazy checkpoint
+      and :func:`collect_graph` probes it. The probe's count writes the
+      checkpoint, so above the kernel gate (or with the tier off, when
+      there is no probe) the loop, and a caller that reads the frame
+      more than once, read it instead of rebuilding it. A frame found
+      above the gate is marked and not probed again when a composite's
+      arms or a ``*_for_scale`` gate's pick pass it back in.
+
+    g2 and g8 do not come here: each one's distributed plan is a
+    single aggregate, cheaper than a probe of the edge aggregate, so on
+    a raw-gate miss they go straight to it (`collect_graph_raw` only).
+    """
+    from reddit_can_bigdata_spark.operators.graph import _edges
+
+    if not kernel:
+        return (_edges(spark, sf_dir) if edges is None else edges), None
+    if graph is not None or getattr(edges, "_above_kernel_gate", False):
+        return edges, graph
+    if edges is None:
+        graph = collect_graph_raw(spark, sf_dir)
+        if graph is not None:
+            return None, graph
+        edges = materialize(_edges(spark, sf_dir), eager=False)
+    graph = collect_graph(edges, spark)
+    edges._above_kernel_gate = graph is None
+    return edges, graph
+
+
+def graph_size(
+    edges: DataFrame | None, graph: GraphArrays | None
+) -> tuple[int, int, int]:
+    """(n_nodes, e_sym, Σdeg²) of a resolved graph: the inputs of the
+    `*_for_scale` work gates. Off the CSR's row lengths when there is
+    one (zero jobs); else one aggregate over the degree table of the
+    edge frame. Identical by construction: the CSR's vocabulary is
+    distinct(u ∪ v), one degree row per node, and e_sym = Σdeg."""
+    if graph is not None:
+        deg = np.diff(graph.indptr)
+        return graph.n_nodes, int(deg.sum()), int((deg * deg).sum())
+    deg = (
+        edges.select(F.explode(F.array("u", "v")).alias("node"))
+        .groupBy("node")
+        .agg(F.count("*").alias("d"))
+    )
+    row = deg.agg(
+        F.count("*").alias("n"),
+        F.sum("d").alias("e"),
+        F.sum(F.col("d") * F.col("d")).alias("s"),
+    ).collect()[0]
+    return row["n"], row["e"] or 0, row["s"] or 0
 
 
 def collect_sym(
@@ -992,7 +1047,7 @@ def degree_kernel_df(spark: SparkSession, g: GraphArrays) -> DataFrame:
     aggregate produces), with the n−1 normalization left to the SAME
     Spark expressions as the DataFrame path so the doubles are
     bit-identical. Used when a composite already holds the collected
-    graph, and (round 12) by standalone g2 through collect_graph_auto
+    graph, and (round 12) by standalone g2 through `collect_graph_raw`
     — the raw-collect stat gate made the collection cheaper than one
     distributed edge build (A/B in graph.py)."""
     import pandas as pd

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 # this module is imported directly (not via registry._ensure_loaded)
 from reddit_can_bigdata_spark.operators import advanced as _advanced
 from reddit_can_bigdata_spark.operators import graph as _graph
+from reddit_can_bigdata_spark.operators import graphkernel as gk
 from reddit_can_bigdata_spark.operators.common import materialize
 from reddit_can_bigdata_spark.registry import REGISTRY, register
 
@@ -180,33 +181,13 @@ def _composite_oracle(arms: tuple[_Arm, ...]) -> str:
     """
 
 
-def _graph_inputs(spark: SparkSession, sf_dir: str):
-    """The composite prologue: ``(edges, graph)``, run once per
-    composite and shared by every arm.
-
-    Under the raw gate the CSR comes from one driver-side scan and no
-    edge table is built. On a miss the distributed edge aggregate is
-    built ONCE and checkpointed; the kernel gate (`collect_graph`)
-    then counts and collects that materialized frame, and above the
-    kernel gate the same frame feeds every distributed loop."""
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        collect_graph,
-        collect_graph_raw,
-    )
-
-    g = collect_graph_raw(spark, sf_dir)
-    if g is not None:
-        return None, g
-    ed = materialize(_graph._edges(spark, sf_dir))
-    return ed, collect_graph(ed, spark)
-
-
 def _scored(
     spark: SparkSession, sf_dir: str, arms: tuple[_Arm, ...], inputs=None
 ) -> DataFrame:
     """Every node's arm metrics plus ``composite_score``:
-    Σ weight · minmax(metric), rounded to 6 places. ``inputs`` is a
-    `_graph_inputs` result for a caller that needs the graph too.
+    Σ weight · minmax(metric), rounded to 6 places. ``inputs`` is the
+    composite's one `resolve_graph` result, shared by every arm, for a
+    caller that needs the graph too.
 
     Under the DENSE kernel gate every arm is a driver-local table
     (numpy kernels + createDataFrame), so checkpoints and a thread
@@ -221,12 +202,8 @@ def _scored(
     to sequential execution (each arm is self-contained)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        TRIANGLE_DENSE_MAX_NODES,
-    )
-
-    ed, g = inputs if inputs is not None else _graph_inputs(spark, sf_dir)
-    dense = g is not None and 0 < g.n_nodes <= TRIANGLE_DENSE_MAX_NODES
+    ed, g = inputs if inputs is not None else gk.resolve_graph(spark, sf_dir)
+    dense = g is not None and 0 < g.n_nodes <= gk.TRIANGLE_DENSE_MAX_NODES
     if dense:
         frames = [a.produce(spark, sf_dir, ed, g) for a in arms]
     else:
@@ -360,22 +337,15 @@ def user_network_table(
     `closeness_for_scale`); not an oracle query, so the estimator
     switch can't break parity here — pass ``'exact'`` to force.
     """
-    from reddit_can_bigdata_spark.operators.graph import (
-        CC_ITERS,
-        min_label_components,
-    )
-
-    inputs = _graph_inputs(spark, sf_dir)
-    ed, g = inputs
+    ed, g = gk.resolve_graph(spark, sf_dir)
     ranked = _ranked(
-        _scored(spark, sf_dir, _arms(_closeness(closeness_mode)), inputs)
+        _scored(spark, sf_dir, _arms(_closeness(closeness_mode)), (ed, g))
     )
     # components via the shared guarded loop (broadcast-ceiling +
     # early-exit), not a private copy of it
-    if g is not None:
-        labels = min_label_components(None, CC_ITERS, graph=g)
-    else:
-        labels = min_label_components(_graph._sym(ed), CC_ITERS)
+    labels = _graph.min_label_components(
+        None if g is not None else _graph._sym(ed), _graph.CC_ITERS, graph=g
+    )
     rank = F.when(F.col("influencer_rank") <= TOP_N, F.col("influencer_rank"))
     return ranked.join(
         labels.select("node", F.col("label").alias("community_id")), "node"

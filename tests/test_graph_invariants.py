@@ -622,6 +622,19 @@ def test_raw_numpy_edge_build_matches_distributed_aggregate(spark, sf_dir):
     assert (w == df.column("weight").to_numpy(zero_copy_only=False)).all()
 
 
+def test_graph_size_same_off_the_csr_and_the_edge_frame(spark, sf_dir):
+    """The `*_for_scale` gate inputs (n_nodes, e_sym, Σdeg²) read off a
+    resolved CSR equal the one-aggregate form over the edge frame."""
+    from reddit_can_bigdata_spark.operators import graphkernel as gk
+    from reddit_can_bigdata_spark.operators.graph import _edges
+
+    _, g = gk.resolve_graph(spark, sf_dir)
+    assert g is not None
+    size = gk.graph_size(None, g)
+    assert size[0] > 0 and size[1] > 0
+    assert gk.graph_size(_edges(spark, sf_dir), None) == size
+
+
 def test_raw_numpy_edge_build_edge_cases():
     """Duplicate (order, supplier) rows collapse; single-supplier
     orders emit nothing; weights count co-orders; empty input yields
@@ -659,7 +672,7 @@ def test_dense_blas_kernels_match_executor_kernels(spark, sf_dir):
     silently changes results."""
     from reddit_can_bigdata_spark.operators import graphkernel as gk
 
-    g = gk.collect_graph_auto(spark, sf_dir)
+    _, g = gk.resolve_graph(spark, sf_dir)
     assert g is not None and 0 < g.n_nodes <= gk.TRIANGLE_DENSE_MAX_NODES
 
     def rows(df):

@@ -127,6 +127,80 @@ def test_query_matches_oracle_loop_tier(name, spark, duck, sf_dir):
         _check_oracle(name, spark, duck, sf_dir)
 
 
+@pytest.mark.parametrize("name", _LOOP_TIER)
+def test_query_matches_oracle_aggregate_tier(name, spark, duck, sf_dir):
+    """The same comparison with the raw collect off and the kernel tier
+    on: every graph query builds the distributed edge aggregate once,
+    probes it and collects it into the kernels' CSR."""
+    with _conf(spark, **{GRAPH_RAW_COLLECT_MAX_BYTES_CONF: "0"}):
+        _check_oracle(name, spark, duck, sf_dir)
+
+
+def _graph_entry_points():
+    from reddit_can_bigdata_spark.operators import advanced, graph
+
+    points = {
+        n: REGISTRY[n].fn
+        for n in (
+            "g3b_betweenness_sampled",
+            "g4_closeness_centrality",
+            "g4c_closeness_sampled",
+            "g5_eigenvector_centrality",
+            "g6_pagerank",
+            "g7_connected_components",
+            "g7_label_propagation",
+            "g9_triangles_clustering",
+        )
+    }
+    points["closeness_for_scale"] = advanced.closeness_for_scale
+    points["betweenness_for_scale"] = graph.betweenness_for_scale
+    points["triangles_for_scale"] = graph.triangles_for_scale
+    return points
+
+
+#: (raw-collect gate, kernel edge gate) per tier: the raw collect hits;
+#: the raw collect misses and the aggregate is over the kernel gate;
+#: the kernel tier is off
+_TIERS = {
+    "raw": {},
+    "aggregate_miss": {
+        GRAPH_RAW_COLLECT_MAX_BYTES_CONF: "0",
+        GRAPH_KERNEL_MAX_EDGES_CONF: "1",
+    },
+    "loop": {GRAPH_KERNEL_MAX_EDGES_CONF: "0"},
+}
+
+
+@pytest.mark.parametrize("name", sorted(_graph_entry_points()))
+def test_graph_entry_point_builds_the_edge_aggregate_once(
+    name, spark, sf_dir, monkeypatch
+):
+    """Each graph entry point gets its graph from one resolution: no
+    edge-aggregate plan when the raw collect hits, exactly one when it
+    misses (the probe's checkpoint feeds the loop) and on the loop
+    tier (the gate statistics and the loop read the same frame)."""
+    from reddit_can_bigdata_spark.operators import advanced, graph
+
+    original = graph._edges
+    builds = []
+
+    def counted(*args, **kwargs):
+        builds.append(1)
+        return original(*args, **kwargs)
+
+    for mod in (graph, advanced):
+        if getattr(mod, "_edges", None) is original:
+            monkeypatch.setattr(mod, "_edges", counted)
+    fn = _graph_entry_points()[name]
+    got = {}
+    for tier, confs in _TIERS.items():
+        builds.clear()
+        with _conf(spark, **confs):
+            fn(spark, sf_dir)
+        got[tier] = len(builds)
+    assert got == {"raw": 0, "aggregate_miss": 1, "loop": 1}, got
+
+
 def _jobs(spark, fn) -> int:
     """Spark jobs ``fn`` submits, counted through a private job group."""
     sc = spark.sparkContext
