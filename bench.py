@@ -17,20 +17,24 @@ number across rounds.
 Each timing covers plan construction + full execution (noop-sink
 consumption of every result column/row).
 
-Round 7: per-query executor CPU time (sum of task metrics via the
-AppStatusStore, nanosecond granularity) is recorded alongside wall
-time — ``cpu_s`` on the stdout line for queries with median wall
->= 3s, full per-query values in BENCH_SPREADS.json. CPU time is
-contention-proof where wall time is not: a busy host stretches wall
-but barely moves CPU, so a judge can separate host noise from a real
-regression without reruns (the influencer-composite ping-pong of
-rounds 4-6).
+Per-query executor CPU time is recorded alongside wall time —
+``cpu_s`` on the stdout line for queries with median wall >= 3s, full
+per-query values in BENCH_SPREADS.json. It is the delta of
+``perfbench.meter.StatusMeter.read()`` around each rep: the sum of the
+stages' ``executorCpuTime`` in the AppStatusStore, read after draining
+the listener bus and charging each (stage, attempt) once. The read
+sits outside the timed region; if the meter cannot be built or read
+(it uses internal Spark API), stderr says ``# cpu meter disabled`` and
+the line is printed without ``cpu_s``. CPU time is contention-proof
+where wall time is not: a busy host stretches wall but barely moves
+CPU, so a judge can separate host noise from a real regression
+without reruns.
 
 Round 8: the stdout line is built by ``build_stdout_line`` with a
 HARD byte cap (< 1024): ``queries`` carries only the heaviest
 medians (wall >= 3s, further trimmed smallest-first until the line
 fits), ``cpu_s`` only for names that survived the trim, and
-``queries_full``/``cpu_s`` complete maps live in BENCH_SPREADS.json.
+the complete ``queries``/``cpu_s`` maps live in BENCH_SPREADS.json.
 Round 7's driver artifact was truncated to ``parsed: null`` because
 the full 58-entry map plus cpu_s outgrew the driver's tail-capture
 window — the third recurrence of this failure mode, so the cap is
@@ -53,61 +57,38 @@ from reddit_can_bigdata_spark.registry import bench_queries
 from reddit_can_bigdata_spark.session import DEFAULT_SF_DIR, get_spark
 
 
-class _CpuMeter:
-    """Executor-CPU accounting from the AppStatusStore.
+def _meter_off(e: Exception) -> None:
+    print(f"# cpu meter disabled: {e!r}"[:200], file=sys.stderr)
 
-    ``delta()`` returns CPU seconds accumulated by stages FIRST SEEN
-    since the previous call. Stage ids are monotonically increasing and
-    eviction only drops oldest entries, so counting each (stageId,
-    attempt) exactly once survives the store's retained-stages cap.
-    Uses an internal Spark API (statusStore.stageList); degrades to
-    returning None if the signature ever changes."""
 
-    def __init__(self, sc):
-        self._sc = sc
-        # ns already attributed per (stageId, attempt) — incremental
-        # accounting instead of a first-seen set, so a stage observed
-        # while still ACTIVE is neither frozen at its partial value nor
-        # double-counted when re-read complete (round-8 advice fix).
-        self._counted: dict[tuple[int, int], int] = {}
-        self._ok = True
-        self.delta()  # swallow warm-up stages
+def cpu_meter(spark):
+    """A callable returning the executor-CPU seconds since its previous
+    call, as deltas of perfbench's ``StatusMeter.read()``. The meter
+    reads internal Spark API, so if it cannot be built or read the
+    bench loses ``cpu_s``, not its line: the callable returns None."""
+    from perfbench.meter import StatusMeter
 
-    def _stages(self):
-        gw = self._sc._gateway
-        store = self._sc._jsc.sc().statusStore()
-        empty = gw.jvm.java.util.ArrayList()
-        darr = gw.new_array(gw.jvm.double, 0)
-        sl = store.stageList(empty, False, False, darr, gw.jvm.java.util.ArrayList())
-        return [
-            ((sl.apply(i).stageId(), sl.apply(i).attemptId()),
-             sl.apply(i).executorCpuTime())
-            for i in range(sl.size())
-        ]
+    try:
+        meter = StatusMeter(spark)  # its first read swallows warm-up stages
+    except Exception as e:
+        _meter_off(e)
+        return lambda: None
+    last = meter.totals["cpu_s"]
 
-    def delta(self) -> float | None:
-        if not self._ok:
+    def delta() -> float | None:
+        nonlocal meter, last
+        if meter is None:
             return None
         try:
-            # The AppStatusStore is fed asynchronously by the listener
-            # bus: without a drain, a stage whose metrics haven't landed
-            # yet is attributed to the NEXT query's delta.
-            try:
-                self._sc._jsc.sc().listenerBus().waitUntilEmpty(5000)
-            except Exception:
-                pass  # signature drift: accept possible lag, keep cpu_s
-            stages = self._stages()
-        except Exception as e:  # internal API drift: lose cpu_s, not the bench
-            print(f"# cpu meter disabled: {e!r}"[:200], file=sys.stderr)
-            self._ok = False
+            now = meter.read()["cpu_s"]
+        except Exception as e:
+            _meter_off(e)
+            meter = None
             return None
-        ns = 0
-        for key, cpu in stages:
-            prev = self._counted.get(key, 0)
-            if cpu > prev:
-                ns += cpu - prev
-                self._counted[key] = cpu
-        return ns / 1e9
+        out, last = now - last, now
+        return out
+
+    return delta
 
 
 #: Hard byte budget for the single stdout JSON line. The driver
@@ -257,7 +238,7 @@ def main() -> None:
     warm["lineitem"].groupBy("l_returnflag").count().collect()
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    meter = _CpuMeter(spark.sparkContext)
+    cpu_delta = cpu_meter(spark)
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     cpu: dict[str, float] = {}
@@ -272,7 +253,7 @@ def main() -> None:
             # count() would let Catalyst prune the computed columns away)
             df.write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
-            c = meter.delta()
+            c = cpu_delta()
             if c is not None:
                 cpu_runs.append(c)
         timings[name] = round(statistics.median(runs), 3)

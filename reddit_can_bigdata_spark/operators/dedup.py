@@ -502,14 +502,20 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller than the corpus); the per-round state join inherits the
     broadcast-ceiling guard; the final mapping is one left join on
     doc_id — corpus-linear."""
+    from reddit_can_bigdata_spark.operators import graphkernel as gk
     from reddit_can_bigdata_spark.operators.graph import _sym, min_label_components
 
     pairs = dedup_minhash_lsh(spark, sf_dir).where(
         F.col("est_jaccard") >= CLUSTER_JACCARD
     )
-    sym = _sym(pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")), key="dst")
+    # as g7 resolves its edges: the gate probe writes this lazy checkpoint
+    edges = materialize(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")), eager=False
+    )
+    g = gk.collect_graph(edges, spark)
     labels = min_label_components(
-        sym, 0, until_converged=True, shortcut=True, require_converged=True
+        None if g is not None else _sym(edges, key="dst"),
+        0, until_converged=True, shortcut=True, require_converged=True, graph=g,
     )
     docs = tables(spark, sf_dir)["documents"].select("doc_id")
     return docs.join(labels, docs.doc_id == labels.node, "left").select(

@@ -327,6 +327,12 @@ def g8_graph_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect gate the counts come off the collected CSR as a 1-row
     frame; above it, from the distributed edge aggregate."""
     g = gk.collect_graph_raw(spark, sf_dir)
+    return _graph_counts(spark, None if g is not None else _edges(spark, sf_dir), g)
+
+
+def _graph_counts(spark: SparkSession, edges: DataFrame | None, g) -> DataFrame:
+    """g8 over a resolved graph: the counts off the CSR when there is
+    one (no job), else two aggregates over the edge frame."""
     if g is not None:
         import pandas as pd
 
@@ -335,11 +341,10 @@ def g8_graph_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"num_nodes": [g.n_nodes], "num_edges": [g.n_sym_edges // 2]}
         ))
     else:
-        e = _edges(spark, sf_dir)
-        nodes = e.select(F.col("u").alias("node")).unionAll(
-            e.select(F.col("v").alias("node"))
+        nodes = edges.select(F.col("u").alias("node")).unionAll(
+            edges.select(F.col("v").alias("node"))
         ).distinct()
-        ec = e.agg(F.count("*").alias("num_edges"))
+        ec = edges.agg(F.count("*").alias("num_edges"))
         nc = nodes.agg(F.count("*").alias("num_nodes"))
         counts = nc.crossJoin(ec)
     return counts.select(
@@ -443,14 +448,16 @@ def _triangles(
     # direct path's Σwedges + 3·|triangles| (the K1000-ish test graph:
     # ~42M vs ~550M rows); on sparse graphs the missing set is O(N²)
     # and the degree-oriented wedge join wins. Pick by measured sizes;
-    # both produce identical exact results.
-    n_edges = e.count()
-    n_nodes = deg.count()
+    # both produce identical exact results. One job: Σdeg = 2|E|, and
+    # Σdeg² bounds the wedge join output (the sums are None on empty).
+    row = deg.agg(
+        F.count("*").alias("n"),
+        F.sum("degree").alias("e"),
+        F.sum(F.col("degree") * F.col("degree")).alias("s"),
+    ).collect()[0]
+    n_nodes, n_edges, direct_cost = row["n"], (row["e"] or 0) // 2, row["s"] or 0
     n_missing = n_nodes * (n_nodes - 1) // 2 - n_edges
     avg_deg = 2.0 * n_edges / max(n_nodes, 1)
-    direct_cost = deg.agg(
-        F.sum(F.col("degree") * F.col("degree")).alias("s")
-    ).collect()[0]["s"] or 0  # Σdeg² bounds the wedge join output (None on empty)
     if n_missing * avg_deg < direct_cost:
         tpn = _triangles_per_node_complement(e, deg)
     else:
@@ -705,6 +712,7 @@ def triangles_for_scale(
     sf_dir: str,
     edges: DataFrame | None = None,
     mode: str | None = None,
+    graph=None,
 ) -> DataFrame:
     """Work-budget-gated triangle counting: exact `g9` while the
     cheaper of its two strategies fits the per-slot wedge budget,
@@ -717,10 +725,11 @@ def triangles_for_scale(
     registered oracle queries pin their mode so parity can't drift
     with data size (g9 exact, g9b sampled each have their own oracle).
     The chosen mode is LOGGED, mirroring `closeness_for_scale`.
+    ``edges`` / ``graph`` take a graph a caller already resolved.
     """
     import logging
 
-    edges, g = gk.resolve_graph(spark, sf_dir, edges)
+    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph)
     if mode is None:
         n_nodes, e_sym, direct_cost = gk.graph_size(edges, g)
         n_edges = e_sym // 2
@@ -1082,7 +1091,9 @@ def min_label_components(
     Each round = one state join (broadcast under the `_state_mode`
     ceiling, co-partitioned shuffle above) + one hash aggregate —
     linear in |E|. The caller should pass a materialized, dst-partitioned
-    ``sym``. Shared by G7 components and the dedup clusterer.
+    ``sym``, or the CSR of a graph resolved under the kernel gate as
+    ``graph`` (the same rounds then run on the driver; nothing probes
+    here). Shared by G7 components and the dedup clusterer.
 
     ``shortcut=True`` adds a pointer-doubling step per round
     (label ← min(label, label[label]), one extra |V|-sized state
@@ -1094,28 +1105,23 @@ def min_label_components(
     depends on full components (the leakage-safe cluster split) must
     set it, because a silently-truncated propagation leaves two linked
     docs with different canonical ids."""
+    global LAST_COMPONENT_ROUNDS
     rounds_budget = UNTIL_CONVERGED_MAX_ROUNDS if until_converged else iters
-    if state_mode is None:
-        from pyspark.sql import SparkSession
-
-        spark = (
-            sym.sparkSession if sym is not None else SparkSession.getActiveSession()
+    if graph is not None:
+        spark = SparkSession.getActiveSession()
+        nodes_arr, labels_arr, executed, converged = gk.min_label_kernel(
+            graph, rounds_budget, shortcut=shortcut
         )
-        ga = graph if graph is not None else gk.collect_sym(sym, spark)
-        if ga is not None:
-            nodes_arr, labels_arr, executed, converged = gk.min_label_kernel(
-                ga, rounds_budget, shortcut=shortcut
-            )
-            LAST_COMPONENT_ROUNDS = executed
-            if require_converged and not converged:
-                _raise_unconverged(rounds_budget, until_converged, shortcut)
-            if nodes_arr.shape[0] == 0:
-                return spark.createDataFrame([], "node long, label long")
-            import pandas as pd
+        LAST_COMPONENT_ROUNDS = executed
+        if require_converged and not converged:
+            _raise_unconverged(rounds_budget, until_converged, shortcut)
+        if nodes_arr.shape[0] == 0:
+            return spark.createDataFrame([], "node long, label long")
+        import pandas as pd
 
-            return spark.createDataFrame(
-                pd.DataFrame({"node": nodes_arr, "label": labels_arr})
-            )
+        return spark.createDataFrame(
+            pd.DataFrame({"node": nodes_arr, "label": labels_arr})
+        )
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -1266,12 +1272,14 @@ def g7_connected_components(
     # gate the whole sym-DataFrame build (edge aggregate + union +
     # repartition + materialize + re-collect) disappears
     edges, g = gk.resolve_graph(spark, sf_dir, kernel=state_mode is None)
+    return _component_sizes(edges, g, state_mode=state_mode, until_converged=until_converged)
+
+
+def _component_sizes(edges: DataFrame | None, g, **loop) -> DataFrame:
+    """g7 components over a resolved graph: the kernel rounds on its
+    CSR, else the loop over the symmetric list of its edge frame."""
     labels = min_label_components(
-        None if g is not None else _sym(edges, key="dst"),
-        CC_ITERS,
-        state_mode,
-        until_converged=until_converged,
-        graph=g,
+        None if g is not None else _sym(edges, key="dst"), CC_ITERS, graph=g, **loop
     )
     return labels.groupBy(F.col("label").cast("long").alias("component")).agg(
         F.count("*").alias("n_nodes")

@@ -389,38 +389,6 @@ def graph_size(
     return row["n"], row["e"] or 0, row["s"] or 0
 
 
-def collect_sym(
-    sym: DataFrame, spark: SparkSession, max_edges: int | None = None
-) -> GraphArrays | None:
-    """Like :func:`collect_graph` but over an already-symmetric
-    (src, dst) pair list (the min-label callers' input shape). The
-    pair list is collected as-is; weights are 1."""
-    limit = kernel_edge_limit(spark) if max_edges is None else max_edges
-    if limit <= 0:
-        return None
-    with materialized(sym.select("src", "dst")) as e:
-        if e.count() > limit * 2:
-            return None
-        tbl = e.toArrow()
-    src = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
-    dst = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
-    nodes = np.unique(np.concatenate([src, dst]))
-    sp = np.searchsorted(nodes, src).astype(np.int64)
-    dp = np.searchsorted(nodes, dst).astype(np.int32)
-    order = np.argsort(sp, kind="stable")
-    src_sorted = sp[order]
-    indices = dp[order]
-    indptr = np.searchsorted(
-        src_sorted, np.arange(nodes.shape[0] + 1, dtype=np.int64)
-    ).astype(np.int64)
-    return GraphArrays(
-        nodes=nodes,
-        indptr=indptr,
-        indices=indices,
-        weights=np.ones(indices.shape[0], dtype=np.int64),
-    )
-
-
 def _gather(indptr: np.ndarray, indices: np.ndarray, frontier: np.ndarray):
     """(repeated-frontier-positions, neighbor-positions) for every CSR
     slot of every frontier node — the vectorized edge expansion."""

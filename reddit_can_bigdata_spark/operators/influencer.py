@@ -368,16 +368,17 @@ def user_network_table(
 
 def network_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§1.2 ``network_metadata`` singleton: node/edge counts, density,
-    community count, average clustering."""
-    from reddit_can_bigdata_spark.operators.graph import triangles_for_scale
-
-    meta = REGISTRY["g8_graph_metadata"].fn(spark, sf_dir)
+    community count, average clustering. The graph is resolved once
+    and its edge frame or CSR feeds all three."""
+    edges, g = gk.resolve_graph(spark, sf_dir)
+    meta = _graph._graph_counts(spark, edges, g)
     # auto work-budget gate (round 11): exact g9 at test scale, the
     # wedge-sampled estimator on graphs whose Σdeg² outgrows the slots
-    tri = triangles_for_scale(spark, sf_dir).select("avg_clustering")
-    ncomm = (
-        REGISTRY["g7_connected_components"].fn(spark, sf_dir)
-        .agg(F.count("*").cast("int").alias("num_communities"))
+    tri = _graph.triangles_for_scale(spark, sf_dir, edges, graph=g).select(
+        "avg_clustering"
+    )
+    ncomm = _graph._component_sizes(edges, g).agg(
+        F.count("*").cast("int").alias("num_communities")
     )
     return (
         meta.crossJoin(tri)

@@ -66,6 +66,30 @@ def test_min_label_components_converged_single_component(spark):
     assert len(rows) == N
 
 
+@pytest.mark.parametrize("tier", ["kernel", "loop"])
+def test_min_label_components_records_rounds(spark, tier):
+    """``graph.LAST_COMPONENT_ROUNDS`` holds the rounds the last call ran,
+    the same on both tiers: on the path P_N the label of node 0 needs
+    N-1 rounds to reach node N-1, and one more round changes nothing."""
+    import numpy as np
+
+    from reddit_can_bigdata_spark.operators import graph
+    from reddit_can_bigdata_spark.operators.graphkernel import build_arrays
+
+    if tier == "kernel":
+        u = np.arange(N - 1, dtype=np.int64)
+        inputs = {"sym": None, "graph": build_arrays(u, u + 1, np.ones_like(u))}
+    else:
+        inputs = {"sym": _path_sym(spark).select("src", "dst"), "graph": None}
+    graph.LAST_COMPONENT_ROUNDS = 0
+    graph.min_label_components(inputs["sym"], 2, graph=inputs["graph"]).collect()
+    assert graph.LAST_COMPONENT_ROUNDS == 2
+    graph.min_label_components(
+        inputs["sym"], 2, until_converged=True, graph=inputs["graph"]
+    ).collect()
+    assert graph.LAST_COMPONENT_ROUNDS == N
+
+
 def test_brandes_converged_matches_closed_form(spark):
     from reddit_can_bigdata_spark.operators.graph import (
         BW_LEVELS,

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -46,26 +47,46 @@ def test_min_label_long_chain_converges(spark):
     """Round-6 advice: a near-dup component with diameter larger than
     any fixed round budget must still collapse to ONE canonical label.
     A 20-node path graph (diameter 19) converges under
-    until_converged + pointer-doubling shortcut in O(log d) rounds;
-    a fixed 2-round budget with require_converged raises instead of
-    silently truncating."""
-    import pytest
-
+    until_converged + pointer-doubling shortcut in O(log d) rounds, on
+    the loop tier and on the kernel tier."""
     from reddit_can_bigdata_spark.operators.graph import min_label_components
+
+    for inputs in _chain_inputs(spark).values():
+        labels = min_label_components(
+            **inputs, iters=0, until_converged=True, shortcut=True, require_converged=True
+        ).collect()
+        assert {r["node"] for r in labels} == set(range(20))
+        assert {r["label"] for r in labels} == {0}
+
+
+def _chain_inputs(spark) -> dict:
+    """The 20-node path as min_label_components' input on each tier:
+    the symmetric pair list for the loop, the CSR for the kernel."""
+    import numpy as np
+
+    from reddit_can_bigdata_spark.operators.graphkernel import build_arrays
 
     edges = [(i, i + 1) for i in range(19)]
     sym = spark.createDataFrame(
         edges + [(b, a) for a, b in edges], "src long, dst long"
-    ).repartition("dst").cache()
+    ).repartition("dst")
+    u = np.arange(19, dtype=np.int64)
+    return {
+        "loop": {"sym": sym, "graph": None},
+        "kernel": {"sym": None, "graph": build_arrays(u, u + 1, np.ones_like(u))},
+    }
 
-    labels = min_label_components(
-        sym, 0, until_converged=True, shortcut=True, require_converged=True
-    ).collect()
-    assert {r["node"] for r in labels} == set(range(20))
-    assert {r["label"] for r in labels} == {0}
+
+@pytest.mark.parametrize("tier", ["kernel", "loop"])
+def test_min_label_unconverged_raises(spark, tier):
+    """A fixed 2-round budget with require_converged raises on either
+    tier instead of returning truncated labels."""
+    from reddit_can_bigdata_spark.operators.graph import min_label_components
 
     with pytest.raises(RuntimeError, match="no fixed point"):
-        min_label_components(sym, 2, require_converged=True).collect()
+        min_label_components(
+            **_chain_inputs(spark)[tier], iters=2, require_converged=True
+        ).collect()
 
 
 def test_cluster_split_pairs_share_split(spark, sf_dir):

@@ -112,9 +112,11 @@ def _conf(spark, **confs):
                 spark.conf.set(k, v)
 
 
-# the gate row decides whether the DAG's network stage runs at all
+# the gate row decides whether the DAG's network stage runs at all, and
+# dedup_clusters runs its components on the kernel or the loop tier
 _LOOP_TIER = sorted(n for n, s in REGISTRY.items() if "graph" in s.tags) + [
-    "pipeline_gate_report"
+    "pipeline_gate_report",
+    "dedup_clusters",
 ]
 
 
@@ -259,3 +261,52 @@ def test_pinned_state_mode_skips_the_count_job(spark, sf_dir):
         lambda: g7_label_propagation(spark, sf_dir, state_mode="broadcast").collect(),
     )
     assert 0 < pinned < unpinned, (pinned, unpinned)
+
+
+@pytest.mark.parametrize("tier", sorted(_TIERS))
+def test_network_metadata_resolves_the_graph_once(tier, spark, sf_dir, monkeypatch):
+    """network_metadata feeds one resolved graph to its g8 counts, its
+    triangle gate and its components: one raw collect, few jobs, and
+    the values of the registered g8, g9 and g7 components on each tier."""
+    from reddit_can_bigdata_spark.operators import graphkernel
+    from reddit_can_bigdata_spark.operators.influencer import network_metadata
+
+    raw = graphkernel.collect_graph_raw
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return raw(*args, **kwargs)
+
+    monkeypatch.setattr(graphkernel, "collect_graph_raw", counted)
+    with _conf(spark, **_TIERS[tier]):
+        rows = []
+        jobs = _jobs(spark, lambda: rows.extend(network_metadata(spark, sf_dir).collect()))
+        n_raw = len(calls)
+        g8 = REGISTRY["g8_graph_metadata"].fn(spark, sf_dir).collect()[0]
+        g9 = REGISTRY["g9_triangles_clustering"].fn(spark, sf_dir).collect()[0]
+        n_comm = REGISTRY["g7_connected_components"].fn(spark, sf_dir).count()
+    (m,) = rows
+    assert (m["num_nodes"], m["num_edges"], m["density"]) == tuple(g8)
+    assert m["avg_clustering"] == g9["avg_clustering"]
+    assert m["num_communities"] == n_comm
+    assert n_raw == 1
+    if tier == "raw":
+        assert jobs < 8, jobs
+
+
+def test_g7_components_do_not_probe_twice(spark, sf_dir):
+    """Above the kernel gate g7 components run the loop over the edge
+    aggregate the resolver already probed, with no second count over
+    its symmetric list. The parent's miss tier took 29 jobs, 6 more
+    than the loop tier's 23, for the second probe."""
+    from reddit_can_bigdata_spark.operators.graph import g7_connected_components
+
+    g7_connected_components(spark, sf_dir).collect()  # tables loaded, codegen warm
+    jobs = {}
+    for tier in ("aggregate_miss", "loop"):
+        with _conf(spark, **_TIERS[tier]):
+            jobs[tier] = _jobs(
+                spark, lambda: g7_connected_components(spark, sf_dir).collect()
+            )
+    assert jobs["aggregate_miss"] < 29 and jobs["loop"] <= 23, jobs

@@ -2,8 +2,9 @@
 
 Times individual registered queries the exact way bench.py does (plan
 construction + noop-sink execution), and additionally records executor
-CPU seconds, job/stage/task counts, and the formatted physical plan —
-the evidence OPTIMIZATION_r*.md and plans/r*/ are built from.
+CPU seconds, job/stage/task counts (deltas of perfbench's
+``StatusMeter``), and the formatted physical plan — the evidence
+OPTIMIZATION_r*.md and plans/r*/ are built from.
 
 Usage:
     python tools/profile_queries.py g6_pagerank g4_closeness_centrality
@@ -27,52 +28,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from perfbench.meter import StatusMeter, delta
 from reddit_can_bigdata_spark.registry import REGISTRY, _ensure_loaded, bench_queries
 from reddit_can_bigdata_spark.session import DEFAULT_SF_DIR, get_spark
-
-
-class _Counters:
-    """Job/stage/task/CPU deltas from the AppStatusStore."""
-
-    def __init__(self, sc):
-        self._sc = sc
-        self._seen_stages: dict[tuple[int, int], tuple[int, int]] = {}
-        self._seen_jobs: set[int] = set()
-        self.delta()
-
-    def _drain(self):
-        try:
-            self._sc._jsc.sc().listenerBus().waitUntilEmpty(10000)
-        except Exception:
-            pass
-
-    def delta(self) -> dict:
-        self._drain()
-        gw = self._sc._gateway
-        store = self._sc._jsc.sc().statusStore()
-        empty = gw.jvm.java.util.ArrayList()
-        darr = gw.new_array(gw.jvm.double, 0)
-        sl = store.stageList(empty, False, False, darr, gw.jvm.java.util.ArrayList())
-        cpu_ns, tasks, stages = 0, 0, 0
-        for i in range(sl.size()):
-            s = sl.apply(i)
-            key = (s.stageId(), s.attemptId())
-            prev_cpu, prev_tasks = self._seen_stages.get(key, (0, 0))
-            c, t = s.executorCpuTime(), s.numCompleteTasks() + s.numFailedTasks()
-            if c > prev_cpu or t > prev_tasks:
-                cpu_ns += max(0, c - prev_cpu)
-                tasks += max(0, t - prev_tasks)
-                if key not in self._seen_stages:
-                    stages += 1
-                self._seen_stages[key] = (max(c, prev_cpu), max(t, prev_tasks))
-        jl = store.jobsList(None)
-        jobs = 0
-        for i in range(jl.size()):
-            jid = jl.apply(i).jobId()
-            if jid not in self._seen_jobs:
-                self._seen_jobs.add(jid)
-                jobs += 1
-        return {"cpu_s": cpu_ns / 1e9, "tasks": tasks, "stages": stages, "jobs": jobs}
 
 
 def main() -> None:
@@ -101,7 +59,8 @@ def main() -> None:
     warm["documents"].count()
     warm["lineitem"].groupBy("l_returnflag").count().collect()
 
-    meter = _Counters(spark.sparkContext)
+    meter = StatusMeter(spark)
+    before = meter.read()
     plans_dir = Path(args.plans_dir) if args.plans_dir else None
     if plans_dir:
         plans_dir.mkdir(parents=True, exist_ok=True)
@@ -118,7 +77,9 @@ def main() -> None:
             df = spec.fn(spark, args.sf_dir)
             df.write.format("noop").mode("overwrite").save()
             walls.append(time.perf_counter() - t0)
-            metas.append(meter.delta())
+            after = meter.read()
+            metas.append(delta(before, after))
+            before = after
             if plans_dir and rep == 0:
                 plan = df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"
@@ -131,7 +92,7 @@ def main() -> None:
         cpu_med = statistics.median(x["cpu_s"] for x in metas)
         print(
             f"{name:42s} {med:8.3f} {min(walls):7.3f} {max(walls):7.3f}"
-            f" {cpu_med:8.2f} {m['jobs']:5d} {m['stages']:6d} {m['tasks']:6d}"
+            f" {cpu_med:8.2f} {m['jobs']:5.0f} {m['stages']:6.0f} {m['tasks']:6.0f}"
         )
 
 

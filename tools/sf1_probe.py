@@ -31,7 +31,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from bench import _CpuMeter  # noqa: E402
+from perfbench.meter import StatusMeter  # noqa: E402
 from reddit_can_bigdata_spark.registry import (  # noqa: E402
     REGISTRY,
     _ensure_loaded,
@@ -149,7 +149,7 @@ def main() -> int:
     _ensure_loaded()
     spark = get_spark("sf1_probe")
     spark.sparkContext.setLogLevel("ERROR")
-    meter = _CpuMeter(spark.sparkContext)
+    meter = StatusMeter(spark)
     prod = _production_forms()
 
     out: dict[str, dict] = {}
@@ -159,7 +159,7 @@ def main() -> int:
         warm = load_tables(spark, sf_dir)
         warm["documents"].count()
         warm["lineitem"].groupBy("l_returnflag").count().collect()
-        meter.delta()
+        cpu = meter.read()["cpu_s"]
         for name, reps in plan.items():
             if name in prod:
                 form, fn = prod[name]
@@ -172,16 +172,15 @@ def main() -> int:
                 df = fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 walls.append(time.perf_counter() - t0)
-                c = meter.delta()
-                if c is not None:
-                    cpus.append(c)
+                now = meter.read()["cpu_s"]
+                cpus.append(now - cpu)
+                cpu = now
             rec = out.setdefault(name, {})
             rec[f"wall_{tag}"] = round(statistics.median(walls), 3)
-            if cpus:
-                rec[f"cpu_{tag}"] = round(statistics.median(cpus), 3)
+            rec[f"cpu_{tag}"] = round(statistics.median(cpus), 3)
             print(
                 f"# {tag} {name}: wall {rec[f'wall_{tag}']:.2f}s"
-                f" cpu {rec.get(f'cpu_{tag}', float('nan')):.2f}s",
+                f" cpu {rec[f'cpu_{tag}']:.2f}s",
                 file=sys.stderr,
                 flush=True,
             )
