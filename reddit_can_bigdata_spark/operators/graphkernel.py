@@ -53,7 +53,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from reddit_can_bigdata_spark.operators.common import (
     ITER_CHECKPOINT_DIR_CONF,
     materialize,
-    materialized,
 )
 
 #: conf knob: queries use the vectorized broadcast kernels only while
@@ -149,24 +148,24 @@ def collect_graph(
 ) -> GraphArrays | None:
     """Collect the (small) edge aggregate as CSR arrays, or None.
 
-    The gate is a COUNT over ``edges`` — one cheap aggregate job over
-    a scoped ``materialized`` frame, so the gate probe and the Arrow
-    transfer read one evaluation of ``edges``. The frame
-    :func:`resolve_graph` builds is a lazy checkpoint that this count
-    writes: above the gate the caller's distributed loop reads that
-    checkpoint rather than rebuilding the edge aggregate. Under the
-    gate the edge rows come back through one Arrow transfer
-    (`toArrow`): this is the broadcast-join build-side pattern —
+    ``edges`` is a lazy checkpoint (``materialize(..., eager=False)``,
+    as :func:`resolve_graph` and ``dedup_clusters`` build it). The gate
+    is a row count of its RDD: one job with no shuffle, which also
+    writes the checkpoint, so the Arrow transfer under the gate and the
+    caller's distributed loop above it read the checkpoint rather than
+    rebuilding the edge aggregate. (``DataFrame.count`` would add a
+    shuffle stage, a second job under AQE; persisting the counted frame
+    a third.) Under the gate the edge rows come back through one Arrow
+    transfer (`toArrow`): this is the broadcast-join build-side pattern —
     metadata rows move to the driver once, the heavy relax work never
     shuffles at all."""
     limit = kernel_edge_limit(spark) if max_edges is None else max_edges
     if limit <= 0:
         return None
     cols = ["u", "v", "weight"] if "weight" in edges.columns else ["u", "v"]
-    with materialized(edges.select(*cols)) as e:
-        if e.count() > limit:
-            return None
-        tbl = e.toArrow()
+    if edges._jdf.queryExecution().toRdd().count() > limit:
+        return None
+    tbl = edges.select(*cols).toArrow()
     u = tbl.column("u").to_numpy(zero_copy_only=False).astype(np.int64)
     v = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.int64)
     if "weight" in cols:

@@ -16,7 +16,8 @@ Usage::
 
 Exit code 0 on success; the report JSON carries the gate decisions so a
 scheduler can branch on them exactly as the DAG's BranchPythonOperators
-do (`:90-148`).
+do (`:90-148`), and under ``cds`` how the driver JVM used its
+class-data-sharing archive (``session.LAST_CDS``).
 """
 
 from __future__ import annotations
@@ -51,7 +52,7 @@ def main(argv: list[str] | None = None) -> int:
 
     # Imports after argparse so --help costs no JVM start.
     from reddit_can_bigdata_spark import orchestration
-    from reddit_can_bigdata_spark.session import DEFAULT_SF_DIR, get_spark
+    from reddit_can_bigdata_spark.session import DEFAULT_SF_DIR, LAST_CDS, get_spark
 
     sf_dir = args.sf_dir or DEFAULT_SF_DIR
     stages: dict[str, float] = {}
@@ -87,6 +88,7 @@ def main(argv: list[str] | None = None) -> int:
         orchestration.MIN_POSTS_FOR_ML, orchestration.MIN_USERS_FOR_NETWORK = saved
 
     report["stage_seconds"] = stages
+    report["cds"] = dict(LAST_CDS)
     report["total_seconds"] = round(sum(stages.values()), 3)
     print(json.dumps(report))
     return 0

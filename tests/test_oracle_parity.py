@@ -310,3 +310,20 @@ def test_g7_components_do_not_probe_twice(spark, sf_dir):
                 spark, lambda: g7_connected_components(spark, sf_dir).collect()
             )
     assert jobs["aggregate_miss"] < 29 and jobs["loop"] <= 23, jobs
+
+
+@pytest.mark.parametrize("name", ["g7_connected_components", "dedup_clusters"])
+def test_kernel_gate_miss_costs_one_job_over_the_loop(name, spark, duck, sf_dir):
+    """Above the kernel gate the probe is one row count over the edge
+    checkpoint, and that job writes the checkpoint the loop then reads:
+    the miss tier submits at most one job more than the tier-off loop,
+    which has no probe, and both give the oracle's rows. The probe used
+    to take 3 jobs: a shuffled count of a persisted copy."""
+    fn = REGISTRY[name].fn
+    fn(spark, sf_dir).collect()  # tables loaded, codegen warm
+    jobs = {}
+    for tier in ("aggregate_miss", "loop"):
+        with _conf(spark, **_TIERS[tier]):
+            jobs[tier] = _jobs(spark, lambda: fn(spark, sf_dir).collect())
+            _check_oracle(name, spark, duck, sf_dir)
+    assert jobs["aggregate_miss"] <= jobs["loop"] + 1, jobs
