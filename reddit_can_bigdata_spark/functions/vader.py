@@ -170,7 +170,6 @@ BOOSTER_DICT: dict[str, float] = {
         "sort-of",
     )},
 }
-BOOSTERS = BOOSTER_DICT  # back-compat alias
 
 # Multi-word booster keys are the only ones an n-gram can match.
 _MULTIWORD_BOOSTERS = {k: v for k, v in BOOSTER_DICT.items() if " " in k}
@@ -189,7 +188,6 @@ NEGATE: tuple[str, ...] = (
     "without", "wont", "wouldnt", "won't", "wouldn't", "rarely",
     "seldom", "despite",
 )
-NEGATIONS = NEGATE  # back-compat alias
 
 # Published sentiment-laden idioms (override the unigram valence).
 SPECIAL_CASES: dict[str, float] = {

@@ -13,8 +13,7 @@ Gramian must fit on the driver, which is the standard constraint).
 Not registered as an oracle query: an eigendecomposition is not
 SQL-expressible, and the basis is only defined up to sign/rotation in
 degenerate eigenvalue cases — the test pins subspace agreement with
-numpy instead (`tests/test_embedding_pca.py`), the `bpe_learn_merges`
-precedent for library-level, non-oracle operators.
+numpy instead (`tests/test_embedding_pca.py`).
 """
 
 from __future__ import annotations

@@ -68,8 +68,10 @@ NEGATIVE_WORDS = (
 def lexicon_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic lexicon sentiment: (pos_hits - neg_hits) /
     (pos_hits + neg_hits), labeled positive/negative/neutral at ±0.05
-    (the VADER thresholds, `spark_ml_sentiment.py:127-133`). Pure
-    higher-order-function expressions — stays in codegen."""
+    (the VADER thresholds, `spark_ml_sentiment.py:127-133`). JVM-side,
+    no Python UDF; but each hit count's ``filter`` lambda is a
+    higher-order function, which Catalyst evaluates interpreted
+    (CodegenFallback) outside whole-stage codegen."""
 
     def hits(words: tuple[str, ...]) -> F.Column:
         lst = ", ".join(f"'{w}'" for w in words)

@@ -1,8 +1,8 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
 A 100 TB multimodal pipeline stores media as ``binary`` columns (or
-pointers) with typed metadata, and runs decode / feature-extract /
-resize / frame-sample as Arrow-batched Pandas functions over
+pointers) with typed metadata, and runs decode / pixel and audio
+stats / frame-sample as Arrow-batched Pandas functions over
 ``mapInPandas`` — that plumbing (schema, batch shape, partitioning) is
 real and tested here. ``decode_image`` is a real pure-Python codec for
 the uncompressed containers (BMP 24/32-bit, Netpbm P3/P6), so the
@@ -33,27 +33,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-    ]
-)
-
-FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("payload_hash", StringType()),
-        StructField("feat_mean", LongType()),  # deterministic fake feature
-    ]
 )
 
 
@@ -525,37 +504,6 @@ def audio_pcm_stats(df: DataFrame) -> DataFrame:
     return df.mapInPandas(batches, schema=AUDIO_STATS_SCHEMA)
 
 
-def extract_features(df: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    Uses a deterministic fake 'feature' (mean byte value) in place of
-    the stubbed codec so the distributed plumbing is fully testable:
-    the mapInPandas batch shape, the explicit output schema, and the
-    one-Python-call-per-Arrow-batch contract are exactly what a real
-    decoder plugs into.
-    """
-    import hashlib
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "payload_hash": payloads.map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                    "feat_mean": payloads.map(
-                        lambda b: int(sum(bytes(b)) // max(len(b), 1))
-                    ).astype("int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=FEATURES_SCHEMA)
-
-
 FRAMES_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -608,30 +556,6 @@ def sample_frames(
     return df.where(F.col("kind") == "video").mapInPandas(
         batches, schema=FRAMES_SCHEMA
     )
-
-
-def resize_media(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Resize plumbing: same MEDIA_SCHEMA out as in (so resized media
-    flows through every downstream operator unchanged), payload
-    rewritten by the codec and width/height metadata updated.
-
-    The fake codec scales the payload to out_w*out_h//1024 bytes by
-    cyclic repetition/truncation — deterministic, so tests can assert
-    exact output; a real implementation replaces only the inner
-    function with PIL/opencv calls (`decode_image`)."""
-    target = max(1, out_w * out_h // 1024)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            out["payload"] = out["payload"].map(
-                lambda b: (bytes(b) * (target // max(len(bytes(b)), 1) + 1))[:target]
-            )
-            out["width"] = pd.Series([out_w] * len(out), dtype="int32")
-            out["height"] = pd.Series([out_h] * len(out), dtype="int32")
-            yield out
-
-    return df.mapInPandas(batches, schema=MEDIA_SCHEMA)
 
 
 def synthetic_media(spark, n: int = 64) -> DataFrame:

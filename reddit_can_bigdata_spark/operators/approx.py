@@ -1,12 +1,10 @@
-"""Sketch-based approximate aggregates — the 100 TB substitutions.
+"""Sketch-based and sampled approximate aggregates — the 100 TB
+substitutions.
 
-The exact forms (COUNT DISTINCT, exact percentile) are the oracle
-gate; these are the drop-in scale variants the engine swaps in when
-an exact global sort/distinct-shuffle stops being worth it
-(PERF.md): HyperLogLog++ distinct counts and a quantile sketch.
-Accuracy is contract-tested against the exact values in
-tests/test_approx.py rather than oracle-hashed (sketches are not
-bit-portable across engines by design).
+An engine-portable Count-Min Sketch (hash-checked as a relation, its
+point-query guarantee contract-tested in tests/test_approx.py), exact
+heavy hitters, and hash-sampled aggregates that carry their own
+confidence intervals.
 """
 
 from __future__ import annotations
@@ -16,21 +14,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from reddit_can_bigdata_spark.functions.text import PORTABLE_HASH32_SQL
 from reddit_can_bigdata_spark.operators.common import tables
 from reddit_can_bigdata_spark.registry import register
-
-
-def approx_user_counts(df: DataFrame, col: str, rsd: float = 0.02) -> DataFrame:
-    """A6 at scale: HLL++ distinct count with target relative standard
-    deviation. No distinct-shuffle — partial sketches merge."""
-    return df.agg(
-        F.approx_count_distinct(col, rsd).alias("approx_distinct"),
-        F.count(col).alias("total"),
-    )
-
-
-def approx_quantiles(df: DataFrame, col: str, probs: list[float], err: float = 0.01) -> list[float]:
-    """A9 at scale: Greenwald-Khanna sketch via approxQuantile —
-    single pass, bounded error, no global sort."""
-    return df.stat.approxQuantile(col, probs, err)
 
 
 CMS_DEPTH = 4
@@ -106,10 +89,9 @@ def cms_estimate(sketch_rows: list, key: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# round 4: Misra-Gries heavy hitters
+# round 4: heavy hitters
 # ---------------------------------------------------------------------------
 
-MG_CAPACITY = 8  # counters per partition summary
 HH_PHI_DEN = 50  # heavy hitter = frequency > n / HH_PHI_DEN (2%)
 
 
@@ -130,9 +112,9 @@ HH_PHI_DEN = 50  # heavy hitter = frequency > n / HH_PHI_DEN (2%)
 )
 def heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact phi-heavy-hitters (tokens with frequency > 2% of the
-    stream) — the oracle gate for the Misra-Gries scale path below.
-    One hash aggregate + a 1-row total broadcast; the threshold is an
-    integer cross-multiplication (no division, bit-exact)."""
+    stream): one hash aggregate + a 1-row total broadcast; the
+    threshold is an integer cross-multiplication (no division,
+    bit-exact)."""
     from reddit_can_bigdata_spark.operators.pretrain import TOKENS_EXPR
 
     docs = tables(spark, sf_dir)["documents"]
@@ -144,51 +126,6 @@ def heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("freq") * HH_PHI_DEN > F.col("total"))
         .select("term", "freq", "total")
     )
-
-
-def misra_gries_summary(
-    df: DataFrame, col: str, capacity: int = MG_CAPACITY
-) -> list[tuple[str, int]]:
-    """Misra-Gries heavy-hitter summary at 100 TB scale: each
-    partition keeps only ``capacity`` counters (constant memory
-    regardless of cardinality — the property a groupBy lacks when the
-    key space explodes), then the per-partition summaries MERGE by
-    counter addition + the standard (k+1)-th-counter subtraction.
-
-    Guarantees (contract-tested, not oracle-hashed — the summary
-    depends on partitioning order by design): every item with true
-    frequency > n/capacity SURVIVES the summary, and each reported
-    count is within n/capacity of the truth. The per-partition pass
-    is `mapPartitions` (the legitimate per-partition-imperative case
-    the brief carves out); the merge folds the tiny summaries on the
-    driver — O(partitions x capacity) rows, never data-sized."""
-
-    def summarize(rows):
-        counters: dict = {}
-        for r in rows:
-            v = r[0]
-            if v in counters:
-                counters[v] += 1
-            elif len(counters) < capacity:
-                counters[v] = 1
-            else:
-                for k in list(counters):
-                    counters[k] -= 1
-                    if counters[k] == 0:
-                        del counters[k]
-        yield list(counters.items())
-
-    partials = df.select(col).rdd.mapPartitions(summarize).collect()
-    merged: dict = {}
-    for summary in partials:
-        for key, cnt in summary:
-            merged[key] = merged.get(key, 0) + cnt
-            if len(merged) > capacity:
-                cut = sorted(merged.values())[len(merged) - capacity - 1]
-                merged = {
-                    k: c - cut for k, c in merged.items() if c - cut > 0
-                }
-    return sorted(merged.items(), key=lambda kv: (-kv[1], kv[0]))
 
 
 # ---------------------------------------------------------------------------

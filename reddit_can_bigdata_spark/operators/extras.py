@@ -858,8 +858,8 @@ def scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (co-partitioned, sort-merge) whose per-row interval scan is
     bounded by that user's version count, never an unbounded
     interval join. The dimension's tiling invariant (pinned in
-    `tests/test_analytics.py`'s SCD2 tests) guarantees exactly one
-    version per fact, so output rows == fact rows; `type_matches`
+    `tests/test_timeseries_analytics.py`'s SCD2 test) guarantees
+    exactly one version per fact, so output rows == fact rows; `type_matches`
     exposes the self-consistency (a fact always lands in the version
     its own type opened) as an auditable column rather than an
     assumption."""

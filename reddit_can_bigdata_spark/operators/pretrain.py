@@ -1215,7 +1215,7 @@ def pretrain_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round 4: minhash-style containment decontamination + distributed BPE
+# round 4: minhash-style containment decontamination + BPE pair counts
 # ---------------------------------------------------------------------------
 
 CONTAIN_N = 2  # tokens per containment shingle (fuzzy, smaller than
@@ -1317,12 +1317,6 @@ _REG["pretrain_eval_containment"].oracle = _REG[
 
 
 BPE_TOPK_PAIRS = 20
-BPE_MIN_PAIR = 2  # stop merging below this support
-
-
-def _chars_expr(col: str) -> str:
-    """Spark: split a word into its character symbols."""
-    return f"filter(split({col}, ''), c -> c <> '')"
 
 
 @register(
@@ -1350,7 +1344,7 @@ def _chars_expr(col: str) -> str:
 def pretrain_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distributed hot step of BPE tokenizer TRAINING: adjacent
     symbol-pair counts weighted by word frequency — the aggregation
-    every merge iteration of `bpe_learn_merges` re-runs. Registered
+    every merge iteration of a word-count BPE trainer re-runs. Registered
     standalone (iteration 0: symbols = characters) so the step the
     cluster actually spends time on carries an exact oracle.
 
@@ -1384,169 +1378,6 @@ def pretrain_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("cnt").cast("bigint").alias("pair_total"))
         .orderBy(F.desc("pair_total"), F.asc("l"), F.asc("r"))
         .limit(BPE_TOPK_PAIRS)
-    )
-
-
-def _sql_quote(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _merge_fold_expr(syms_col: str, left: str, right: str) -> str:
-    """Greedy left-to-right application of ONE merge (left, right) to a
-    symbol array, as a Catalyst `aggregate` fold: append each symbol,
-    but when the accumulator tail is `left` and the next symbol is
-    `right`, replace the tail with the concatenation. Left-to-right
-    greediness falls out of the fold order, and a freshly merged
-    symbol can't re-merge because its literal differs from `left`
-    (the convention reference BPE implementations use)."""
-    l, r, m = _sql_quote(left), _sql_quote(right), _sql_quote(left + right)
-    return (
-        f"aggregate({syms_col}, cast(array() as array<string>), "
-        f"(acc, x) -> CASE WHEN size(acc) > 0 "
-        f"AND element_at(acc, -1) = {l} AND x = {r} "
-        f"THEN concat(slice(acc, 1, size(acc) - 1), array({m})) "
-        f"ELSE concat(acc, array(x)) END)"
-    )
-
-
-def bpe_learn_merges(
-    spark: SparkSession, docs: DataFrame, n_merges: int = 16
-) -> list[tuple[str, str, int]]:
-    """Distributed BPE tokenizer training (Sennrich et al. 2016): learn
-    `n_merges` merge rules from word frequencies.
-
-    The corpus collapses ONCE to the (word, count) vocabulary table —
-    the only corpus-sized shuffle. Each iteration then (1) counts
-    adjacent symbol pairs over the vocab weighted by word count,
-    (2) takes the argmax with a deterministic (count desc, l, r)
-    tiebreak — a 1-row driver scalar, the same legitimate collect
-    class as `ml/sentiment.py`'s agreement rate — and (3) applies the
-    merge vocab-side with the `aggregate` fold, materializing so
-    N iterations don't stack N fold plans. At 100 TB the vocab is
-    ~millions of rows: every iteration is sub-second cluster work;
-    this is exactly how industrial BPE trainers (HuggingFace
-    tokenizers' word-count mode) structure it.
-
-    Returns [(left, right, pair_count), ...] in merge order."""
-    wc = (
-        docs.select(F.explode(F.expr(TOKENS_EXPR)).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-    vocab = wc.select("cnt", F.expr(_chars_expr("word")).alias("syms"))
-    vocab = vocab.transform(materialize)
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        pairs = vocab.where(F.size("syms") >= 2).select(
-            "cnt",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(syms) - 1),"
-                    " i -> struct(element_at(syms, i) AS l,"
-                    " element_at(syms, i + 1) AS r))"
-                )
-            ).alias("p"),
-        )
-        best = (
-            pairs.select("cnt", "p.l", "p.r")
-            .groupBy("l", "r")
-            .agg(F.sum("cnt").cast("bigint").alias("total"))
-            .orderBy(F.desc("total"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0].total < BPE_MIN_PAIR:
-            break
-        l, r, total = best[0].l, best[0].r, int(best[0].total)
-        merges.append((l, r, total))
-        vocab = vocab.select(
-            "cnt", F.expr(_merge_fold_expr("syms", l, r)).alias("syms")
-        ).transform(materialize)
-    return merges
-
-
-def bpe_segment_frame(docs: DataFrame, merges: list[tuple[str, str, int]]) -> DataFrame:
-    """Apply a learned merge list to documents: per-token greedy
-    segmentation via the same fold expression, merges applied in
-    learned order. Pure narrow map (tokenize -> per-word symbol fold
-    chain), embarrassingly parallel at any scale."""
-    out = docs.select(
-        "doc_id", F.explode(F.expr(TOKENS_EXPR)).alias("word")
-    ).withColumn("syms", F.expr(_chars_expr("word")))
-    expr = "syms"
-    for l, r, _ in merges:
-        expr = _merge_fold_expr(expr, l, r)
-    return out.select(
-        "doc_id", "word", F.expr(expr).alias("pieces")
-    )
-
-
-def bpe_segment_doc_expr(merges: list[tuple[str, str, int]]) -> str:
-    """Whole-document BPE segmentation expression, ORDER-PRESERVING:
-    tokenize -> per-word char symbols -> the learned merge folds in
-    order -> flatten back to the document's piece sequence. One
-    narrow map; expression depth grows with the merge count, so long
-    merge lists drop out of codegen into interpreted eval — still
-    JVM-side, still no Python."""
-    inner = _chars_expr("w")
-    for left, right, _ in merges:
-        inner = _merge_fold_expr(inner, left, right)
-    return f"flatten(transform({TOKENS_EXPR}, w -> {inner}))"
-
-
-def build_tokenized_shards(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    n_merges: int = 12,
-) -> DataFrame:
-    """Corpus pipeline stage: train a BPE vocabulary on the corpus,
-    segment every document with it (order-preserving), and write the
-    tokenized shards partitioned by source — the tokenize step that
-    sits between `build_training_shards` and sequence packing in a
-    real pretraining pipeline.
-
-    Scale: training touches the corpus once (vocab collapse) and then
-    iterates on the vocabulary; segmentation is a narrow map; the
-    write is partitioned by source like the chunk shards. Returns the
-    one-row stats a scheduler gates on: docs, words, pieces, and the
-    pieces-per-word ratio (must be < chars-per-word — the whole point
-    of the merges)."""
-    docs = tables(spark, sf_dir)["documents"]
-    merges = bpe_learn_merges(spark, docs, n_merges=n_merges)
-    seg = spread(docs).select(
-        "doc_id",
-        "source",
-        F.expr(bpe_segment_doc_expr(merges)).alias("pieces"),
-        F.size(F.expr(TOKENS_EXPR)).alias("n_words"),
-    )
-    from pyspark.sql import Observation
-
-    obs = Observation("tokenize_write")
-    (
-        seg.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_words").alias("n_words"),
-            F.sum(F.size("pieces")).alias("n_pieces"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("source")
-        .parquet(out_dir)
-    )
-    got = obs.get
-    return spark.createDataFrame(
-        [
-            (
-                int(got["n_docs"]),
-                int(got["n_words"]),
-                int(got["n_pieces"]),
-                len(merges),
-                round(got["n_pieces"] / max(got["n_words"], 1), 6),
-            )
-        ],
-        "n_docs bigint, n_words bigint, n_pieces bigint,"
-        " n_merges int, pieces_per_word double",
     )
 
 

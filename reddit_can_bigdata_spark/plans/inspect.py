@@ -74,14 +74,3 @@ def count_exchanges(df: DataFrame) -> int:
         for line in formatted_plan(df).splitlines()
         if _re.match(r"\(\d+\) Exchange\b", line.strip())
     )
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans — wider is better."""
-    plan = formatted_plan(df)
-    ids = set()
-    for line in plan.splitlines():
-        s = line.strip()
-        if "WholeStageCodegen" in s:
-            ids.add(s)
-    return len(ids)

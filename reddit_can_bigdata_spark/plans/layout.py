@@ -1,11 +1,12 @@
-"""Physical-layout strategies: bucketing, partitioning, salting.
+"""Physical-layout strategies: bucketing and partitioning.
 
 SURVEY §4.2 / the 100 TB playbook: co-locate the big joins via
-bucketing, prune scans via date partitioning, and neutralize skew via
-key salting. Each strategy here is a small utility whose effect on
-the physical plan is asserted in tests/test_layout.py — the point is
-not the helper code but the demonstrated plan change (no Exchange /
-PartitionFilters / balanced tasks).
+bucketing and prune scans via date partitioning (skew salting is the
+registered `j5_salted_skew_join`). Each strategy here is a small
+utility whose effect on the physical plan is asserted in
+tests/test_layout.py — the point is not the helper code but the
+demonstrated plan change (no Exchange / PartitionFilters / balanced
+tasks).
 """
 
 from __future__ import annotations
@@ -31,27 +32,6 @@ def write_bucketed(
     if sort_col:
         w = w.sortBy(sort_col)
     w.saveAsTable(table)
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-neutralized equi-join: spread each hot key of ``big``
-    across ``n_salts`` shuffle partitions by appending a random salt,
-    and explode ``small`` across all salts so every (key, salt) pair
-    still matches. Use when one key holds a disproportionate share of
-    rows and AQE's skew splitting isn't available (e.g. non-AQE sinks,
-    streaming joins). Row-level results are identical to a plain join.
-    """
-    salted_big = big.withColumn("_salt", (F.rand(seed=42) * n_salts).cast("int"))
-    salts = F.explode(F.array(*[F.lit(i) for i in range(n_salts)])).alias("_salt")
-    salted_small = small.select("*", salts)
-    out = salted_big.join(salted_small, [key, "_salt"], how)
-    return out.drop("_salt")
 
 
 def write_date_partitioned(

@@ -291,11 +291,6 @@ def _stamp_state(artifact_dir: str) -> tuple[set[str], set[str]]:
     return edited, unverified
 
 
-def _modified_since_green(artifact_dir: str) -> set[str]:
-    """Back-compat alias: the urgent ("edited since green") tier."""
-    return _stamp_state(artifact_dir)[0]
-
-
 def rotated_queries(artifact_dir: str) -> dict[str, QueryFn]:
     """Driver-facing helper: least-externally-checked queries first.
 
@@ -310,7 +305,7 @@ def rotated_queries(artifact_dir: str) -> dict[str, QueryFn]:
     no external row under the current hash algorithm (first-ever checks
     — a newcomer must not wait behind a wide edit wave), then queries
     whose source+oracle hash changed since the stamp that earned their
-    last green row (see :func:`_modified_since_green`).  This
+    last green row (see :func:`_stamp_state`).  This
     coverage-rotation concern lives here, out of the library API.
     """
     _ensure_loaded()

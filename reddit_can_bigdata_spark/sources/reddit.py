@@ -8,8 +8,6 @@ that exact ingestion surface, source-agnostically:
 - ``parse_kafka_events`` — from_json + type-discriminated split (the
   S3 projection), applicable to a Kafka stream's ``value`` column or
   any DataFrame of JSON strings (tests use an in-memory one);
-- ``normalize_posts`` / ``normalize_comments`` — the §1.3 timestamp
-  canonicalization;
 - ``featurize_posts`` — the streaming-ETL derivation
   (`spark-streaming-pyspark/spark_streaming.py:64-94`) as pure
   Catalyst expressions: cleaned_title/cleaned_body/combined_text/
@@ -50,14 +48,6 @@ def parse_kafka_events(raw: DataFrame, value_col: str = "value") -> tuple[DataFr
         .where(F.col("type") == "comment")
     )
     return posts, comments
-
-
-def normalize_ts(df: DataFrame) -> DataFrame:
-    """§1.3: single canonical TimestampType column derived from the
-    epoch-seconds double; the raw column is kept for parity."""
-    return df.withColumn(
-        "created_ts", F.to_timestamp(F.from_unixtime(F.col("created_utc").cast("long")))
-    )
 
 
 def featurize_posts(posts: DataFrame) -> DataFrame:

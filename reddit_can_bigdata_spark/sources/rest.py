@@ -1,40 +1,18 @@
-"""REST-ingest record extraction (SURVEY.md §2.1 S4-S6).
+"""REST-ingest record extraction (SURVEY.md §2.1 S4/S5).
 
 The reference scrapes reddit.com's public JSON listings in a driver
 process and pushes normalized dicts to Kafka
 (`scraper/kafka_producer.py:155-317`). Network fetching is an
 operational concern outside the engine; what the engine owns is the
-**record normalization and the ingest-time keyword filter**, which
-this module implements as pure functions over raw listing payloads —
-testable without any network, pluggable under any fetch loop.
+**post record normalization**, which this module implements as a pure
+function over raw listing payloads — testable without any network,
+pluggable under any fetch loop (`sources/pyds.py`'s REST source).
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 from typing import Any
-
-# Ingest keyword filter (P5 at the edge): keep records mentioning the
-# tournament. A representative subset of the reference's 40+ keywords
-# (`scraper/kafka_producer.py:46-72`); the engine-side P5 query applies
-# the same semantics as one compiled regex.
-KEYWORDS = (
-    "afcon",
-    "can 2025",
-    "africa cup",
-    "coupe d'afrique",
-    "morocco",
-    "maroc",
-    "senegal",
-    "nigeria",
-)
-
-
-def matches_keywords(title: str, selftext: str = "") -> bool:
-    """`scraper/kafka_producer.py:264-275`: case-insensitive substring
-    containment over title+body, any keyword hits."""
-    text = f"{title} {selftext}".lower()
-    return any(k in text for k in KEYWORDS)
 
 
 def _iso(epoch: float | None) -> str | None:
@@ -65,27 +43,5 @@ def extract_post(raw: dict[str, Any], scraped_at: str) -> dict[str, Any]:
         "url": raw.get("url"),
         "permalink": "https://reddit.com" + (raw.get("permalink") or ""),
         "link_flair_text": raw.get("link_flair_text"),
-        "scraped_at": scraped_at,
-    }
-
-
-def extract_comment(raw: dict[str, Any], post_id: str, scraped_at: str) -> dict[str, Any] | None:
-    """S6 normalization (`scraper/kafka_producer.py:299-317`): comment
-    child -> comments-schema dict; `[deleted]`/`[removed]` bodies are
-    dropped at source (returns None), matching `:301`."""
-    body = raw.get("body")
-    if body in ("[deleted]", "[removed]", None):
-        return None
-    created = raw.get("created_utc")
-    return {
-        "type": "comment",
-        "id": raw.get("id"),
-        "post_id": post_id,
-        "author": raw.get("author"),
-        "body": body,
-        "score": int(raw.get("score") or 0),
-        "created_utc": float(created) if created is not None else None,
-        "created_date": _iso(created),
-        "parent_id": raw.get("parent_id"),
         "scraped_at": scraped_at,
     }

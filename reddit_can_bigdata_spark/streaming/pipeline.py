@@ -123,32 +123,6 @@ def run_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(stream_dir, ignore_errors=True)
 
 
-def run_stream_to_console(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    num_rows: int = 20,
-):
-    """S14: console sink (`format("console")`,
-    `spark-streaming-pyspark/spark_streaming.py:160-166` uses it for
-    debug output). Bounded availableNow run; returns the completed
-    StreamingQuery. Debug-only by design — at scale the console sink
-    funnels every row through the driver, so production paths use the
-    parquet/memory/foreachBatch sinks in this module."""
-    raw_schema = spark.read.parquet(source_dir).schema
-    stream = spark.readStream.schema(raw_schema).parquet(source_dir)
-    q = (
-        stream.writeStream.format("console")
-        .option("numRows", str(num_rows))
-        .option("truncate", "true")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 def stream_etl_to_parquet(
     spark: SparkSession,
     source_dir: str,

@@ -221,161 +221,3 @@ def streaming_user_milestones(spark, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(stream_dir, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
-# Round 8: EVENT-TIME TIMERS — the arbitrary-state API surface the
-# milestone operator doesn't touch. Sessionization where a session can
-# close two ways: an in-stream gap (a later event proves it closed —
-# emitted from handleInputRows, order-dependent only, so exactly
-# checkable) or WATERMARK passage (no later event will arrive — emitted
-# from handleExpiredTimer, the timer API's reason to exist).
-# ---------------------------------------------------------------------------
-
-SESSION_GAP_US = 30 * 60 * 1_000_000  # same 30-min gap as streaming/stateful.py
-SESSION_WATERMARK = "10 minutes"
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start_us", LongType()),
-        StructField("session_end_us", LongType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-_SESSION_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-    ]
-)
-
-
-class SessionTimerProcessor(StatefulProcessor):
-    """Per-user session assembly with gap closure AND timer closure.
-
-    State: the open session (start, last, n) per user. Each batch's
-    rows are sorted by (tus, event_id); a row more than SESSION_GAP_US
-    after the open session's last event closes it (emit) and opens a
-    new one. After every batch the processor re-arms one event-time
-    timer at last + gap: if the watermark passes it with no further
-    events, handleExpiredTimer emits the trailing session and clears
-    state — the closure no amount of in-stream data can provide."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._sess = handle.getValueState("open_session", _SESSION_STATE_SCHEMA)
-
-    def _emit(self, user_id, start, last, n) -> "pd.DataFrame":
-        import pandas as pd
-
-        return pd.DataFrame(
-            {
-                "user_id": pd.Series([user_id], dtype="int64"),
-                "session_start_us": pd.Series([start], dtype="int64"),
-                "session_end_us": pd.Series([last], dtype="int64"),
-                "n_events": pd.Series([n], dtype="int64"),
-            }
-        )
-
-    def handleInputRows(
-        self, key, rows: "Iterator[pd.DataFrame]", timerValues
-    ) -> "Iterator[pd.DataFrame]":
-        import pandas as pd
-
-        (user_id,) = key
-        batch = pd.concat(list(rows), ignore_index=True).sort_values(
-            ["tus", "event_id"]
-        )
-        if self._sess.exists():
-            start, last, n = (int(v) for v in self._sess.get())
-            # the previous timer is superseded by whatever this batch ends on
-            for t in list(self._handle.listTimers()):
-                self._handle.deleteTimer(t)
-        else:
-            start = last = -1
-            n = 0
-        for tus in batch["tus"].astype("int64"):
-            t = int(tus)
-            if n == 0:
-                start, last, n = t, t, 1
-            elif t - last > SESSION_GAP_US:
-                yield self._emit(user_id, start, last, n)
-                start, last, n = t, t, 1
-            else:
-                last, n = t, n + 1
-        self._sess.update((start, last, n))
-        self._handle.registerTimer(last // 1000 + SESSION_GAP_US // 1000)
-
-    def handleExpiredTimer(
-        self, key, timerValues, expiredTimerInfo
-    ) -> "Iterator[pd.DataFrame]":
-        (user_id,) = key
-        if self._sess.exists():
-            start, last, n = (int(v) for v in self._sess.get())
-            if n > 0:
-                yield self._emit(user_id, start, last, n)
-            self._sess.clear()
-
-    def close(self) -> None:
-        pass
-
-
-def sessions_timer_stream(events: DataFrame) -> DataFrame:
-    """events(user_id, event_id, ts) -> session rows; event-time
-    watermark drives the trailing-session timers."""
-    prepared = events.withWatermark("ts", SESSION_WATERMARK).select(
-        "user_id", "event_id", F.unix_micros(F.col("ts")).alias("tus"), "ts"
-    )
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionTimerProcessor(),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
-def run_sessions_timer_stream(
-    spark, source_dir: str, checkpoint_dir: str
-) -> DataFrame:
-    """Drive the timer sessionizer as a real availableNow query over a
-    parquet file-stream; returns the materialized session table."""
-    import uuid
-
-    raw_schema = spark.read.parquet(source_dir).schema
-    stream = spark.readStream.schema(raw_schema).parquet(source_dir)
-    if dict(stream.dtypes)["ts"] == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(stream.dtypes)["ts"] != "timestamp":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    name = f"timersess_{uuid.uuid4().hex[:8]}"
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            sessions_timer_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-            return materialize(spark.table(name))
-        finally:
-            if q.isActive:
-                q.stop()
-            spark.catalog.dropTempView(name)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)

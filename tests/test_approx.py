@@ -6,32 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_hll_distinct_within_rsd(spark, sf_dir):
-    from reddit_can_bigdata_spark.operators.approx import approx_user_counts
-    from reddit_can_bigdata_spark.tables import load_tables
-
-    ev = load_tables(spark, sf_dir)["events"]
-    exact = ev.select("user_id").distinct().count()
-    approx = approx_user_counts(ev, "user_id").collect()[0]["approx_distinct"]
-    assert approx == pytest.approx(exact, rel=0.1)  # 2% rsd target, 10% guard
-
-
-def test_gk_quantiles_within_error(spark, sf_dir):
-    from reddit_can_bigdata_spark.operators.approx import approx_quantiles
-    from reddit_can_bigdata_spark.tables import load_tables
-
-    orders = load_tables(spark, sf_dir)["orders"]
-    n = orders.count()
-    got = approx_quantiles(orders, "o_totalprice", [0.5, 0.9], err=0.01)
-    vals = sorted(r["o_totalprice"] for r in orders.select("o_totalprice").collect())
-    for q, g in zip([0.5, 0.9], got):
-        # rank-error contract: the returned value's rank is within n*err
-        import bisect
-
-        rank = bisect.bisect_left(vals, g)
-        assert abs(rank - q * n) <= max(n * 0.02, 2)
-
-
 def test_count_min_sketch_one_sided_error(spark, sf_dir):
     """CMS contract: for every observed key, true count <= estimate
     <= true + collisions (bounded by N/width per hash row)."""
@@ -54,38 +28,6 @@ def test_count_min_sketch_one_sided_error(spark, sf_dir):
     for key, t in true.items():
         est = cms_estimate(sketch_rows, key)
         assert t <= est <= t + n / CMS_WIDTH * 4, (key, t, est)
-
-
-def test_misra_gries_contract(spark, sf_dir):
-    """MG guarantees: (1) every item with true frequency > n/capacity
-    survives the summary; (2) reported counts never exceed the truth
-    and undercount by at most n/capacity."""
-    from collections import Counter
-
-    from pyspark.sql import functions as F
-
-    from reddit_can_bigdata_spark.operators.approx import (
-        MG_CAPACITY,
-        misra_gries_summary,
-    )
-    from reddit_can_bigdata_spark.operators.common import tables
-    from reddit_can_bigdata_spark.operators.pretrain import TOKENS_EXPR
-
-    docs = tables(spark, sf_dir)["documents"]
-    tok = docs.select(F.explode(F.expr(TOKENS_EXPR)).alias("term")).repartition(8)
-    got = dict(misra_gries_summary(tok, "term", MG_CAPACITY))
-    truth = Counter(
-        t for r in docs.select("text").collect() for t in r.text.split(" ") if t
-    )
-    n = sum(truth.values())
-    bound = n / MG_CAPACITY
-    for term, freq in truth.items():
-        if freq > bound:
-            assert term in got, f"guaranteed heavy hitter {term} lost"
-    for term, est in got.items():
-        assert est <= truth[term], "MG must never overcount"
-        assert truth[term] - est <= bound, "undercount beyond the MG bound"
-    assert 0 < len(got) <= MG_CAPACITY
 
 
 def test_sample_ci_contains_exact_and_tightens(spark, sf_dir, sf001_dir):

@@ -1,98 +1,19 @@
-"""Tests for distributed BPE training/segmentation and containment
-decontamination. The registered queries' oracle parity runs in
-test_oracle_parity.py; these pin the iterative trainer against a pure
-Python reference and the fold's greedy semantics."""
+"""Containment decontamination pinned against a pure-Python golden.
+The registered query's oracle parity runs in test_oracle_parity.py."""
 
 from __future__ import annotations
 
-from collections import Counter
-
-from pyspark.sql import functions as F
-
 from reddit_can_bigdata_spark.operators.common import tables
 from reddit_can_bigdata_spark.operators.pretrain import (
-    BPE_MIN_PAIR,
     CONTAIN_N,
     CONTAIN_THRESHOLD,
     DECONTAM_EVAL_MOD,
-    bpe_learn_merges,
-    bpe_segment_frame,
     pretrain_eval_containment,
 )
 
 
 def _py_tokens(text: str) -> list[str]:
     return [t for t in text.split(" ") if t]
-
-
-def _py_bpe(word_counts: dict[str, int], n_merges: int):
-    """Reference word-frequency BPE with the same deterministic
-    (count desc, l asc, r asc) tiebreak and greedy left-to-right
-    merge application."""
-    vocab = {w: (tuple(w), c) for w, c in word_counts.items()}
-    merges = []
-    for _ in range(n_merges):
-        pc: Counter = Counter()
-        for syms, cnt in vocab.values():
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] += cnt
-        if not pc:
-            break
-        (left, right), total = min(
-            pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        if total < BPE_MIN_PAIR:
-            break
-        merges.append((left, right, total))
-        new_vocab = {}
-        for w, (syms, cnt) in vocab.items():
-            out: list[str] = []
-            for x in syms:
-                if out and out[-1] == left and x == right:
-                    out[-1] = left + right
-                else:
-                    out.append(x)
-            new_vocab[w] = (tuple(out), cnt)
-        vocab = new_vocab
-    return merges
-
-
-def test_bpe_trainer_matches_python_reference(spark, sf_dir):
-    docs = tables(spark, sf_dir)["documents"]
-    got = bpe_learn_merges(spark, docs, n_merges=12)
-    wc: Counter = Counter()
-    for r in docs.select("text").collect():
-        wc.update(_py_tokens(r.text))
-    expect = _py_bpe(dict(wc), 12)
-    assert got == expect, f"\ngot:    {got}\nexpect: {expect}"
-    assert len(got) == 12, "fixture corpus should support 12 merges"
-
-
-def test_bpe_greedy_fold_semantics(spark):
-    """'aaa' + merge (a,a) must give [aa, a] (greedy left-to-right,
-    no re-merge of a freshly created symbol)."""
-    df = spark.createDataFrame(
-        [(1, "aaa bab abab")], ["doc_id", "text"]
-    )
-    seg = bpe_segment_frame(df, [("a", "a", 0), ("a", "b", 0)]).collect()
-    by_word = {r.word: r.pieces for r in seg}
-    assert by_word["aaa"] == ["aa", "a"]
-    # merge order matters: (a,a) first consumes nothing in 'abab';
-    # then (a,b) merges both pairs left-to-right
-    assert by_word["abab"] == ["ab", "ab"]
-    assert by_word["bab"] == ["b", "ab"]
-
-
-def test_bpe_segmentation_reassembles_words(spark, sf_dir):
-    docs = tables(spark, sf_dir)["documents"].limit(50)
-    merges = bpe_learn_merges(spark, docs, n_merges=6)
-    seg = bpe_segment_frame(docs, merges)
-    bad = seg.where(
-        F.concat_ws("", F.col("pieces")) != F.col("word")
-    ).count()
-    assert bad == 0, "pieces must concatenate back to the word"
-    # merging strictly reduces or keeps symbol count, never empties
-    assert seg.where(F.size("pieces") == 0).count() == 0
 
 
 def test_containment_matches_python_golden(spark, sf_dir):
@@ -121,52 +42,3 @@ def test_containment_matches_python_golden(spark, sf_dir):
     for r in rows:
         assert abs(r.containment - r.n_common / r.n_eval) < 1e-6
         assert r.containment >= CONTAIN_THRESHOLD
-
-
-def test_tokenized_shards_roundtrip_and_compress(spark, sf_dir, tmp_path):
-    """The tokenize-and-shard stage: pieces must reassemble each
-    document's exact word sequence IN ORDER, the learned merges must
-    actually compress (pieces strictly fewer than characters), and
-    the stats row must match the written shards."""
-    from pyspark.sql import functions as F
-
-    from reddit_can_bigdata_spark.operators.pretrain import build_tokenized_shards
-
-    out = str(tmp_path / "tok_shards")
-    stats = build_tokenized_shards(spark, sf_dir, out, n_merges=8).collect()[0]
-    shards = spark.read.parquet(out)
-    assert stats.n_docs == shards.count()
-    assert stats.n_pieces == shards.agg(F.sum(F.size("pieces"))).collect()[0][0]
-    assert stats.n_merges == 8
-    # pieces-per-word must sit strictly between 1 (full merge) and
-    # chars-per-word (no merges did anything)
-    from reddit_can_bigdata_spark.operators.common import tables
-
-    raw = tables(spark, sf_dir)["documents"]
-    chars_per_word = (
-        raw.select(
-            F.sum(
-                F.aggregate(
-                    F.expr("filter(split(text, ' '), t -> t <> '')"),
-                    F.lit(0),
-                    lambda a, w: a + F.length(w),
-                )
-            ).alias("chars"),
-            F.sum(F.size(F.expr("filter(split(text, ' '), t -> t <> '')"))).alias(
-                "words"
-            ),
-        )
-        .select((F.col("chars") / F.col("words")).alias("cpw"))
-        .collect()[0].cpw
-    )
-    assert 1.0 < stats.pieces_per_word < chars_per_word
-    # order-preserving roundtrip on a sample
-    joined = (
-        shards.limit(20)
-        .join(raw.select("doc_id", "text"), "doc_id")
-        .select("doc_id", "pieces", "text")
-        .collect()
-    )
-    for r in joined:
-        words = [t for t in r.text.split(" ") if t]
-        assert "".join(r.pieces) == "".join(words)

@@ -72,45 +72,3 @@ def test_reddit_pipeline_end_to_end(spark, tmp_path):
     rows = top.collect()
     assert 0 < len(rows) <= 20
     assert rows == sorted(rows, key=lambda r: r["rank"])
-
-
-def test_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
-    """filter -> chunk -> shard composition: every written chunk
-    belongs to a kept, non-eval document; shard directories are
-    per-source; the summary counts reconcile with the parts."""
-    from pyspark.sql import functions as F
-
-    from reddit_can_bigdata_spark.corpus import build_training_shards
-    from reddit_can_bigdata_spark.operators.pretrain import pretrain_keep_decision
-    from reddit_can_bigdata_spark.tables import load_tables
-
-    out = str(tmp_path / "shards")
-    summary = build_training_shards(spark, sf_dir, out).collect()[0]
-    assert summary["n_docs_in"] >= summary["n_docs_kept"] > 0
-    assert summary["n_chunks_written"] >= summary["n_docs_kept"]  # >=1 chunk/doc
-
-    written = spark.read.parquet(out)
-    kept_ids = {
-        r["doc_id"]
-        for r in pretrain_keep_decision(spark, sf_dir).where("keep").collect()
-    }
-    written_ids = {r["doc_id"] for r in written.select("doc_id").distinct().collect()}
-    assert written_ids == kept_ids  # exactly the kept docs, no leakage
-
-    # physical layout: one directory per source shard
-    import os
-
-    shard_dirs = {d for d in os.listdir(out) if d.startswith("source=")}
-    n_sources = (
-        written.select("source").distinct().count()
-    )
-    assert len(shard_dirs) == n_sources > 0
-
-    # chunk integrity on a sample doc: contiguous ids, text round-trip
-    docs = load_tables(spark, sf_dir)["documents"]
-    sample = written.orderBy("doc_id", "chunk_id").limit(50).collect()
-    by_doc = {}
-    for r in sample:
-        by_doc.setdefault(r["doc_id"], []).append(r["chunk_id"])
-    for did, cids in by_doc.items():
-        assert cids == list(range(cids[0], cids[0] + len(cids)))

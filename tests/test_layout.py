@@ -148,21 +148,6 @@ def test_ivf_persisted_index_prunes_to_one_partition(spark, sf_dir, tmp_path):
     assert got[: len(expected)] == expected
 
 
-def test_salted_join_matches_plain_join(spark):
-    """Salting preserves join semantics row-for-row on skewed data."""
-    from reddit_can_bigdata_spark.plans.layout import salted_join
-
-    # heavily skewed: 90% of rows share key 1
-    big = spark.range(10000).select(
-        F.when(F.col("id") % 10 != 0, 1).otherwise(F.col("id")).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.createDataFrame([(1, "hot"), (10, "cold"), (20, "cold2")], "k long, tag string")
-    got = salted_join(big, small, "k").groupBy("k", "tag").agg(F.count("*").alias("n"))
-    plain = big.join(small, "k").groupBy("k", "tag").agg(F.count("*").alias("n"))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, plain.collect()))
-
-
 def test_zorder_tightens_both_dimension_spans(spark, tmp_path):
     """The honest Z-order test: read back the parquet FOOTER stats of
     every output file and compare per-file (min, max) spans. Linear

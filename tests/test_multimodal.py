@@ -2,28 +2,7 @@
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
-
-
-def test_extract_features_schema_and_determinism(spark):
-    from reddit_can_bigdata_spark.multimodal.binaryops import (
-        FEATURES_SCHEMA,
-        extract_features,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, n=32).repartition(4)  # multi-partition batch path
-    feats = extract_features(media)
-    assert feats.schema == FEATURES_SCHEMA
-    rows = {r["media_id"]: r for r in feats.collect()}
-    assert len(rows) == 32
-    # cross-check one row against a local computation
-    payload = b"payload-7-" + b"x" * 8  # id 7 -> 7 % 17 + 1 = 8
-    assert rows[7]["payload_hash"] == hashlib.md5(payload).hexdigest()
-    assert rows[7]["n_bytes"] == len(payload)
-    assert rows[7]["feat_mean"] == sum(payload) // len(payload)
 
 
 def _bmp24(width, height, rows_rgb, top_down=False):
@@ -180,32 +159,6 @@ def test_sample_frames_one_to_n_and_deterministic(spark):
         for r in sample_frames(media, every_n=2).collect()
     }
     assert rerun == got
-
-
-def test_resize_media_schema_stable_and_metadata_updated(spark):
-    """Resize keeps MEDIA_SCHEMA (composable with every downstream
-    op), rewrites payload to the target size, updates width/height."""
-    from reddit_can_bigdata_spark.multimodal.binaryops import (
-        resize_media,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 12)
-    out = resize_media(media, 64, 64)
-    assert [(f.name, f.dataType) for f in out.schema.fields] == [
-        (f.name, f.dataType) for f in media.schema.fields
-    ]
-    rows = out.collect()
-    assert len(rows) == 12
-    target = max(1, 64 * 64 // 1024)
-    for r in rows:
-        assert len(bytes(r["payload"])) == target
-        assert (r["width"], r["height"]) == (64, 64)
-    # feature extraction composes on the resized output
-    from reddit_can_bigdata_spark.multimodal.binaryops import extract_features
-
-    feats = extract_features(out)
-    assert feats.count() == 12
 
 
 def test_parse_image_headers_jvm_side(spark):

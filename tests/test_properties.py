@@ -70,35 +70,3 @@ def test_lexicon_score_bounded(spark, texts):
     for r in lexicon_score(df).collect():
         assert -1.0 <= r["lex_score"] <= 1.0
         assert r["lex_label"] in ("positive", "negative", "neutral")
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ab", min_size=1, max_size=10), min_size=1, max_size=6
-    ),
-    st.sampled_from(["aa", "ab", "ba", "bb"]),
-)
-def test_bpe_fold_equals_python_greedy(spark, words, pair):
-    """The Catalyst aggregate-fold merge application must equal greedy
-    left-to-right Python merging on ARBITRARY a/b words — including
-    the overlapping-run cases ('aaa' + (a,a)) where naive string
-    replacement diverges."""
-    from reddit_can_bigdata_spark.operators.pretrain import bpe_segment_frame
-
-    left, right = pair[0], pair[1]
-    df = spark.createDataFrame(
-        [(1, " ".join(words))], ["doc_id", "text"]
-    )
-    got = {
-        r.word: r.pieces
-        for r in bpe_segment_frame(df, [(left, right, 0)]).collect()
-    }
-    for w in set(words):
-        out: list[str] = []
-        for ch in w:
-            if out and out[-1] == left and ch == right:
-                out[-1] = left + right
-            else:
-                out.append(ch)
-        assert got[w] == out, (w, pair, got[w], out)

@@ -103,17 +103,3 @@ def test_interaction_edges_match_python_reference(spark, fixture_data):
         (r["u"], r["v"]): r["weight"] for r in interaction_edges(posts, comments).collect()
     }
     assert got == expected
-
-
-def test_normalize_ts_is_canonical(spark, fixture_data):
-    from reddit_can_bigdata_spark.sources.reddit import normalize_ts
-
-    posts, _ = fixture_data
-    out = normalize_ts(posts)
-    assert dict(out.dtypes)["created_ts"] == "timestamp"
-    row = out.select("created_utc", "created_ts").first()
-    import datetime as dt
-
-    assert row["created_ts"] == dt.datetime.fromtimestamp(
-        int(row["created_utc"]), dt.timezone.utc
-    ).replace(tzinfo=None)

@@ -65,7 +65,7 @@ def test_overwrite_and_singleton(spark, tmp_path):
 
 
 def test_extract_post_defaults_and_filter():
-    from reddit_can_bigdata_spark.sources.rest import extract_post, matches_keywords
+    from reddit_can_bigdata_spark.sources.rest import extract_post
 
     raw = {"id": "x1", "title": "AFCON final!", "permalink": "/r/soccer/x1",
            "created_utc": 1735689600}
@@ -73,21 +73,6 @@ def test_extract_post_defaults_and_filter():
     assert rec["score"] == 0 and rec["upvote_ratio"] == 0.0 and rec["selftext"] == ""
     assert rec["permalink"] == "https://reddit.com/r/soccer/x1"
     assert rec["created_date"] == "2025-01-01T00:00:00"
-    assert matches_keywords(rec["title"], rec["selftext"])
-    assert not matches_keywords("unrelated post about baseball")
-
-
-def test_extract_comment_drops_deleted():
-    from reddit_can_bigdata_spark.sources.rest import extract_comment
-
-    assert extract_comment({"body": "[deleted]"}, "p1", "t") is None
-    assert extract_comment({"body": "[removed]"}, "p1", "t") is None
-    rec = extract_comment(
-        {"id": "c1", "body": "Allez!", "parent_id": "t3_p1", "created_utc": 1735689600.5},
-        "p1",
-        "t",
-    )
-    assert rec["post_id"] == "p1" and rec["created_utc"] == 1735689600.5
 
 
 def test_python_datasource_reddit_rest(spark, tmp_path):

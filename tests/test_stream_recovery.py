@@ -10,9 +10,7 @@ stop, append the rest, restart from the SAME checkpoint, and assert
 the final output is row-identical to a one-shot run over all the data:
 
 - no loss  (phase-2 must resume from recovered state, not restart it),
-- no dupes (phase-2 must not re-read or re-emit phase-1's work),
-- timers re-armed from state (the tws sessionizer's trailing-session
-  timers survive the restart).
+- no dupes (phase-2 must not re-read or re-emit phase-1's work).
 
 The halves are split by EVENT TIME (h1 strictly before h2), so
 watermarks recovered from the phase-1 checkpoint can never drop
@@ -102,7 +100,7 @@ def _run_phase(spark, build, src_dir, ckpt, *, sink: str, out_dir=None, name=Non
         spark.catalog.dropTempView(name)
 
 
-def _recovery_run(spark, build, halves, tmp_path, *, sink: str, rocksdb=False):
+def _recovery_run(spark, build, halves, tmp_path, *, sink: str):
     """The restart protocol: phase 1 over h1, stop; add h2; restart the
     SAME checkpoint; compare against a one-shot run of both files on a
     fresh checkpoint. Returns (phase1, final, oneshot) row lists."""
@@ -119,49 +117,34 @@ def _recovery_run(spark, build, halves, tmp_path, *, sink: str, rocksdb=False):
     out_dir = str(tmp_path / "out")
     one_dir = str(tmp_path / "out_oneshot")
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    if rocksdb:
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+    if sink == "parquet":
+        _run_phase(spark, build, str(src), ckpt, sink="parquet", out_dir=out_dir)
+        phase1 = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
+        shutil.copy(h2, src / "h2.parquet")  # new data arrives while "down"
+        _run_phase(spark, build, str(src), ckpt, sink="parquet", out_dir=out_dir)
+        final = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
+        _run_phase(
+            spark, build, str(full), str(tmp_path / "ckpt1"), sink="parquet",
+            out_dir=one_dir,
         )
-    try:
-        if sink == "parquet":
-            _run_phase(spark, build, str(src), ckpt, sink="parquet", out_dir=out_dir)
-            phase1 = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
-            shutil.copy(h2, src / "h2.parquet")  # new data arrives while "down"
-            _run_phase(spark, build, str(src), ckpt, sink="parquet", out_dir=out_dir)
-            final = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
-            _run_phase(
-                spark, build, str(full), str(tmp_path / "ckpt1"), sink="parquet",
-                out_dir=one_dir,
-            )
-            oneshot = sorted(tuple(r) for r in spark.read.parquet(one_dir).collect())
-        else:
-            phase1 = _run_phase(
-                spark, build, str(src), ckpt, sink="memory", name="rec_p1"
-            )
-            shutil.copy(h2, src / "h2.parquet")
-            final = _run_phase(
-                spark, build, str(src), ckpt, sink="memory", name="rec_p2"
-            )
-            oneshot = _run_phase(
-                spark, build, str(full), str(tmp_path / "ckpt1"), sink="memory",
-                name="rec_one",
-            )
-    finally:
-        if rocksdb:
-            if prev is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev)
+        oneshot = sorted(tuple(r) for r in spark.read.parquet(one_dir).collect())
+    else:
+        phase1 = _run_phase(
+            spark, build, str(src), ckpt, sink="memory", name="rec_p1"
+        )
+        shutil.copy(h2, src / "h2.parquet")
+        final = _run_phase(
+            spark, build, str(src), ckpt, sink="memory", name="rec_p2"
+        )
+        oneshot = _run_phase(
+            spark, build, str(full), str(tmp_path / "ckpt1"), sink="memory",
+            name="rec_one",
+        )
     return phase1, final, oneshot
 
 
 # ---------------------------------------------------------------------------
-# the three stateful shapes
+# the stateful shapes
 # ---------------------------------------------------------------------------
 
 
@@ -198,32 +181,3 @@ def test_sessionizer_recovers_open_sessions(spark, halves, tmp_path):
     from collections import Counter
 
     assert max(Counter(final).values()) == 1
-
-
-def test_tws_timer_sessionizer_recovers_state_and_timers(spark, halves, tmp_path):
-    """transformWithStateInPandas with event-time timers: the restart
-    must recover BOTH the open-session value state and the registered
-    timers. Sessions spanning the stop merge exactly as the one-shot
-    fold (the recovered timer is superseded by phase-2 input); users
-    with no phase-2 events still get their trailing session emitted by
-    a timer re-armed from recovered state."""
-    from reddit_can_bigdata_spark.streaming.tws import (
-        TWS_EXECUTABLE,
-        sessions_timer_stream,
-    )
-
-    if not TWS_EXECUTABLE:
-        pytest.skip("transformWithState runtime (protobuf) unavailable")
-
-    phase1, final, oneshot = _recovery_run(
-        spark, sessions_timer_stream, halves, tmp_path, sink="parquet",
-        rocksdb=True,
-    )
-    assert final == oneshot
-    assert set(phase1) <= set(final)
-    from collections import Counter
-
-    assert max(Counter(final).values()) == 1
-    # the one-shot emits every session eventually (timers fired), so
-    # the recovered run must too — non-empty guards a vacuous pass
-    assert 0 < len(phase1) < len(final)

@@ -285,23 +285,6 @@ def test_stream_stream_join_with_watermarks(spark, tmp_path):
     assert got == {(2, 1), (5, 4)}
 
 
-def test_console_sink_runs_bounded(spark, tmp_path):
-    """S14: the console sink wrapper completes an availableNow run
-    over a file stream (debug sink; output goes to driver stdout)."""
-    import pandas as pd
-
-    from reddit_can_bigdata_spark.streaming.pipeline import run_stream_to_console
-
-    src = tmp_path / "src"
-    src.mkdir()
-    pd.DataFrame({"id": [1, 2, 3], "v": ["a", "b", "c"]}).to_parquet(
-        src / "p.parquet"
-    )
-    q = run_stream_to_console(spark, str(src), str(tmp_path / "ckpt"))
-    assert not q.isActive
-    assert q.lastProgress["sink"]["description"].startswith("org.apache.spark.sql.execution.streaming.ConsoleTable")
-
-
 def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
     """The watermarked stream-stream interval join produces exactly
     the rows of the same function run on batch frames (stream/batch

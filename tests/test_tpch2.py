@@ -176,3 +176,26 @@ def test_q2_and_q15_surface_all_tied_rows(spark, tmp_path):
     q15b = REGISTRY["tpch_q15_top_supplier"].fn(spark, d).collect()
     assert sorted(r["s_name"] for r in q15b) == ["S1", "S2"], q15b
     assert all(r["total_revenue"] == 10.0 for r in q15b)
+
+
+def test_topk_ties_keeps_every_row_at_the_boundary(spark, tmp_path):
+    """Constructed k-th-place tie: with k=3 and three orders tied at
+    the 3rd-highest price, ALL of them must be kept (5 rows out, not
+    3) — the rank() semantics a row_number cap would break."""
+    from reddit_can_bigdata_spark.registry import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [
+            (1, "1-URGENT", 100.0),
+            (2, "1-URGENT", 90.0),
+            (3, "1-URGENT", 80.0),
+            (4, "1-URGENT", 80.0),
+            (5, "1-URGENT", 80.0),
+            (6, "1-URGENT", 10.0),
+        ],
+        "o_orderkey bigint, o_orderpriority string, o_totalprice double",
+    ).write.mode("overwrite").parquet(f"{d}/orders.parquet")
+    rows = REGISTRY["topk_per_group_ties"].fn(spark, d).collect()
+    assert sorted(r["o_orderkey"] for r in rows) == [1, 2, 3, 4, 5], rows

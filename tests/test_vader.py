@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from reddit_can_bigdata_spark.functions.vader import (
     ALPHA,
     B_INCR,
-    BOOSTERS,
+    BOOSTER_DICT,
     C_INCR,
     EP_AMP,
     LEXICON,
@@ -175,7 +175,7 @@ def test_randomized_sentences_expr_matches_python(spark):
     lex_words = list(LEXICON)
     vocab = (
         lex_words
-        + list(BOOSTERS)
+        + list(BOOSTER_DICT)
         + ["not", "never", "don't", "but", "the", "a", "zzz", "match", "team"]
     )
     sentences = []
@@ -204,7 +204,7 @@ def test_randomized_sentences_join_path_bit_identical(spark):
     lex_words = list(LEXICON)
     vocab = (
         lex_words
-        + list(BOOSTERS)
+        + list(BOOSTER_DICT)
         + ["not", "never", "don't", "but", "the", "a", "zzz", "match", "team"]
     )
     sentences = []
