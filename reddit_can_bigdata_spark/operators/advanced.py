@@ -796,8 +796,8 @@ def closeness_for_scale(
     (renamed to the same ``closeness`` column) above. ``mode``
     overrides: 'exact' | 'sampled' | None (auto by node count).
 
-    This is what composites (`influencer_composite_top20`,
-    `user_network_table`) and `run_pipeline`'s network stage call so
+    This is what the composites (`influencer_composite_top20`) and
+    `run_pipeline`'s network stage call so
     the one O(N²) component never runs on a graph where it would be
     the first thing to die at 100×.
 
@@ -838,7 +838,7 @@ def closeness_for_scale(
     if mode is None:
         # E_sym = 2·|E|: each undirected edge is relaxed in both
         # directions every frontier pass
-        nn, e_sym, _ = gk.graph_size(edges, graph)
+        nn, e_sym = gk.graph_size(edges, graph)
         if n_nodes is None:
             n_nodes = nn
         slots = spark.sparkContext.defaultParallelism

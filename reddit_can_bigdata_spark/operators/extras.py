@@ -1114,10 +1114,9 @@ def table_checksum_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def warehouse_scd1_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S15 (MERGE / last-write-wins upsert) as an oracle-checkable
-    QUERY — `sources/storage.py` `merge_upsert` is the parquet-writing
-    form (reference: per-row `update_one(..., upsert=True)`); this
-    registers the same semantics on derived frames so the driver
-    hash-checks them: a base snapshot (orderkey % 10 >= 3), an update
+    QUERY (reference: per-row `update_one(..., upsert=True)`),
+    on derived frames so the driver hash-checks the semantics: a base
+    snapshot (orderkey % 10 >= 3), an update
     batch containing two versions for overlapping keys (the
     intra-batch conflict `resolve_updates` must settle: version 2
     always beats version 1), anti-join the winners' keys out of base,
@@ -1182,8 +1181,7 @@ def p9_flag_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     then select the flagged rows (the reference filters its stored
     network table on ``is_influencer == True``,
     `dashboard/dashboard.py` network page / `network_analysis.py`
-    user docs). Until round 8 this pattern was suite-pinned only
-    (influencer.user_network_table); the driver now hash-checks it.
+    user docs); the driver hash-checks it.
 
     Plan: the 20-row ranked table broadcasts against customer — flag
     derivation + selection never shuffles the dimension."""

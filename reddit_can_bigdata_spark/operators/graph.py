@@ -582,16 +582,6 @@ def _triangles_per_node_complement(e: DataFrame, deg: DataFrame) -> DataFrame:
 WEDGE_HASH_MULT = 2654435761
 WEDGE_HASH_MOD = 2147483647  # 2^31 - 1, prime
 
-# Per-task-slot budget for the EXACT triangle count's dominant term
-# (Σdeg² wedge rows on the oriented path, |missing|·avg_deg candidate
-# rows on the complement path — whichever g9 would pick). The sf1
-# probe measured the co-order graph at 2.3e10 wedges (~550 GB of
-# one-shot shuffle) for a 10× data scale-up: triangle counting is the
-# second graph metric (after exact closeness) whose cost grows
-# superlinearly in data size, so it gets the same work-budget gate.
-TRIANGLE_WEDGE_ROWS_PER_SLOT = 100_000_000
-
-
 @register(
     "g9b_triangles_wedge_sampled",
     oracle=f"""
@@ -704,54 +694,6 @@ def g9b_triangles_wedge_sampled(
         F.round(
             F.try_divide(F.sum(local).cast("double"), F.count("*")), 6
         ).alias("avg_clustering_est"),
-    )
-
-
-def triangles_for_scale(
-    spark: SparkSession,
-    sf_dir: str,
-    edges: DataFrame | None = None,
-    mode: str | None = None,
-    graph=None,
-) -> DataFrame:
-    """Work-budget-gated triangle counting: exact `g9` while the
-    cheaper of its two strategies fits the per-slot wedge budget,
-    wedge-sampled `g9b` (renamed to the exact columns) above it.
-    ``mode`` overrides: 'exact' | 'sampled' | None (auto by measured
-    Σdeg² / complement cost — the same quantities g9's own strategy
-    switch measures).
-
-    This is what production metadata tables (`network_metadata`) call;
-    registered oracle queries pin their mode so parity can't drift
-    with data size (g9 exact, g9b sampled each have their own oracle).
-    The chosen mode is LOGGED, mirroring `closeness_for_scale`.
-    ``edges`` / ``graph`` take a graph a caller already resolved.
-    """
-    import logging
-
-    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph)
-    if mode is None:
-        n_nodes, e_sym, direct_cost = gk.graph_size(edges, g)
-        n_edges = e_sym // 2
-        n_missing = n_nodes * (n_nodes - 1) // 2 - n_edges
-        avg_deg = 2.0 * n_edges / max(n_nodes, 1)
-        exact_cost = min(direct_cost, n_missing * avg_deg)
-        budget = (
-            TRIANGLE_WEDGE_ROWS_PER_SLOT
-            * spark.sparkContext.defaultParallelism
-        )
-        mode = "exact" if exact_cost <= budget else "sampled"
-        logging.getLogger(__name__).info(
-            "triangles_for_scale: auto mode=%s (exact_cost=%d, budget=%d)",
-            mode,
-            exact_cost,
-            budget,
-        )
-    if mode == "exact":
-        return _triangles(spark, sf_dir, edges, g)
-    return g9b_triangles_wedge_sampled(spark, sf_dir, edges=edges).select(
-        F.round("triangles_est").cast("long").alias("total_triangles"),
-        F.col("avg_clustering_est").alias("avg_clustering"),
     )
 
 
@@ -1288,9 +1230,6 @@ def _component_sizes(edges: DataFrame | None, g, **loop) -> DataFrame:
 
 BW_LEVELS = 6  # >= test-graph diameter, like CLOSENESS_HOPS
 BW_SAMPLE_MOD = 7  # deterministic 1-in-7 source sample (node % 7 == 0)
-#: relax-row budget per task slot for the gated production form
-#: (`betweenness_for_scale`); same class as CLOSENESS_RELAX_ROWS_PER_SLOT
-BW_RELAX_ROWS_PER_SLOT = 100_000_000
 
 
 def _brandes_forward(
@@ -1575,59 +1514,6 @@ def g3b_betweenness_sampled(
                 "betweenness_est"
             ),
         )
-    )
-
-
-def betweenness_for_scale(
-    spark: SparkSession,
-    sf_dir: str,
-    edges: DataFrame | None = None,
-    sample_mod: int | None = None,
-) -> DataFrame:
-    """Work-budget-gated sampled betweenness: `g3b` with a sampling
-    modulus the relax-row budget can afford — the production form.
-
-    The registered `g3b_betweenness_sampled` pins mod-7 (k = n/7
-    sources) for oracle stability, which makes its work k·E_sym·levels
-    grow superquadratically when the graph densifies: the round-11
-    honest 10× probe measured the sf1 co-order graph (23.5× the edges
-    for 10× the data) pushing mod-7 Brandes past 80 GB of spill —
-    disk-full, job dead. The Brandes-pivot estimator's error depends
-    on the ABSOLUTE source count (~sqrt(log n / k), Eppstein–Wang
-    analysis; the n/k rescale makes any k consistent), so the budget
-    clamps k to what the cluster affords
-    (:func:`~reddit_can_bigdata_spark.operators.common.budgeted_sample_mod`
-    with 2·``BW_LEVELS`` — forward sweep + backward accumulation each
-    touch every symmetric edge per level per source). At the driver's
-    scale factors the budget keeps mod-7, so this form is
-    bit-identical to the registered oracle query there; the chosen
-    modulus is LOGGED when it departs."""
-    import logging
-
-    from reddit_can_bigdata_spark.operators.common import budgeted_sample_mod
-
-    edges, g = gk.resolve_graph(spark, sf_dir, edges)
-    if sample_mod is None:
-        n_nodes, e_sym, _ = gk.graph_size(edges, g)
-        slots = spark.sparkContext.defaultParallelism
-        sample_mod = budgeted_sample_mod(
-            n_nodes,
-            e_sym,
-            2 * BW_LEVELS,
-            slots,
-            BW_SAMPLE_MOD,
-            rows_per_slot=BW_RELAX_ROWS_PER_SLOT,
-        )
-        logging.getLogger(__name__).info(
-            "betweenness_for_scale: sample_mod=%d (n_nodes=%d, e_sym=%d, "
-            "%d slots)",
-            sample_mod,
-            n_nodes,
-            e_sym,
-            slots,
-        )
-    return g3b_betweenness_sampled(
-        spark, sf_dir, edges=edges, sample_mod=sample_mod, graph=g
     )
 
 

@@ -27,7 +27,7 @@ native code). This module supplies that kernel tier:
   barrier used to dominate.
 
 :func:`resolve_graph` is the one place that picks the tier for a graph
-query, a composite or a ``*_for_scale`` gate: the raw collect, else one
+query, a composite or `closeness_for_scale`: the raw collect, else one
 edge aggregate probed by :func:`collect_graph`, else the distributed
 loop over that same aggregate. Above the gate — or when a caller
 explicitly pins a ``state_mode`` — every operator falls back to the
@@ -342,7 +342,7 @@ def resolve_graph(
       there is no probe) the loop, and a caller that reads the frame
       more than once, read it instead of rebuilding it. A frame found
       above the gate is marked and not probed again when a composite's
-      arms or a ``*_for_scale`` gate's pick pass it back in.
+      arms or `closeness_for_scale`'s pick pass it back in.
 
     g2 and g8 do not come here: each one's distributed plan is a
     single aggregate, cheaper than a probe of the edge aggregate, so on
@@ -364,28 +364,21 @@ def resolve_graph(
     return edges, graph
 
 
-def graph_size(
-    edges: DataFrame | None, graph: GraphArrays | None
-) -> tuple[int, int, int]:
-    """(n_nodes, e_sym, Σdeg²) of a resolved graph: the inputs of the
-    `*_for_scale` work gates. Off the CSR's row lengths when there is
-    one (zero jobs); else one aggregate over the degree table of the
-    edge frame. Identical by construction: the CSR's vocabulary is
-    distinct(u ∪ v), one degree row per node, and e_sym = Σdeg."""
+def graph_size(edges: DataFrame | None, graph: GraphArrays | None) -> tuple[int, int]:
+    """(n_nodes, e_sym) of a resolved graph: the inputs of
+    `closeness_for_scale`'s work gate. Off the CSR's row lengths when
+    there is one (zero jobs); else one aggregate over the degree table
+    of the edge frame. Identical by construction: the CSR's vocabulary
+    is distinct(u ∪ v), one degree row per node, and e_sym = Σdeg."""
     if graph is not None:
-        deg = np.diff(graph.indptr)
-        return graph.n_nodes, int(deg.sum()), int((deg * deg).sum())
+        return graph.n_nodes, int(np.diff(graph.indptr).sum())
     deg = (
         edges.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count("*").alias("d"))
     )
-    row = deg.agg(
-        F.count("*").alias("n"),
-        F.sum("d").alias("e"),
-        F.sum(F.col("d") * F.col("d")).alias("s"),
-    ).collect()[0]
-    return row["n"], row["e"] or 0, row["s"] or 0
+    row = deg.agg(F.count("*").alias("n"), F.sum("d").alias("e")).collect()[0]
+    return row["n"], row["e"] or 0
 
 
 def _gather(indptr: np.ndarray, indices: np.ndarray, frontier: np.ndarray):

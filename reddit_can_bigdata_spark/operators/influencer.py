@@ -1,10 +1,9 @@
-"""Influencer scoring (SURVEY.md §2.5 W2/W5/W6 + §1.2 user_network).
+"""Influencer scoring (SURVEY.md §2.5 W2/W5/W6).
 
 The reference's headline analysis
 (`network-analysis/network_analysis.py:225-250`): min-max normalize
-each centrality, combine with fixed weights, rank, flag the top 20 as
-influencers, and persist one document per user with nested
-centrality/activity structs.
+each centrality, combine with fixed weights, rank, and flag the top 20
+as influencers.
 
 Every composite is one operator over an ARM TABLE. An arm is one
 weighted centrality column: its Spark producer over the shared edge
@@ -181,13 +180,10 @@ def _composite_oracle(arms: tuple[_Arm, ...]) -> str:
     """
 
 
-def _scored(
-    spark: SparkSession, sf_dir: str, arms: tuple[_Arm, ...], inputs=None
-) -> DataFrame:
+def _scored(spark: SparkSession, sf_dir: str, arms: tuple[_Arm, ...]) -> DataFrame:
     """Every node's arm metrics plus ``composite_score``:
-    Σ weight · minmax(metric), rounded to 6 places. ``inputs`` is the
-    composite's one `resolve_graph` result, shared by every arm, for a
-    caller that needs the graph too.
+    Σ weight · minmax(metric), rounded to 6 places. Every arm shares
+    the composite's one `resolve_graph` result.
 
     Under the DENSE kernel gate every arm is a driver-local table
     (numpy kernels + createDataFrame), so checkpoints and a thread
@@ -202,7 +198,7 @@ def _scored(
     to sequential execution (each arm is self-contained)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    ed, g = inputs if inputs is not None else gk.resolve_graph(spark, sf_dir)
+    ed, g = gk.resolve_graph(spark, sf_dir)
     dense = g is not None and 0 < g.n_nodes <= gk.TRIANGLE_DENSE_MAX_NODES
     if dense:
         frames = [a.produce(spark, sf_dir, ed, g) for a in arms]
@@ -242,17 +238,13 @@ def _scored(
     )
 
 
-def _ranked(scored: DataFrame) -> DataFrame:
-    """``scored`` plus each node's 1-based ``influencer_rank`` by
-    composite score, ties broken by node id."""
-    w = Window.orderBy(F.desc("composite_score"), F.asc("node"))
-    return scored.withColumn("influencer_rank", F.row_number().over(w).cast("long"))
-
-
 def _top(spark: SparkSession, sf_dir: str, arms: tuple[_Arm, ...]) -> DataFrame:
+    """The top ``TOP_N`` nodes by composite score, ranked from 1, ties
+    broken by node id."""
     scored = _scored(spark, sf_dir, arms).select("node", "composite_score")
+    w = Window.orderBy(F.desc("composite_score"), F.asc("node"))
     return (
-        _ranked(scored)
+        scored.withColumn("influencer_rank", F.row_number().over(w).cast("long"))
         .where(F.col("influencer_rank") <= TOP_N)
         .select("influencer_rank", "node", "composite_score")
     )
@@ -321,75 +313,3 @@ def influencer_composite_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ceiling yields exactly this query's output, so the green row
     transfers to the auto path."""
     return _top(spark, sf_dir, _arms(_closeness("sampled")))
-
-
-def user_network_table(
-    spark: SparkSession, sf_dir: str, closeness_mode: str | None = None
-) -> DataFrame:
-    """The §1.2 ``user_network`` deliverable: one row per node with
-    nested ``centralities`` and ``activity`` structs, community id,
-    influencer flag/rank — the reference's per-user document
-    (`network-analysis/network_analysis.py:302-320`) as a typed table.
-
-    One graph pass: the composite's scored table carries every
-    centrality, and the components reuse its edge table or CSR.
-    ``closeness_mode`` defaults to the auto size gate (logged by
-    `closeness_for_scale`); not an oracle query, so the estimator
-    switch can't break parity here — pass ``'exact'`` to force.
-    """
-    ed, g = gk.resolve_graph(spark, sf_dir)
-    ranked = _ranked(
-        _scored(spark, sf_dir, _arms(_closeness(closeness_mode)), (ed, g))
-    )
-    # components via the shared guarded loop (broadcast-ceiling +
-    # early-exit), not a private copy of it
-    labels = _graph.min_label_components(
-        None if g is not None else _graph._sym(ed), _graph.CC_ITERS, graph=g
-    )
-    rank = F.when(F.col("influencer_rank") <= TOP_N, F.col("influencer_rank"))
-    return ranked.join(
-        labels.select("node", F.col("label").alias("community_id")), "node"
-    ).select(
-        F.col("node").alias("user"),
-        F.struct(
-            F.col("degree_centrality").alias("degree"),
-            F.col("closeness"),
-            F.col("eigenvector"),
-            F.col("pagerank"),
-        ).alias("centralities"),
-        F.col("community_id").cast("int").alias("community_id"),
-        rank.isNotNull().alias("is_influencer"),
-        rank.cast("int").alias("influencer_rank"),
-        F.col("degree").cast("int").alias("degree"),
-        F.col("weighted_degree").cast("long").alias("weighted_degree"),
-        F.current_timestamp().alias("analyzed_at"),
-    )
-
-
-def network_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§1.2 ``network_metadata`` singleton: node/edge counts, density,
-    community count, average clustering. The graph is resolved once
-    and its edge frame or CSR feeds all three."""
-    edges, g = gk.resolve_graph(spark, sf_dir)
-    meta = _graph._graph_counts(spark, edges, g)
-    # auto work-budget gate (round 11): exact g9 at test scale, the
-    # wedge-sampled estimator on graphs whose Σdeg² outgrows the slots
-    tri = _graph.triangles_for_scale(spark, sf_dir, edges, graph=g).select(
-        "avg_clustering"
-    )
-    ncomm = _graph._component_sizes(edges, g).agg(
-        F.count("*").cast("int").alias("num_communities")
-    )
-    return (
-        meta.crossJoin(tri)
-        .crossJoin(ncomm)
-        .select(
-            F.lit("graph_metadata").alias("type"),
-            "num_nodes",
-            "num_edges",
-            "density",
-            "num_communities",
-            "avg_clustering",
-            F.current_timestamp().alias("analyzed_at"),
-        )
-    )

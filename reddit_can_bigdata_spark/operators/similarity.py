@@ -124,8 +124,8 @@ def ivf_centroids_trained(emb: DataFrame, k: int = 8, seed: int = 42) -> DataFra
     the (L2-normalized) corpus — normalizing first makes Euclidean
     k-means equivalent to spherical/cosine k-means, matching the
     cosine assignment in `ivf_assign`. Returns (cid, cv) — a drop-in
-    for `ivf_centroids`, persisted through the same `write_ivf_index`
-    layout. The model fit is one Spark ML job (distributed partial
+    for `ivf_centroids`; tools/make_ivf_fixture.py trains the committed
+    IVF codebook with it. The model fit is one Spark ML job (distributed partial
     aggregation per iteration); the K-row centroid table itself is
     tiny by construction.
     """
@@ -213,10 +213,8 @@ def sim_ivf_cluster_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic centroids (vec_id < 8 — a stand-in for a k-means
     codebook), then answer the query by scanning only the query's
     cluster. At scale the clustered table is written partitioned by
-    ``cid`` so a probe reads 1/K of the data (that persisted layout is
-    `plans.layout.write_ivf_index` / `ivf_probe`, partition pruning
-    asserted in tests/test_layout.py); recall is tuned by probing the
-    closest n_probe centroids instead of 1."""
+    ``cid`` so a probe reads 1/K of the data; recall is tuned by
+    probing the closest n_probe centroids instead of 1."""
     emb = _embedded(tables(spark, sf_dir)["embeddings"])
     clustered = ivf_assign(emb)
     qc = (
@@ -272,8 +270,7 @@ def dedup_embedding_lsh(
     within-bucket pair work grow ~n²/16 and caps parallelism at 16
     join keys — the round-11 honest 10x probe measured 575 cpu-s at
     sf1 with wall ≈ cpu (effectively single-threaded on the skewed
-    bucket). The production form is :func:`embedding_lsh_for_scale`,
-    which derives banded signature parameters from the corpus size.
+    bucket).
     """
     if emb is None:
         emb = _embedded(tables(spark, sf_dir)["embeddings"])
@@ -303,174 +300,6 @@ def dedup_embedding_lsh(
             F.round(cos, 6).alias("cosine"),
         )
     )
-
-
-EMB_LSH_TAU = 0.92
-#: banded-signature sizing targets for the production form
-EMB_LSH_TARGET_BUCKET = 64  # aim ~this many vectors per band bucket
-EMB_LSH_TARGET_RECALL = 0.95
-EMB_LSH_MAX_BANDS = 16
-
-
-def _lsh_plane_matrix(n_planes: int, dim: int = 64):
-    """Integer hyperplane weights, numpy (dim, n_planes). Planes
-    h < 29 are EXACTLY the registered query's family
-    (w_h[j] = ((17h+3)·(j+1)) mod 29 − 14 — only 29 distinct
-    multipliers exist mod 29); planes beyond add a shift term
-    13·(h // 29) inside the mod so every plane up to 29² = 841 is a
-    distinct hyperplane (band recall math needs independent planes —
-    a repeated plane adds work but no recall)."""
-    import numpy as np
-
-    h = np.arange(n_planes)
-    j = np.arange(1, dim + 1)
-    w = ((17 * h[None, :] + 3) * j[:, None] + 13 * (h[None, :] // 29)) % 29 - 14
-    return w.astype(np.float64)
-
-
-def _banded_signatures(
-    emb: DataFrame, n_bits: int, n_bands: int
-) -> DataFrame:
-    """(vec_id, band, bucket) sign-LSH signatures, computed as ONE
-    Arrow-batched matrix multiply per partition (embeddings × integer
-    plane matrix) instead of per-plane Catalyst lambda folds — the
-    interpreted `aggregate(zip_with(...))` path measured ~1 ms per
-    64-dim dot at sf1 (2,067 cpu-s for 81 planes × 20k vectors); the
-    vectorized kernel is the textbook pandas-UDF case and does the
-    same 100M flops in under a second."""
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        LongType as _L,
-        StructField as _SF,
-        StructType as _ST,
-    )
-
-    n_planes = n_bits * n_bands
-    out_schema = _ST(
-        [_SF("vec_id", _L()), _SF("band", _L()), _SF("bucket", _L())]
-    )
-
-    def sign_batches(batches):
-        import numpy as np
-
-        w = _lsh_plane_matrix(n_planes)
-        bits = (1 << np.arange(n_bits, dtype=np.int64))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            e = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            signs = (e @ w) >= 0  # (n, planes)
-            per_band = signs.reshape(len(e), n_bands, n_bits)
-            buckets = (per_band * bits[None, None, :]).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(
-                        pdf["vec_id"].to_numpy(), n_bands
-                    ),
-                    "band": np.tile(
-                        np.arange(n_bands, dtype=np.int64), len(e)
-                    ),
-                    "bucket": buckets.reshape(-1).astype(np.int64),
-                }
-            )
-
-    return emb.select("vec_id", "embedding").mapInPandas(
-        sign_batches, schema=out_schema
-    )
-
-
-def embedding_lsh_for_scale(
-    spark: SparkSession,
-    sf_dir: str,
-    emb: DataFrame | None = None,
-    n_bits: int | None = None,
-    n_bands: int | None = None,
-) -> DataFrame:
-    """Corpus-sized banded sign-LSH near-dup pairs — the production
-    form of `dedup_embedding_lsh` (same columns, same cos >= {tau}
-    semantics, superset machinery).
-
-    The pinned 4-bit/1-band form has 16 buckets FOREVER: within-bucket
-    pairs grow ~n²/16 and the bucket join has at most 16 keys, so at
-    sf1 the probe measured 575 cpu-s with wall ≈ cpu (one skewed
-    bucket = one task). Sizing must follow the corpus:
-
-    - bits per band r = max(4, ceil(log2(n / {bucket}))) — bucket
-      population stays ~constant, so per-band pair work is ~linear in
-      n and the join key space (B·2^r) grows with the data
-      (parallelism restored);
-    - bands B from the target recall: a cos >= {tau} pair agrees on
-      one sign bit with p = 1 - acos({tau})/pi ≈ 0.872, survives a
-      band with p^r, and is found by ANY of B bands — B =
-      ceil(ln(1-{recall}) / ln(1-p^r)), capped at {maxb}.
-
-    Candidates are deduplicated across bands BEFORE the cosine
-    evaluation (one distinct on the pair key), so each candidate pays
-    the 64-dim dot product once. Total work: O(n·B·r) signature bits +
-    O(B·n²/2^r) = O(n·{bucket}·B) candidate cosines — linear in n with
-    B growing only logarithmically. Parameters are LOGGED; with
-    ``n_bits=4, n_bands=1`` this is bit-identical to the registered
-    oracle query (pinned in tests/test_similarity_scale.py)."""
-    import logging
-    import math
-
-    if emb is None:
-        emb = _embedded(tables(spark, sf_dir)["embeddings"])
-    if n_bits is None or n_bands is None:
-        n = emb.count()
-        p_bit = 1.0 - math.acos(EMB_LSH_TAU) / math.pi
-        if n_bits is None:
-            n_bits = max(
-                4, math.ceil(math.log2(max(n, 1) / EMB_LSH_TARGET_BUCKET))
-            ) if n > EMB_LSH_TARGET_BUCKET else 4
-        if n_bands is None:
-            pr = p_bit ** n_bits
-            n_bands = min(
-                EMB_LSH_MAX_BANDS,
-                max(1, math.ceil(
-                    math.log(1.0 - EMB_LSH_TARGET_RECALL)
-                    / math.log(1.0 - pr)
-                )),
-            )
-        logging.getLogger(__name__).info(
-            "embedding_lsh_for_scale: n=%d -> n_bits=%d, n_bands=%d",
-            n,
-            n_bits,
-            n_bands,
-        )
-    sigs = _banded_signatures(emb, n_bits, n_bands)
-    s1, s2 = sigs.alias("s1"), sigs.alias("s2")
-    cand = (
-        s1.join(
-            s2,
-            (F.col("s1.band") == F.col("s2.band"))
-            & (F.col("s1.bucket") == F.col("s2.bucket"))
-            & (F.col("s1.vec_id") < F.col("s2.vec_id")),
-        )
-        .select(
-            F.col("s1.vec_id").alias("vec_a"),
-            F.col("s2.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
-    e1 = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-    e2 = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    cos = cosine_expr("ea", "eb")
-    return (
-        cand.join(e1, "vec_a")
-        .join(e2, "vec_b")
-        .where(cos >= EMB_LSH_TAU)
-        .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
-    )
-
-
-embedding_lsh_for_scale.__doc__ = embedding_lsh_for_scale.__doc__.format(
-    tau=EMB_LSH_TAU,
-    bucket=EMB_LSH_TARGET_BUCKET,
-    recall=EMB_LSH_TARGET_RECALL,
-    maxb=EMB_LSH_MAX_BANDS,
-)
 
 
 KNN_QUERIES = 16  # vec_id < 16 are the query batch
@@ -509,8 +338,8 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned ONCE with per-(query, partition) heaps via the ranking
     window — corpus-linear with a Q-way fan-out, no corpus shuffle at
     all until the (|Q|·k)-sized window input. At 100 TB with a large
-    Q, block both sides by IVF cluster id first (the
-    `plans.layout.write_ivf_index` layout) so each task joins one
+    Q, block both sides by IVF cluster id first (a ``cid``-partitioned
+    layout) so each task joins one
     cluster against its queries — same plan, 1/K the candidates.
     Ordering uses the bit-identical sequential dot product, so the
     kept set is deterministic across engines."""
@@ -710,9 +539,9 @@ def sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids are nearest the query, not just the assigned one — the
     recall/latency dial every IVF index exposes (a query near a
     cluster boundary misses true neighbors in the adjacent cell at
-    n_probe=1). Candidate volume is n_probe/K of the corpus; on the
-    persisted `write_ivf_index` layout this reads exactly n_probe
-    partitions (static pruning, see tests/test_layout.py)."""
+    n_probe=1). Candidate volume is n_probe/K of the corpus; on a
+    ``cid``-partitioned layout this reads exactly n_probe partitions
+    (static pruning)."""
     emb = _embedded(tables(spark, sf_dir)["embeddings"])
     clustered = ivf_assign(emb)
     qv = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
@@ -739,42 +568,6 @@ def sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registered query runs at 0.40 to exercise the drop path end-to-end;
 # production SemDeDup on real embeddings uses ~0.95+.
 SEMDEDUP_TAU = 0.40
-
-
-def _semdedup_from_assignment(assigned: DataFrame) -> DataFrame:
-    """SemDeDup's pair predicate over a (vec_id, cid, embedding)
-    cluster assignment: drop a vector when an earlier (smaller vec_id)
-    same-cluster vector has cosine >= SEMDEDUP_TAU. Shared by the
-    registered fixture-codebook query and the corpus-sized production
-    form — the assignment is the only thing that differs."""
-    a = assigned.select(
-        F.col("vec_id").alias("a_id"), "cid", F.col("embedding").alias("av")
-    )
-    b = assigned.select(
-        F.col("vec_id").alias("b_id"), "cid", F.col("embedding").alias("bv")
-    )
-    pairs = (
-        a.join(b, "cid")
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("b_id", cosine_expr("av", "bv").alias("sim"))
-        .where(F.col("sim") >= SEMDEDUP_TAU)
-    )
-    dups = pairs.groupBy("b_id").agg(
-        F.count("*").cast("bigint").alias("n_earlier_dups"),
-        F.round(F.max("sim"), 6).alias("max_sim_earlier"),
-    )
-    return (
-        assigned.select("vec_id", "cid")
-        .join(dups, assigned["vec_id"] == dups["b_id"], "left")
-        .select(
-            "vec_id",
-            "cid",
-            F.col("b_id").isNull().alias("kept"),
-            F.coalesce("n_earlier_dups", F.lit(0)).alias("n_earlier_dups"),
-            "max_sim_earlier",
-        )
-    )
-
 
 
 @register(
@@ -826,93 +619,37 @@ def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — O(sum of cluster_size^2) comparisons, the SemDeDup
     contract. The FIXTURE codebook's K is pinned for oracle parity,
     so cluster sizes — hence Σsz² work — grow with the corpus: the
-    round-11 honest 10x probe measured 642 cpu-s at sf1 (115x sf0.1).
-    The production form is :func:`semantic_dedup_for_scale`, which
-    scales K with N (the paper uses 50k clusters for 100M+ docs) by
-    training a corpus-sized codebook with the oracled Lloyd loop."""
+    round-11 honest 10x probe measured 642 cpu-s at sf1 (115x sf0.1)."""
     emb = _embedded(tables(spark, sf_dir)["embeddings"])
     cents = spark.read.parquet(CODEBOOK_FIXTURE)
     assigned = ivf_assign(emb, cents).select("vec_id", "cid", "embedding")
-    return _semdedup_from_assignment(assigned)
-
-
-#: Σ(cluster_size²) pair-work budget per task slot for the gated
-#: production form; same class as the graph tier's relax-row budgets.
-#: Sized from measurement, not flops: a within-cluster candidate pair
-#: costs ~12-23 µs (join row + 64-dim cosine expr), so 1M pairs/slot
-#: ≈ 15-25 s/slot — the 10M first guess let a 616-cpu-s fixture
-#: assignment pass the gate untouched.
-SEMDEDUP_PAIR_ROWS_PER_SLOT = 1_000_000
-
-
-def semantic_dedup_for_scale(
-    spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
-) -> DataFrame:
-    """Work-budget-gated SemDeDup — the production form.
-
-    Measures Σ(cluster_size²) under the fixture codebook (the actual
-    pair-comparison count, the quantity `g9`'s gate measures as Σdeg²)
-    and serves the pinned fixture path while it fits the per-slot
-    budget. Above it, trains a corpus-sized codebook with the SAME
-    seeded distributed Lloyd loop the oracled `sim_kmeans_lloyd`
-    runs. K = ceil(sqrt(n)): flat assignment costs n·K and pair work
-    Σsz² ≈ n²/K, so sqrt(n) BALANCES them at O(n^1.5) total — the
-    standard flat-IVF operating point (the SemDeDup paper's 50k
-    clusters at 100M+ docs is the same scaling; going below n^1.5
-    needs an approximate/hierarchical assignment, a different
-    operator). The kept/dropped rule is unchanged
-    (`_semdedup_from_assignment`); only the clustering resolution
-    follows the corpus. Decision LOGGED."""
-    import logging
-    import math
-
-    if emb is None:
-        emb = _embedded(tables(spark, sf_dir)["embeddings"])
-    emb = materialize(emb)
-    cents = spark.read.parquet(CODEBOOK_FIXTURE)
-    assigned = ivf_assign(emb, cents).select("vec_id", "cid", "embedding")
-    stats = (
-        assigned.groupBy("cid")
-        .agg(F.count("*").alias("sz"))
-        .agg(
-            F.sum(F.col("sz") * F.col("sz")).alias("pair_rows"),
-            F.sum("sz").alias("n"),
+    a = assigned.select(
+        F.col("vec_id").alias("a_id"), "cid", F.col("embedding").alias("av")
+    )
+    b = assigned.select(
+        F.col("vec_id").alias("b_id"), "cid", F.col("embedding").alias("bv")
+    )
+    pairs = (
+        a.join(b, "cid")
+        .where(F.col("a_id") < F.col("b_id"))
+        .select("b_id", cosine_expr("av", "bv").alias("sim"))
+        .where(F.col("sim") >= SEMDEDUP_TAU)
+    )
+    dups = pairs.groupBy("b_id").agg(
+        F.count("*").cast("bigint").alias("n_earlier_dups"),
+        F.round(F.max("sim"), 6).alias("max_sim_earlier"),
+    )
+    return (
+        assigned.select("vec_id", "cid")
+        .join(dups, assigned["vec_id"] == dups["b_id"], "left")
+        .select(
+            "vec_id",
+            "cid",
+            F.col("b_id").isNull().alias("kept"),
+            F.coalesce("n_earlier_dups", F.lit(0)).alias("n_earlier_dups"),
+            "max_sim_earlier",
         )
-        .collect()[0]
     )
-    pair_rows, n = int(stats["pair_rows"] or 0), int(stats["n"] or 0)
-    slots = spark.sparkContext.defaultParallelism
-    budget = SEMDEDUP_PAIR_ROWS_PER_SLOT * slots
-    log = logging.getLogger(__name__)
-    if pair_rows <= budget:
-        log.info(
-            "semantic_dedup_for_scale: fixture codebook (pair_rows=%d "
-            "<= budget=%d)",
-            pair_rows,
-            budget,
-        )
-        return _semdedup_from_assignment(assigned)
-    k = max(2, math.ceil(math.sqrt(n)))
-    log.info(
-        "semantic_dedup_for_scale: training K=%d codebook (pair_rows=%d "
-        "> budget=%d over %d slots)",
-        k,
-        pair_rows,
-        budget,
-        slots,
-    )
-    emb_e = emb.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias("e"),
-    )
-    trained, _ = _lloyd_centroids(emb_e, k, KMEANS_ROUNDS)
-    tc = trained.select(
-        "cid", F.expr("transform(cv, x -> cast(x as float))").alias("cv")
-    )
-    scaled = ivf_assign(emb, tc).select("vec_id", "cid", "embedding")
-    return _semdedup_from_assignment(scaled)
-
-
 
 
 # Product-quantization codebook fixture (tools/make_pq_fixture.py:
@@ -1140,9 +877,8 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-linear, index-build-time work. Serve = the query's
     {IVFPQ_NPROBE}x128-row distance table broadcasts, candidates are
     PARTITION-PRUNED to the probed cells by the cid equi-join (at
-    scale the codes table is written cid-partitioned, cf.
-    `plans/layout.py::write_ivf_index`, so the probe scans 1-of-K
-    files), one vec_id aggregate, TakeOrdered heap. Sorting uses the
+    scale the codes table is written cid-partitioned, so the probe
+    scans 1-of-K files), one vec_id aggregate, TakeOrdered heap. Sorting uses the
     ROUNDED distance + vec_id tiebreak per the float-sum rule."""
     from pyspark.sql import Window
 
@@ -1445,7 +1181,7 @@ PCA_FIXTURE = str(
 )
 def sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Project every embedding onto the COMMITTED PCA basis — the
-    train-once / project-many split of `ml/embeddings.py::pca_project`
+    train-once / project-many split of a PCA fit
     (fit: numpy SVD offline in tools/make_pca_fixture.py, like the
     IVF/PQ codebooks; eigensolves aren't SQL-expressible but the
     linear projection is, so the serving path gets an exact oracle).
@@ -2011,54 +1747,6 @@ def _kmeans_oracle() -> str:
     )
 
 
-def _lloyd_centroids(
-    emb: DataFrame, k: int, rounds: int
-) -> tuple[DataFrame, DataFrame]:
-    """Seeded distributed Lloyd over ``emb`` = (vec_id, e: array<double>):
-    init = the k smallest vec_ids' embeddings, ``rounds`` iterations of
-    broadcast-assign + decimal-sum mean (round 6). Returns (centroids
-    (cid, cv), final assignment (vec_id, e, cid)). Factored from the
-    oracled `sim_kmeans_lloyd` (identical code path — its parity
-    certifies this loop) so `semantic_dedup_for_scale` can train a
-    corpus-sized codebook with the verified trainer."""
-    from pyspark.sql import Window
-
-    cents = emb.where(F.col("vec_id") < k).select(
-        F.col("vec_id").cast("int").alias("cid"), F.col("e").alias("cv")
-    )
-    assigned = None
-    for _ in range(rounds):
-        scored = emb.join(F.broadcast(cents)).withColumn(
-            "d2", F.expr(_SQDIST.format(a="e", b="cv"))
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cid"))
-        assigned = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vec_id", "e", "cid")
-        )
-        sums = (
-            assigned.select("cid", F.posexplode("e").alias("pos", "x"))
-            .groupBy("cid", (F.col("pos") + 1).alias("dim"))
-            .agg(
-                F.sum(F.col("x").cast("decimal(28,12)")).alias("sx"),
-                F.count("*").alias("n"),
-            )
-        )
-        newc = sums.groupBy("cid").agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(dim,"
-                " round(cast(sx as double) / n, 6) as m))), s -> s.m)"
-            ).alias("ncv")
-        )
-        cents = materialize(
-            cents.join(newc, "cid", "left").select(
-                "cid", F.coalesce("ncv", "cv").alias("cv")
-            )
-        )
-    return cents, assigned
-
-
 @register(
     "sim_kmeans_lloyd",
     oracle=_kmeans_oracle(),
@@ -2093,15 +1781,46 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape with runtime-dependent float order — use this operator when
     the codebook must be reproducible/auditable, Spark-ML when not).
 
-    Output: (cid, dim, centroid, n_members) — the trained codebook in
-    the same per-component layout `plans/layout.write_ivf_index`
-    persists, plus final-assignment member counts.
+    Output: (cid, dim, centroid, n_members) — the trained codebook,
+    one row per component, plus final-assignment member counts.
     """
     emb = _embedded(tables(spark, sf_dir)["embeddings"]).select(
         "vec_id",
         F.expr("transform(embedding, x -> cast(x as double))").alias("e"),
     )
-    cents, assigned = _lloyd_centroids(emb, KMEANS_K, KMEANS_ROUNDS)
+    cents = emb.where(F.col("vec_id") < KMEANS_K).select(
+        F.col("vec_id").cast("int").alias("cid"), F.col("e").alias("cv")
+    )
+    assigned = None
+    for _ in range(KMEANS_ROUNDS):
+        scored = emb.join(F.broadcast(cents)).withColumn(
+            "d2", F.expr(_SQDIST.format(a="e", b="cv"))
+        )
+        w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cid"))
+        assigned = (
+            scored.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .select("vec_id", "e", "cid")
+        )
+        sums = (
+            assigned.select("cid", F.posexplode("e").alias("pos", "x"))
+            .groupBy("cid", (F.col("pos") + 1).alias("dim"))
+            .agg(
+                F.sum(F.col("x").cast("decimal(28,12)")).alias("sx"),
+                F.count("*").alias("n"),
+            )
+        )
+        newc = sums.groupBy("cid").agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(dim,"
+                " round(cast(sx as double) / n, 6) as m))), s -> s.m)"
+            ).alias("ncv")
+        )
+        cents = materialize(
+            cents.join(newc, "cid", "left").select(
+                "cid", F.coalesce("ncv", "cv").alias("cv")
+            )
+        )
 
     members = assigned.groupBy("cid").agg(
         F.count("*").cast("bigint").alias("n_members")

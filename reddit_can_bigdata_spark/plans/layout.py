@@ -136,8 +136,7 @@ def ensure_date_partitioned(
 def layout_partitioned_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §4.2 made physical: the `dash_stats_timeline` widget
     range served FROM the day-partitioned layout. Writes the events
-    table out partitioned by ``day=`` (the layout `retention_sweep`'s
-    partition-drop form cleans), reads it back, and range-filters ON
+    table out partitioned by ``day=``, reads it back, and range-filters ON
     THE PARTITION COLUMN — the predicate lands in the scan's
     ``PartitionFilters`` (asserted in tests/test_layout.py), so at
     100 TB the scan opens ten directories, not the table. The oracle
@@ -183,9 +182,7 @@ def ingest_day(df_day: DataFrame, path: str, part_col: str = "day") -> None:
     not duplicating). This is the reference's cumulative 6-hourly
     append (`airflow/dags/reddit_can_complete_pipeline.py:327-344`)
     done the lake way: at 100 TB an ingest tick writes one directory,
-    never rewrites the table. Pair with `retention_sweep`'s
-    partition-drop to complete the lifecycle (append → prune-serve →
-    expire)."""
+    never rewrites the table."""
     (
         df_day.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -253,61 +250,6 @@ def layout_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("total_value"),
         )
-    )
-
-
-def write_ivf_index(
-    emb: DataFrame, path: str, cents: DataFrame | None = None, trained: bool = False
-) -> None:
-    """Persist the IVF inverted file as a PHYSICAL layout: vectors
-    partitioned on disk by centroid id, plus the (tiny) codebook next
-    to it. A probe then reads exactly 1-of-K partition directories —
-    at 100 TB the difference between scanning ~everything per query
-    (the in-memory assignment `sim_ivf_cluster_search` recomputes) and
-    scanning N/K. Asserted via PartitionFilters in tests/test_layout.py.
-
-    ``trained=True`` (or an explicit ``cents`` table) swaps the
-    deterministic stand-in codebook for the seeded k-means one
-    (`ivf_centroids_trained`) — same layout, better-balanced cells and
-    higher recall at equal n_probe."""
-    from reddit_can_bigdata_spark.operators.similarity import (
-        ivf_assign,
-        ivf_centroids,
-        ivf_centroids_trained,
-    )
-
-    if cents is None:
-        cents = ivf_centroids_trained(emb) if trained else ivf_centroids(emb)
-    ivf_assign(emb, cents=cents).write.mode("overwrite").partitionBy("cid").parquet(path)
-    cents.write.mode("overwrite").parquet(path + "_centroids")
-
-
-def ivf_probe(spark: SparkSession, path: str, query_vec, k: int = 5) -> DataFrame:
-    """Top-k cosine search against a persisted IVF index: score the
-    query against the K-row codebook (one collect of K scalars —
-    O(K), not O(N)), then scan ONLY the winning ``cid=...`` partition
-    with a literal partition filter so pruning is static and visible
-    in the plan. ``query_vec`` is a python list[float]."""
-    from reddit_can_bigdata_spark.operators.similarity import cosine_expr
-
-    cents = spark.read.parquet(path + "_centroids")
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec]).alias("qv")
-    best = (
-        cents.select("cid", qlit, "cv")
-        .select("cid", cosine_expr("cv", "qv").alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("cid"))
-        .limit(1)
-        .collect()
-    )
-    qcid = best[0]["cid"]
-    part = spark.read.parquet(path).where(F.col("cid") == qcid)
-    cos = cosine_expr("embedding", "qv")
-    return (
-        part.select("vec_id", "label", qlit, "embedding")
-        .select("vec_id", "label", cos.alias("cos_raw"))
-        .orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "label", F.round("cos_raw", 6).alias("cosine"))
     )
 
 

@@ -77,16 +77,15 @@ def compact_table(
 
     Scale shape: one read + one round-robin repartition + one write —
     no shuffle key, so it is a pure rebalance (at 100 TB run it
-    per-partition on the cold set, e.g. after `retention_sweep`, and
-    pair with ``spark.sql.files.maxRecordsPerFile`` to bound the top
+    per-partition on the cold set, and pair with ``spark.sql.files.maxRecordsPerFile`` to bound the top
     end). Content is untouched: `maint_compaction`'s oracle
     hash-checks the compacted table against the source rows.
     Crash-safe (round-9 judge item #1): the compacted generation is
     staged to a sibling directory and committed through
     :func:`~reddit_can_bigdata_spark.sources.storage.atomic_rewrite`'s
     version-pointer protocol, so the source files survive any
-    mid-write failure, a racing maintenance job (e.g. a
-    `retention_sweep` on the same table) serializes
+    mid-write failure, a racing maintenance job on the same table
+    serializes
     first-committer-wins instead of stranding generations — and the
     plan streams old files to new ones with no localCheckpoint memory
     pin. On Delta/Iceberg this is OPTIMIZE / rewrite_data_files."""

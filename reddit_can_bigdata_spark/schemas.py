@@ -55,6 +55,3 @@ COMMENT_SCHEMA = StructType(
         StructField("scraped_at", StringType()),
     ]
 )
-
-# Authors excluded from analytics (network_analysis.py:59,68).
-EXCLUDED_AUTHORS = ("[deleted]", "AutoModerator")

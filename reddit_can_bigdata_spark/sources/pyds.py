@@ -1,16 +1,15 @@
-"""Spark 4 Python DataSource wrapping the REST extraction: the
-reference's scraper output becomes a first-class `spark.read.format`
-source instead of driver-side dict munging.
+"""Spark 4 Python DataSources wrapping the REST extraction: the
+reference's scraper output becomes a first-class streaming source
+instead of driver-side dict munging.
 
 The reference scrapes Reddit listings with `requests` and pushes
-normalized dicts to Kafka (`scraper/kafka_producer.py`). This
-DataSource puts the same normalization (`sources/rest.py::
-extract_post`) behind Spark's DataSource V2 Python API, so raw
-JSON-lines captures load as typed DataFrames with real partition
-parallelism:
+normalized dicts to Kafka (`scraper/kafka_producer.py`). The stream
+source puts the same normalization (`sources/rest.py::extract_post`)
+behind Spark's DataSource V2 Python API, so raw JSON-lines captures
+load as typed DataFrames with real partition parallelism:
 
-    spark.dataSource.register(RedditRestDataSource)
-    spark.read.format("reddit_rest").option("paths", "a.jsonl,b.jsonl").load()
+    spark.dataSource.register(RedditStreamDataSource)
+    spark.readStream.format("reddit_rest_stream").option("paths", "a.jsonl,b.jsonl").load()
 
 Scale story: one InputPartition per capture file — a 100 TB crawl is
 many files, and each executor task parses only its file; the
@@ -30,7 +29,6 @@ from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     DataSourceStreamWriter,
     InputPartition,
@@ -43,24 +41,8 @@ from reddit_can_bigdata_spark.sources.rest import extract_post
 DEFAULT_SCRAPED_AT = "2024-01-01T00:00:00"
 
 
-class RedditRestDataSource(DataSource):
-    """format name: ``reddit_rest``; options: ``paths`` (comma-joined
-    JSON-lines files of raw listing children), optional
-    ``scraped_at``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "reddit_rest"
-
-    def schema(self):
-        return POST_SCHEMA
-
-    def reader(self, schema) -> "RedditRestReader":
-        return RedditRestReader(self.options)
-
-
 def _parse_capture_file(path: str, scraped_at: str) -> Iterator[tuple]:
-    """Shared batch/stream partition parse: JSON-lines capture file →
+    """The stream reader's partition parse: JSON-lines capture file →
     POST_SCHEMA tuples, malformed lines skipped (the reference
     scraper's tolerant behavior)."""
     cols = [f.name for f in POST_SCHEMA.fields]
@@ -81,21 +63,8 @@ def _split_paths(options: dict) -> list[str]:
     paths = options.get("paths") or options.get("path") or ""
     out = [p for p in paths.split(",") if p]
     if not out:
-        raise ValueError("reddit_rest: option 'paths' is required")
+        raise ValueError("reddit_rest_stream: option 'paths' is required")
     return out
-
-
-class RedditRestReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self._paths: Sequence[str] = _split_paths(options)
-        self._scraped_at = options.get("scraped_at", DEFAULT_SCRAPED_AT)
-
-    def partitions(self) -> Sequence[InputPartition]:
-        # one partition per capture file: executor-side parallel parse
-        return [InputPartition(p) for p in self._paths]
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        yield from _parse_capture_file(partition.value, self._scraped_at)
 
 
 class RedditStreamDataSource(DataSource):

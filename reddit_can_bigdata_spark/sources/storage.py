@@ -1,19 +1,15 @@
-"""Table sinks (SURVEY.md §2.1 S12-S17) — set-oriented, idempotent.
+"""Crash-safe table rewrites on plain parquet (SURVEY.md §2.1 S15).
 
 The reference's write paths are all row-at-a-time driver loops with
-duplicate-key try/except (S12 `spark-streaming-pyspark/
-spark_streaming.py:109-155`, S15 `spark-ml-sentiment/
-spark_ml_sentiment.py:402-417`). Every sink here is a distributed
-DataFrame write:
+duplicate-key try/except (S15 `spark-ml-sentiment/
+spark_ml_sentiment.py:402-417`). Here a rewrite is a distributed
+DataFrame write: :func:`resolve_updates` picks one winner per key (the
+MERGE semantics the oracled `warehouse_scd1_upsert` checks), and the
+`maint_*` queries rewrite tables in place.
 
-- ``overwrite_table``   — S16 truncate-and-reload
-- ``append_dedup``      — S12/O4 idempotent append (anti-join on key)
-- ``merge_upsert``      — S15 MERGE INTO semantics on plain parquet
-- ``write_singleton``   — S17 one-row metadata table
-
-On a lakehouse deployment these map to Delta/Iceberg ``MERGE INTO``;
-plain parquet emulates it with read-union-rewrite through
-:func:`atomic_rewrite` — a miniature version-pointer commit protocol
+On a lakehouse deployment a rewrite maps to Delta/Iceberg
+``MERGE INTO``; plain parquet emulates it with read-union-rewrite
+through :func:`atomic_rewrite` — a miniature version-pointer commit protocol
 (generation directories + an append-only commit log published by
 put-if-absent), so a crash at any instant leaves a complete committed
 generation resolvable, and two concurrent writers serialize
@@ -30,7 +26,7 @@ import re
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -219,12 +215,6 @@ def _sweep_generations(path: str, keep_generations: int = 1) -> None:
                 os.unlink(full)
             except OSError:
                 pass
-
-
-def overwrite_table(df: DataFrame, path: str) -> None:
-    """S16: truncate-and-reload (`delete_many({}) + insert_many`,
-    `network-analysis/network_analysis.py:324-325`)."""
-    df.write.mode("overwrite").parquet(path)
 
 
 def atomic_rewrite(
@@ -462,15 +452,6 @@ def drop_table(path: str) -> None:
             shutil.rmtree(full, ignore_errors=True)
 
 
-def append_dedup(spark: SparkSession, df: DataFrame, path: str, key: str) -> None:
-    """S12/O4: append only rows whose key is not already present —
-    one anti-join instead of per-row DuplicateKeyError handling."""
-    if _exists(spark, path):
-        existing = spark.read.parquet(path).select(key)
-        df = df.join(existing, key, "left_anti")
-    df.write.mode("append").parquet(path)
-
-
 def resolve_updates(
     df: DataFrame, key: str, version_col: str | None = None
 ) -> DataFrame:
@@ -478,9 +459,8 @@ def resolve_updates(
     highest ``version_col`` (matching the reference's sequential
     per-row loop), ties and the no-version case broken by the
     descending struct of the remaining columns, never
-    ``dropDuplicates``'s arbitrary first-seen row. Shared by the
-    parquet MERGE writer below and the oracled `warehouse_scd1_upsert`
-    query form."""
+    ``dropDuplicates``'s arbitrary first-seen row. The winner rule of
+    the oracled `warehouse_scd1_upsert`."""
     from pyspark.sql import Window
 
     other = [c for c in df.columns if c != key]
@@ -492,96 +472,3 @@ def resolve_updates(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def merge_upsert(
-    spark: SparkSession, df: DataFrame, path: str, key: str, version_col: str | None = None
-) -> None:
-    """S15: MERGE — new rows win over stored rows with the same key
-    (`update_one(..., upsert=True)` per row in the reference). Plain
-    parquet: keep stored rows whose key is absent from the update set,
-    union the updates, rewrite. With Delta/Iceberg this is a real
-    ``MERGE INTO`` and only touched files rewrite."""
-    updates = resolve_updates(df, key, version_col)
-    if _exists(spark, path):
-        # snapshot the generation, then read the CONCRETE generation
-        # dir: the plan survives a racing writer repointing the
-        # symlink, and the commit CAS rejects this merge if anything
-        # was committed after the snapshot (no lost updates)
-        gen = table_generation(path)
-        current = spark.read.parquet(resolve_table(path))
-        keep = current.join(updates.select(key), key, "left_anti")
-        out = keep.unionByName(updates, allowMissingColumns=False)
-    else:
-        gen = None
-        out = updates
-    # crash-safe: stage sibling generation -> put-if-absent commit ->
-    # repoint (round-9 judge item #1; no localCheckpoint memory pin)
-    atomic_rewrite(out, path, read_generation=gen)
-
-
-def retention_sweep(
-    spark: SparkSession,
-    path: str,
-    ts_col: str,
-    cutoff: str,
-    delete: bool = False,
-    day_partitioned: bool = False,
-) -> int:
-    """The DAG's ``cleanup_old_data`` task
-    (`airflow/dags/reddit_can_complete_pipeline.py:242-254`): count
-    rows older than ``cutoff`` and, with ``delete=True``, actually
-    remove them (the reference only logs the count — it compares ISO
-    STRINGS and never deletes; here the comparison is a real timestamp
-    predicate and the delete is real).
-
-    Scale shape: the count is a pushed-down range predicate (one
-    pruned scan). The delete has two forms — ``day_partitioned=True``
-    drops whole ``day=`` partition directories older than the cutoff
-    (pure metadata at 100 TB, no data read: the shape a retention job
-    must have); otherwise it rewrites the keep-set (the plain-parquet
-    fallback; with Delta/Iceberg this is `DELETE WHERE` + vacuum).
-    Returns the number of rows removed (or that would be removed).
-    NOTE: the partition-drop form is DAY-granular — with an intra-day
-    cutoff (e.g. '2024-01-15 12:00') that day's partition survives
-    whole, and the returned count reflects exactly the rows in the
-    dropped ``day=`` directories (ts < the cutoff's DATE), not the
-    finer ts predicate."""
-    gen = table_generation(path)
-    cur = spark.read.parquet(resolve_table(path))
-    if delete and day_partitioned:
-        import shutil
-
-        cutoff_day = cutoff[:10]
-        # Count on the PARTITION column: day-granular to match what the
-        # drop actually removes (round-9 advice fix — n_old overstated
-        # the deletion for intra-day cutoffs), and partition-pruned so
-        # at 100 TB the count reads only the to-be-dropped directories'
-        # footers, never the keep-set.
-        n_dropped = cur.where(F.col("day").cast("string") < cutoff_day).count()
-        if n_dropped == 0:
-            return 0
-        for entry in sorted(os.listdir(path)):
-            if entry.startswith("day=") and entry[4:] < cutoff_day:
-                shutil.rmtree(os.path.join(path, entry))
-        return n_dropped
-    old = cur.where(F.col(ts_col) < F.lit(cutoff).cast("timestamp"))
-    n_old = old.count()
-    if not delete or n_old == 0:
-        return n_old
-    keep = cur.where(
-        ~(F.col(ts_col) < F.lit(cutoff).cast("timestamp"))
-        | F.col(ts_col).isNull()
-    )
-    atomic_rewrite(keep, path, read_generation=gen)
-    return n_old
-
-
-def write_singleton(df: DataFrame, path: str) -> None:
-    """S17: one-row metadata table (`update_one({'type': ...},
-    upsert=True)`, `network-analysis/network_analysis.py:339-343`)."""
-    df.limit(1).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    return os.path.exists(path)

@@ -42,19 +42,20 @@ def kafka_stream(
     brokers: str = "kafka:29092",
     topic: str = KAFKA_TOPIC,
     starting_offsets: str = "latest",
-) -> DataFrame:
-    """S1/S2: the REAL Kafka stream source, with the reference's exact
-    options (`spark-streaming-pyspark/spark_streaming.py:53-59`:
+) -> tuple[DataFrame, DataFrame]:
+    """S1/S2/S3: the REAL Kafka stream source, with the reference's
+    exact options (`spark-streaming-pyspark/spark_streaming.py:53-59`:
     bootstrap servers, subscribe topic, startingOffsets,
-    failOnDataLoss=false). Returns the raw Kafka frame (key, value,
-    topic, partition, offset, timestamp, timestampType); feed
-    ``value`` to `sources.reddit.parse_kafka_events` for S3.
+    failOnDataLoss=false), decoded by
+    `sources.reddit.parse_kafka_events` into typed streaming
+    ``(posts, comments)`` frames.
 
     Requires the spark-sql-kafka connector on the classpath (present
-    on any real deployment; absent in this sandbox, where
-    tests/test_streaming.py asserts the plan construction path and
-    skips execution)."""
-    return (
+    on any real deployment; absent where tests/test_streaming.py
+    asserts the plan construction path and skips execution)."""
+    from reddit_can_bigdata_spark.sources.reddit import parse_kafka_events
+
+    raw = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", brokers)
         .option("subscribe", topic)
@@ -62,6 +63,7 @@ def kafka_stream(
         .option("failOnDataLoss", "false")
         .load()
     )
+    return parse_kafka_events(raw)
 
 
 def windowed_event_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -516,6 +518,74 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(stream_dir, ignore_errors=True)
 
 
+def _captures_rollup(spark: SparkSession, sf_dir: str, name: str, consume) -> DataFrame:
+    """The body the two pyds source queries share: render the documents
+    table as four raw scraper JSON-lines capture files, let
+    ``consume(files, run, work)`` stream them in, and roll the posts it
+    landed up per subreddit. ``run(**options)`` runs one availableNow
+    pass of the `reddit_rest_stream` source with ``options`` into the
+    foreachBatch parquet sink, resuming from the same checkpoint each
+    call; ``work`` is a scratch directory removed on exit."""
+    import glob as _glob
+
+    from reddit_can_bigdata_spark.schemas import POST_SCHEMA
+    from reddit_can_bigdata_spark.sources.pyds import RedditStreamDataSource
+    from reddit_can_bigdata_spark.tables import load_tables
+
+    docs = load_tables(spark, sf_dir)["documents"]
+    work = os.path.join(tempfile.gettempdir(), f"{name}_{uuid.uuid4().hex[:8]}")
+    cap_dir, out_dir, ckpt = (os.path.join(work, d) for d in ("capture", "sink", "ckpt"))
+
+    def run(**options: str) -> None:
+        q = (
+            spark.readStream.format("reddit_rest_stream")
+            .options(**options)
+            .load()
+            .writeStream.foreachBatch(
+                lambda bdf, _bid: bdf.write.mode("append").parquet(out_dir)
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    try:
+        raw = docs.select(
+            F.to_json(
+                F.struct(
+                    F.col("doc_id").cast("string").alias("id"),
+                    F.col("text").alias("title"),
+                    F.col("source").alias("author"),
+                    F.col("lang").alias("subreddit"),
+                    F.col("n_chars").cast("int").alias("score"),
+                )
+            ).alias("value")
+        )
+        raw.repartition(4).write.mode("overwrite").text(cap_dir)
+        files = sorted(_glob.glob(os.path.join(cap_dir, "part-*")))
+        if not files:  # empty corpus writes no capture files
+            return spark.createDataFrame(
+                [], "subreddit string, cnt bigint, total_score bigint"
+            )
+        spark.dataSource.register(RedditStreamDataSource)
+        consume(files, run, work)
+        posts = spark.read.schema(POST_SCHEMA).parquet(out_dir)
+        # extract_post already pins a missing/null score to 0, but the
+        # oracle's SUM(COALESCE(n_chars, 0)) yields 0 (not NULL) even
+        # for a group whose inputs were all NULL — mirror that shape
+        # explicitly instead of relying on the normalization default
+        out = posts.groupBy("subreddit").agg(
+            F.count("*").cast("bigint").alias("cnt"),
+            F.coalesce(F.sum("score"), F.lit(0))
+            .cast("bigint")
+            .alias("total_score"),
+        )
+        return materialize(out)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 @register(
     "streaming_pyds_source",
     oracle="""
@@ -544,67 +614,9 @@ def streaming_pyds_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming-source CONTRACT (initialOffset → partitions(start,
     end) → commit, checkpointed resume) now executes and is further
     restart-tested in tests/test_stream_recovery.py."""
-    import glob as _glob
-
-    from reddit_can_bigdata_spark.schemas import POST_SCHEMA
-    from reddit_can_bigdata_spark.sources.pyds import RedditStreamDataSource
-    from reddit_can_bigdata_spark.tables import load_tables
-
-    docs = load_tables(spark, sf_dir)["documents"]
-    tag = uuid.uuid4().hex[:8]
-    cap_dir = os.path.join(tempfile.gettempdir(), f"pyds_capture_{tag}")
-    out_dir = os.path.join(tempfile.gettempdir(), f"pyds_sink_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_pyds_{tag}")
-    try:
-        raw = docs.select(
-            F.to_json(
-                F.struct(
-                    F.col("doc_id").cast("string").alias("id"),
-                    F.col("text").alias("title"),
-                    F.col("source").alias("author"),
-                    F.col("lang").alias("subreddit"),
-                    F.col("n_chars").cast("int").alias("score"),
-                )
-            ).alias("value")
-        )
-        raw.repartition(4).write.mode("overwrite").text(cap_dir)
-        files = sorted(_glob.glob(os.path.join(cap_dir, "part-*")))
-        if not files:  # empty corpus writes no capture files
-            return spark.createDataFrame(
-                [], "subreddit string, cnt bigint, total_score bigint"
-            )
-        spark.dataSource.register(RedditStreamDataSource)
-        stream = (
-            spark.readStream.format("reddit_rest_stream")
-            .option("paths", ",".join(files))
-            .load()
-        )
-
-        def write_batch(bdf: DataFrame, _bid: int) -> None:
-            bdf.write.mode("append").parquet(out_dir)
-
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        posts = spark.read.schema(POST_SCHEMA).parquet(out_dir)
-        # mirror the oracle's SUM(COALESCE(n_chars, 0)) shape exactly:
-        # 0, never NULL, for a group whose inputs were all NULL (see
-        # streaming_pyds_manifest)
-        out = posts.groupBy("subreddit").agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.coalesce(F.sum("score"), F.lit(0))
-            .cast("bigint")
-            .alias("total_score"),
-        )
-        return materialize(out)
-    finally:
-        shutil.rmtree(cap_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return _captures_rollup(
+        spark, sf_dir, "pyds", lambda files, run, _work: run(paths=",".join(files))
+    )
 
 
 @register(
@@ -633,78 +645,19 @@ def streaming_pyds_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch SQL over the whole corpus: the growing listing
     lost nothing and duplicated nothing (self-describing offsets make
     a mis-listing a loud error instead — `sources/pyds.py`)."""
-    import glob as _glob
 
-    from reddit_can_bigdata_spark.schemas import POST_SCHEMA
-    from reddit_can_bigdata_spark.sources.pyds import RedditStreamDataSource
-    from reddit_can_bigdata_spark.tables import load_tables
-
-    docs = load_tables(spark, sf_dir)["documents"]
-    tag = uuid.uuid4().hex[:8]
-    cap_dir = os.path.join(tempfile.gettempdir(), f"pydsm_capture_{tag}")
-    out_dir = os.path.join(tempfile.gettempdir(), f"pydsm_sink_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_pydsm_{tag}")
-    manifest = os.path.join(tempfile.gettempdir(), f"pydsm_{tag}.manifest")
-    try:
-        raw = docs.select(
-            F.to_json(
-                F.struct(
-                    F.col("doc_id").cast("string").alias("id"),
-                    F.col("text").alias("title"),
-                    F.col("source").alias("author"),
-                    F.col("lang").alias("subreddit"),
-                    F.col("n_chars").cast("int").alias("score"),
-                )
-            ).alias("value")
-        )
-        raw.repartition(4).write.mode("overwrite").text(cap_dir)
-        files = sorted(_glob.glob(os.path.join(cap_dir, "part-*")))
-        if not files:  # empty corpus writes no capture files
-            return spark.createDataFrame(
-                [], "subreddit string, cnt bigint, total_score bigint"
-            )
-        spark.dataSource.register(RedditStreamDataSource)
-
-        def consume() -> None:
-            q = (
-                spark.readStream.format("reddit_rest_stream")
-                .option("manifest", manifest)
-                .load()
-                .writeStream.foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("append").parquet(out_dir)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
+    def consume(files: list[str], run, work: str) -> None:
+        manifest = os.path.join(work, "captures.manifest")
         half = max(1, len(files) // 2)
         with open(manifest, "w", encoding="utf-8") as fh:
             fh.write("\n".join(files[:half]) + "\n")
-        consume()
+        run(manifest=manifest)
         if files[half:]:
             with open(manifest, "a", encoding="utf-8") as fh:
                 fh.write("\n".join(files[half:]) + "\n")
-            consume()
-        posts = spark.read.schema(POST_SCHEMA).parquet(out_dir)
-        # extract_post already pins a missing/null score to 0, but the
-        # oracle's SUM(COALESCE(n_chars, 0)) yields 0 (not NULL) even
-        # for a group whose inputs were all NULL — mirror that shape
-        # explicitly instead of relying on the normalization default
-        out = posts.groupBy("subreddit").agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.coalesce(F.sum("score"), F.lit(0))
-            .cast("bigint")
-            .alias("total_score"),
-        )
-        return materialize(out)
-    finally:
-        shutil.rmtree(cap_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        if os.path.exists(manifest):
-            os.remove(manifest)
+            run(manifest=manifest)
+
+    return _captures_rollup(spark, sf_dir, "pydsm", consume)
 
 
 @register(

@@ -27,8 +27,9 @@ protocol and race two writers against each other:
 7.  readers resolving through the commit log never observe a
     half-published generation (in-flight publications are invisible)
 8.  the grace window keeps exactly one superseded generation
-9.  the happy paths through compact_table / merge_upsert stay
-    content-identical (their oracles also hash-check this vs DuckDB)
+9.  the happy paths through compact_table and a read-merge-rewrite
+    with ``read_generation`` stay content-identical (the maint_*
+    oracles also hash-check this vs DuckDB)
 """
 
 from __future__ import annotations
@@ -42,9 +43,9 @@ from reddit_can_bigdata_spark.sources import storage
 from reddit_can_bigdata_spark.sources.storage import (
     ConcurrentWriteError,
     atomic_rewrite,
-    merge_upsert,
     recover_table,
     resolve_table,
+    table_generation,
 )
 
 
@@ -369,13 +370,19 @@ def test_compact_table_happy_path_content_preserved(spark, tmp_path):
 
 
 def test_merge_upsert_happy_path_still_merges(spark, tmp_path):
+    """MERGE as a read-modify-write through the protocol: snapshot the
+    generation, keep the stored rows whose key the update set lacks,
+    union the updates, and commit against the snapshot."""
     path = str(tmp_path / "t")
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], ["k", "val"]
     )
     base.write.mode("overwrite").parquet(path)
     upd = spark.createDataFrame([(2, "B"), (4, "d")], ["k", "val"])
-    merge_upsert(spark, upd, path, key="k")
+    gen = table_generation(path)
+    current = spark.read.parquet(resolve_table(path))
+    merged = current.join(upd.select("k"), "k", "left_anti").unionByName(upd)
+    atomic_rewrite(merged, path, read_generation=gen)
     rows = {
         r.k: r.val for r in spark.read.parquet(path).collect()
     }

@@ -486,28 +486,6 @@ def test_wedge_sampled_close_to_exact_on_sparse_graph(spark):
     assert abs(est["avg_clustering_est"] - exact["avg_clustering"]) < 0.02
 
 
-def test_triangles_for_scale_gate_swap(spark, sf_dir, monkeypatch):
-    """`triangles_for_scale` serves exact g9 under the wedge budget and
-    the renamed g9b estimate above it (budget forced to 0); explicit
-    mode overrides the auto gate."""
-    from reddit_can_bigdata_spark.operators import graph
-
-    exact = graph.triangles_for_scale(spark, sf_dir).collect()[0]
-    want = graph.g9_triangles_clustering(spark, sf_dir).collect()[0]
-    assert (exact["total_triangles"], exact["avg_clustering"]) == (
-        want["total_triangles"],
-        want["avg_clustering"],
-    )
-
-    monkeypatch.setattr(graph, "TRIANGLE_WEDGE_ROWS_PER_SLOT", 0)
-    sampled = graph.triangles_for_scale(spark, sf_dir).collect()[0]
-    est = graph.g9b_triangles_wedge_sampled(spark, sf_dir).collect()[0]
-    assert sampled["total_triangles"] == round(est["triangles_est"])
-    assert sampled["avg_clustering"] == est["avg_clustering_est"]
-    forced = graph.triangles_for_scale(spark, sf_dir, mode="exact").collect()[0]
-    assert forced["total_triangles"] == want["total_triangles"]
-
-
 def test_closeness_relax_volume_gate(spark, sf_dir, monkeypatch):
     """Round 11: the exact-closeness gate budgets relaxation WORK
     (V·E_sym rows), not just node-count state — with the per-slot
@@ -552,26 +530,6 @@ def test_budgeted_sample_mod_math():
         budgeted_sample_mod(1600, 1_000_000, 6, 1, 7, rows_per_slot=0)
         == 100  # ceil(1600 / 16)
     )
-
-
-def test_betweenness_for_scale_matches_pinned_mod_at_test_scale(
-    spark, sf_dir
-):
-    """At driver scale the budget keeps the pinned mod-7 sample, so the
-    gated production form is bit-identical to the registered oracle
-    query; with the budget forced to 0 it clamps the source count and
-    still returns a well-formed estimate over the same nodes."""
-    from reddit_can_bigdata_spark.operators import graph
-
-    want = {
-        (r["node"], r["betweenness_est"])
-        for r in graph.g3b_betweenness_sampled(spark, sf_dir).collect()
-    }
-    got = {
-        (r["node"], r["betweenness_est"])
-        for r in graph.betweenness_for_scale(spark, sf_dir).collect()
-    }
-    assert got == want
 
 
 def test_closeness_budgeted_mod_still_estimates(spark, sf_dir):
@@ -623,7 +581,7 @@ def test_raw_numpy_edge_build_matches_distributed_aggregate(spark, sf_dir):
 
 
 def test_graph_size_same_off_the_csr_and_the_edge_frame(spark, sf_dir):
-    """The `*_for_scale` gate inputs (n_nodes, e_sym, Σdeg²) read off a
+    """`closeness_for_scale`'s gate inputs (n_nodes, e_sym) read off a
     resolved CSR equal the one-aggregate form over the edge frame."""
     from reddit_can_bigdata_spark.operators import graphkernel as gk
     from reddit_can_bigdata_spark.operators.graph import _edges

@@ -1,71 +1,6 @@
-"""Influencer pipeline + user_network/network_metadata table tests."""
+"""Influencer composite, closeness gate and Brandes reference tests."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-
-def test_user_network_table_shape(spark, sf_dir):
-    from reddit_can_bigdata_spark.operators.influencer import user_network_table
-
-    df = user_network_table(spark, sf_dir)
-    dtypes = dict(df.dtypes)
-    assert dtypes["centralities"].startswith("struct<")
-    assert "degree:double" in dtypes["centralities"]
-    rows = df.collect()
-    assert len(rows) > 0
-    n_infl = sum(1 for r in rows if r["is_influencer"])
-    assert n_infl == min(20, len(rows))
-    ranks = sorted(r["influencer_rank"] for r in rows if r["influencer_rank"] is not None)
-    assert ranks == list(range(1, n_infl + 1))
-    # centrality sanity: all in [0, 1]-ish ranges
-    for r in rows:
-        c = r["centralities"]
-        assert 0.0 <= c["degree"] <= 1.0
-        assert 0.0 <= c["pagerank"] <= 1.0
-
-
-def test_user_network_table_one_graph_pass(spark, sf_dir, monkeypatch):
-    """The per-user table collects the graph once and flags exactly the
-    nodes the auto-gated top-20 composite ranks."""
-    from reddit_can_bigdata_spark.operators import graphkernel
-    from reddit_can_bigdata_spark.operators.influencer import (
-        influencer_composite_top20,
-        user_network_table,
-    )
-
-    calls = []
-    raw = graphkernel.collect_graph_raw
-
-    def counted(*a, **kw):
-        calls.append(1)
-        return raw(*a, **kw)
-
-    monkeypatch.setattr(graphkernel, "collect_graph_raw", counted)
-    flagged = {
-        r["user"]
-        for r in user_network_table(spark, sf_dir)
-        .where("is_influencer")
-        .collect()
-    }
-    assert len(calls) == 1
-    top = influencer_composite_top20(spark, sf_dir, closeness_mode=None)
-    assert flagged == {r["node"] for r in top.collect()}
-
-
-def test_network_metadata_singleton(spark, sf_dir):
-    from reddit_can_bigdata_spark.operators.influencer import network_metadata
-
-    rows = network_metadata(spark, sf_dir).collect()
-    assert len(rows) == 1
-    m = rows[0]
-    assert m["type"] == "graph_metadata"
-    n, e = m["num_nodes"], m["num_edges"]
-    assert 0.0 <= m["density"] <= 1.0
-    assert m["density"] == pytest.approx(2.0 * e / (n * (n - 1)), abs=1e-5)
-    assert m["num_communities"] >= 1
-    assert 0.0 <= m["avg_clustering"] <= 1.0
 
 
 def test_closeness_size_gate_swap_point(spark, sf_dir, monkeypatch):

@@ -5,16 +5,15 @@ directions in 64-dim with small within-cluster noise. On such data the
 k-means codebook recovers the true centers and n_probe=1 recall jumps;
 on the structureless synthetic `embeddings` table (same-label mean
 cosine ~0.007 — pure noise) NO codebook can beat another, so asserting
-improvement there would be meaningless. The real-table path is still
-exercised through `write_ivf_index(trained=True)` + `ivf_probe`
-(layout/pruning semantics identical to the stand-in index).
+improvement there would be meaningless. On the real table the trained
+codebook is the committed IVF fixture (tools/make_ivf_fixture.py),
+which the registered `sim_ivf_trained_search` serves.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 DIM = 64
 K = 8
@@ -134,31 +133,6 @@ def test_trained_codebook_drops_zero_norm_vectors(spark):
     assert len(cents) == 4
     for r in cents:
         assert all(np.isfinite(r["cv"])), r["cid"]
-
-
-def test_trained_index_layout_prunes_and_probes(spark, sf_dir, tmp_path):
-    """write_ivf_index(trained=True) on the real embeddings table:
-    same partitioned layout, static pruning in the probe plan, probe
-    hits come from the probed cluster only."""
-    import re
-
-    from reddit_can_bigdata_spark.plans.inspect import formatted_plan
-    from reddit_can_bigdata_spark.plans.layout import ivf_probe, write_ivf_index
-    from reddit_can_bigdata_spark.tables import load_tables
-
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    path = str(tmp_path / "ivf_trained")
-    write_ivf_index(emb, path, trained=True)
-
-    cents = spark.read.parquet(path + "_centroids")
-    assert cents.count() == 8
-    qv = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    probe = ivf_probe(spark, path, qv, k=6)
-    plan = formatted_plan(probe)
-    assert re.search(r"PartitionFilters: \[[^\]]*cid[^\]]*= \d+", plan), plan
-    rows = probe.collect()
-    assert 0 < len(rows) <= 6
-    assert all(-1.0 <= r["cosine"] <= 1.0 for r in rows)
 
 
 def test_kmeans_lloyd_trains_and_is_sane(spark, sf_dir):

@@ -139,7 +139,7 @@ def test_query_matches_oracle_aggregate_tier(name, spark, duck, sf_dir):
 
 
 def _graph_entry_points():
-    from reddit_can_bigdata_spark.operators import advanced, graph
+    from reddit_can_bigdata_spark.operators import advanced
 
     points = {
         n: REGISTRY[n].fn
@@ -155,8 +155,6 @@ def _graph_entry_points():
         )
     }
     points["closeness_for_scale"] = advanced.closeness_for_scale
-    points["betweenness_for_scale"] = graph.betweenness_for_scale
-    points["triangles_for_scale"] = graph.triangles_for_scale
     return points
 
 
@@ -261,38 +259,6 @@ def test_pinned_state_mode_skips_the_count_job(spark, sf_dir):
         lambda: g7_label_propagation(spark, sf_dir, state_mode="broadcast").collect(),
     )
     assert 0 < pinned < unpinned, (pinned, unpinned)
-
-
-@pytest.mark.parametrize("tier", sorted(_TIERS))
-def test_network_metadata_resolves_the_graph_once(tier, spark, sf_dir, monkeypatch):
-    """network_metadata feeds one resolved graph to its g8 counts, its
-    triangle gate and its components: one raw collect, few jobs, and
-    the values of the registered g8, g9 and g7 components on each tier."""
-    from reddit_can_bigdata_spark.operators import graphkernel
-    from reddit_can_bigdata_spark.operators.influencer import network_metadata
-
-    raw = graphkernel.collect_graph_raw
-    calls = []
-
-    def counted(*args, **kwargs):
-        calls.append(1)
-        return raw(*args, **kwargs)
-
-    monkeypatch.setattr(graphkernel, "collect_graph_raw", counted)
-    with _conf(spark, **_TIERS[tier]):
-        rows = []
-        jobs = _jobs(spark, lambda: rows.extend(network_metadata(spark, sf_dir).collect()))
-        n_raw = len(calls)
-        g8 = REGISTRY["g8_graph_metadata"].fn(spark, sf_dir).collect()[0]
-        g9 = REGISTRY["g9_triangles_clustering"].fn(spark, sf_dir).collect()[0]
-        n_comm = REGISTRY["g7_connected_components"].fn(spark, sf_dir).count()
-    (m,) = rows
-    assert (m["num_nodes"], m["num_edges"], m["density"]) == tuple(g8)
-    assert m["avg_clustering"] == g9["avg_clustering"]
-    assert m["num_communities"] == n_comm
-    assert n_raw == 1
-    if tier == "raw":
-        assert jobs < 8, jobs
 
 
 def test_g7_components_do_not_probe_twice(spark, sf_dir):

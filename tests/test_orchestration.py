@@ -1,6 +1,6 @@
 """End-to-end orchestration parity (the reference Airflow DAG's
 stats → gates → stages → report lifecycle) against the engine's
-run_pipeline. Complements test_full_pipeline.py (corpus shards)."""
+run_pipeline."""
 
 from __future__ import annotations
 

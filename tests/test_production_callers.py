@@ -6,9 +6,13 @@ A def is live when it is a registered builder (``@register`` or
 name, attribute or import alias outside the def's own body. Production
 code is the package, ``bench.py``, ``__spark_entry__.py`` and the
 non-test files of ``perfbench/``; ``tools/`` and ``tests/`` are not.
-A def that only the tests or the tools use is deleted, or it gets an
-``ALLOWLIST`` entry with a one-line reason. The guard reads the syntax
-tree, so a docstring or a comment that names a def is not a caller.
+A module-level ``f.attr = ...`` statement (``f.__doc__ =
+f.__doc__.format(...)``) belongs to ``f``'s body. A def that only the
+tests or the tools use is deleted, or it gets an ``ALLOWLIST`` entry
+with a one-line reason; a reason that starts with ``open:`` parks a
+def that waits for a caller, and does not count. The guard reads the
+syntax tree, so a docstring or a comment that names a def is not a
+caller.
 
 The check looks at direct references only: deleting a def can leave
 helpers that only it used, and the next run reports those."""
@@ -24,7 +28,8 @@ ROOT = Path(__file__).resolve().parent.parent
 PKG = "reddit_can_bigdata_spark"
 REGISTRARS = {"register", "_register_if_runnable"}
 
-_OPEN = "open: no production caller"
+#: an allowlist reason that starts with this does not count
+_OPEN = "open:"
 
 #: kept without a production caller, keyed by module path inside the
 #: package and def name
@@ -34,7 +39,7 @@ ALLOWLIST: dict[str, str] = {
     "operators.graph.betweenness_exact": "reference: driver-side Brandes that g3b with every source must reproduce",
     # fixtures and plan-assertion helpers
     "multimodal.binaryops.synthetic_media": "fixture: deterministic media table for the sample_frames tests",
-    "sources.reddit.synthetic_posts_comments": "fixture: FIXTURES.md-shaped posts and comments",
+    "operators.similarity.ivf_centroids_trained": "fixture: tools/make_ivf_fixture.py trains the committed IVF codebook with it",
     "operators.approx.cms_estimate": "test support: the CMS point query that checks cms_event_type_sketch",
     "plans.inspect.has_pushed_filter": "test support: plan assertion helper",
     "plans.inspect.read_schemas": "test support: plan assertion helper",
@@ -44,23 +49,6 @@ ALLOWLIST: dict[str, str] = {
     "streaming.pipeline.kafka_stream": "deployment: the reference's Kafka source (S1/S2); its connector is not installed here",
     "functions.vader.load_vader_lexicon": "public API: the drop-in path for the full published VADER lexicon",
     "registry.all_oracles": "public API: named in the package docstring",
-    # domain tables, scale gates and writers still waiting for a caller
-    "operators.influencer.user_network_table": f"{_OPEN} (SURVEY W2/P9)",
-    "operators.influencer.network_metadata": f"{_OPEN} (SURVEY S17, G8)",
-    "operators.graph.betweenness_for_scale": f"{_OPEN} (SURVEY G3)",
-    "operators.similarity.semantic_dedup_for_scale": f"{_OPEN} (no SURVEY row: semantic dedup extra)",
-    "sources.reddit.parse_kafka_events": f"{_OPEN} (SURVEY S3)",
-    "sources.reddit.featurize_posts": f"{_OPEN} (SURVEY P2, F1-F5)",
-    "sources.reddit.interaction_edges": f"{_OPEN} (SURVEY J3, G1)",
-    "sources.storage.overwrite_table": f"{_OPEN} (SURVEY S16)",
-    "sources.storage.append_dedup": f"{_OPEN} (SURVEY O4)",
-    "sources.storage.merge_upsert": f"{_OPEN} (SURVEY S15)",
-    "sources.storage.retention_sweep": f"{_OPEN} (SURVEY P12, the DAG's cleanup task)",
-    "sources.storage.write_singleton": f"{_OPEN} (SURVEY S17)",
-    "plans.layout.write_ivf_index": f"{_OPEN} (no SURVEY row: IVF layout extra)",
-    "plans.layout.ivf_probe": f"{_OPEN} (no SURVEY row: IVF layout extra)",
-    "ml.embeddings.pca_project": f"{_OPEN} (no SURVEY row: PCA fit extra)",
-    "sources.pyds.RedditRestDataSource": f"{_OPEN} (SURVEY S4/S5)",
 }
 
 
@@ -88,6 +76,22 @@ def _bindings(tree: ast.Module) -> dict[str, str]:
     return out
 
 
+def _owner(stmt: ast.stmt, top: set[str]) -> str | None:
+    """The top-level def a module-level statement belongs to: the def
+    itself, or the def that an ``f.attr = ...`` assigns onto
+    (``f.__doc__ = f.__doc__.format(...)``); None for any other."""
+    if isinstance(stmt, _TOP):
+        return stmt.name
+    if isinstance(stmt, ast.Assign):
+        bases = {
+            t.value.id if isinstance(t, ast.Attribute) and isinstance(t.value, ast.Name) else None
+            for t in stmt.targets
+        }
+        if len(bases) == 1 and bases <= top:
+            return bases.pop()
+    return None
+
+
 def _references(tree: ast.Module, module: str) -> Iterable[tuple[str, str | None]]:
     """(dotted target, dotted top-level def it sits in, or None) per
     reference. An attribute on anything but an imported or top-level
@@ -101,7 +105,8 @@ def _references(tree: ast.Module, module: str) -> Iterable[tuple[str, str | None
         return f"{module}.{name}" if name in top else None
 
     for stmt in tree.body:
-        owner = f"{module}.{stmt.name}" if isinstance(stmt, _TOP) else None
+        name = _owner(stmt, top)
+        owner = f"{module}.{name}" if name else None
         for node in ast.walk(stmt):
             if isinstance(node, ast.ImportFrom):
                 for alias in node.names:
@@ -145,7 +150,8 @@ def production_files(root: Path) -> list[Path]:
 def unreferenced(root: Path, allowlist: dict[str, str]) -> tuple[list[str], list[str]]:
     """(package defs with no production caller and no allowlist entry,
     each with its line count; allowlist entries that are live or name
-    no def). Names are dotted paths inside the package."""
+    no def). Names are dotted paths inside the package. An entry whose
+    reason starts with ``open:`` does not allowlist its def."""
     defs: dict[str, ast.stmt] = {}
     refs: list[tuple[str, str | None]] = []
     for path in production_files(root):
@@ -161,10 +167,11 @@ def unreferenced(root: Path, allowlist: dict[str, str]) -> tuple[list[str], list
         elif target in defs and target != owner:
             live.add(target)
     short = {q: q[len(PKG) + 1 :] for q in defs}
+    allowed = {name for name, why in allowlist.items() if not why.startswith(_OPEN)}
     dead = [
         f"{short[q]} ({node.end_lineno - node.lineno + 1} lines)"
         for q, node in defs.items()
-        if q not in live and short[q] not in allowlist
+        if q not in live and short[q] not in allowed
     ]
     stale = [
         name for name in allowlist
@@ -240,3 +247,29 @@ def test_guard_fails_on_stale_allowlist_entries(tmp_path):
     dead, stale = unreferenced(_synthetic_tree(tmp_path), allow)
     assert dead == ["mod.kept (2 lines)"]
     assert stale == ["mod.used_by_bench", "mod.gone"]
+
+
+def test_guard_counts_a_defs_own_attribute_assignment_as_its_body(tmp_path):
+    """``formatted.__doc__ = formatted.__doc__.format(...)`` at module
+    level is part of ``formatted``, not a caller of it."""
+    root = _synthetic_tree(tmp_path)
+    (root / PKG / "fmt.py").write_text(textwrap.dedent('''
+        def formatted():
+            """Doc {x}."""
+            return 3
+
+
+        formatted.__doc__ = formatted.__doc__.format(x=1)
+    '''))
+    dead, stale = unreferenced(root, {"mod.kept": "why"})
+    assert dead == ["fmt.formatted (3 lines)", "mod.orphan (3 lines)"]
+    assert stale == []
+
+
+def test_guard_rejects_an_open_allowlist_reason(tmp_path):
+    """An ``open:`` entry parks a def without a caller; the guard
+    reports that def as if the entry were not there."""
+    allow = {"mod.kept": "open: waits for a caller", "mod.orphan": "fixture: why"}
+    dead, stale = unreferenced(_synthetic_tree(tmp_path), allow)
+    assert dead == ["mod.kept (2 lines)"]
+    assert stale == []

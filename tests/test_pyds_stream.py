@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from reddit_can_bigdata_spark.sources.pyds import (
-    RedditRestDataSource,
     RedditStreamDataSource,
     RedditStreamReader,
 )
@@ -171,23 +170,22 @@ def test_restart_resumes_from_committed_offset(spark, capture_files, tmp_path):
 
 
 def test_stream_matches_batch_datasource(spark, capture_files, tmp_path):
-    """The streaming source and the batch `reddit_rest` source apply
-    the identical normalization: same rows either way."""
+    """The streaming source applies `extract_post`'s normalization: the
+    streamed rows are exactly `extract_post` over every capture line."""
+    from reddit_can_bigdata_spark.schemas import POST_SCHEMA
+    from reddit_can_bigdata_spark.sources.pyds import DEFAULT_SCRAPED_AT
+    from reddit_can_bigdata_spark.sources.rest import extract_post
+
     out_dir = str(tmp_path / "sink")
     _run_stream(spark, capture_files, str(tmp_path / "ckpt"), out_dir)
-    from reddit_can_bigdata_spark.schemas import POST_SCHEMA
-
     streamed = spark.read.schema(POST_SCHEMA).parquet(out_dir)
-    spark.dataSource.register(RedditRestDataSource)
-    batch = (
-        spark.read.format("reddit_rest")
-        .option("paths", ",".join(capture_files))
-        .load()
-    )
-    cols = sorted(streamed.columns)
-    assert sorted(map(tuple, streamed.select(*cols).collect())) == sorted(
-        map(tuple, batch.select(*cols).collect())
-    )
+    want = []
+    for path in capture_files:
+        with open(path, encoding="utf-8") as fh:
+            for line in fh:
+                rec = extract_post(json.loads(line), DEFAULT_SCRAPED_AT)
+                want.append(tuple(rec[c] for c in POST_SCHEMA.fieldNames()))
+    assert sorted(map(tuple, streamed.collect())) == sorted(want)
     shutil.rmtree(out_dir, ignore_errors=True)
 
 

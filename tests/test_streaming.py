@@ -313,30 +313,26 @@ def test_kafka_source_plan_assembly(spark):
     absent (this container) Spark fails with DATA_SOURCE_NOT_FOUND at
     load(): that exact error is the documented skip. Any other error
     (option typo, schema drift) FAILS the test. With the connector
-    present the test asserts the Kafka frame schema and that the S3
-    parse + S7 to_json round-trip analyze on top of it."""
+    present the test asserts the S3-decoded posts / comments schemas
+    and that the S7 to_json round-trip analyzes on top of them."""
     import pytest
     from pyspark.sql import functions as F
     from pyspark.sql.utils import AnalysisException
 
-    from reddit_can_bigdata_spark.sources.reddit import parse_kafka_events
+    from reddit_can_bigdata_spark.schemas import COMMENT_SCHEMA, POST_SCHEMA
     from reddit_can_bigdata_spark.streaming.pipeline import kafka_stream
 
     try:
-        raw = kafka_stream(spark)
+        posts, comments = kafka_stream(spark)
     except AnalysisException as e:
         cond = getattr(e, "getCondition", lambda: "")() or str(e)
         if "DATA_SOURCE_NOT_FOUND" in cond or "Failed to find data source: kafka" in str(e):
             pytest.skip("spark-sql-kafka connector not on classpath (sandbox)")
         raise
     # connector present: the unresolved plan analyzed; pin the contract
-    assert raw.isStreaming
-    assert {"key", "value", "topic", "partition", "offset", "timestamp"} <= set(
-        raw.columns
-    )
-    posts, comments = parse_kafka_events(raw)
-    assert posts.isStreaming and "title" in posts.columns
-    assert "body" in comments.columns
+    assert posts.isStreaming and comments.isStreaming
+    assert posts.columns == POST_SCHEMA.fieldNames()
+    assert comments.columns == COMMENT_SCHEMA.fieldNames()
     # S7 sink shape: key/value serialization analyzes against the plan
     out = posts.select(
         F.col("id").alias("key"), F.to_json(F.struct("*")).alias("value")

@@ -40,18 +40,18 @@ from reddit_can_bigdata_spark.session import get_spark  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 
-#: the 13 slowest headline queries of BENCH_r10 (driver artifact);
-#: single-rep ones are the iterative/quadratic tier where a second
-#: rep costs minutes and the first rep is already seconds-long (far
-#: above timer noise).
+#: the 13 slowest headline queries of BENCH_r10 (driver artifact),
+#: less g3b and g9: their registered forms pin a fixed sample / an
+#: exact count whose sf1 cost is superlinear, and they have no gated
+#: production form to time instead. Single-rep ones are the
+#: iterative/quadratic tier where a second rep costs minutes and the
+#: first rep is already seconds-long (far above timer noise).
 DEFAULT = {
     "pipeline_e2e": 1,
-    "g3b_betweenness_sampled": 1,
     "influencer_composite_top20": 1,
     "influencer_composite_sampled": 1,
     "g4_closeness_centrality": 1,
     "dedup_clusters": 2,
-    "g9_triangles_clustering": 2,
     "g6_pagerank": 2,
     "dedup_lsh_quality": 2,
     "g5_eigenvector_centrality": 2,
@@ -70,56 +70,26 @@ def _production_forms():
     relaxation rows ≈ 5 TB of shuffle). The gate's mode choice is
     logged by the gate itself; the probe tags these names so the
     PERF.md table says which form the exponent measures."""
-    from reddit_can_bigdata_spark.operators.advanced import (
-        closeness_for_scale,
-    )
-    from reddit_can_bigdata_spark.operators.graph import (
-        triangles_for_scale,
-    )
+    from reddit_can_bigdata_spark.operators.advanced import closeness_for_scale
     from reddit_can_bigdata_spark.operators.influencer import (
         influencer_composite_top20,
     )
 
-    from reddit_can_bigdata_spark.operators.graph import (
-        betweenness_for_scale,
-    )
-    from reddit_can_bigdata_spark.operators.similarity import (
-        embedding_lsh_for_scale,
-        semantic_dedup_for_scale,
-    )
+    def composite_auto(spark, d):
+        return influencer_composite_top20(spark, d, closeness_mode=None)
 
     return {
-        "dedup_embedding_lsh": (
-            "embedding_lsh_for_scale(auto)",
-            lambda spark, d: embedding_lsh_for_scale(spark, d),
-        ),
-        "sim_semantic_dedup": (
-            "semantic_dedup_for_scale(auto)",
-            lambda spark, d: semantic_dedup_for_scale(spark, d),
-        ),
         "g4_closeness_centrality": (
             "closeness_for_scale(auto)",
             lambda spark, d: closeness_for_scale(spark, d),
         ),
-        "g3b_betweenness_sampled": (
-            "betweenness_for_scale(auto)",
-            lambda spark, d: betweenness_for_scale(spark, d),
-        ),
         "influencer_composite_sampled": (
             "influencer_composite_top20(closeness auto)",
-            lambda spark, d: influencer_composite_top20(
-                spark, d, closeness_mode=None
-            ),
-        ),
-        "g9_triangles_clustering": (
-            "triangles_for_scale(auto)",
-            lambda spark, d: triangles_for_scale(spark, d),
+            composite_auto,
         ),
         "influencer_composite_top20": (
             "influencer_composite_top20(closeness auto)",
-            lambda spark, d: influencer_composite_top20(
-                spark, d, closeness_mode=None
-            ),
+            composite_auto,
         ),
     }
 
