@@ -10,7 +10,6 @@ Spark timestamps.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     IntegerType,
     StringType,

@@ -452,21 +452,18 @@ def drop_table(path: str) -> None:
             shutil.rmtree(full, ignore_errors=True)
 
 
-def resolve_updates(
-    df: DataFrame, key: str, version_col: str | None = None
-) -> DataFrame:
+def resolve_updates(df: DataFrame, key: str, version_col: str) -> DataFrame:
     """Intra-batch last-write-wins: one deterministic winner per key —
     highest ``version_col`` (matching the reference's sequential
-    per-row loop), ties and the no-version case broken by the
-    descending struct of the remaining columns, never
-    ``dropDuplicates``'s arbitrary first-seen row. The winner rule of
-    the oracled `warehouse_scd1_upsert`."""
+    per-row loop), ties broken by the descending struct of the
+    remaining columns, never ``dropDuplicates``'s arbitrary first-seen
+    row. The winner rule of the oracled `warehouse_scd1_upsert`."""
     from pyspark.sql import Window
 
     other = [c for c in df.columns if c != key]
-    order = [F.col(version_col).desc()] if version_col else []
-    order.append(F.struct(*[F.col(c) for c in other]).desc())
-    w = Window.partitionBy(key).orderBy(*order)
+    w = Window.partitionBy(key).orderBy(
+        F.col(version_col).desc(), F.struct(*[F.col(c) for c in other]).desc()
+    )
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)

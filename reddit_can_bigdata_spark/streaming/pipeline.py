@@ -13,7 +13,11 @@ version:
   state (O3/O4 done properly, instead of store-level unique-index
   try/except);
 - sinks write set-oriented via ``foreachBatch(batch.write...)`` or a
-  memory/table sink — never ``collect()`` row loops.
+  memory/table sink — never ``collect()`` row loops;
+- every bounded (availableNow) run in this package goes through one
+  runner, :class:`BoundedRun`, which owns its scratch dirs, the start
+  and await, the read-back and the cleanup; every parquet file-stream
+  through one reader, :func:`parquet_stream`.
 
 ``streaming_windowed_counts`` is registered as a correctness query:
 run with an ``availableNow`` trigger it processes the whole parquet
@@ -27,11 +31,107 @@ import os
 import shutil
 import tempfile
 import uuid
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from reddit_can_bigdata_spark.operators.common import materialize
 from reddit_can_bigdata_spark.registry import register
+from reddit_can_bigdata_spark.tables import coerce_ts
+
+if TYPE_CHECKING:  # pragma: no cover
+    from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+
+#: every runner work dir is a ``tempfile.mkdtemp`` with this prefix
+RUN_DIR_PREFIX = "bounded_run_"
+
+
+def parquet_stream(
+    spark: SparkSession,
+    path: str,
+    *,
+    ts_col: str | None = "ts",
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """File-stream over the parquet directory ``path``: the schema of a
+    batch read (a file source needs one up front), an optional
+    ``maxFilesPerTrigger`` (one micro-batch per file exercises state
+    carried across batches), and ``ts_col`` coerced to TIMESTAMP by
+    `tables.coerce_ts`, the one event-time coercion; ``ts_col=None``
+    for sources with no event time."""
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = reader.parquet(path)
+    return stream if ts_col is None else coerce_ts(stream, ts_col)
+
+
+def start_available_now(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """Start ``writer`` as a bounded run: the availableNow trigger
+    processes what the source holds at start (in as many micro-batches
+    as its rate limits ask for), then the query stops."""
+    return (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+class BoundedRun:
+    """Scope of one bounded streaming run, used as ``with
+    BoundedRun(spark, source) as run``. It owns a scratch work dir
+    holding ``src``, ``ckpt`` and ``out``:
+
+    - ``src`` is the directory to stream: ``source`` itself when it is
+      a directory, else a dir exposing the single file through a
+      symlink (the file source reads directories; no copy);
+    - ``ckpt`` is the checkpoint every `drain` of this run resumes;
+    - ``out`` is an empty dir for a file sink.
+
+    `to_memory` runs a frame into a memory sink named ``view`` and
+    returns its table, materialized; `drain` awaits any other query
+    started on ``ckpt``. On exit, exceptions included, the last query
+    is stopped if still active, the memory sink's view is dropped and
+    the work dir removed, so a read of ``out`` must be pinned with
+    `operators.common.materialize` before the block ends."""
+
+    def __init__(self, spark: SparkSession, source: str | None = None):
+        self.spark = spark
+        self.work = tempfile.mkdtemp(prefix=RUN_DIR_PREFIX)
+        self.ckpt = os.path.join(self.work, "ckpt")
+        self.out = os.path.join(self.work, "out")
+        os.mkdir(self.out)
+        self.view = f"bounded_{uuid.uuid4().hex[:8]}"
+        self.src = source
+        if source is not None and not os.path.isdir(source):
+            self.src = os.path.join(self.work, "src")
+            os.mkdir(self.src)
+            os.symlink(
+                os.path.abspath(source), os.path.join(self.src, os.path.basename(source))
+            )
+        self._query: StreamingQuery | None = None
+
+    def __enter__(self) -> BoundedRun:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        if self._query is not None and self._query.isActive:
+            self._query.stop()
+        self.spark.catalog.dropTempView(self.view)
+        shutil.rmtree(self.work, ignore_errors=True)
+
+    def drain(self, query: StreamingQuery) -> None:
+        """Await ``query``, started by `start_available_now` on ``ckpt``."""
+        self._query = query
+        query.awaitTermination()
+
+    def to_memory(self, frame: DataFrame, output_mode: str = "append") -> DataFrame:
+        """Run the streaming ``frame`` into the memory sink; its table,
+        pinned in executor storage so it outlives the view."""
+        writer = frame.writeStream.format("memory").queryName(self.view)
+        self.drain(start_available_now(writer.outputMode(output_mode), self.ckpt))
+        return materialize(self.spark.table(self.view))
 
 
 KAFKA_TOPIC = "reddit-can-posts"  # scraper/kafka_producer.py:18
@@ -96,33 +196,9 @@ def run_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink with a processing-time trigger (ST1: 30s in the reference)
     and checkpointing (ST3).
     """
-    stream_dir = os.path.join(tempfile.gettempdir(), f"evstream_{uuid.uuid4().hex[:8]}")
-    name = f"wincounts_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
-    q = None
-    try:
-        stream = _events_file_stream(spark, sf_dir, stream_dir)
-        agg = windowed_event_counts(stream)
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # pin the (small: windows x event_types) result to executor
-        # storage so the memory-sink view and on-disk litter can be
-        # dropped before returning — repeated invocations no longer
-        # accumulate temp views / checkpoint dirs in the session.
-        return materialize(spark.table(name))
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stream_dir, ignore_errors=True)
+    with BoundedRun(spark, os.path.join(sf_dir, "events.parquet")) as run:
+        stream = parquet_stream(spark, run.src)
+        return run.to_memory(windowed_event_counts(stream), "complete")
 
 
 def stream_etl_to_parquet(
@@ -153,20 +229,19 @@ def stream_etl_to_parquet(
     - exactly-once-per-id across retries comes from the checkpoint +
       dedup state; the sink itself stays append-only.
 
-    ``ts_col=None`` skips the watermark-dedup stage (for sources with
-    no event time — e.g. a static-corpus backfill whose ids are unique
-    by construction); ``transform`` is an optional batch/stream-
-    agnostic DataFrame transform applied before the sink (the
-    reference applies its clean/featurize UDFs here,
+    ``ts_col`` is coerced to TIMESTAMP by `tables.coerce_ts` (epoch
+    nanos, naive or zoned timestamps; any other dtype raises
+    ``TypeError``). ``ts_col=None`` skips the watermark-dedup stage
+    (for sources with no event time — e.g. a static-corpus backfill
+    whose ids are unique by construction); ``transform`` is an
+    optional batch/stream-agnostic DataFrame transform applied before
+    the sink (the reference applies its clean/featurize UDFs here,
     `spark_streaming.py:85-94`).
 
     Returns the StreamingQuery (caller awaits termination).
     """
-    raw_schema = spark.read.parquet(source_dir).schema
-    stream = spark.readStream.schema(raw_schema).parquet(source_dir)
+    stream = parquet_stream(spark, source_dir, ts_col=ts_col)
     if ts_col is not None:
-        if dict(stream.dtypes)[ts_col] != "timestamp":
-            stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         stream = stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
             [id_col]
         )
@@ -176,12 +251,7 @@ def stream_etl_to_parquet(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 @register(
@@ -239,31 +309,19 @@ def streaming_etl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     both keep the watermark-dedup stage."""
     from reddit_can_bigdata_spark.operators.relational import clean_text_etl_transform
 
-    tag = uuid.uuid4().hex[:8]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"etlstream_{tag}")
-    out_dir = os.path.join(tempfile.gettempdir(), f"etlsink_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_etl_{tag}")
-    os.makedirs(stream_dir, exist_ok=True)
-    os.symlink(
-        os.path.abspath(os.path.join(sf_dir, "documents.parquet")),
-        os.path.join(stream_dir, "documents.parquet"),
-    )
-    try:
-        q = stream_etl_to_parquet(
-            spark,
-            stream_dir,
-            out_dir,
-            ckpt,
-            id_col="doc_id",
-            ts_col=None,
-            transform=clean_text_etl_transform,
+    with BoundedRun(spark, os.path.join(sf_dir, "documents.parquet")) as run:
+        run.drain(
+            stream_etl_to_parquet(
+                spark,
+                run.src,
+                run.out,
+                run.ckpt,
+                id_col="doc_id",
+                ts_col=None,
+                transform=clean_text_etl_transform,
+            )
         )
-        q.awaitTermination()
-        return materialize(spark.read.parquet(out_dir))
-    finally:
-        shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
+        return materialize(spark.read.parquet(run.out))
 
 
 ATTRIB_WINDOW = "30 minutes"  # views within this interval before a click
@@ -311,32 +369,6 @@ def click_view_attribution(clicks: DataFrame, views: DataFrame) -> DataFrame:
     )
 
 
-def _events_file_stream(spark: SparkSession, sf_dir: str, stream_dir: str) -> DataFrame:
-    """File-stream over the events parquet — the ONE place the
-    stream-side ts normalization and file-source setup live (used by
-    every streaming query here). The file source requires a
-    directory, so the single parquet file is exposed through a temp
-    dir via symlink (no copy). Event-time watermarks require
-    TIMESTAMP: epoch-nanos bigint and TIMESTAMP_NTZ (the known
-    on-disk forms, see tables.py) are coerced; any other dtype is a
-    schema regression and fails loudly."""
-    path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema
-    os.makedirs(stream_dir, exist_ok=True)
-    os.symlink(os.path.abspath(path), os.path.join(stream_dir, "events.parquet"))
-    stream = spark.readStream.schema(raw_schema).parquet(stream_dir)
-    ts_dtype = dict(stream.dtypes)["ts"]
-    if ts_dtype == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_dtype == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    elif ts_dtype != "timestamp":
-        raise TypeError(
-            f"events.ts: expected bigint/timestamp/timestamp_ntz, got {ts_dtype}"
-        )
-    return stream
-
-
 @register(
     "streaming_click_view_attribution",
     oracle=f"""
@@ -359,33 +391,11 @@ def streaming_click_view_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     SQL interval join — the last Structured Streaming capability tier
     (ST5/ST6 covered windows + dedup + arbitrary state; this is
     two-sided join state)."""
-    stream_dir = os.path.join(
-        tempfile.gettempdir(), f"attrstream_{uuid.uuid4().hex[:8]}"
-    )
-    name = f"attrib_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
-    q = None
-    try:
-        stream = _events_file_stream(spark, sf_dir, stream_dir)
+    with BoundedRun(spark, os.path.join(sf_dir, "events.parquet")) as run:
+        stream = parquet_stream(spark, run.src)
         clicks = stream.where(F.col("event_type") == "click")
         views = stream.where(F.col("event_type") == "view")
-        out = click_view_attribution(clicks, views)
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return materialize(spark.table(name))
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stream_dir, ignore_errors=True)
+        return run.to_memory(click_view_attribution(clicks, views))
 
 
 TREND_TOPK = 3
@@ -475,21 +485,14 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern scales); the streaming aggregation state is
     |event_types|-sized. No distinct aggregates (unsupported in
     streaming) — counts and exact DECIMAL sums only."""
-    stream_dir = os.path.join(
-        tempfile.gettempdir(), f"enrichstream_{uuid.uuid4().hex[:8]}"
+    from reddit_can_bigdata_spark.operators.common import tables
+
+    ev = tables(spark, sf_dir)["events"]
+    profile = ev.groupBy("user_id").agg(
+        F.sum(F.col("value").cast("decimal(20,6)")).alias("user_total")
     )
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
-    q = None
-    try:
-        from reddit_can_bigdata_spark.operators.common import tables
-
-        ev = tables(spark, sf_dir)["events"]
-        profile = ev.groupBy("user_id").agg(
-            F.sum(F.col("value").cast("decimal(20,6)")).alias("user_total")
-        )
-
-        stream = _events_file_stream(spark, sf_dir, stream_dir)
+    with BoundedRun(spark, os.path.join(sf_dir, "events.parquet")) as run:
+        stream = parquet_stream(spark, run.src)
         enriched = stream.join(F.broadcast(profile), "user_id")
         agg = enriched.groupBy("event_type").agg(
             F.count("*").cast("bigint").alias("n_events"),
@@ -500,25 +503,10 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("total_value"),
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return materialize(spark.table(name))
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stream_dir, ignore_errors=True)
+        return run.to_memory(agg, "complete")
 
 
-def _captures_rollup(spark: SparkSession, sf_dir: str, name: str, consume) -> DataFrame:
+def _captures_rollup(spark: SparkSession, sf_dir: str, consume) -> DataFrame:
     """The body the two pyds source queries share: render the documents
     table as four raw scraper JSON-lines capture files, let
     ``consume(files, run, work)`` stream them in, and roll the posts it
@@ -533,24 +521,16 @@ def _captures_rollup(spark: SparkSession, sf_dir: str, name: str, consume) -> Da
     from reddit_can_bigdata_spark.tables import load_tables
 
     docs = load_tables(spark, sf_dir)["documents"]
-    work = os.path.join(tempfile.gettempdir(), f"{name}_{uuid.uuid4().hex[:8]}")
-    cap_dir, out_dir, ckpt = (os.path.join(work, d) for d in ("capture", "sink", "ckpt"))
+    with BoundedRun(spark) as bounded:
+        cap_dir = os.path.join(bounded.work, "capture")
 
-    def run(**options: str) -> None:
-        q = (
-            spark.readStream.format("reddit_rest_stream")
-            .options(**options)
-            .load()
-            .writeStream.foreachBatch(
-                lambda bdf, _bid: bdf.write.mode("append").parquet(out_dir)
+        def run(**options: str) -> None:
+            source = spark.readStream.format("reddit_rest_stream").options(**options)
+            writer = source.load().writeStream.foreachBatch(
+                lambda bdf, _bid: bdf.write.mode("append").parquet(bounded.out)
             )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+            bounded.drain(start_available_now(writer, bounded.ckpt))
 
-    try:
         raw = docs.select(
             F.to_json(
                 F.struct(
@@ -569,8 +549,8 @@ def _captures_rollup(spark: SparkSession, sf_dir: str, name: str, consume) -> Da
                 [], "subreddit string, cnt bigint, total_score bigint"
             )
         spark.dataSource.register(RedditStreamDataSource)
-        consume(files, run, work)
-        posts = spark.read.schema(POST_SCHEMA).parquet(out_dir)
+        consume(files, run, bounded.work)
+        posts = spark.read.schema(POST_SCHEMA).parquet(bounded.out)
         # extract_post already pins a missing/null score to 0, but the
         # oracle's SUM(COALESCE(n_chars, 0)) yields 0 (not NULL) even
         # for a group whose inputs were all NULL — mirror that shape
@@ -582,8 +562,6 @@ def _captures_rollup(spark: SparkSession, sf_dir: str, name: str, consume) -> Da
             .alias("total_score"),
         )
         return materialize(out)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -615,7 +593,7 @@ def streaming_pyds_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     end) → commit, checkpointed resume) now executes and is further
     restart-tested in tests/test_stream_recovery.py."""
     return _captures_rollup(
-        spark, sf_dir, "pyds", lambda files, run, _work: run(paths=",".join(files))
+        spark, sf_dir, lambda files, run, _work: run(paths=",".join(files))
     )
 
 
@@ -657,7 +635,7 @@ def streaming_pyds_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write("\n".join(files[half:]) + "\n")
             run(manifest=manifest)
 
-    return _captures_rollup(spark, sf_dir, "pydsm", consume)
+    return _captures_rollup(spark, sf_dir, consume)
 
 
 @register(
@@ -687,35 +665,17 @@ def streaming_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         RedditStreamSink,
         sink_committed_files,
     )
-    from reddit_can_bigdata_spark.tables import load_tables
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    tag = uuid.uuid4().hex[:8]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"pyds_sinksrc_{tag}")
-    topic_dir = os.path.join(tempfile.gettempdir(), f"pyds_topic_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_pyds_sink_{tag}")
-    os.makedirs(stream_dir, exist_ok=True)
-    os.makedirs(topic_dir, exist_ok=True)
-    os.symlink(
-        os.path.abspath(os.path.join(sf_dir, "documents.parquet")),
-        os.path.join(stream_dir, "documents.parquet"),
-    )
-    try:
-        spark.dataSource.register(RedditStreamSink)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .parquet(stream_dir)
-            .select("doc_id", "lang", "n_chars")
+    spark.dataSource.register(RedditStreamSink)
+    with BoundedRun(spark, os.path.join(sf_dir, "documents.parquet")) as run:
+        stream = parquet_stream(spark, run.src, ts_col=None)
+        writer = (
+            stream.select("doc_id", "lang", "n_chars")
+            .writeStream.format("reddit_rest_sink")
+            .option("path", run.out)
         )
-        q = (
-            stream.writeStream.format("reddit_rest_sink")
-            .option("path", topic_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        committed = sink_committed_files(topic_dir)
+        run.drain(start_available_now(writer, run.ckpt))
+        committed = sink_committed_files(run.out)
         if not committed:
             return spark.createDataFrame(
                 [], "lang string, cnt bigint, total_chars bigint"
@@ -730,7 +690,3 @@ def streaming_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_chars"),
         )
         return materialize(out)
-    finally:
-        shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(topic_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)

@@ -20,12 +20,13 @@ Python once per micro-batch; everything else stays JVM-side.
 
 from __future__ import annotations
 
+import os
 from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
-from reddit_can_bigdata_spark.operators.common import materialize
 from reddit_can_bigdata_spark.registry import register
+from reddit_can_bigdata_spark.streaming.pipeline import BoundedRun, parquet_stream
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -106,42 +107,17 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
 
 
 def run_sessionize_stream(
-    spark, source_dir: str, checkpoint_dir: str, max_files_per_trigger: int | None = None
+    spark, source: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """Drive `sessionize_stream` over a parquet file-stream with an
-    availableNow trigger and a memory sink; returns the materialized
-    closed-session table. ``max_files_per_trigger=1`` forces one
-    micro-batch per input file so cross-batch state carry-over is
-    actually exercised (a single batch would never leave Python)."""
-    import uuid
-
-    raw_schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(raw_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    # raw events store TIMESTAMP(NANOS) read as bigint (see tables.py)
-    if dict(stream.dtypes)["ts"] == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(stream.dtypes)["ts"] != "timestamp":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        return materialize(spark.table(name))
-    finally:
-        if q.isActive:
-            q.stop()
-        spark.catalog.dropTempView(name)
+    """Drive `sessionize_stream` over a parquet file-stream of
+    ``source`` (a file or a directory) as one bounded run into a memory
+    sink; returns the materialized closed-session table.
+    ``max_files_per_trigger=1`` forces one micro-batch per input file so
+    cross-batch state carry-over is actually exercised (a single batch
+    would never leave Python)."""
+    with BoundedRun(spark, source) as run:
+        stream = parquet_stream(spark, run.src, max_files_per_trigger=max_files_per_trigger)
+        return run.to_memory(sessionize_stream(stream))
 
 
 @register(
@@ -185,25 +161,10 @@ def streaming_sessionize_stateful(spark, sf_dir: str) -> DataFrame:
     stream/batch equivalence, the Structured Streaming correctness
     contract, here extended to custom ``applyInPandasWithState``
     logic. Timestamps emitted as epoch micros (engine-portable)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from reddit_can_bigdata_spark.operators.common import tables
 
     tables(spark, sf_dir)  # sets the nanos-as-long conf for the raw read
-    path = os.path.join(sf_dir, "events.parquet")
-    tag = uuid.uuid4().hex[:8]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"sessstream_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_sess_{tag}")
-    os.makedirs(stream_dir, exist_ok=True)
-    os.symlink(os.path.abspath(path), os.path.join(stream_dir, "events.parquet"))
-    try:
-        out = run_sessionize_stream(spark, stream_dir, ckpt)
-    finally:
-        shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    out = run_sessionize_stream(spark, os.path.join(sf_dir, "events.parquet"))
     return out.select(
         "user_id",
         F.unix_micros("session_start").alias("session_start_us"),

@@ -32,14 +32,15 @@ importing this package, too late for the shim to reach its workers.
 
 from __future__ import annotations
 
+import os
 from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import LongType, StructField, StructType
 
-from reddit_can_bigdata_spark.operators.common import materialize
 from reddit_can_bigdata_spark.registry import register
+from reddit_can_bigdata_spark.streaming.pipeline import BoundedRun, parquet_stream
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -131,55 +132,30 @@ def milestones_stream(events: DataFrame) -> DataFrame:
 
 
 def run_milestones_stream(
-    spark, source_dir: str, checkpoint_dir: str, max_files_per_trigger: int | None = None
+    spark, source: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """Drive the milestone processor as a real availableNow streaming
-    query over a parquet file-stream; returns the materialized
-    milestone table."""
-    import uuid
-
-    raw_schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(raw_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    if dict(stream.dtypes)["ts"] == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(stream.dtypes)["ts"] != "timestamp":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    name = f"milestones_{uuid.uuid4().hex[:8]}"
+    """Drive the milestone processor as one bounded run over a parquet
+    file-stream of ``source`` (a file or a directory); returns the
+    materialized milestone table."""
     # transformWithState requires a state store with column families;
     # the default HDFSBackedStateStoreProvider refuses (verified:
     # UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES), so pin
     # the built-in RocksDB provider for this query and restore after.
     provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            milestones_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+    with BoundedRun(spark, source) as run:
+        stream = parquet_stream(spark, run.src, max_files_per_trigger=max_files_per_trigger)
+        prev_provider = spark.conf.get(provider_key, None)
+        spark.conf.set(
+            provider_key,
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
         try:
-            q.awaitTermination()
-            return materialize(spark.table(name))
+            return run.to_memory(milestones_stream(stream))
         finally:
-            if q.isActive:
-                q.stop()
-            spark.catalog.dropTempView(name)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
+            if prev_provider is None:
+                spark.conf.unset(provider_key)
+            else:
+                spark.conf.set(provider_key, prev_provider)
 
 
 @_register_if_runnable(
@@ -202,22 +178,7 @@ def streaming_user_milestones(spark, sf_dir: str) -> DataFrame:
     hash-checked against the plain window-function SQL (possible
     because the emission rule is batch-invariant — see module
     docstring). State: one bigint per user."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from reddit_can_bigdata_spark.operators.common import tables
 
     tables(spark, sf_dir)  # sets the nanos-as-long conf for the raw read
-    path = os.path.join(sf_dir, "events.parquet")
-    tag = uuid.uuid4().hex[:8]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"twsstream_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_tws_{tag}")
-    os.makedirs(stream_dir, exist_ok=True)
-    os.symlink(os.path.abspath(path), os.path.join(stream_dir, "events.parquet"))
-    try:
-        return run_milestones_stream(spark, stream_dir, ckpt)
-    finally:
-        shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return run_milestones_stream(spark, os.path.join(sf_dir, "events.parquet"))

@@ -12,7 +12,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
 
 TABLE_NAMES = (
     "region",
@@ -53,6 +52,32 @@ def _dir_fingerprint(sf_dir: str) -> tuple:
     return tuple(parts)
 
 
+def coerce_ts(df: DataFrame, col: str = "ts") -> DataFrame:
+    """Event time as TIMESTAMP, from each form it takes on disk: the
+    one coercion every batch and stream read of events goes through
+    (event-time watermarks and ``unix_micros`` require TIMESTAMP).
+
+    - ``bigint`` is parquet TIMESTAMP(NANOS) read as epoch nanos (see
+      session.py nanosAsLong); the values are µs-precision, so the
+      div-1000 conversion is lossless;
+    - ``timestamp_ntz`` is naive parquet timestamp[us] under Spark 4's
+      inferTimestampNTZ. Session tz is pinned to UTC (session.py), so
+      the cast keeps the wall clock and matches DuckDB's naive reading
+      of the same file;
+    - ``timestamp`` passes through. Any other dtype is a schema
+      regression and raises ``TypeError``."""
+    dtype = dict(df.dtypes)[col]
+    if dtype == "bigint":
+        return df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
+    if dtype == "timestamp_ntz":
+        return df.withColumn(col, F.col(col).cast("timestamp"))
+    if dtype != "timestamp":
+        raise TypeError(
+            f"events.{col}: expected bigint/timestamp/timestamp_ntz, got {dtype}"
+        )
+    return df
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every testdata table as a DataFrame and register temp views.
 
@@ -74,8 +99,9 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             df.createOrReplaceTempView(name)
         return dict(hit)
     # events.parquet stores TIMESTAMP(NANOS), which Spark rejects unless
-    # read as long (converted back to timestamp below). Set defensively
-    # here: the harness/driver may hand us a session built without it.
+    # read as long (converted back to timestamp by coerce_ts). Set
+    # defensively here: a caller may hand us a session built without
+    # it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     out: dict[str, DataFrame] = {}
     for name in TABLE_NAMES:
@@ -83,20 +109,8 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         if not os.path.exists(path):
             continue
         df = spark.read.parquet(path)
-        if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
-            # parquet TIMESTAMP(NANOS) read as epoch-nanos long (see
-            # session.py nanosAsLong); values are µs-precision so the
-            # div-1000 conversion is lossless.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif name == "events" and isinstance(
-            df.schema["ts"].dataType, TimestampNTZType
-        ):
-            # parquet naive timestamp[us] reads as TIMESTAMP_NTZ under
-            # Spark 4's inferTimestampNTZ; functions like unix_micros
-            # require TIMESTAMP. Session tz is pinned to UTC
-            # (session.py), so this cast preserves the wall clock and
-            # matches DuckDB's naive reading of the same file.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        if name == "events":
+            df = coerce_ts(df)
         df.createOrReplaceTempView(name)
         out[name] = df
     _CATALOG_MEMO[key] = dict(out)

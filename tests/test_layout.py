@@ -3,7 +3,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from reddit_can_bigdata_spark.plans.inspect import count_exchanges, formatted_plan

@@ -33,8 +33,6 @@ def _norm_cell(v):
         if v == 0:
             return 0.0
         # 9 significant digits
-        from decimal import Decimal
-
         return float(f"{v:.9g}")
     if isinstance(v, (int, str)):
         return v

@@ -11,7 +11,6 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from reddit_can_bigdata_spark.sources.pyds import (
     RedditStreamDataSource,

@@ -7,8 +7,8 @@ def test_merge_upsert_deterministic_winner_within_batch(spark):
     """When one batch carries several updates for the same key, the
     MERGE winner (`resolve_updates`) must be deterministic: highest
     version_col (last-write-wins like the reference's sequential loop),
-    or the descending struct of the remaining columns when no version
-    column is given."""
+    ties on it broken by the descending struct of the remaining
+    columns."""
     from reddit_can_bigdata_spark.sources.storage import resolve_updates
 
     df = spark.createDataFrame(
@@ -17,9 +17,11 @@ def test_merge_upsert_deterministic_winner_within_batch(spark):
     got = resolve_updates(df, "id", version_col="ver").collect()
     assert len(got) == 1 and got[0]["val"] == 1  # ver=3 wins
 
-    df2 = spark.createDataFrame([("k", 5), ("k", 9), ("k", 1)], "id string, val int")
-    got2 = resolve_updates(df2, "id").collect()
-    assert len(got2) == 1 and got2[0]["val"] == 9  # max struct wins
+    df2 = spark.createDataFrame(
+        [("k", 5, 4), ("k", 9, 4), ("k", 1, 4)], "id string, val int, ver int"
+    )
+    got2 = resolve_updates(df2, "id", version_col="ver").collect()
+    assert len(got2) == 1 and got2[0]["val"] == 9  # tied versions: max struct wins
 
 
 def test_extract_post_defaults_and_filter():

@@ -45,9 +45,7 @@ def test_sessionize_stream_closes_sessions_across_batches(spark, tmp_path):
     )
     os.utime(src / "f2.parquet")
 
-    out = run_sessionize_stream(
-        spark, str(src), str(tmp_path / "ckpt"), max_files_per_trigger=1
-    )
+    out = run_sessionize_stream(spark, str(src), max_files_per_trigger=1)
     got = sorted(
         (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
         for r in out.collect()
@@ -146,6 +144,7 @@ def test_transform_with_state_executes_and_matches_oracle(spark, sf_dir, tmp_pat
         TWS_EXECUTABLE,
         run_milestones_stream,
     )
+    from reddit_can_bigdata_spark.tables import coerce_ts
 
     if not TWS_EXECUTABLE:
         pytest.skip(
@@ -157,15 +156,11 @@ def test_transform_with_state_executes_and_matches_oracle(spark, sf_dir, tmp_pat
     src = str(tmp_path / "src")
     events.select("user_id", "event_id", "ts").write.parquet(src)
 
-    got_df = run_milestones_stream(spark, src, str(tmp_path / "cp"))
+    got_df = run_milestones_stream(spark, src)
     got = sorted((r.user_id, r.milestone, r.tus) for r in got_df.collect())
 
     # batch oracle: row_number over (ts, event_id) per user
-    src_df = spark.read.parquet(src)
-    if dict(src_df.dtypes)["ts"] == "bigint":
-        src_df = src_df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(src_df.dtypes)["ts"] != "timestamp":  # e.g. timestamp_ntz
-        src_df = src_df.withColumn("ts", F.col("ts").cast("timestamp"))
+    src_df = coerce_ts(spark.read.parquet(src))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     expected_df = (
         src_df.withColumn("rn", F.row_number().over(w))
@@ -183,8 +178,6 @@ def test_transform_with_state_executes_and_matches_oracle(spark, sf_dir, tmp_pat
     assert expected, "fixture should produce at least one milestone"
 
     # batch-invariance: one file per micro-batch yields identical rows
-    rebatched = run_milestones_stream(
-        spark, src, str(tmp_path / "cp2"), max_files_per_trigger=1
-    )
+    rebatched = run_milestones_stream(spark, src, max_files_per_trigger=1)
     got2 = sorted((r.user_id, r.milestone, r.tus) for r in rebatched.collect())
     assert got2 == expected

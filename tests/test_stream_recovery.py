@@ -26,7 +26,6 @@ import shutil
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
@@ -51,19 +50,6 @@ def halves(sf_dir, tmp_path_factory):
     return str(h1), str(h2)
 
 
-def _stream(spark, src_dir: str, schema):
-    """File-stream over ``src_dir`` with the repo's standard event-time
-    coercion (raw fixtures carry TIMESTAMP(NANOS)→bigint; pandas
-    rewrites carry TIMESTAMP_NTZ)."""
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    ts_dtype = dict(stream.dtypes)["ts"]
-    if ts_dtype == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_dtype != "timestamp":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
-
-
 def _run_phase(spark, build, src_dir, ckpt, *, sink: str, out_dir=None, name=None):
     """One availableNow run of ``build(stream_df)`` against ``ckpt``.
 
@@ -72,8 +58,9 @@ def _run_phase(spark, build, src_dir, ckpt, *, sink: str, out_dir=None, name=Non
     sink="memory": complete-mode memory table (streaming aggregations);
     returns the collected rows.
     """
-    schema = spark.read.parquet(src_dir).schema
-    out = build(_stream(spark, src_dir, schema))
+    from reddit_can_bigdata_spark.streaming.pipeline import parquet_stream
+
+    out = build(parquet_stream(spark, src_dir))
     if sink == "parquet":
         q = (
             out.writeStream.format("parquet")

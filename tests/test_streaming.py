@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_stream_batch_equivalence(spark, sf_dir):
     """The availableNow streaming aggregation must equal the batch
@@ -338,3 +340,80 @@ def test_kafka_source_plan_assembly(spark):
         F.col("id").alias("key"), F.to_json(F.struct("*")).alias("value")
     )
     assert set(out.columns) == {"key", "value"}
+
+
+#: event times with µs detail, as epoch micros
+_TS_US = [1704067200123456, 1704070800000001, 1704153600999999]
+
+
+def _events_with_ts(path, form: str) -> str:
+    """A one-file events table whose ``ts`` reads as Spark dtype
+    ``form``: TIMESTAMP(NANOS) reads as ``bigint`` epoch nanos (the
+    session's nanosAsLong), naive timestamp[us] as ``timestamp_ntz``,
+    UTC-adjusted timestamp[us] as ``timestamp``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = {
+        "bigint": pa.array([u * 1000 for u in _TS_US], pa.timestamp("ns")),
+        "timestamp_ntz": pa.array(_TS_US, pa.timestamp("us")),
+        "timestamp": pa.array(_TS_US, pa.timestamp("us", tz="UTC")),
+        "string": pa.array(["2024-01-01 00:00:00.123456"] * len(_TS_US)),
+    }[form]
+    path.mkdir()
+    ids = pa.array(range(1, len(_TS_US) + 1), pa.int64())
+    pq.write_table(pa.table({"event_id": ids, "ts": ts}), path / "events.parquet")
+    return str(path)
+
+
+@pytest.mark.parametrize("form", ["bigint", "timestamp_ntz", "timestamp"])
+def test_event_ts_coercion_same_instants_batch_and_stream(spark, sf_dir, tmp_path, form):
+    """Each on-disk form of ``events.ts`` gives the same instants
+    through `load_tables` and through the stream reader."""
+    from pyspark.sql import functions as F
+
+    from reddit_can_bigdata_spark.streaming.pipeline import BoundedRun, parquet_stream
+    from reddit_can_bigdata_spark.tables import load_tables
+
+    src = _events_with_ts(tmp_path / "sf", form)
+    assert dict(spark.read.parquet(src).dtypes)["ts"] == form
+    micros = ("event_id", F.unix_micros("ts").alias("us"))
+    try:
+        batch = load_tables(spark, src)["events"].select(*micros).collect()
+    finally:
+        load_tables(spark, sf_dir)  # point the views back at the fixture
+    with BoundedRun(spark, src) as run:
+        streamed = run.to_memory(parquet_stream(spark, run.src).select(*micros)).collect()
+    want = list(enumerate(_TS_US, 1))
+    assert sorted(map(tuple, batch)) == want
+    assert sorted(map(tuple, streamed)) == want
+
+
+def test_event_ts_coercion_rejects_other_dtypes(spark, sf_dir, tmp_path):
+    from reddit_can_bigdata_spark.streaming.pipeline import parquet_stream
+    from reddit_can_bigdata_spark.tables import load_tables
+
+    src = _events_with_ts(tmp_path / "sf", "string")
+    with pytest.raises(TypeError, match="events.ts"):
+        try:
+            load_tables(spark, src)
+        finally:
+            load_tables(spark, sf_dir)
+    with pytest.raises(TypeError, match="events.ts"):
+        parquet_stream(spark, src)
+
+
+def test_stream_etl_keeps_nanos_event_time(spark, tmp_path):
+    """`stream_etl_to_parquet` over TIMESTAMP(NANOS) files (epoch nanos
+    as bigint): the sink's ts are the source instants, not the nanos
+    read as seconds."""
+    from pyspark.sql import functions as F
+
+    from reddit_can_bigdata_spark.streaming.pipeline import stream_etl_to_parquet
+
+    src = _events_with_ts(tmp_path / "src", "bigint")
+    out = str(tmp_path / "out")
+    q = stream_etl_to_parquet(spark, src, out, str(tmp_path / "ckpt"), id_col="event_id")
+    q.awaitTermination()
+    got = spark.read.parquet(out).select("event_id", F.unix_micros("ts")).collect()
+    assert sorted(map(tuple, got)) == list(enumerate(_TS_US, 1))
