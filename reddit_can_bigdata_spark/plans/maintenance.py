@@ -30,15 +30,29 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DateType, StructField, StructType
 
 from reddit_can_bigdata_spark.operators.common import materialize
 from reddit_can_bigdata_spark.registry import register
+
+
+@contextmanager
+def _scratch_table(prefix: str):
+    """A fresh ``<prefix>_<token>`` table path under the temp dir, dropped
+    on every exit path. ``drop_table`` removes a plain directory and a
+    protocol-managed table (pointer, generations, commit log) alike."""
+    from reddit_can_bigdata_spark.sources.storage import drop_table
+
+    path = os.path.join(tempfile.gettempdir(), f"{prefix}_{uuid.uuid4().hex[:8]}")
+    try:
+        yield path
+    finally:
+        drop_table(path)
 
 
 def backfill_day(
@@ -145,10 +159,7 @@ def maint_backfill_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_can_bigdata_spark.tables import load_tables
 
     ev = load_tables(spark, sf_dir)["events"]
-    path = os.path.join(
-        tempfile.gettempdir(), f"events_backfill_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with _scratch_table("events_backfill") as path:
         write_date_partitioned(ev, path, "ts", part_col="day")
         corrected = (
             ev.where(
@@ -184,8 +195,6 @@ def maint_backfill_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return materialize(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @register(
@@ -213,10 +222,7 @@ def maint_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_can_bigdata_spark.tables import load_tables
 
     ev = load_tables(spark, sf_dir)["events"]
-    path = os.path.join(
-        tempfile.gettempdir(), f"events_fragmented_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with _scratch_table("events_fragmented") as path:
         ev.repartition(64).write.mode("overwrite").parquet(path)
         compact_table(spark, path, target_file_bytes=128 << 20)
         compacted = spark.read.schema(ev.schema).parquet(path)
@@ -228,13 +234,6 @@ def maint_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
         return materialize(out)
-    finally:
-        # after compact_table the path is a protocol-managed pointer:
-        # plain rmtree would skip the symlink and leak the generation
-        # directories + commit log
-        from reddit_can_bigdata_spark.sources.storage import drop_table
-
-        drop_table(path)
 
 
 @register(
@@ -267,11 +266,7 @@ def maint_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_can_bigdata_spark.tables import load_tables
 
     docs = load_tables(spark, sf_dir)["documents"]
-    path = os.path.join(
-        tempfile.gettempdir(), f"docs_evolved_{uuid.uuid4().hex[:8]}"
-    )
-    gen2_schema = None
-    try:
+    with _scratch_table("docs_evolved") as path:
         gen1 = docs.where(
             (F.col("doc_id") % 2 == 0) | F.col("doc_id").isNull()
         ).select("doc_id", "lang", "text")
@@ -293,8 +288,6 @@ def maint_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_score"),
         )
         return materialize(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @register(
@@ -329,16 +322,12 @@ def maint_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     guessing among randomly-tokened directories."""
     from reddit_can_bigdata_spark.sources.storage import (
         atomic_rewrite,
-        drop_table,
         recover_table,
     )
     from reddit_can_bigdata_spark.tables import load_tables
 
     ev = load_tables(spark, sf_dir)["events"]
-    path = os.path.join(
-        tempfile.gettempdir(), f"events_crashrec_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with _scratch_table("events_crashrec") as path:
         ev.repartition(16).write.mode("overwrite").parquet(path)
         # the real protocol: stage + commit + relink (also adopts the
         # pre-protocol directory as generation 0)
@@ -360,8 +349,6 @@ def maint_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
         return materialize(out)
-    finally:
-        drop_table(path)
 
 
 @register(
@@ -411,17 +398,13 @@ def maint_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_can_bigdata_spark.sources.storage import (
         ConcurrentWriteError,
         atomic_rewrite,
-        drop_table,
         resolve_table,
         table_generation,
     )
     from reddit_can_bigdata_spark.tables import load_tables
 
     ev = load_tables(spark, sf_dir)["events"]
-    path = os.path.join(
-        tempfile.gettempdir(), f"events_ccwriters_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with _scratch_table("events_ccwriters") as path:
         ev.write.mode("overwrite").parquet(path)
 
         # both writers snapshot the SAME generation before either
@@ -473,8 +456,6 @@ def maint_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
         return materialize(out)
-    finally:
-        drop_table(path)
 
 
 @register(
@@ -520,7 +501,6 @@ def maint_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     `network-analysis/network_analysis.py:324-325`)."""
     from reddit_can_bigdata_spark.sources.storage import (
         atomic_rewrite,
-        drop_table,
         resolve_generation,
         resolve_table,
         table_generation,
@@ -529,10 +509,7 @@ def maint_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_can_bigdata_spark.tables import load_tables
 
     ev = load_tables(spark, sf_dir)["events"]
-    path = os.path.join(
-        tempfile.gettempdir(), f"events_timetravel_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with _scratch_table("events_timetravel") as path:
         ev.write.mode("overwrite").parquet(path)
 
         # retention rewrite: adoption commits the original as g0, the
@@ -573,8 +550,6 @@ def maint_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return materialize(out)
-    finally:
-        drop_table(path)
 
 
 @register(
@@ -630,7 +605,6 @@ def maint_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     history to diff at all."""
     from reddit_can_bigdata_spark.sources.storage import (
         atomic_rewrite,
-        drop_table,
         resolve_generation,
         resolve_table,
         table_generation,
@@ -639,10 +613,7 @@ def maint_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_tables(spark, sf_dir)["events"]
     cols = ["event_id", "user_id", "event_type", "ts", "value", "props"]
-    path = os.path.join(
-        tempfile.gettempdir(), f"events_cdc_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with _scratch_table("events_cdc") as path:
         ev.select(*cols).write.mode("overwrite").parquet(path)
 
         gen0 = table_generation(path)
@@ -671,5 +642,3 @@ def maint_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("bigint").alias("n"))
         )
         return materialize(out)
-    finally:
-        drop_table(path)

@@ -165,7 +165,6 @@ def render_page(
     - ``stats``: start, end
     - ``home`` / ``network``: no widgets (params rejected)
     """
-    frames = page_queries(spark, sf_dir, page)
     binders = {
         "posts": (
             "dash_posts_explorer",
@@ -186,13 +185,19 @@ def render_page(
     if page not in binders:
         if params:
             raise TypeError(f"page {page!r} takes no widget parameters")
-        return frames
+        return page_queries(spark, sf_dir, page)
     key, builder, defaults = binders[page]
     unknown = set(params) - set(defaults)
     if unknown:
         raise TypeError(f"unknown widget parameter(s) for {page!r}: {sorted(unknown)}")
-    frames[key] = builder(spark, sf_dir, **{**defaults, **params})
-    return frames
+    # the widget key is built once, from the widget state: its registered
+    # fixed point would plan the same frame only to be replaced
+    return {
+        name: builder(spark, sf_dir, **{**defaults, **params})
+        if name == key
+        else REGISTRY[name].fn(spark, sf_dir)
+        for name in PAGES[page].queries
+    }
 
 
 # ---------------------------------------------------------------------------

@@ -40,14 +40,8 @@ def sf001_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from tools.oracle_check import duck_views
 
-    con = duckdb.connect()
-    from reddit_can_bigdata_spark.tables import TABLE_NAMES
-
-    for name in TABLE_NAMES:
-        path = os.path.join(SF_DIR, f"{name}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
+    con = duck_views(SF_DIR)
     yield con
     con.close()

@@ -175,6 +175,39 @@ def test_render_page_rejects_bad_params(spark, sf_dir):
         render_page(spark, sf_dir, "home", anything=1)
 
 
+@pytest.mark.parametrize(
+    "page,builder,params",
+    [
+        ("posts", "posts_explorer", {"limit": 3}),
+        ("sentiments", "sentiment_samples", {"n": 2}),
+        ("stats", "stats_timeline", {"start": "2024-01-05"}),
+    ],
+)
+def test_render_page_builds_the_widget_frame_once(spark, sf_dir, monkeypatch, page, builder, params):
+    """The widget-bound frame replaces its registered fixed point, so a
+    render calls the page's builder once (the fixed point calls it too),
+    and a bad parameter is refused before anything is built."""
+    from reddit_can_bigdata_spark import serving
+
+    calls = []
+
+    def counted(spark, sf_dir, **kwargs):
+        calls.append(kwargs)
+        return "widget frame"
+
+    monkeypatch.setattr(serving, builder, counted)
+    for kwargs in ({}, params):
+        calls.clear()
+        frames = serving.render_page(spark, sf_dir, page, **kwargs)
+        assert len(calls) == 1, calls
+        assert list(frames) == list(PAGES[page].queries)
+        assert frames[PAGES[page].queries[-1]] == "widget frame"
+    calls.clear()
+    with pytest.raises(TypeError, match="unknown widget parameter"):
+        serving.render_page(spark, sf_dir, page, typo=1)
+    assert calls == []
+
+
 # --------------------- parameterized-oracle grid sweep ----------------------
 # Round-9 judge item #6: the dash_* fixed points are externally
 # hash-green; these sweeps prove the widget FAMILIES they stand for —

@@ -3,33 +3,24 @@
 with their DuckDB oracles there.
 
 This pins the fix for the round-5 empty-input fuzz findings
-(``tools/empty_check.py``): seven Spark-side crashes (ANSI
+(``tools/oracle_check.py empty``): seven Spark-side crashes (ANSI
 DIVIDE_BY_ZERO in graph density / clustering / funnel percentages,
 Python ``1/N`` and ``int(None)`` in PageRank / k-core / the influencer
 composites) and the three ROLLUP/CUBE queries where Spark emits no
 grand-total row on empty input while the SQL standard (and DuckDB)
 emits one — repaired scan-free by ``common.standard_grand_total``.
 
-The whole-registry fuzz stays a tool (15 min); this suite re-runs just
-the queries that ever failed it, so the class stays pinned cheaply.
+The whole-registry fuzz stays a tool; this suite re-runs just the
+queries that ever failed one of its tree axes, each through the tool's
+own per-query check, so the classes stay pinned cheaply.
 """
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
 
 from reddit_can_bigdata_spark import registry
-from reddit_can_bigdata_spark.tables import TABLE_NAMES
-from tools.empty_check import (
-    make_empty_dir,
-    make_nulls_dir,
-    make_slice_dir,
-    make_textfuzz_dir,
-    norm as _norm_rows,
-)
+from tools.oracle_check import check, duck_views, norm, tree_dir
 
 FIXED = [
     "g8_graph_metadata",
@@ -43,72 +34,13 @@ FIXED = [
     "hypertable_rollup",
 ]
 
-
-@pytest.fixture(scope="module")
-def empty_dir() -> str:
-    return make_empty_dir()
-
-
-@pytest.fixture(scope="module")
-def duck(empty_dir):
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(empty_dir, t)}.parquet'"
-        )
-    yield con
-    con.close()
-
-
-_norm = _norm_rows  # one shared normalizer with the whole-registry fuzz tool
-
-
-@pytest.mark.parametrize("name", FIXED)
-def test_empty_input_matches_oracle(spark, empty_dir, duck, name):
-    registry._ensure_loaded()
-    spec = registry.REGISTRY[name]
-    sdf = spec.fn(spark, empty_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(spec.oracle)
-    dcols = [c[0] for c in res.description]
-    drows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(dcols)
-    assert _norm(srows, sdf.columns) == _norm(drows, dcols)
-
-
 SINGLE_ROW_FIXED = [
     # LIMIT-1 fuzz finding: min-max normalization over a single user
     # (max == min) divided by zero — must yield NULL on both engines
     "w5_w6_normalized_composite",
 ]
 
-
-@pytest.mark.parametrize("name", SINGLE_ROW_FIXED)
-def test_single_row_input_matches_oracle(spark, name):
-    """The n=1 slice exercises the single-sample edge (degenerate
-    normalization ranges, stddev/percentile of one) that neither the
-    empty fuzz nor full-SF parity reaches."""
-    registry._ensure_loaded()
-    one_dir = make_slice_dir(1)
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(one_dir, t)}.parquet'"
-        )
-    spec = registry.REGISTRY[name]
-    sdf = spec.fn(spark, one_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    res = con.execute(spec.oracle)
-    dcols = [c[0] for c in res.description]
-    drows = res.fetchall()
-    con.close()
-    assert sorted(sdf.columns) == sorted(dcols)
-    assert _norm(srows, sdf.columns) == _norm(drows, dcols)
-
-
-# NULL-injection fuzz findings (tools/empty_check.py --nulls): the 19
+# NULL-injection fuzz findings (oracle_check nulls): the 19
 # queries that ever diverged when every 5th row of each non-key column
 # is NULL. Classes fixed: NULL embeddings (DuckDB list_reduce raises
 # where Spark yields NULL — both sides now filter), NULL event times
@@ -136,35 +68,7 @@ NULLS_FIXED = [
     "unpivot_lineitem_measures",
 ]
 
-
-@pytest.fixture(scope="module")
-def nulls_ctx():
-    nulls_dir = make_nulls_dir()
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(nulls_dir, t)}.parquet'"
-        )
-    yield nulls_dir, con
-    con.close()
-
-
-@pytest.mark.parametrize("name", NULLS_FIXED)
-def test_null_injected_input_matches_oracle(spark, nulls_ctx, name):
-    nulls_dir, con = nulls_ctx
-    registry._ensure_loaded()
-    spec = registry.REGISTRY[name]
-    sdf = spec.fn(spark, nulls_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    res = con.execute(spec.oracle)
-    dcols = [c[0] for c in res.description]
-    drows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(dcols)
-    assert _norm(srows, sdf.columns) == _norm(drows, dcols)
-
-
-# Adversarial-Unicode fuzz findings (tools/empty_check.py --textfuzz):
+# Adversarial-Unicode fuzz findings (oracle_check textfuzz):
 # the queries that diverged on hostile text. Root cause was the İ/U+0130
 # case mapping (Java's full mapping expands to 'i'+U+0307, DuckDB's
 # simple mapping gives 'i') — both sides now collapse exactly that
@@ -178,32 +82,55 @@ TEXTFUZZ_FIXED = [
 ]
 
 
-@pytest.mark.parametrize("name", TEXTFUZZ_FIXED)
-def test_adversarial_text_matches_oracle(spark, name):
-    registry._ensure_loaded()
-    fuzz_dir = make_textfuzz_dir()
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(fuzz_dir, t)}.parquet'"
-        )
-    spec = registry.REGISTRY[name]
-    sdf = spec.fn(spark, fuzz_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    res = con.execute(spec.oracle)
-    dcols = [c[0] for c in res.description]
-    drows = res.fetchall()
-    con.close()
-    assert sorted(sdf.columns) == sorted(dcols)
-    assert _norm(srows, sdf.columns) == _norm(drows, dcols)
+@pytest.fixture(scope="module")
+def ducks():
+    """One DuckDB connection per derived tree, opened on first use."""
+    cons = {}
+
+    def get(tree):
+        if tree not in cons:
+            cons[tree] = duck_views(tree_dir(tree))
+        return cons[tree]
+
+    yield get
+    for con in cons.values():
+        con.close()
 
 
-def test_grand_total_row_values(spark, empty_dir):
+def _matches_oracle_on(tree, names):
+    """One test over ``names`` on one derived tree: the whole-registry
+    tool's own per-query check, which must say OK."""
+
+    @pytest.mark.parametrize("name", names)
+    def test(spark, ducks, name):
+        status, detail = check(spark, name, tree_dir(tree), duck=ducks(tree))
+        assert status == "OK", f"{name} on {tree}: {detail}"
+
+    return test
+
+
+test_empty_input_matches_oracle = _matches_oracle_on("empty", FIXED)
+# the n=1 slice exercises the single-sample edge (degenerate
+# normalization ranges, stddev/percentile of one) that neither the
+# empty fuzz nor full-SF parity reaches
+test_single_row_input_matches_oracle = _matches_oracle_on("limit1", SINGLE_ROW_FIXED)
+test_null_injected_input_matches_oracle = _matches_oracle_on("nulls", NULLS_FIXED)
+test_adversarial_text_matches_oracle = _matches_oracle_on("textfuzz", TEXTFUZZ_FIXED)
+
+
+def test_normal_form_keeps_column_names_and_reprs():
+    """Column order does not matter, column names do, and cells compare
+    by repr, so an integer and an equal float differ."""
+    assert norm(["a", "b"], [(1, "x")]) == norm(["b", "a"], [("x", 1)])
+    assert norm(["a", "b"], [(1, "x")]) != norm(["a", "c"], [(1, "x")])
+    assert norm(["a"], [(1,)]) != norm(["a"], [(1.0,)])
+
+
+def test_grand_total_row_values(spark):
     """The SQL-standard () grouping set on empty input: COUNT 0, sums
     NULL, all group columns NULL — exactly one row."""
     registry._ensure_loaded()
-    rows = registry.REGISTRY["rollup_priority_status"].fn(spark, empty_dir).collect()
+    rows = registry.REGISTRY["rollup_priority_status"].fn(spark, tree_dir("empty")).collect()
     assert len(rows) == 1
     r = rows[0].asDict()
     assert r["cnt"] == 0

@@ -3,10 +3,10 @@
 At cluster scale ``spark.sql.shuffle.partitions`` and AQE are tuning
 knobs an operator flips freely — float accumulation order, unstable
 window tiebreaks, or LIMIT-without-ORDER would each silently make
-results depend on them. The full-registry sweep lives in
-``tools/invariance_check.py`` (0 failures / 174 on both axes); this
-test pins a representative subset in CI so a future edit that
-reintroduces knob-dependence fails fast.
+results depend on them. The full-registry sweep is the ``partitions``
+and ``aqe`` axes of ``tools/oracle_check.py``; this test runs a
+representative subset through the same per-query check, so a future
+edit that reintroduces knob-dependence fails fast.
 
 Subset chosen one per risk class:
 - DECIMAL-exact aggregation over floats (tpch_q1),
@@ -22,8 +22,7 @@ from __future__ import annotations
 
 import pytest
 
-from reddit_can_bigdata_spark import registry
-from tools.empty_check import norm
+from tools.oracle_check import KNOBS, check
 
 QUERIES = [
     "tpch_q1_pricing_summary",
@@ -34,34 +33,14 @@ QUERIES = [
     "dedup_minhash_lsh",
 ]
 
-KNOBS = [
-    ("spark.sql.shuffle.partitions", ("3", "8")),
-    ("spark.sql.adaptive.enabled", ("false", "true")),
-]
 
-
-def _collect(spark, name, sf_dir):
-    registry._ensure_loaded()
-    sdf = registry.REGISTRY[name].fn(spark, sf_dir)
-    return norm([tuple(r) for r in sdf.collect()], sdf.columns)
-
-
-@pytest.mark.parametrize("knob,values", KNOBS, ids=["partitions", "aqe"])
+@pytest.mark.parametrize("knob", list(KNOBS))
 @pytest.mark.parametrize("name", QUERIES)
-def test_knob_invariance(spark, sf_dir, name, knob, values):
-    # Both confs are read at plan time, so SET inside one session is
-    # effective per-query; restore afterwards to not perturb the suite.
-    before = spark.conf.get(knob)
-    try:
-        results = []
-        for v in values:
-            spark.conf.set(knob, v)
-            results.append(_collect(spark, name, sf_dir))
-        assert results[0] == results[1], (
-            f"{name}: rows differ across {knob}={values}"
-        )
-    finally:
-        spark.conf.set(knob, before)
+def test_knob_invariance(spark, sf_dir, name, knob):
+    # the check runs the query once per knob value in this session and
+    # restores the conf afterwards, so the suite is not perturbed
+    status, detail = check(spark, name, sf_dir, knob=knob)
+    assert status == "OK", f"{name}: {detail}"
 
 
 def test_table_checksum_is_partitioning_independent(spark, sf_dir):

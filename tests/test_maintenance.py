@@ -6,9 +6,16 @@ all three is hash-checked against DuckDB via test_oracle_parity.)"""
 from __future__ import annotations
 
 import os
+import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, StructField, StructType
+
+from reddit_can_bigdata_spark.registry import REGISTRY, _ensure_loaded
+from reddit_can_bigdata_spark.tables import load_tables
+
+_ensure_loaded()
 
 
 def _file_stamps(path: str) -> dict[str, tuple[int, float]]:
@@ -151,3 +158,25 @@ def test_merge_schema_inference_reconstructs_union(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, merged.select(*sorted(merged.columns)).collect())) == sorted(
         map(tuple, explicit.select(*sorted(explicit.columns)).collect())
     )
+
+
+@pytest.mark.parametrize("fail", [False, True], ids=["ok", "raises"])
+@pytest.mark.parametrize("name", sorted(n for n in REGISTRY if n.startswith("maint_")))
+def test_maint_query_leaves_no_scratch(spark, sf_dir, monkeypatch, name, fail):
+    """Every maint_* query writes its table under a fresh temp path. A
+    normal run, and one whose body raises at its last step, leave no
+    new entry in the temp dir."""
+    from reddit_can_bigdata_spark.plans import maintenance
+
+    def boom(df):
+        raise RuntimeError("boom")
+
+    load_tables(spark, sf_dir)  # the catalog's own reads are not the query's
+    before = set(os.listdir(tempfile.gettempdir()))
+    if fail:
+        monkeypatch.setattr(maintenance, "materialize", boom)
+        with pytest.raises(RuntimeError, match="boom"):
+            REGISTRY[name].fn(spark, sf_dir)
+    else:
+        REGISTRY[name].fn(spark, sf_dir).count()
+    assert set(os.listdir(tempfile.gettempdir())) - before == set()

@@ -3,16 +3,18 @@
 Mirrors the driver's t2 check: row count, column names, and an
 order-insensitive comparison of values (floats to 9 significant
 digits — the queries themselves already round/stabilize anything
-order-dependent, so this tolerance is belt-and-braces)."""
+order-dependent, so this tolerance is belt-and-braces). The values go
+through ``perfbench.oracle.normalize``, the form the benchmark checks
+its outputs with."""
 
 from __future__ import annotations
 
-import math
 import uuid
 from contextlib import contextmanager
 
 import pytest
 
+from perfbench.oracle import normalize
 from reddit_can_bigdata_spark.operators.graphkernel import (
     GRAPH_KERNEL_MAX_EDGES_CONF,
     GRAPH_RAW_COLLECT_MAX_BYTES_CONF,
@@ -20,31 +22,6 @@ from reddit_can_bigdata_spark.operators.graphkernel import (
 from reddit_can_bigdata_spark.registry import REGISTRY, _ensure_loaded
 
 _ensure_loaded()
-
-
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        if v == 0:
-            return 0.0
-        # 9 significant digits
-        return float(f"{v:.9g}")
-    if isinstance(v, (int, str)):
-        return v
-    return str(v)
-
-
-def _normalize(rows, cols):
-    out = []
-    for row in rows:
-        d = dict(zip(cols, row))
-        out.append(tuple(_norm_cell(d[c]) for c in sorted(cols)))
-    return sorted(out, key=lambda t: tuple(str(x) for x in t))
 
 
 def _cache_entries(spark) -> set[int]:
@@ -83,7 +60,8 @@ def _check_oracle(name, spark, duck, sf_dir):
     assert len(spark_rows) == len(duck_rows), (
         f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
     )
-    ns, nd = _normalize(spark_rows, spark_cols), _normalize(duck_rows, duck_cols)
+    _, ns = normalize(spark_cols, spark_rows)
+    _, nd = normalize(duck_cols, duck_rows)
     mismatches = [(a, b) for a, b in zip(ns, nd) if a != b]
     assert not mismatches, f"{name}: {len(mismatches)} mismatched rows, first 3: {mismatches[:3]}"
 

@@ -11,15 +11,26 @@ Usage:
     python tools/profile_queries.py --bench            # all bench queries
     python tools/profile_queries.py --plans-dir plans/r11 --suffix before g6_pagerank
     SPARK_GRAFT_BENCH_REPS=3 python tools/profile_queries.py ...
+    # the benched graph queries on their distributed loops (kernel tier off)
+    python tools/profile_queries.py --conf spark.redditCan.graphKernelMaxEdges=0 \\
+        g2_degree_centrality g3b_betweenness_sampled g4_closeness_centrality \\
+        g5_eigenvector_centrality g6_pagerank g7_connected_components \\
+        g9_triangles_clustering influencer_composite_sampled influencer_composite_top20
 
 Prints one line per query to stdout:
     name  wall_median  wall_min..max  cpu_s  jobs  stages  tasks
-and writes plans/<name>_<suffix>.txt when --plans-dir is given.
+(every counter is the median over the reps), then one JSON line for
+PERF.md: per-query wall and ``cpu_s`` medians, the ``--conf`` settings,
+and ``host_ref_s``, the median wall of perfbench's fixed host-reference
+job, timed before the session starts. Walls move with the host's speed
+and cpu-s far less, so points from different sessions are compared by
+cpu first. Writes plans/<name>_<suffix>.txt when --plans-dir is given.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import statistics
 import sys
@@ -28,9 +39,16 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from perfbench.meter import StatusMeter, delta
+from perfbench.meter import StatusMeter, delta, host_ref_times
 from reddit_can_bigdata_spark.registry import REGISTRY, _ensure_loaded, bench_queries
 from reddit_can_bigdata_spark.session import DEFAULT_SF_DIR, get_spark
+
+
+def _key_value(text: str) -> tuple[str, str]:
+    key, sep, value = text.partition("=")
+    if not key or not sep:
+        raise argparse.ArgumentTypeError(f"expected KEY=VALUE, got {text!r}")
+    return key, value
 
 
 def main() -> None:
@@ -41,7 +59,12 @@ def main() -> None:
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--reps", type=int, default=int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR))
+    ap.add_argument(
+        "--conf", action="append", default=[], type=_key_value, metavar="KEY=VALUE",
+        help="runtime conf set on the session before profiling (repeatable)",
+    )
     args = ap.parse_args()
+    confs = dict(args.conf)
 
     _ensure_loaded()
     names = list(args.names)
@@ -51,8 +74,11 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
 
+    host_ref_s = statistics.median(host_ref_times()[0])
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     from reddit_can_bigdata_spark.tables import load_tables
 
     warm = load_tables(spark, args.sf_dir)
@@ -67,6 +93,7 @@ def main() -> None:
 
     print(f"# sf_dir={args.sf_dir} reps={args.reps} cpus={spark.sparkContext.defaultParallelism}")
     print(f"{'query':42s} {'wall_med':>8s} {'min':>7s} {'max':>7s} {'cpu_s':>8s} {'jobs':>5s} {'stages':>6s} {'tasks':>6s}")
+    walls_med, cpu_med = {}, {}
     for name in names:
         spec = REGISTRY[name]
         reps = min(args.reps, spec.bench_reps) if spec.bench_reps else args.reps
@@ -86,14 +113,25 @@ def main() -> None:
                 )
                 (plans_dir / f"{name}_{args.suffix}.txt").write_text(plan)
         spark.sparkContext.setJobDescription(None)
-        med = statistics.median(walls)
-        i = walls.index(med) if med in walls else 0
-        m = metas[i]
-        cpu_med = statistics.median(x["cpu_s"] for x in metas)
+        m = {k: statistics.median(x[k] for x in metas) for k in ("cpu_s", "jobs", "stages", "tasks")}
+        walls_med[name] = round(statistics.median(walls), 3)
+        cpu_med[name] = round(m["cpu_s"], 3)
         print(
-            f"{name:42s} {med:8.3f} {min(walls):7.3f} {max(walls):7.3f}"
-            f" {cpu_med:8.2f} {m['jobs']:5.0f} {m['stages']:6.0f} {m['tasks']:6.0f}"
+            f"{name:42s} {walls_med[name]:8.3f} {min(walls):7.3f} {max(walls):7.3f}"
+            f" {m['cpu_s']:8.2f} {m['jobs']:5.0f} {m['stages']:6.0f} {m['tasks']:6.0f}"
         )
+    sf = float(os.path.basename(args.sf_dir.rstrip("/")).replace("sf", "") or 0)
+    print(json.dumps({
+        "metric": "profile_total",
+        "value": round(sum(walls_med.values()), 3),
+        "unit": "sec",
+        "queries": walls_med,
+        "cpu_s": cpu_med,
+        "host_ref_s": round(host_ref_s, 3),
+        "sf": sf,
+        "reps": args.reps,
+        "conf": confs,
+    }, separators=(",", ":")))
 
 
 if __name__ == "__main__":
