@@ -22,11 +22,11 @@ from reddit_can_bigdata_spark.operators.common import (
     tables,
 )
 from reddit_can_bigdata_spark.operators.graph import (
-    _EDGES_SQL,
-    _edges,
     _join_state,
     _sym,
+    _sym_sql,
     _state_mode,
+    _unrolled,
     STATE_BROADCAST_MAX_ROWS,
     UNTIL_CONVERGED_MAX_ROUNDS,
 )
@@ -34,6 +34,7 @@ from reddit_can_bigdata_spark.registry import register
 
 EIGEN_ITERS = 8
 CLOSENESS_HOPS = 6
+CLOSENESS_SAMPLE_MOD = 7
 
 
 def _bfs_distances(
@@ -72,8 +73,6 @@ def _bfs_distances(
     NOT valid for weighted relaxation (known entries can still
     improve), so the weighted path always pushes.
     """
-    from pyspark.sql import functions as F  # local alias for clarity
-
     roots = sources if sources is not None else sym.select("src").distinct()
     dist = roots.select(
         "src", F.col("src").alias("node"), F.lit(0).cast("long").alias("dist")
@@ -377,30 +376,21 @@ def w_lag_daily_change(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _eigenvector_oracle() -> str:
-    parts = [
-        f"WITH e AS MATERIALIZED ({_EDGES_SQL})",
-        """sym AS MATERIALIZED (
-          SELECT u AS src, v AS dst, CAST(weight AS DOUBLE) AS w FROM e
-          UNION ALL SELECT v, u, CAST(weight AS DOUBLE) FROM e
-        )""",
-        "v0 AS MATERIALIZED (SELECT DISTINCT src AS node, 1.0 AS val FROM sym)",
-    ]
-    for i in range(EIGEN_ITERS):
-        parts.append(
-            f"""m{i} AS MATERIALIZED (
-              SELECT s.dst AS node, SUM(v.val * s.w) AS val
-              FROM sym s JOIN v{i} v ON v.node = s.src GROUP BY s.dst
-            )"""
-        )
-        parts.append(
-            f"""v{i + 1} AS MATERIALIZED (
-              SELECT node, val / (SELECT sqrt(SUM(val * val)) FROM m{i}) AS val FROM m{i}
-            )"""
-        )
-    return (
-        ",\n".join(parts)
-        + f"\nSELECT node, round(val, 6) AS eigenvector FROM v{EIGEN_ITERS}"
+    # a round is m = A·v, then v' = m / ‖m‖₂
+    rounds = _unrolled(
+        "v",
+        lambda i: f"""
+              WITH m AS MATERIALIZED (
+                SELECT s.dst AS node, SUM(v.val * s.w) AS val
+                FROM sym s JOIN v{i} v ON v.node = s.src GROUP BY s.dst
+              )
+              SELECT node, val / (SELECT sqrt(SUM(val * val)) FROM m) AS val FROM m""",
+        EIGEN_ITERS,
     )
+    return f"""WITH {_sym_sql("w")},
+    v0 AS MATERIALIZED (SELECT DISTINCT src AS node, 1.0 AS val FROM sym),
+    {rounds}
+    SELECT node, round(val, 6) AS eigenvector FROM v{EIGEN_ITERS}"""
 
 
 @register(
@@ -447,130 +437,153 @@ def g5_eigenvector_centrality(
     return v.select("node", F.round("val", 6).alias("eigenvector"))
 
 
-def _closeness_oracle() -> str:
-    parts = [
-        f"WITH e AS MATERIALIZED (SELECT u, v FROM ({_EDGES_SQL}))",
-        "sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e)",
-        "d0 AS MATERIALIZED (SELECT DISTINCT src, src AS node, 0 AS dist FROM sym)",
-    ]
-    for i in range(CLOSENESS_HOPS):
-        parts.append(
-            f"""d{i + 1} AS MATERIALIZED (
-              SELECT src, node, CAST(min(dist) AS INT) AS dist FROM (
+def _closeness(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    weighted: bool,
+    sampled: bool,
+    out_col: str,
+    edges: DataFrame | None = None,
+    graph=None,
+    until_converged: bool = False,
+    sample_mod: int | None = None,
+) -> DataFrame:
+    """The closeness family (`network-analysis/network_analysis.py:154`,
+    ``nx.closeness_centrality(G, distance='weight')``) on two axes.
+
+    ``weighted``: the step is the edge weight (dist + w, fixed-round
+    Bellman-Ford: exact once the rounds reach the hop count of the
+    longest shortest path, true on the dense test graphs and a
+    documented bound otherwise) or one hop (dist + 1, the documented
+    deviation of `g4`). The weighted loop is PUSH-ONLY: the
+    direction-optimizing pull in `_bfs_distances` assumes a distance
+    is final once its BFS level is known, which holds only for unit
+    steps; under weights a known (src, node) entry can still improve
+    through a longer-hop but lighter path, so pulling into the missing
+    pairs would freeze wrong distances. No weighted kernel exists, so
+    the weighted forms always run the loop (``kernel=False``).
+
+    ``sampled``: all sources with the exact per-source closeness
+    (cnt − 1) / Σd, whose state is O(N²) rows (the known cost of
+    exact closeness, SURVEY §7.3 risk 2), or a deterministic 1-in-K
+    source sample (node % K == 0, portable to the oracle, no engine
+    hash) with the Eppstein–Wang '01 estimator per target v,
+
+        c(v) ≈ k·(n−1) / (n · Σ_{s∈S} d(s, v)),
+
+    whose state is O(K·N); the loop is the same, only the seed set
+    shrinks. ``sample_mod`` is the cost knob (default
+    ``CLOSENESS_SAMPLE_MOD`` = 7, the registered oracles' K; the k/n
+    rescale makes any K consistent). `closeness_for_scale`'s auto gate
+    derives it from a relax-row budget when the graph densifies past
+    what 1-in-7 affords.
+
+    Distances and their sums stay integers until one double division
+    per node, rounded to 6 places, so every tier matches the oracle
+    exactly."""
+    sample_mod = CLOSENESS_SAMPLE_MOD if sample_mod is None else sample_mod
+    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph, kernel=not weighted)
+    if g is not None:
+        if sampled:
+            return gk.closeness_sampled_kernel_df(
+                spark, g, CLOSENESS_HOPS, sample_mod, until_converged, out_col
+            )
+        return gk.closeness_kernel_df(spark, g, CLOSENESS_HOPS, until_converged, out_col)
+    sym = _sym(edges, "weight" if weighted else None)
+    nodes = sym.select("src").distinct()
+    srcs = nodes.where(F.col("src") % sample_mod == 0) if sampled else nodes
+    dist = _bfs_distances(
+        sym,
+        CLOSENESS_HOPS,
+        F.col("weight") if weighted else F.lit(1),
+        sources=srcs,
+        unweighted=not weighted,
+        until_converged=until_converged,
+    )
+    if not sampled:
+        return (
+            dist.groupBy("src")
+            .agg(
+                F.round((F.count("*").cast("double") - 1) / F.sum("dist"), 6).alias(out_col),
+                F.sum("dist").alias("_total"),
+            )
+            .where(F.col("_total") > 0)
+            .select(F.col("src").alias("node"), out_col)
+        )
+    n = nodes.agg(F.count("*").cast("double").alias("n"))
+    k = srcs.agg(F.count("*").cast("double").alias("k"))
+    agg = dist.groupBy("node").agg(F.sum("dist").alias("sdist")).where(F.col("sdist") > 0)
+    return (
+        agg.crossJoin(F.broadcast(n))
+        .crossJoin(F.broadcast(k))
+        .select(
+            "node",
+            F.round(
+                F.col("k") * (F.col("n") - 1) / (F.col("n") * F.col("sdist")), 6
+            ).alias(out_col),
+        )
+    )
+
+
+def _closeness_oracle(weighted: bool, sampled: bool, out_col: str) -> str:
+    """`_closeness`'s DuckDB twin: the same sources, step and formula
+    over ``CLOSENESS_HOPS`` unrolled min-plus rounds. The exact form
+    groups by source, as its definition reads."""
+    step = "s.weight" if weighted else "1"
+    rounds = _unrolled(
+        "d",
+        lambda i: f"""
+              SELECT src, node, CAST(min(dist) AS BIGINT) AS dist FROM (
                 SELECT src, node, dist FROM d{i}
                 UNION ALL
-                SELECT d.src, s.dst AS node, d.dist + 1
+                SELECT d.src, s.dst AS node, d.dist + {step}
                 FROM d{i} d JOIN sym s ON s.src = d.node
-              ) GROUP BY src, node
-            )"""
-        )
-    return (
-        ",\n".join(parts)
-        + f"""
+              ) GROUP BY src, node""",
+        CLOSENESS_HOPS,
+    )
+    sample = f" WHERE node % {CLOSENESS_SAMPLE_MOD} = 0" if sampled else ""
+    head = f"""WITH {_sym_sql("weight" if weighted else None)},
+    nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM sym),
+    srcs AS MATERIALIZED (SELECT node AS src FROM nodes{sample}),
+    d0 AS MATERIALIZED (SELECT src, src AS node, CAST(0 AS BIGINT) AS dist FROM srcs),
+    {rounds}"""
+    if not sampled:
+        return f"""{head}
     SELECT src AS node,
-           round((CAST(COUNT(*) AS DOUBLE) - 1) / SUM(dist), 6) AS closeness
+           round((CAST(COUNT(*) AS DOUBLE) - 1) / SUM(dist), 6) AS {out_col}
     FROM d{CLOSENESS_HOPS}
     GROUP BY src HAVING SUM(dist) > 0"""
-    )
-
-
-def _closeness_weighted_oracle() -> str:
-    parts = [
-        f"WITH e AS MATERIALIZED ({_EDGES_SQL})",
-        """sym AS MATERIALIZED (
-          SELECT u AS src, v AS dst, weight FROM e
-          UNION ALL SELECT v, u, weight FROM e
-        )""",
-        "wd0 AS MATERIALIZED (SELECT DISTINCT src, src AS node, CAST(0 AS BIGINT) AS dist FROM sym)",
-    ]
-    for i in range(CLOSENESS_HOPS):
-        parts.append(
-            f"""wd{i + 1} AS MATERIALIZED (
-              SELECT src, node, CAST(min(dist) AS BIGINT) AS dist FROM (
-                SELECT src, node, dist FROM wd{i}
-                UNION ALL
-                SELECT d.src, s.dst AS node, d.dist + s.weight
-                FROM wd{i} d JOIN sym s ON s.src = d.node
-              ) GROUP BY src, node
-            )"""
-        )
-    return (
-        ",\n".join(parts)
-        + f"""
-    SELECT src AS node,
-           round((CAST(COUNT(*) AS DOUBLE) - 1) / SUM(dist), 6) AS closeness_w
-    FROM wd{CLOSENESS_HOPS}
-    GROUP BY src HAVING SUM(dist) > 0"""
-    )
+    return f"""{head},
+    agg AS MATERIALIZED (
+      SELECT node, CAST(SUM(dist) AS BIGINT) AS sdist
+      FROM d{CLOSENESS_HOPS} GROUP BY node HAVING SUM(dist) > 0
+    ),
+    nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
+    kk AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS k FROM srcs)
+    SELECT a.node, round(kk.k * (nn.n - 1) / (nn.n * a.sdist), 6) AS {out_col}
+    FROM agg a CROSS JOIN nn CROSS JOIN kk"""
 
 
 @register(
     "g4b_closeness_weighted",
-    oracle=_closeness_weighted_oracle(),
+    oracle=_closeness_oracle(True, False, "closeness_w"),
     tags=("graph", "closeness", "weighted", "iterative"),
 )
 def g4b_closeness_weighted(
     spark: SparkSession, sf_dir: str, until_converged: bool = False
 ) -> DataFrame:
-    """G4 weighted variant — edge weights as distances, matching the
-    reference's `nx.closeness_centrality(G, distance='weight')`
-    (`network-analysis/network_analysis.py:154`). Same relaxation loop
-    as the hop version with dist+w instead of dist+1 (fixed-round
-    Bellman-Ford; exact once rounds ≥ longest shortest path's hop
-    count — true on the dense test graphs, documented bound
-    otherwise). Integer distances → exact oracle parity."""
-    sym = _sym(_edges(spark, sf_dir), "weight")
-    dist = _bfs_distances(sym, CLOSENESS_HOPS, F.col("weight"), until_converged=until_converged)
-    return (
-        dist.groupBy("src")
-        .agg(
-            F.round((F.count("*").cast("double") - 1) / F.sum("dist"), 6).alias("closeness_w"),
-            F.sum("dist").alias("_t"),
-        )
-        .where(F.col("_t") > 0)
-        .select(F.col("src").alias("node"), "closeness_w")
-    )
-
-
-CLOSENESS_SAMPLE_MOD = 7
-
-
-def _closeness_sampled_oracle() -> str:
-    parts = [
-        f"WITH e AS MATERIALIZED (SELECT u, v FROM ({_EDGES_SQL}))",
-        "sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e)",
-        "nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM sym)",
-        f"srcs AS MATERIALIZED (SELECT node AS src FROM nodes WHERE node % {CLOSENESS_SAMPLE_MOD} = 0)",
-        "sd0 AS MATERIALIZED (SELECT src, src AS node, 0 AS dist FROM srcs)",
-    ]
-    for i in range(CLOSENESS_HOPS):
-        parts.append(
-            f"""sd{i + 1} AS MATERIALIZED (
-              SELECT src, node, CAST(min(dist) AS INT) AS dist FROM (
-                SELECT src, node, dist FROM sd{i}
-                UNION ALL
-                SELECT d.src, s.dst AS node, d.dist + 1
-                FROM sd{i} d JOIN sym s ON s.src = d.node
-              ) GROUP BY src, node
-            )"""
-        )
-    return (
-        ",\n".join(parts)
-        + f""",
-    agg AS MATERIALIZED (
-      SELECT node, CAST(SUM(dist) AS BIGINT) AS sdist
-      FROM sd{CLOSENESS_HOPS} GROUP BY node HAVING SUM(dist) > 0
-    ),
-    nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-    kk AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS k FROM srcs)
-    SELECT a.node, round(kk.k * (nn.n - 1) / (nn.n * a.sdist), 6) AS closeness_est
-    FROM agg a CROSS JOIN nn CROSS JOIN kk"""
+    """G4 weighted variant — edge weights as distances, the reference's
+    exact form (`_closeness`)."""
+    return _closeness(
+        spark, sf_dir, weighted=True, sampled=False, out_col="closeness_w",
+        until_converged=until_converged,
     )
 
 
 @register(
     "g4c_closeness_sampled",
-    oracle=_closeness_sampled_oracle(),
+    oracle=_closeness_oracle(False, True, "closeness_est"),
     tags=("graph", "closeness", "sampled", "iterative"),
 )
 def g4c_closeness_sampled(
@@ -581,94 +594,18 @@ def g4c_closeness_sampled(
     sample_mod: int | None = None,
     graph=None,
 ) -> DataFrame:
-    """G4 at scale: pivot-SAMPLED closeness (Eppstein–Wang estimator).
-
-    Exact closeness needs all-sources BFS — O(N²) state that cannot run
-    at 100x (`network-analysis/network_analysis.py:154`; SURVEY §7.3
-    risk 2). Instead, BFS from a deterministic 1-in-K source sample
-    (node % K == 0 — portable to the oracle, no engine hash), then for
-    every node v estimate
-
-        c(v) ≈ k·(n−1) / (n · Σ_{s∈S} d(s, v))
-
-    — the Eppstein–Wang '01 estimator. State is O(K·N); the BFS loop,
-    frontier relaxation, and hop bound are byte-identical to the exact
-    g4 path (same `_bfs_distances`), only the seed set shrinks. All
-    arithmetic is integer until one double division → exact oracle
-    parity.
-
-    ``sample_mod`` is the COST KNOB (default ``CLOSENESS_SAMPLE_MOD`` =
-    7, the registered oracle's K; the k/n rescale in the estimator
-    makes any K consistent). `closeness_for_scale`'s auto gate derives
-    it from a relax-row budget when the graph densifies past what
-    1-in-7 affords (round-11 probe finding)."""
-    sample_mod = CLOSENESS_SAMPLE_MOD if sample_mod is None else sample_mod
-    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph)
-    if g is not None:
-        return gk.closeness_sampled_kernel_df(
-            spark, g, CLOSENESS_HOPS, sample_mod, until_converged
-        )
-    sym = _sym(edges)
-    nodes = sym.select("src").distinct()
-    srcs = nodes.where(F.col("src") % sample_mod == 0)
-    dist = _bfs_distances(
-        sym, CLOSENESS_HOPS, F.lit(1), sources=srcs, unweighted=True,
-        until_converged=until_converged,
-    )
-    n = nodes.agg(F.count("*").cast("double").alias("n"))
-    k = srcs.agg(F.count("*").cast("double").alias("k"))
-    agg = dist.groupBy("node").agg(F.sum("dist").alias("sdist")).where(F.col("sdist") > 0)
-    return (
-        agg.crossJoin(F.broadcast(n))
-        .crossJoin(F.broadcast(k))
-        .select(
-            "node",
-            F.round(
-                F.col("k") * (F.col("n") - 1) / (F.col("n") * F.col("sdist")), 6
-            ).alias("closeness_est"),
-        )
-    )
-
-
-def _closeness_weighted_sampled_oracle() -> str:
-    parts = [
-        f"WITH e AS MATERIALIZED ({_EDGES_SQL})",
-        """sym AS MATERIALIZED (
-          SELECT u AS src, v AS dst, weight FROM e
-          UNION ALL SELECT v, u, weight FROM e
-        )""",
-        "nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM sym)",
-        f"srcs AS MATERIALIZED (SELECT node AS src FROM nodes WHERE node % {CLOSENESS_SAMPLE_MOD} = 0)",
-        "wsd0 AS MATERIALIZED (SELECT src, src AS node, CAST(0 AS BIGINT) AS dist FROM srcs)",
-    ]
-    for i in range(CLOSENESS_HOPS):
-        parts.append(
-            f"""wsd{i + 1} AS MATERIALIZED (
-              SELECT src, node, CAST(min(dist) AS BIGINT) AS dist FROM (
-                SELECT src, node, dist FROM wsd{i}
-                UNION ALL
-                SELECT d.src, s.dst AS node, d.dist + s.weight
-                FROM wsd{i} d JOIN sym s ON s.src = d.node
-              ) GROUP BY src, node
-            )"""
-        )
-    return (
-        ",\n".join(parts)
-        + f""",
-    agg AS MATERIALIZED (
-      SELECT node, CAST(SUM(dist) AS BIGINT) AS sdist
-      FROM wsd{CLOSENESS_HOPS} GROUP BY node HAVING SUM(dist) > 0
-    ),
-    nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-    kk AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS k FROM srcs)
-    SELECT a.node, round(kk.k * (nn.n - 1) / (nn.n * a.sdist), 6) AS closeness_w_est
-    FROM agg a CROSS JOIN nn CROSS JOIN kk"""
+    """G4 at scale: pivot-SAMPLED closeness (Eppstein–Wang estimator,
+    `_closeness`)."""
+    return _closeness(
+        spark, sf_dir, weighted=False, sampled=True, out_col="closeness_est",
+        edges=edges, graph=graph, until_converged=until_converged,
+        sample_mod=sample_mod,
     )
 
 
 @register(
     "g4d_closeness_weighted_sampled",
-    oracle=_closeness_weighted_sampled_oracle(),
+    oracle=_closeness_oracle(True, True, "closeness_w_est"),
     tags=("graph", "closeness", "weighted", "sampled", "iterative"),
 )
 def g4d_closeness_weighted_sampled(
@@ -677,47 +614,17 @@ def g4d_closeness_weighted_sampled(
     edges: DataFrame | None = None,
     until_converged: bool = False,
 ) -> DataFrame:
-    """G4b at scale: pivot-SAMPLED weighted closeness — the 100× path
-    for the reference's exact form (`nx.closeness_centrality(G,
-    distance='weight')`, `network-analysis/network_analysis.py:154`),
-    which `g4b` matches but only with O(N²) all-sources state.
-
-    Same Eppstein–Wang estimator as `g4c` (k·(n−1)/(n·Σ d(s,v)) over
-    a deterministic 1-in-K source sample) with the weighted relaxation
-    (dist + w) supplying distances. PUSH-ONLY by necessity: the
-    direction-optimizing pull trick assumes a known distance is final
-    after its BFS level, which holds only for unit steps — under
-    weights, an already-known (src, node) entry can still improve via
-    a longer-hop-but-lighter path, so pulling into "missing" pairs
-    would freeze wrong distances. `_bfs_distances` enforces this
-    (pull requires unweighted=True). State O(K·N); integer distances
-    until one double division → exact oracle parity."""
-    edges, _ = gk.resolve_graph(spark, sf_dir, edges, kernel=False)
-    sym = _sym(edges, "weight")
-    nodes = sym.select("src").distinct()
-    srcs = nodes.where(F.col("src") % CLOSENESS_SAMPLE_MOD == 0)
-    dist = _bfs_distances(
-        sym, CLOSENESS_HOPS, F.col("weight"), sources=srcs,
-        until_converged=until_converged,
-    )
-    n = nodes.agg(F.count("*").cast("double").alias("n"))
-    k = srcs.agg(F.count("*").cast("double").alias("k"))
-    agg = dist.groupBy("node").agg(F.sum("dist").alias("sdist")).where(F.col("sdist") > 0)
-    return (
-        agg.crossJoin(F.broadcast(n))
-        .crossJoin(F.broadcast(k))
-        .select(
-            "node",
-            F.round(
-                F.col("k") * (F.col("n") - 1) / (F.col("n") * F.col("sdist")), 6
-            ).alias("closeness_w_est"),
-        )
+    """G4b at scale: pivot-SAMPLED weighted closeness, the 100× path for
+    the reference's exact form (`_closeness`)."""
+    return _closeness(
+        spark, sf_dir, weighted=True, sampled=True, out_col="closeness_w_est",
+        edges=edges, until_converged=until_converged,
     )
 
 
 @register(
     "g4_closeness_centrality",
-    oracle=_closeness_oracle(),
+    oracle=_closeness_oracle(False, False, "closeness"),
     tags=("graph", "closeness", "iterative"),
     bench=True,
 )
@@ -728,36 +635,11 @@ def g4_closeness_centrality(
     until_converged: bool = False,
     graph=None,
 ) -> DataFrame:
-    """G4: closeness centrality over hop distances
-    (`network-analysis/network_analysis.py:154` uses edge weights as
-    distances; we use unweighted hops — documented deviation, the
-    weighted variant swaps dist+1 for dist+w in the same loop).
-
-    All-sources BFS as an iterated DataFrame: frontier relaxation
-    (src, node, min-dist) with a fixed hop bound ≥ graph diameter.
-    State is O(N²) rows — the known cost of exact closeness; at scale
-    this becomes sampled-sources (pivot nodes) with identical code on
-    a sampled src set (SURVEY §7.3 risk 2).
-    """
-    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph)
-    if g is not None:
-        return gk.closeness_kernel_df(
-            spark, g, CLOSENESS_HOPS, until_converged, out_col="closeness"
-        )
-    sym = _sym(edges)
-    dist = _bfs_distances(
-        sym, CLOSENESS_HOPS, F.lit(1), unweighted=True, until_converged=until_converged
-    )
-    return (
-        dist.groupBy("src")
-        .agg(
-            F.round(
-                (F.count("*").cast("double") - 1) / F.sum("dist"), 6
-            ).alias("closeness"),
-            F.sum("dist").alias("_total"),
-        )
-        .where(F.col("_total") > 0)
-        .select(F.col("src").alias("node"), "closeness")
+    """G4: closeness centrality over hop distances, a documented
+    deviation from the reference's weights (`_closeness`)."""
+    return _closeness(
+        spark, sf_dir, weighted=False, sampled=False, out_col="closeness",
+        edges=edges, graph=graph, until_converged=until_converged,
     )
 
 

@@ -18,6 +18,8 @@ per-iteration arithmetic is deterministic and final ranks are rounded.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from reddit_can_bigdata_spark.operators import graphkernel as gk
@@ -190,6 +192,31 @@ def _sym(edges: DataFrame, weight: str | None = None, key: str | None = None) ->
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"), *extra)
     )
     return materialize(sym.repartition(key) if key else sym)
+
+
+def _sym_sql(weight: str | None = None) -> str:
+    """`_sym`'s DuckDB twin, the iterative oracles' preamble: the CTE
+    ``e`` (the undirected edge aggregate) and ``sym`` (both directions
+    of every edge as (src, dst)). ``weight`` is `_sym`'s: ``None``,
+    ``"weight"`` (the raw count) or ``"w"`` (the count as a double).
+    Both CTEs are MATERIALIZED, as every round reads ``sym`` again."""
+    e = _EDGES_SQL if weight else f"SELECT u, v FROM ({_EDGES_SQL})"
+    w = {None: "", "weight": ", weight", "w": ", CAST(weight AS DOUBLE) AS w"}[weight]
+    return (
+        f"e AS MATERIALIZED ({e}),\n"
+        f"sym AS MATERIALIZED (SELECT u AS src, v AS dst{w} FROM e"
+        f" UNION ALL SELECT v, u{w} FROM e)"
+    )
+
+
+def _unrolled(prefix: str, step: Callable[[int], str], rounds: int) -> str:
+    """A fixed-round loop as the CTE chain ``{prefix}1..{prefix}{rounds}``
+    after the caller's seed ``{prefix}0``: round i + 1 is ``step(i)``, a
+    query over ``{prefix}{i}``. MATERIALIZED, or DuckDB inlines the
+    rounds that read their predecessor twice and the plan grows 2^k."""
+    return ",\n".join(
+        f"{prefix}{i + 1} AS MATERIALIZED ({step(i)})" for i in range(rounds)
+    )
 
 
 @register(
@@ -700,34 +727,26 @@ def g9b_triangles_wedge_sampled(
 def _pagerank_oracle() -> str:
     """Unrolled fixed-iteration PageRank as a DuckDB CTE chain."""
     d = PAGERANK_DAMPING
-    parts = [
-        f"WITH e AS MATERIALIZED ({_EDGES_SQL})",
-        # symmetric directed edges with transition weight w/wdeg(src)
-        """sym AS MATERIALIZED (
-          SELECT u AS src, v AS dst, CAST(weight AS DOUBLE) AS w FROM e
-          UNION ALL SELECT v, u, CAST(weight AS DOUBLE) FROM e
-        )""",
-        """wdeg AS MATERIALIZED (SELECT src, SUM(w) AS wd FROM sym GROUP BY src)""",
-        """trans AS MATERIALIZED (
-          SELECT s.src, s.dst, s.w / d.wd AS p
-          FROM sym s JOIN wdeg d ON d.src = s.src
-        )""",
-        """n AS MATERIALIZED (SELECT CAST(COUNT(DISTINCT src) AS DOUBLE) AS nn FROM sym)""",
-        "pr0 AS MATERIALIZED (SELECT src AS node, 1.0 / n.nn AS rank FROM wdeg CROSS JOIN n)",
-    ]
-    for i in range(PAGERANK_ITERS):
-        parts.append(
-            f"""pr{i + 1} AS MATERIALIZED (
+    rounds = _unrolled(
+        "pr",
+        lambda i: f"""
               SELECT t.dst AS node,
                      (1.0 - {d}) / (SELECT nn FROM n) + {d} * SUM(p.rank * t.p) AS rank
               FROM trans t JOIN pr{i} p ON p.node = t.src
-              GROUP BY t.dst
-            )"""
-        )
-    return (
-        ",\n".join(parts)
-        + f"\nSELECT node, round(rank, 6) AS pagerank FROM pr{PAGERANK_ITERS}"
+              GROUP BY t.dst""",
+        PAGERANK_ITERS,
     )
+    # trans: the symmetric edges with transition weight w/wdeg(src)
+    return f"""WITH {_sym_sql("w")},
+    wdeg AS MATERIALIZED (SELECT src, SUM(w) AS wd FROM sym GROUP BY src),
+    trans AS MATERIALIZED (
+      SELECT s.src, s.dst, s.w / d.wd AS p
+      FROM sym s JOIN wdeg d ON d.src = s.src
+    ),
+    n AS MATERIALIZED (SELECT CAST(COUNT(DISTINCT src) AS DOUBLE) AS nn FROM sym),
+    pr0 AS MATERIALIZED (SELECT src AS node, 1.0 / n.nn AS rank FROM wdeg CROSS JOIN n),
+    {rounds}
+    SELECT node, round(rank, 6) AS pagerank FROM pr{PAGERANK_ITERS}"""
 
 
 @register(
@@ -816,17 +835,9 @@ LP_CONVERGED_ROUNDS = 50
 
 
 def _labelprop_oracle() -> str:
-    parts = [
-        f"WITH e AS MATERIALIZED ({_EDGES_SQL})",
-        """sym AS MATERIALIZED (
-          SELECT u AS src, v AS dst, CAST(weight AS DOUBLE) AS w FROM e
-          UNION ALL SELECT v, u, CAST(weight AS DOUBLE) FROM e
-        )""",
-        "lp0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM sym)",
-    ]
-    for i in range(LP_ITERS):
-        parts.append(
-            f"""lp{i + 1} AS MATERIALIZED (
+    rounds = _unrolled(
+        "lp",
+        lambda i: f"""
               SELECT node, label FROM (
                 SELECT s.src AS node, l.label,
                        row_number() OVER (
@@ -835,16 +846,15 @@ def _labelprop_oracle() -> str:
                        ) AS rn
                 FROM sym s JOIN lp{i} l ON l.node = s.dst
                 GROUP BY s.src, l.label
-              ) WHERE rn = 1
-            )"""
-        )
-    return (
-        ",\n".join(parts)
-        + f"""
+              ) WHERE rn = 1""",
+        LP_ITERS,
+    )
+    return f"""WITH {_sym_sql("w")},
+    lp0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM sym),
+    {rounds}
     SELECT CAST(label AS BIGINT) AS community,
            CAST(COUNT(*) AS BIGINT) AS n_nodes
     FROM lp{LP_ITERS} GROUP BY label"""
-    )
 
 
 def label_prop_partition(
@@ -1155,39 +1165,25 @@ def _raise_unconverged(
     )
 
 
-def min_label_rounds_sql(sym_cte: str, iters: int) -> list[str]:
-    """Unrolled DuckDB CTEs `l0..l{iters}` mirroring
-    `min_label_components` over a symmetric-edge CTE named
-    ``sym_cte`` with (src, dst) columns. MATERIALIZED, or DuckDB
-    inlines the twice-referenced rounds and the plan explodes 2^k."""
-    parts = [
-        f"l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM {sym_cte})"
-    ]
-    for i in range(iters):
-        parts.append(
-            f"""l{i + 1} AS MATERIALIZED (
+def _components_oracle() -> str:
+    """`min_label_components`' fixed rounds: each node takes the least
+    label among itself and its neighbours."""
+    rounds = _unrolled(
+        "l",
+        lambda i: f"""
               SELECT l.node,
                      least(l.label, coalesce(min(nl.label), l.label)) AS label
               FROM l{i} l
-              LEFT JOIN {sym_cte} s ON s.src = l.node
+              LEFT JOIN sym s ON s.src = l.node
               LEFT JOIN l{i} nl ON nl.node = s.dst
-              GROUP BY l.node, l.label
-            )"""
-        )
-    return parts
-
-
-def _components_oracle() -> str:
-    parts = [
-        f"WITH e AS MATERIALIZED (SELECT u, v FROM ({_EDGES_SQL}))",
-        """sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e)""",
-        *min_label_rounds_sql("sym", CC_ITERS),
-    ]
-    return (
-        ",\n".join(parts)
-        + f"\nSELECT CAST(label AS BIGINT) AS component, CAST(COUNT(*) AS BIGINT) AS n_nodes"
-        f" FROM l{CC_ITERS} GROUP BY label"
+              GROUP BY l.node, l.label""",
+        CC_ITERS,
     )
+    return f"""WITH {_sym_sql()},
+    l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM sym),
+    {rounds}
+    SELECT CAST(label AS BIGINT) AS component, CAST(COUNT(*) AS BIGINT) AS n_nodes
+    FROM l{CC_ITERS} GROUP BY label"""
 
 
 @register(
@@ -1388,32 +1384,28 @@ def _brandes_backward(sym: DataFrame, frontiers: list[DataFrame]) -> list[DataFr
 
 def _betweenness_sampled_oracle() -> str:
     """Unrolled sampled-source Brandes as a DuckDB CTE chain: forward
-    BFS levels with sigma, then backward dependency accumulation, then
-    the n/k rescale. MATERIALIZED throughout (twice-referenced CTEs)."""
+    BFS levels with sigma (a level keeps the pairs no earlier level
+    reached), then backward dependency accumulation, then the n/k
+    rescale. MATERIALIZED throughout (twice-referenced CTEs)."""
+
+    def level(i: int) -> str:
+        seen = " UNION ALL ".join(f"SELECT src, node FROM new{j}" for j in range(i + 1))
+        return f"""
+              SELECT t.src, t.node, CAST(SUM(t.sigma) AS BIGINT) AS sigma FROM (
+                SELECT p.src, s.dst AS node, p.sigma
+                FROM new{i} p JOIN sym s ON s.src = p.node
+              ) t
+              LEFT JOIN ({seen}) v ON v.src = t.src AND v.node = t.node
+              WHERE v.node IS NULL
+              GROUP BY t.src, t.node"""
+
     parts = [
-        f"WITH e AS MATERIALIZED (SELECT u, v FROM ({_EDGES_SQL}))",
-        "sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e)",
+        _sym_sql(),
         "nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM sym)",
         f"srcs AS MATERIALIZED (SELECT node FROM nodes WHERE node % {BW_SAMPLE_MOD} = 0)",
         "new0 AS MATERIALIZED (SELECT node AS src, node, CAST(1 AS BIGINT) AS sigma FROM srcs)",
-        "vis0 AS MATERIALIZED (SELECT src, node FROM new0)",
+        _unrolled("new", level, BW_LEVELS),
     ]
-    for l in range(1, BW_LEVELS + 1):
-        parts.append(
-            f"""new{l} AS MATERIALIZED (
-              SELECT t.src, t.node, CAST(SUM(t.sigma) AS BIGINT) AS sigma FROM (
-                SELECT p.src, s.dst AS node, p.sigma
-                FROM new{l - 1} p JOIN sym s ON s.src = p.node
-              ) t
-              LEFT JOIN vis{l - 1} v ON v.src = t.src AND v.node = t.node
-              WHERE v.node IS NULL
-              GROUP BY t.src, t.node
-            )"""
-        )
-        parts.append(
-            f"vis{l} AS MATERIALIZED (SELECT src, node FROM vis{l - 1}"
-            f" UNION ALL SELECT src, node FROM new{l})"
-        )
     parts.append(
         f"lv{BW_LEVELS} AS MATERIALIZED"
         f" (SELECT src, node, sigma, CAST(0 AS DOUBLE) AS delta FROM new{BW_LEVELS})"
@@ -1442,7 +1434,8 @@ def _betweenness_sampled_oracle() -> str:
     parts.append("nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes)")
     parts.append("kk AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS k FROM srcs)")
     return (
-        ",\n".join(parts)
+        "WITH "
+        + ",\n".join(parts)
         + """
     SELECT a.node, round((nn.n / kk.k) * a.sdelta / 2, 6) AS betweenness_est
     FROM acc a CROSS JOIN nn CROSS JOIN kk"""

@@ -466,6 +466,38 @@ def _sources_df(
 
 
 # ---------------------------------------------------------------- closeness
+# Both kernels walk the same BFS per source, capped at ``hops`` levels
+# (uncapped when ``until_converged``: identical once hops >= diameter,
+# exactly the loop/oracle contract), on the dense tier all sources at
+# once (`_dense_levels`), on the executor tier one source at a time
+# (`_bfs_levels`). Only the reduction differs. State stays integer
+# until one double division per node, rounded 6, so the result is
+# bit-identical to the DataFrame loop.
+
+
+def _bfs_levels(ga: GraphArrays, p: int, cap: int, visited: np.ndarray, nxt: np.ndarray):
+    """One source's level-synchronous BFS: yields (depth, positions
+    first reached at that depth). ``visited`` and ``nxt`` are O(V)
+    boolean masks the caller reuses across sources: level-set
+    membership through a mask, not np.unique's O(E log E) sort of the
+    gathered edges. The walk stops as soon as every node is visited,
+    since the next gather over a near-full frontier could touch all 2E
+    slots just to find nothing."""
+    visited[:] = False
+    visited[p] = True
+    frontier = np.array([p], dtype=np.int64)
+    depth, nvis = 0, 1
+    while depth < cap and nvis < ga.n_nodes:
+        depth += 1
+        nxt[:] = False
+        nxt[_gather_nbrs(ga.indptr, ga.indices, frontier)] = True
+        nxt &= ~visited
+        frontier = np.flatnonzero(nxt)
+        if frontier.shape[0] == 0:
+            return
+        visited[frontier] = True
+        nvis += frontier.shape[0]
+        yield depth, frontier
 
 
 def closeness_kernel_df(
@@ -473,94 +505,49 @@ def closeness_kernel_df(
     g: GraphArrays,
     hops: int,
     until_converged: bool,
-    sample_mod: int | None = None,
     out_col: str = "closeness",
 ) -> DataFrame:
-    """Exact (or deterministically source-sampled) hop-closeness.
-
-    Per source: a level-synchronous BFS capped at ``hops`` levels
-    (uncapped when ``until_converged`` — identical once hops ≥
-    diameter, exactly the loop/oracle contract), accumulating the
-    reached count and distance sum. Integer state only, so the result
-    is bit-identical to the DataFrame loop: one double division per
-    node at the end, rounded 6."""
+    """Exact hop-closeness: per source, the reached count and distance
+    sum, then (cnt − 1) / Σd."""
     if g.n_nodes == 0:
         return _empty_result(spark, f"node long, {out_col} double")
-    ids = g.nodes if sample_mod is None else g.nodes[g.nodes % sample_mod == 0]
     cap = (1 << 62) if until_converged else hops
-    if g.n_nodes <= TRIANGLE_DENSE_MAX_NODES and ids.shape[0]:
+    if g.n_nodes <= TRIANGLE_DENSE_MAX_NODES:
         import pandas as pd
 
-        cnt, dsum, _ = _dense_closeness_counts(
-            g, np.searchsorted(g.nodes, ids), cap
-        )
-        raw = _local_df(spark,
-            pd.DataFrame({"node": ids, "cnt": cnt, "dsum": dsum})
-        )
-        return raw.where(F.col("dsum") > 0).select(
-            "node",
-            F.round(
-                (F.col("cnt").cast("double") - 1) / F.col("dsum"), 6
-            ).alias(out_col),
-        )
-    src_df = _sources_df(spark, ids)
-    bc = spark.sparkContext.broadcast(g)
+        cnt = np.ones(g.n_nodes, dtype=np.int64)
+        dsum = np.zeros(g.n_nodes, dtype=np.int64)
+        for depth, nxt in _dense_levels(g, np.arange(g.n_nodes), cap):
+            c = nxt.sum(axis=1)
+            cnt += c
+            dsum += depth * c
+        raw = _local_df(spark, pd.DataFrame({"node": g.nodes, "cnt": cnt, "dsum": dsum}))
+    else:
+        bc = spark.sparkContext.broadcast(g)
 
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
+        def run(batches: Iterator) -> Iterator:
+            import pyarrow as pa
 
-        ga: GraphArrays = bc.value
-        indptr, indices = ga.indptr, ga.indices
-        nv = ga.n_nodes
-        visited = np.zeros(nv, dtype=bool)
-        nxt = np.zeros(nv, dtype=bool)
-        for batch in batches:
-            srcs = batch.column("node").to_numpy(zero_copy_only=False)
-            pos = np.searchsorted(ga.nodes, srcs)
-            out_cnt = np.empty(srcs.shape[0], dtype=np.int64)
-            out_sum = np.empty(srcs.shape[0], dtype=np.int64)
-            for i, p in enumerate(pos):
-                visited[:] = False
-                visited[p] = True
-                frontier = np.array([p], dtype=np.int64)
-                cnt, dsum, depth = 1, 0, 0
-                # level-set membership via an O(V) boolean mask, not
-                # np.unique's O(E log E) sort of the gathered edges;
-                # and stop as soon as every node is visited — the next
-                # gather over a near-full frontier could touch all 2E
-                # slots just to find nothing (same BFS, same counts)
-                while frontier.shape[0] and depth < cap and cnt < nv:
-                    depth += 1
-                    nbrs = _gather_nbrs(indptr, indices, frontier)
-                    nxt[:] = False
-                    nxt[nbrs] = True
-                    nxt &= ~visited
-                    frontier = np.flatnonzero(nxt)
-                    if frontier.shape[0] == 0:
-                        break
-                    visited[frontier] = True
-                    cnt += frontier.shape[0]
-                    dsum += depth * frontier.shape[0]
-                out_cnt[i] = cnt
-                out_sum[i] = dsum
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(srcs, type=pa.int64()),
-                    pa.array(out_cnt, type=pa.int64()),
-                    pa.array(out_sum, type=pa.int64()),
-                ],
-                names=["node", "cnt", "dsum"],
-            )
+            ga: GraphArrays = bc.value
+            visited = np.zeros(ga.n_nodes, dtype=bool)
+            nxt = np.zeros(ga.n_nodes, dtype=bool)
+            for batch in batches:
+                srcs = batch.column("node").to_numpy(zero_copy_only=False)
+                cnt = np.ones(srcs.shape[0], dtype=np.int64)
+                dsum = np.zeros(srcs.shape[0], dtype=np.int64)
+                for i, p in enumerate(np.searchsorted(ga.nodes, srcs)):
+                    for depth, level in _bfs_levels(ga, p, cap, visited, nxt):
+                        cnt[i] += level.shape[0]
+                        dsum[i] += depth * level.shape[0]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(srcs, type=pa.int64()), pa.array(cnt), pa.array(dsum)],
+                    names=["node", "cnt", "dsum"],
+                )
 
-    raw = src_df.mapInArrow(run, "node long, cnt long, dsum long")
-    return (
-        raw.where(F.col("dsum") > 0)
-        .select(
-            "node",
-            F.round(
-                (F.col("cnt").cast("double") - 1) / F.col("dsum"), 6
-            ).alias(out_col),
-        )
+        raw = _sources_df(spark, g.nodes).mapInArrow(run, "node long, cnt long, dsum long")
+    return raw.where(F.col("dsum") > 0).select(
+        "node",
+        F.round((F.col("cnt").cast("double") - 1) / F.col("dsum"), 6).alias(out_col),
     )
 
 
@@ -573,93 +560,60 @@ def closeness_sampled_kernel_df(
     out_col: str = "closeness_est",
 ) -> DataFrame:
     """Eppstein–Wang sampled closeness: BFS from the 1-in-K source
-    sample, Σ d(s, v) accumulated PER TARGET NODE, estimate
-    k·(n−1)/(n·Σd) — integer distance sums, one double division,
-    round 6 (the g4c contract verbatim). Each task emits one partial
-    Σd vector over the nodes its sources reached."""
-    if g.n_nodes == 0:
-        return _empty_result(spark, f"node long, {out_col} double")
+    sample, Σ d(s, v) accumulated PER TARGET NODE, then k·(n−1)/(n·Σd)
+    (the g4c contract verbatim). On the executor tier each task emits
+    one partial Σd vector over the nodes its sources reached."""
     ids = g.nodes[g.nodes % sample_mod == 0]
-    n_nodes = g.n_nodes
-    k = int(ids.shape[0])
-    if k == 0:
+    if ids.shape[0] == 0:
         return _empty_result(spark, f"node long, {out_col} double")
     cap = (1 << 62) if until_converged else hops
-    kk, nn = float(k), float(n_nodes)
-    if n_nodes <= TRIANGLE_DENSE_MAX_NODES:
+    if g.n_nodes <= TRIANGLE_DENSE_MAX_NODES:
         import pandas as pd
 
-        sdist, touched = _dense_target_distsums(
-            g, np.searchsorted(g.nodes, ids), cap
-        )
+        srcpos = np.searchsorted(g.nodes, ids)
+        sdist = np.zeros(g.n_nodes, dtype=np.int64)
+        touched = np.zeros(g.n_nodes, dtype=bool)
+        touched[srcpos] = True
+        for depth, nxt in _dense_levels(g, srcpos, cap):
+            newly = nxt.sum(axis=0)
+            sdist += depth * newly
+            touched |= newly > 0
         sel = np.flatnonzero(touched)
-        raw = _local_df(spark,
-            pd.DataFrame({"node": g.nodes[sel], "sdist": sdist[sel]})
-        )
-        return raw.where(F.col("sdist") > 0).select(
-            "node",
-            F.round(
-                F.lit(kk) * (F.lit(nn) - 1) / (F.lit(nn) * F.col("sdist")), 6
-            ).alias(out_col),
-        )
-    src_df = _sources_df(spark, ids)
-    bc = spark.sparkContext.broadcast(g)
+        raw = _local_df(spark, pd.DataFrame({"node": g.nodes[sel], "sdist": sdist[sel]}))
+    else:
+        bc = spark.sparkContext.broadcast(g)
 
-    def run(batches: Iterator) -> Iterator:
-        import pyarrow as pa
+        def run(batches: Iterator) -> Iterator:
+            import pyarrow as pa
 
-        ga: GraphArrays = bc.value
-        indptr, indices = ga.indptr, ga.indices
-        nv = ga.n_nodes
-        sdist = np.zeros(nv, dtype=np.int64)
-        touched = np.zeros(nv, dtype=bool)
-        visited = np.zeros(nv, dtype=bool)
-        nxt = np.zeros(nv, dtype=bool)
-        for batch in batches:
-            srcs = batch.column("node").to_numpy(zero_copy_only=False)
-            for p in np.searchsorted(ga.nodes, srcs):
-                visited[:] = False
-                visited[p] = True
-                touched[p] = True
-                frontier = np.array([p], dtype=np.int64)
-                depth = 0
-                nvis = 1
-                # mask-based level sets + all-visited early exit (see
-                # closeness_kernel_df) — identical Σd per target
-                while frontier.shape[0] and depth < cap and nvis < nv:
-                    depth += 1
-                    nbrs = _gather_nbrs(indptr, indices, frontier)
-                    nxt[:] = False
-                    nxt[nbrs] = True
-                    nxt &= ~visited
-                    frontier = np.flatnonzero(nxt)
-                    if frontier.shape[0] == 0:
-                        break
-                    visited[frontier] = True
-                    touched[frontier] = True
-                    sdist[frontier] += depth
-                    nvis += frontier.shape[0]
-        sel = np.flatnonzero(touched)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(ga.nodes[sel], type=pa.int64()),
-                pa.array(sdist[sel], type=pa.int64()),
-            ],
-            names=["node", "sdist"],
-        )
+            ga: GraphArrays = bc.value
+            sdist = np.zeros(ga.n_nodes, dtype=np.int64)
+            touched = np.zeros(ga.n_nodes, dtype=bool)
+            visited = np.zeros(ga.n_nodes, dtype=bool)
+            nxt = np.zeros(ga.n_nodes, dtype=bool)
+            for batch in batches:
+                srcs = batch.column("node").to_numpy(zero_copy_only=False)
+                for p in np.searchsorted(ga.nodes, srcs):
+                    touched[p] = True
+                    for depth, level in _bfs_levels(ga, p, cap, visited, nxt):
+                        touched[level] = True
+                        sdist[level] += depth
+            sel = np.flatnonzero(touched)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ga.nodes[sel], type=pa.int64()), pa.array(sdist[sel])],
+                names=["node", "sdist"],
+            )
 
-    raw = src_df.mapInArrow(run, "node long, sdist long")
-    kk, nn = float(k), float(n_nodes)
-    return (
-        raw.groupBy("node")
-        .agg(F.sum("sdist").alias("sdist"))
-        .where(F.col("sdist") > 0)
-        .select(
-            "node",
-            F.round(
-                F.lit(kk) * (F.lit(nn) - 1) / (F.lit(nn) * F.col("sdist")), 6
-            ).alias(out_col),
+        raw = (
+            _sources_df(spark, ids)
+            .mapInArrow(run, "node long, sdist long")
+            .groupBy("node")
+            .agg(F.sum("sdist").alias("sdist"))
         )
+    kk, nn = float(ids.shape[0]), float(g.n_nodes)
+    return raw.where(F.col("sdist") > 0).select(
+        "node",
+        F.round(F.lit(kk) * (F.lit(nn) - 1) / (F.lit(nn) * F.col("sdist")), 6).alias(out_col),
     )
 
 
@@ -683,66 +637,28 @@ def _dense_adj(g: GraphArrays, dtype=np.float32) -> np.ndarray:
     return dense
 
 
-def _dense_closeness_counts(
-    g: GraphArrays, srcpos: np.ndarray, cap: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(cnt, dsum) per source and the visited matrix, via one float32
-    matmul per BFS level over all sources at once. Purely integer
-    outputs — bit-identical to the per-source loops (same level sets,
-    same hop cap, same all-visited early exit: a row whose frontier
-    empties or whose BFS finishes simply stops advancing)."""
-    nv = g.n_nodes
+def _dense_levels(g: GraphArrays, srcpos: np.ndarray, cap: int):
+    """The BFS of every source in ``srcpos`` at once, one float32 matmul
+    per level: yields (depth, the k x V mask of the pairs first reached
+    at that depth). Same level sets, hop cap and early exit as
+    `_bfs_levels` (a row whose frontier empties or whose BFS finishes
+    simply stops advancing), so an integer reduction over the masks is
+    bit-identical to the per-source loop."""
     k = int(srcpos.shape[0])
     A = _dense_adj(g, np.float32)
-    visited = np.zeros((k, nv), dtype=bool)
+    visited = np.zeros((k, g.n_nodes), dtype=bool)
     visited[np.arange(k), srcpos] = True
     frontier = visited.copy()
-    cnt = np.ones(k, dtype=np.int64)
-    dsum = np.zeros(k, dtype=np.int64)
     depth = 0
     while depth < cap and frontier.any():
         depth += 1
         reach = frontier.astype(np.float32) @ A
         nxt = (reach > 0) & ~visited
         if not nxt.any():
-            break
+            return
         visited |= nxt
-        c = nxt.sum(axis=1)
-        cnt += c
-        dsum += depth * c
+        yield depth, nxt
         frontier = nxt
-    return cnt, dsum, visited
-
-
-def _dense_target_distsums(
-    g: GraphArrays, srcpos: np.ndarray, cap: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Eppstein-Wang accumulation: Σ over sources of d(s, v) PER
-    TARGET v, plus the touched mask — the column-sum view of the same
-    dense BFS as :func:`_dense_closeness_counts` (integer outputs,
-    bit-identical to the per-source executor loop)."""
-    nv = g.n_nodes
-    k = int(srcpos.shape[0])
-    A = _dense_adj(g, np.float32)
-    visited = np.zeros((k, nv), dtype=bool)
-    visited[np.arange(k), srcpos] = True
-    frontier = visited.copy()
-    sdist = np.zeros(nv, dtype=np.int64)
-    touched = np.zeros(nv, dtype=bool)
-    touched[srcpos] = True
-    depth = 0
-    while depth < cap and frontier.any():
-        depth += 1
-        reach = frontier.astype(np.float32) @ A
-        nxt = (reach > 0) & ~visited
-        if not nxt.any():
-            break
-        visited |= nxt
-        newly = nxt.sum(axis=0)
-        sdist += depth * newly
-        touched |= newly > 0
-        frontier = nxt
-    return sdist, touched
 
 
 def _dense_brandes(

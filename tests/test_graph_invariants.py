@@ -306,6 +306,32 @@ def test_components_match_union_find(spark, sf_dir, edges):
     assert sorted(got.values()) == sorted(expected.values())
 
 
+@pytest.mark.parametrize("sampled", [False, True])
+def test_closeness_weighted_and_hop_forms_agree_on_unit_weights(spark, sf001_dir, sampled):
+    """`_closeness`'s two axes are independent: with every edge
+    weight 1, the weighted form (the loop, dist + weight) and the hop
+    form (dist + 1, on the kernel tier) give identical rows, exact and
+    sampled alike. On the real weights they differ, so the
+    ``weighted`` flag reaches the step."""
+    from pyspark.sql import functions as F
+
+    from reddit_can_bigdata_spark.operators.advanced import _closeness
+    from reddit_can_bigdata_spark.operators.graph import _edges
+
+    edges = _edges(spark, sf001_dir)
+    unit = edges.withColumn("weight", F.lit(1).cast("bigint"))
+
+    def rows(e, weighted):
+        df = _closeness(
+            spark, sf001_dir, weighted=weighted, sampled=sampled, out_col="c", edges=e
+        )
+        return sorted(tuple(r) for r in df.collect())
+
+    hops = rows(unit, False)
+    assert hops and rows(unit, True) == hops
+    assert rows(edges, True) != hops
+
+
 def test_g4d_weighted_sampled_approximates_exact(spark, sf001_dir):
     """g4d (pivot-sampled weighted closeness, the 100x path for g4b)
     estimates the exact weighted closeness within a few percent at

@@ -3,8 +3,7 @@ oracle on a table tree, or against itself across an execution knob.
 
 Axes (one per run):
 
-- ``exact``: a real SF dir (``--sf-dir``, default sf0.01); by default
-  only the queries no ``CORRECTNESS_r*.json`` lists.
+- ``exact``: a real SF dir (``--sf-dir``, default sf0.01).
 - ``empty``, ``limit1``, ``limit3``: LIMIT-n copies of the sf0.001
   tables. n=0 exercises the empty-relation identities (grouping sets,
   outer joins, scalar aggregates); n=1 the single-sample edge
@@ -38,7 +37,6 @@ Writes nothing but the derived trees' cache dirs; exits 1 on any failure.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import tempfile
@@ -287,8 +285,7 @@ def main(argv=None) -> int:
     ap.add_argument(
         "names",
         nargs="*",
-        help="registered queries (default: the whole registry; for exact, "
-        "the queries no CORRECTNESS_r*.json lists)",
+        help="registered queries (default: the whole registry)",
     )
     ap.add_argument(
         "--sf-dir",
@@ -308,11 +305,6 @@ def main(argv=None) -> int:
         sf_dir = tree_dir(args.axis)
     elif args.axis == "exact":
         sf_dir = args.sf_dir or os.path.join(_TESTDATA, "sf0.01")
-        if not args.names:
-            seen: set[str] = set()
-            for p in ROOT.glob("CORRECTNESS_r*.json"):
-                seen |= set(json.loads(p.read_text()))
-            names = [n for n in names if n not in seen]
     else:
         sf_dir = args.sf_dir or os.environ.get("TEST_SF_DIR", SRC_SF)
 
