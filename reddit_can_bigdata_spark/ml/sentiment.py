@@ -71,17 +71,19 @@ def lexicon_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     (the VADER thresholds, `spark_ml_sentiment.py:127-133`). JVM-side,
     no Python UDF; but each hit count's ``filter`` lambda is a
     higher-order function, which Catalyst evaluates interpreted
-    (CodegenFallback) outside whole-stage codegen."""
+    (CodegenFallback) outside whole-stage codegen. The score reads the
+    ``pos_hits`` / ``neg_hits`` columns, so each count is evaluated
+    once per row, not once per use."""
 
     def hits(words: tuple[str, ...]) -> F.Column:
         lst = ", ".join(f"'{w}'" for w in words)
         return F.expr(f"size(filter(split(lower({text_col}), ' '), t -> t IN ({lst})))")
 
-    pos, neg = hits(POSITIVE_WORDS), hits(NEGATIVE_WORDS)
+    pos, neg = F.col("pos_hits"), F.col("neg_hits")
     score = F.when(pos + neg > 0, (pos - neg) / (pos + neg)).otherwise(F.lit(0.0))
-    return df.withColumn("pos_hits", pos).withColumn("neg_hits", neg).withColumn(
-        "lex_score", score
-    ).withColumn(
+    return df.withColumns(
+        {"pos_hits": hits(POSITIVE_WORDS), "neg_hits": hits(NEGATIVE_WORDS)}
+    ).withColumn("lex_score", score).withColumn(
         "lex_label",
         F.when(F.col("lex_score") >= 0.05, "positive")
         .when(F.col("lex_score") <= -0.05, "negative")

@@ -9,6 +9,9 @@ also make sense on a large multi-executor cluster reading ~100 TB:
   everything else stays JVM-side in whole-stage codegen.
 - **UTC session timezone** so timestamp semantics are deterministic and
   independent of the host machine.
+- **JDK case mapping** (``spark.sql.icu.caseMappings.enabled=false``):
+  ``lower``/``upper`` skip a one-time ICU table build per JVM (see the
+  comment in :func:`get_spark`).
 - ``spark.sql.shuffle.partitions`` defaults to the local core count;
   on a real cluster AQE coalesces from a deliberately high initial
   number, so we set the *initial* partition number high and let AQE
@@ -239,6 +242,16 @@ def get_spark(app_name: str = "reddit-can-bigdata-spark", shuffle_partitions: in
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # lower/upper map case with the JDK's tables, not ICU's. With
+        # ICU on (Spark 4.1's default) the first lower() in a JVM runs
+        # CollationAwareUTF8String's static initializer, which builds
+        # its one-to-many title-case table by calling
+        # UCharacter.toTitleCase on all 1,114,112 code points: about
+        # 0.7 cpu-s, even on ASCII data. The two mappings differ only
+        # on case pairs added after the JDK's Unicode version; DuckDB
+        # leaves those unmapped too, as the JDK does
+        # (tests/test_case_mapping.py checks every code point).
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     launches = SparkContext._gateway is None and not (
         {"PYSPARK_GATEWAY_PORT", "SPARK_REMOTE"} & os.environ.keys()

@@ -532,6 +532,15 @@ def test_vader_join_path_single_exchange(spark, sf_dir):
     assert count_exchanges(df) <= 1, plan
 
 
+def test_lexicon_hit_counts_evaluated_once(spark, sf_dir):
+    """f13: the score and label read the ``pos_hits`` / ``neg_hits``
+    columns, so the plan holds each hit count's interpreted ``filter``
+    lambda once (2), not once per use in the score's CASE (6)."""
+    df = REGISTRY["f13_lexicon_sentiment_distribution"].fn(spark, sf_dir)
+    plan = formatted_plan(df)
+    assert plan.count("filter(") == 2, plan
+
+
 def test_decode_pixel_stats_single_python_crossing(spark, sf_dir):
     """multimodal_decode_pixel_stats: payload synthesis stays JVM-side
     (Project under the Python node); exactly ONE Arrow crossing, no

@@ -18,9 +18,11 @@ Usage:
         g9_triangles_clustering influencer_composite_sampled influencer_composite_top20
 
 Prints one line per query to stdout:
-    name  wall_median  wall_min..max  cpu_s  jobs  stages  tasks
-(every counter is the median over the reps), then one JSON line for
-PERF.md: per-query wall and ``cpu_s`` medians, the ``--conf`` settings,
+    name  wall_median  wall_min..max  cpu_s  cpu_first  jobs  stages  tasks
+(every counter is the median over the reps; ``cpu_first`` is the first
+rep's cpu-s, which also holds whatever the session pays once, on the
+first query that needs it), then one JSON line for PERF.md: per-query
+wall and ``cpu_s`` medians, ``cpu_s_first``, the ``--conf`` settings,
 and ``host_ref_s``, the median wall of perfbench's fixed host-reference
 job, timed before the session starts. Walls move with the host's speed
 and cpu-s far less, so points from different sessions are compared by
@@ -92,8 +94,8 @@ def main() -> None:
         plans_dir.mkdir(parents=True, exist_ok=True)
 
     print(f"# sf_dir={args.sf_dir} reps={args.reps} cpus={spark.sparkContext.defaultParallelism}")
-    print(f"{'query':42s} {'wall_med':>8s} {'min':>7s} {'max':>7s} {'cpu_s':>8s} {'jobs':>5s} {'stages':>6s} {'tasks':>6s}")
-    walls_med, cpu_med = {}, {}
+    print(f"{'query':42s} {'wall_med':>8s} {'min':>7s} {'max':>7s} {'cpu_s':>8s} {'cpu_first':>9s} {'jobs':>5s} {'stages':>6s} {'tasks':>6s}")
+    walls_med, cpu_med, cpu_first = {}, {}, {}
     for name in names:
         spec = REGISTRY[name]
         reps = min(args.reps, spec.bench_reps) if spec.bench_reps else args.reps
@@ -116,9 +118,10 @@ def main() -> None:
         m = {k: statistics.median(x[k] for x in metas) for k in ("cpu_s", "jobs", "stages", "tasks")}
         walls_med[name] = round(statistics.median(walls), 3)
         cpu_med[name] = round(m["cpu_s"], 3)
+        cpu_first[name] = round(metas[0]["cpu_s"], 3)
         print(
             f"{name:42s} {walls_med[name]:8.3f} {min(walls):7.3f} {max(walls):7.3f}"
-            f" {m['cpu_s']:8.2f} {m['jobs']:5.0f} {m['stages']:6.0f} {m['tasks']:6.0f}"
+            f" {m['cpu_s']:8.2f} {cpu_first[name]:9.2f} {m['jobs']:5.0f} {m['stages']:6.0f} {m['tasks']:6.0f}"
         )
     sf = float(os.path.basename(args.sf_dir.rstrip("/")).replace("sf", "") or 0)
     print(json.dumps({
@@ -127,6 +130,7 @@ def main() -> None:
         "unit": "sec",
         "queries": walls_med,
         "cpu_s": cpu_med,
+        "cpu_s_first": cpu_first,
         "host_ref_s": round(host_ref_s, 3),
         "sf": sf,
         "reps": args.reps,
