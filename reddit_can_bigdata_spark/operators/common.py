@@ -2,12 +2,16 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Hashable, Iterator
 from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from reddit_can_bigdata_spark.tables import load_tables
+
+T = TypeVar("T")
 
 
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -99,6 +103,38 @@ def materialized(df: DataFrame) -> Iterator[DataFrame]:
         yield pinned
     finally:
         pinned.unpersist()
+
+
+_SHARED: ContextVar[dict | None] = ContextVar("shared_inputs", default=None)
+
+
+@contextmanager
+def shared_inputs() -> Iterator[None]:
+    """One scope in which :func:`shared` builds each key once.
+
+    It holds driver-side values and lazy plan handles only, never a
+    persisted RDD, and is dropped on exit, so nothing is shared across
+    scopes. The scope lives in a ``ContextVar``: each thread sees only
+    the scope it opened, and a thread started inside one (a pool
+    worker) sees none and builds in full."""
+    token = _SHARED.set({})
+    try:
+        yield
+    finally:
+        _SHARED.reset(token)
+
+
+def shared(key: Hashable, build: Callable[[], T], *anchors: object) -> T:
+    """``build()``, run once per ``key`` inside a :func:`shared_inputs`
+    scope and on every call outside one. ``anchors`` are objects whose
+    ``id`` is part of ``key``: the scope holds them, so no other object
+    takes over that ``id`` while it lives."""
+    memo = _SHARED.get()
+    if memo is None:
+        return build()
+    if key not in memo:
+        memo[key] = (build(), anchors)
+    return memo[key][0]
 
 
 #: conf knob: input bytes (plan-statistics estimate) each spread

@@ -6,6 +6,8 @@ exact DuckDB oracle.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from reddit_can_bigdata_spark.operators.common import (
@@ -156,20 +158,22 @@ def f11_quarterly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a7_table_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: the DAG's pipeline-stats row — one count per table
-    (`airflow/dags/reddit_can_complete_pipeline.py:71-75`), computed as
-    parallel scalar aggregates cross-joined into one row."""
+    (`airflow/dags/reddit_can_complete_pipeline.py:71-75`), in one pass:
+    each table's rows tagged with its index, unioned, and counted per
+    tag by one aggregate: 2 jobs, where a cross join of five counts
+    takes 10."""
     t = tables(spark, sf_dir)
-    counts = [
-        t["orders"].agg(F.count("*").alias("n_orders")),
-        t["lineitem"].agg(F.count("*").alias("n_lineitems")),
-        t["customer"].agg(F.count("*").alias("n_customers")),
-        t["events"].agg(F.count("*").alias("n_events")),
-        t["documents"].agg(F.count("*").alias("n_documents")),
-    ]
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.crossJoin(c)
-    return out
+    counted = {
+        "n_orders": "orders",
+        "n_lineitems": "lineitem",
+        "n_customers": "customer",
+        "n_events": "events",
+        "n_documents": "documents",
+    }
+    tagged = [t[name].select(F.lit(i).alias("t")) for i, name in enumerate(counted.values())]
+    return reduce(DataFrame.union, tagged).agg(*(
+        F.count_if(F.col("t") == i).alias(alias) for i, alias in enumerate(counted)
+    ))
 
 
 _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")

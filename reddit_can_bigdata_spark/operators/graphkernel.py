@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from reddit_can_bigdata_spark.operators.common import (
     ITER_CHECKPOINT_DIR_CONF,
     materialize,
+    shared,
 )
 
 #: conf knob: queries use the vectorized broadcast kernels only while
@@ -126,7 +127,10 @@ def kernel_edge_limit(spark: SparkSession) -> int:
 
 
 def build_arrays(u: np.ndarray, v: np.ndarray, w: np.ndarray) -> GraphArrays:
-    """CSR over the symmetric expansion of undirected (u, v, w) rows."""
+    """CSR over the symmetric expansion of undirected (u, v, w) rows.
+    The arrays are read-only: one graph may serve several builders
+    (:func:`collect_graph_raw` in a shared scope), so a kernel that
+    wrote into one would change the next builder's input."""
     nodes = np.unique(np.concatenate([u, v]))
     up = np.searchsorted(nodes, u).astype(np.int64)
     vp = np.searchsorted(nodes, v).astype(np.int64)
@@ -140,6 +144,8 @@ def build_arrays(u: np.ndarray, v: np.ndarray, w: np.ndarray) -> GraphArrays:
     indptr = np.searchsorted(
         src_sorted, np.arange(nodes.shape[0] + 1, dtype=np.int64)
     ).astype(np.int64)
+    for a in (nodes, indptr, indices, weights):
+        a.setflags(write=False)
     return GraphArrays(nodes=nodes, indptr=indptr, indices=indices, weights=weights)
 
 
@@ -277,7 +283,12 @@ def collect_graph_raw(
     gate itself is a filesystem stat, not a job. Every fallback —
     nulls in the key columns, too big on disk, a pair multiset past
     the kernel edge gate — returns None and the caller proceeds with
-    the unchanged distributed build."""
+    the unchanged distributed build.
+
+    Inside a ``common.shared_inputs`` scope (one dashboard
+    render) the graph of an ``sf_dir`` is collected once and every
+    builder reads the same read-only arrays; an explicit ``max_bytes``
+    always collects."""
     import os
 
     if max_bytes is None:
@@ -290,6 +301,10 @@ def collect_graph_raw(
             )
         except ValueError:
             max_bytes = GRAPH_RAW_COLLECT_MAX_BYTES
+        return shared(
+            ("graph_raw", sf_dir),
+            lambda: collect_graph_raw(spark, sf_dir, max_bytes),
+        )
     limit = kernel_edge_limit(spark)
     if max_bytes <= 0 or limit <= 0:
         return None

@@ -31,7 +31,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from reddit_can_bigdata_spark.operators.common import tables
+from reddit_can_bigdata_spark.operators.common import shared_inputs, tables
 from reddit_can_bigdata_spark.registry import REGISTRY, register
 
 # ---------------------------------------------------------------------------
@@ -164,7 +164,19 @@ def render_page(
     - ``sentiments``: sentiment, n
     - ``stats``: start, end
     - ``home`` / ``network``: no widgets (params rejected)
+
+    The page's builders run in one ``shared_inputs`` scope: an input
+    several of them build (the network page's collected graph, the
+    sentiments page's VADER join plan) is built once per render. The
+    scope ends when the render returns, so no render reuses another's.
     """
+    with shared_inputs():
+        return _render(spark, sf_dir, page, params)
+
+
+def _render(
+    spark: SparkSession, sf_dir: str, page: str, params: dict
+) -> dict[str, DataFrame]:
     binders = {
         "posts": (
             "dash_posts_explorer",

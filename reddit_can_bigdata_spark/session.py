@@ -258,6 +258,12 @@ def get_spark(app_name: str = "reddit-can-bigdata-spark", shuffle_partitions: in
     )
     if not launches:
         return builder.getOrCreate()
+    # Static, so set only when this call launches the JVM. The
+    # generated-class cache's default (100 entries) is smaller than the
+    # ~210 classes a dashboard tour compiles and the ~255 of a backend
+    # cycle: an LRU over a larger cyclic working set evicts each class
+    # before its next use, and every cycle compiles every class again.
+    builder = builder.config("spark.sql.codegen.cache.maxEntries", "1000")
     opts, conf_dir = _cds_options()
     if opts is not None:
         # the launcher puts spark.driver.defaultJavaOptions before

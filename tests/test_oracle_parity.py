@@ -222,6 +222,15 @@ def test_network_page_graph_queries_take_few_jobs(name, spark, duck, sf_dir):
     assert _jobs(spark, lambda: fn(spark, sf_dir).collect()) <= 3
 
 
+def test_a7_table_counts_take_two_jobs(spark, duck, sf_dir):
+    """The five table counts are one aggregate over the union of the
+    five scans: one shuffle-map job and one result job, where the
+    cross-joined counts took 10."""
+    _check_oracle("a7_table_counts", spark, duck, sf_dir)
+    fn = REGISTRY["a7_table_counts"].fn
+    assert _jobs(spark, lambda: fn(spark, sf_dir).collect()) <= 2
+
+
 def test_pinned_state_mode_skips_the_count_job(spark, sf_dir):
     """A caller that pins ``state_mode`` gets the loop without the
     state-size count that only the unpinned choice needs, so it

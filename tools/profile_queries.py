@@ -19,10 +19,14 @@ Usage:
 
 Prints one line per query to stdout:
     name  wall_median  wall_min..max  cpu_s  cpu_first  jobs  stages  tasks
+    compiles  compile_ms  compiles_first  compile_ms_first
 (every counter is the median over the reps; ``cpu_first`` is the first
 rep's cpu-s, which also holds whatever the session pays once, on the
-first query that needs it), then one JSON line for PERF.md: per-query
-wall and ``cpu_s`` medians, ``cpu_s_first``, the ``--conf`` settings,
+first query that needs it; ``compiles`` / ``compile_ms`` count the
+Janino compiles of generated classes and their time summed over
+threads, from Spark's codegen metrics), then one JSON line for PERF.md:
+per-query wall and ``cpu_s`` medians, ``cpu_s_first``, ``codegen``
+([compiles, ms] first rep and median), the ``--conf`` settings,
 and ``host_ref_s``, the median wall of perfbench's fixed host-reference
 job, timed before the session starts. Walls move with the host's speed
 and cpu-s far less, so points from different sessions are compared by
@@ -89,17 +93,22 @@ def main() -> None:
 
     meter = StatusMeter(spark)
     before = meter.read()
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    compile_ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
+    cg_before = (compiles.getCount(), compile_ns())
     plans_dir = Path(args.plans_dir) if args.plans_dir else None
     if plans_dir:
         plans_dir.mkdir(parents=True, exist_ok=True)
 
     print(f"# sf_dir={args.sf_dir} reps={args.reps} cpus={spark.sparkContext.defaultParallelism}")
-    print(f"{'query':42s} {'wall_med':>8s} {'min':>7s} {'max':>7s} {'cpu_s':>8s} {'cpu_first':>9s} {'jobs':>5s} {'stages':>6s} {'tasks':>6s}")
-    walls_med, cpu_med, cpu_first = {}, {}, {}
+    print(f"{'query':42s} {'wall_med':>8s} {'min':>7s} {'max':>7s} {'cpu_s':>8s} {'cpu_first':>9s} {'jobs':>5s} {'stages':>6s} {'tasks':>6s}"
+          f" {'compiles':>8s} {'comp_ms':>7s} {'comp_1st':>8s} {'ms_1st':>7s}")
+    walls_med, cpu_med, cpu_first, codegen = {}, {}, {}, {}
     for name in names:
         spec = REGISTRY[name]
         reps = min(args.reps, spec.bench_reps) if spec.bench_reps else args.reps
-        walls, metas = [], []
+        walls, metas, cgs = [], [], []
         for rep in range(reps):
             spark.sparkContext.setJobDescription(f"profile:{name}#{rep}")
             t0 = time.perf_counter()
@@ -109,6 +118,9 @@ def main() -> None:
             after = meter.read()
             metas.append(delta(before, after))
             before = after
+            cg_after = (compiles.getCount(), compile_ns())
+            cgs.append((cg_after[0] - cg_before[0], round((cg_after[1] - cg_before[1]) / 1e6, 1)))
+            cg_before = cg_after
             if plans_dir and rep == 0:
                 plan = df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"
@@ -119,9 +131,11 @@ def main() -> None:
         walls_med[name] = round(statistics.median(walls), 3)
         cpu_med[name] = round(m["cpu_s"], 3)
         cpu_first[name] = round(metas[0]["cpu_s"], 3)
+        codegen[name] = [*cgs[0], *(statistics.median(x[i] for x in cgs) for i in (0, 1))]
         print(
             f"{name:42s} {walls_med[name]:8.3f} {min(walls):7.3f} {max(walls):7.3f}"
             f" {m['cpu_s']:8.2f} {cpu_first[name]:9.2f} {m['jobs']:5.0f} {m['stages']:6.0f} {m['tasks']:6.0f}"
+            f" {codegen[name][2]:8.0f} {codegen[name][3]:7.1f} {cgs[0][0]:8d} {cgs[0][1]:7.1f}"
         )
     sf = float(os.path.basename(args.sf_dir.rstrip("/")).replace("sf", "") or 0)
     print(json.dumps({
@@ -131,6 +145,7 @@ def main() -> None:
         "queries": walls_med,
         "cpu_s": cpu_med,
         "cpu_s_first": cpu_first,
+        "codegen": codegen,
         "host_ref_s": round(host_ref_s, 3),
         "sf": sf,
         "reps": args.reps,
