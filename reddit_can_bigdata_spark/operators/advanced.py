@@ -16,7 +16,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from reddit_can_bigdata_spark.operators import graphkernel as gk
 from reddit_can_bigdata_spark.operators.common import (
     DSUM_SQL,
+    Rounds,
     dsum,
+    fixpoint,
     materialize,
     standard_grand_total,
     tables,
@@ -28,7 +30,6 @@ from reddit_can_bigdata_spark.operators.graph import (
     _state_mode,
     _unrolled,
     STATE_BROADCAST_MAX_ROWS,
-    UNTIL_CONVERGED_MAX_ROUNDS,
 )
 from reddit_can_bigdata_spark.registry import register
 
@@ -52,8 +53,7 @@ def _bfs_distances(
     distance didn't change has nothing new to propagate), but the join
     input collapses once the graph's diameter is passed: on the dense
     test graph this converges in 2-3 of the 6 rounds and cut sf0.1
-    runtime ~3x. Early exit when the frontier empties is safe for the
-    fixed-round oracle because further rounds are provably no-ops.
+    runtime ~3x; an empty frontier is the fixed point.
 
     ``step_col`` maps the edge row to the added distance (lit(1) for
     hops, col(weight) for weighted). ``sources`` optionally restricts
@@ -77,26 +77,25 @@ def _bfs_distances(
     dist = roots.select(
         "src", F.col("src").alias("node"), F.lit(0).cast("long").alias("dist")
     ).transform(materialize)
-    frontier = dist
-    frontier_n = None  # rows in `frontier` (known after round 1)
     edges = sym.withColumnRenamed("src", "mid")
     all_nodes = sym.select(F.col("dst").alias("node")).distinct() if unweighted else None
     if unweighted:
-        # Unweighted rows are never replaced, so |dist| is pure Python
-        # bookkeeping — no per-round count() actions on the driver.
+        # Unweighted rows are never replaced, so |dist| is |roots| plus
+        # the rounds' frontier counts — no extra count() per round.
         roots_n = roots.count()
         nodes_n = all_nodes.count()
-        dist_n = roots_n
-    rounds = UNTIL_CONVERGED_MAX_ROUNDS if until_converged else hops
-    for depth in range(1, rounds + 1):
+
+    def relax(r: Rounds) -> DataFrame | None:
+        depth = r.rounds + 1
+        frontier, dist = r.state, r.acc
         pull = False
-        if unweighted and frontier_n is not None:
+        if unweighted and r.counts:
             # missing = |roots| x |nodes| - |dist|; pull when smaller
             # than the frontier (dense-graph endgame).
-            n_missing = roots_n * nodes_n - dist_n
+            n_missing = roots_n * nodes_n - (roots_n + sum(r.counts))
             if n_missing == 0:
-                break  # every pair known; remaining rounds are no-ops
-            pull = n_missing < frontier_n
+                return None  # every pair known; remaining rounds are no-ops
+            pull = n_missing < r.counts[-1]
         if pull:
             # A missing pair's known neighbors all sit at exactly the
             # previous level (else the pair would already be known),
@@ -144,7 +143,7 @@ def _bfs_distances(
             fk = frontier.select("src", F.col("node").alias("nbr"))
             fkeys = (
                 F.broadcast(fk)
-                if frontier_n <= STATE_BROADCAST_MAX_ROWS
+                if r.counts[-1] <= STATE_BROADCAST_MAX_ROWS
                 else fk.hint("shuffle_hash")
             )
             found = cand.join(fkeys, ["src", "nbr"], "left_semi").select(
@@ -152,37 +151,29 @@ def _bfs_distances(
             ).distinct()
             if easy is not None:
                 found = found.unionByName(easy)
-            improved = found.select(
-                "src", "node", F.lit(depth).cast("long").alias("dist")
-            ).transform(materialize)
-        else:
-            expanded = (
-                frontier.join(edges, frontier.node == F.col("mid"))
-                .select(
-                    "src", F.col("dst").alias("node"), (F.col("dist") + step_col).alias("dist")
-                )
-                .groupBy("src", "node")
-                .agg(F.min("dist").alias("dist"))
+            return found.select("src", "node", F.lit(depth).cast("long").alias("dist"))
+        expanded = (
+            frontier.join(edges, frontier.node == F.col("mid"))
+            .select(
+                "src", F.col("dst").alias("node"), (F.col("dist") + step_col).alias("dist")
             )
-            old = dist.select("src", "node", F.col("dist").alias("old"))
-            improved = (
-                expanded.join(old, ["src", "node"], "left")
-                .where(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-                .select("src", "node", "dist")
-                .transform(materialize)
-            )
-        frontier_n = improved.count()
-        if frontier_n == 0:
-            break
-        dist = (
-            dist.join(improved.select("src", "node"), ["src", "node"], "left_anti")
-            .unionByName(improved)
-            .transform(materialize)
+            .groupBy("src", "node")
+            .agg(F.min("dist").alias("dist"))
         )
-        if unweighted:
-            dist_n += frontier_n
-        frontier = improved
-    return dist
+        old = dist.select("src", "node", F.col("dist").alias("old"))
+        return (
+            expanded.join(old, ["src", "node"], "left")
+            .where(F.col("old").isNull() | (F.col("dist") < F.col("old")))
+            .select("src", "node", "dist")
+        )
+
+    return fixpoint(
+        dist, relax, hops, until_converged=until_converged, rows=True, acc=dist,
+        fold=lambda dist, new: dist.join(
+            new.select("src", "node"), ["src", "node"], "left_anti"
+        ).unionByName(new),
+    ).acc
+
 
 # Order views before clicks at equal ts so ts-ties count as "already
 # seen" (inclusive as-of), then event_id for total determinism.
@@ -420,20 +411,23 @@ def g5_eigenvector_centrality(
         "node", F.lit(1.0).alias("val")
     )
     mode = state_mode or _state_mode(v.count())
-    for _ in range(EIGEN_ITERS):
-        m = (
+
+    def normalized(m: DataFrame) -> DataFrame:
+        norm = m.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
+        return m.crossJoin(F.broadcast(norm)).select(
+            "node", (F.col("val") / F.col("nrm")).alias("val")
+        )
+
+    def power(r: Rounds) -> DataFrame:
+        # the state is A·v; the first round multiplies the all-ones v
+        v = normalized(r.state) if r.rounds else r.state
+        return (
             _join_state(sym, v, sym.src == v.node, mode)
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("val") * F.col("w")).alias("val"))
         )
-        # m feeds both the norm and the next vector — checkpoint it or
-        # the plan doubles every iteration (2^EIGEN_ITERS blowup; OOMs
-        # the driver just rendering the tree).
-        m = m.transform(materialize)
-        norm = m.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
-        v = m.crossJoin(F.broadcast(norm)).select(
-            "node", (F.col("val") / F.col("nrm")).alias("val")
-        )
+
+    v = normalized(fixpoint(v, power, EIGEN_ITERS).state)
     return v.select("node", F.round("val", 6).alias("eigenvector"))
 
 

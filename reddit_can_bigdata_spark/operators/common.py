@@ -5,7 +5,8 @@ from __future__ import annotations
 from collections.abc import Callable, Hashable, Iterator
 from contextlib import contextmanager
 from contextvars import ContextVar
-from typing import TypeVar
+from dataclasses import dataclass, field
+from typing import Any, TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
@@ -26,9 +27,9 @@ def materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
     is read more than once is pinned here, in one of two forms.
 
     ``materialize`` (this function) is for frames that outlive the
-    call that builds them: loop state (PageRank ranks, BFS/Brandes
-    frontiers, label rounds, k-core survivors, BPE merges), shared
-    edge lists, scalar barriers, snapshots returned to a caller. It
+    call that builds them: shared edge lists, scalar barriers,
+    snapshots returned to a caller, and loop state, which goes through
+    the round driver :func:`fixpoint` (one call per round there). It
     cuts the lineage of this one instance: nothing is keyed on the
     plan, so no later call, bench rep or session can reuse the blocks,
     and they are freed by the ContextCleaner once the frame is
@@ -92,6 +93,114 @@ def materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
                 )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+#: ``until_converged`` ceiling. The fixed round bounds (``CC_ITERS``,
+#: ``LP_ITERS``, ``BW_LEVELS``, ``CLOSENESS_HOPS``) exist for oracle
+#: parity with the unrolled DuckDB CTE chains and are sized >= the TEST
+#: graph's diameter; on a sparser graph they silently truncate, so
+#: every driven graph loop accepts ``until_converged``: iterate to the
+#: fixed point. This cap is a runaway backstop only.
+UNTIL_CONVERGED_MAX_ROUNDS = 100_000
+
+
+def round_budget(
+    rounds: int, until_converged: bool, cap: int = UNTIL_CONVERGED_MAX_ROUNDS
+) -> int:
+    """A loop's fixed ``rounds``, or up to the ceiling with
+    ``until_converged``; never above the loop's own ``cap``."""
+    return min(cap, UNTIL_CONVERGED_MAX_ROUNDS if until_converged else rounds)
+
+
+def unconverged(budget: int, **aids: bool) -> RuntimeError:
+    """The error of a loop that must reach its fixed point and spent
+    its ``budget``. ``aids`` are its convergence options and whether
+    they are on; it suggests only those not on."""
+    on = [name for name, set_ in aids.items() if set_]
+    off = [f"{name}=True" for name, set_ in aids.items() if not set_]
+    already = f" (already set: {', '.join(on)})" if on else ""
+    hint = (
+        f"rerun with {' or '.join(off)}" if off else "raise UNTIL_CONVERGED_MAX_ROUNDS"
+    )
+    return RuntimeError(
+        f"no fixed point within {budget} rounds — the result may be"
+        f" truncated (diameter > budget){already}; {hint}"
+    )
+
+
+@dataclass
+class Rounds:
+    """A driven loop's record, read by its step and returned by
+    :func:`fixpoint`: the last round's ``state`` (the initial one before
+    any round) and the ``prev`` state it started from, the ``acc`` fold,
+    the per-round row ``counts`` of a loop that counts rows."""
+
+    state: DataFrame
+    acc: Any = None
+    prev: DataFrame | None = None
+    rounds: int = 0
+    counts: list[int] = field(default_factory=list)
+    converged: bool = False
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[Rounds], DataFrame | None],
+    rounds: int,
+    *,
+    until_converged: bool = False,
+    cap: int = UNTIL_CONVERGED_MAX_ROUNDS,
+    rows: bool = False,
+    changed: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
+    acc: Any = None,
+    fold: Callable[[Any, DataFrame], DataFrame] | None = None,
+    require_converged: bool = False,
+    aids: dict[str, bool] | None = None,
+) -> Rounds:
+    """The round driver of every distributed fixpoint loop, which
+    passes only its ``step``. Each round, within :func:`round_budget`:
+
+    - ``step(record)`` plans the next state, or returns None when the
+      record alone proves the fixed point (no job then);
+    - the plan is materialized: a step reads the previous state more
+      than once (a join and a change test, a norm and the next vector)
+      and a broadcast executes its plan, so without a cut each round
+      the plan doubles per round and every broadcast re-runs all
+      earlier rounds (PageRank cut every 3rd round: 1.7x slower);
+    - one progress action: with ``rows`` the state's row count (kept
+      in ``record.counts``), with ``changed`` a ``limit(1)`` count of
+      ``changed(new, previous)``. Zero is the fixed point, after which
+      every round is a no-op, so stopping keeps fixed-round oracles
+      exact;
+    - ``fold(acc, new)`` adds a round that made progress to the
+      accumulated result, materialized as well.
+
+    With ``require_converged``, spending the budget short of the fixed
+    point raises :func:`unconverged`, naming the loop's ``aids``."""
+    budget = round_budget(rounds, until_converged, cap)
+    run = Rounds(state, acc)
+    while run.rounds < budget:
+        nxt = step(run)
+        if nxt is None:
+            run.converged = True
+            break
+        run.prev, run.state = run.state, materialize(nxt)
+        run.rounds += 1
+        if rows:
+            run.counts.append(run.state.count())
+            progress = run.counts[-1]
+        elif changed is not None:
+            progress = changed(run.state, run.prev).limit(1).count()
+        else:
+            progress = None
+        if progress == 0:
+            run.converged = True
+            break
+        if fold is not None:
+            run.acc = materialize(fold(run.acc, run.state))
+    if require_converged and not run.converged:
+        raise unconverged(budget, until_converged=until_converged, **(aids or {}))
+    return run
 
 
 @contextmanager

@@ -502,6 +502,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller than the corpus); the per-round state join inherits the
     broadcast-ceiling guard; the final mapping is one left join on
     doc_id — corpus-linear."""
+    return _clusters(spark, sf_dir)[0]
+
+
+def _clusters(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """`dedup_clusters`' rows and the rounds its component loop ran."""
     from reddit_can_bigdata_spark.operators import graphkernel as gk
     from reddit_can_bigdata_spark.operators.graph import _sym, min_label_components
 
@@ -513,15 +518,16 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")), eager=False
     )
     g = gk.collect_graph(edges, spark)
-    labels = min_label_components(
+    labels, rounds = min_label_components(
         None if g is not None else _sym(edges, key="dst"),
-        0, until_converged=True, shortcut=True, require_converged=True, graph=g,
+        0, until_converged=True, shortcut=True, require_converged=True,
+        graph=g, spark=spark,
     )
     docs = tables(spark, sf_dir)["documents"].select("doc_id")
     return docs.join(labels, docs.doc_id == labels.node, "left").select(
         "doc_id",
         F.coalesce(F.col("label"), F.col("doc_id")).cast("long").alias("canonical_id"),
-    )
+    ), rounds
 
 
 # Passage-level exact dedup: non-overlapping PASSAGE_W-token windows.

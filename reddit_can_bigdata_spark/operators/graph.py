@@ -23,7 +23,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from reddit_can_bigdata_spark.operators import graphkernel as gk
-from reddit_can_bigdata_spark.operators.common import materialize, tables
+from reddit_can_bigdata_spark.operators.common import (
+    Rounds,
+    fixpoint,
+    materialize,
+    round_budget,
+    tables,
+    unconverged,
+)
 from reddit_can_bigdata_spark.registry import register
 
 PAGERANK_ITERS = 10
@@ -38,24 +45,6 @@ CC_ITERS = 8
 # OOM. Above this ceiling the loops switch to a shuffle join against
 # the key-partitioned edge table.
 STATE_BROADCAST_MAX_ROWS = 2_000_000
-
-# The fixed round bounds (CC_ITERS, LP_ITERS, BW_LEVELS,
-# CLOSENESS_HOPS) exist for oracle parity: the DuckDB oracles are
-# unrolled CTE chains, so both engines must run the same number of
-# rounds. They are sized >= the TEST graph's diameter; on a sparser
-# production graph (diameter >> bound) fixed rounds silently
-# truncate distances/labels. Every iterative loop therefore accepts
-# ``until_converged=True``: keep iterating while the frontier /
-# change-set is non-empty (each loop already early-exits on an empty
-# frontier, which is a provable fixed point). The cap below is a
-# runaway backstop only — diameter-many rounds is the real bound.
-UNTIL_CONVERGED_MAX_ROUNDS = 100_000
-
-#: observability: rounds the most recent min_label_components call
-#: executed before reaching (or giving up on) the fixed point — lets
-#: the scale probe record measured O(log diameter) convergence instead
-#: of asserting it (round-8 verdict item #4).
-LAST_COMPONENT_ROUNDS: int = 0
 
 
 def _state_mode(n_state_rows: float, override: str | None = None) -> str:
@@ -768,10 +757,8 @@ def g6_pagerank(
     iterations, damping 0.85.
 
     Scale: the transition matrix (src,dst,p) is computed once and
-    materialized; each iteration is one shuffle on dst. On a cluster,
-    checkpoint every ~5 iterations to truncate lineage, and partition
-    the edge list by src so the join is co-located (G5 eigenvector
-    centrality is this same loop with a normalize step instead of the
+    materialized, partitioned by src so the join is co-located; each
+    iteration is one shuffle on dst (G5 eigenvector centrality is this same loop with a normalize step instead of the
     teleport term). ``edges`` lets a composite share one materialized
     edge table across several centralities.
     """
@@ -800,15 +787,16 @@ def g6_pagerank(
         # the right schema instead of evaluating 1/N below
         return nodes.select("node", F.lit(None).cast("double").alias("pagerank"))
     mode = _state_mode(n_nodes, state_mode)
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
     teleport = (1.0 - PAGERANK_DAMPING) / n_nodes
-    for _ in range(PAGERANK_ITERS):
+
+    def rank(r: Rounds) -> DataFrame:
         # ranks is |nodes|-sized — below the broadcast ceiling it
         # broadcasts so the (big) transition matrix never shuffles; the
         # groupBy partial-aggregates map-side, so the per-iteration
         # shuffle carries only |nodes| x |partitions| rows. Above the
         # ceiling it becomes a co-partitioned shuffle-hash join.
-        ranks = (
+        ranks = r.state
+        return (
             _join_state(trans, ranks, trans.src == ranks.node, mode)
             .groupBy(F.col("dst").alias("node"))
             .agg(
@@ -817,11 +805,9 @@ def g6_pagerank(
                 )
             )
         )
-        # eager checkpoint every round: the broadcast above *executes*
-        # the ranks plan, so an un-truncated lineage would re-run the
-        # previous rounds on every broadcast (measured 1.7x slower when
-        # checkpointing only every 3rd round).
-        ranks = ranks.transform(materialize)
+
+    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
+    ranks = fixpoint(ranks, rank, PAGERANK_ITERS).state
     return ranks.select("node", F.round("rank", 6).alias("pagerank"))
 
 
@@ -867,42 +853,35 @@ def label_prop_partition(
     (broadcast under the ceiling, co-partitioned shuffle above —
     `_state_mode`) + one hash aggregate + one per-node window — linear
     in |E|. Deterministic by construction (sync updates, total tie
-    order), hence oracle-checkable. Returns (node, label)."""
-    from pyspark.sql import Window
-
+    order), hence oracle-checkable: an unchanged round is a fixed point.
+    Returns (node, label)."""
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     mode = state_mode or _state_mode(labels.count())
     w = Window.partitionBy("node").orderBy(F.desc("wsum"), F.asc("label"))
-    # the early exit below fires at the first genuine fixed point
-    rounds = LP_CONVERGED_ROUNDS if until_converged else LP_ITERS
-    for _ in range(rounds):
+
+    def vote(r: Rounds) -> DataFrame:
+        labels = r.state
         votes = (
             _join_state(sym, labels, sym.dst == labels.node, mode)
             .groupBy(F.col("src").alias("node"), F.col("label"))
             .agg(F.sum("w").alias("wsum"))
         )
-        nxt = (
+        return (
             votes.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("node", "label")
-            .transform(materialize)
         )
-        # sync label-prop is deterministic, so an unchanged round is a
-        # fixed point and every further round is a no-op — early exit
-        # keeps the fixed-round oracle bit-identical.
-        changed = (
-            nxt.alias("a")
-            .join(labels.alias("b"), "node")
-            .where(F.col("a.label") != F.col("b.label"))
-            .limit(1)
-            .count()
-        )
-        labels = nxt
-        if changed == 0:
-            break
-    return labels
+
+    def moved(nxt: DataFrame, labels: DataFrame) -> DataFrame:
+        ab = nxt.alias("a").join(labels.alias("b"), "node")
+        return ab.where(F.col("a.label") != F.col("b.label"))
+
+    return fixpoint(
+        labels, vote, LP_ITERS, until_converged=until_converged,
+        cap=LP_CONVERGED_ROUNDS, changed=moved,
+    ).state
 
 
 def _label_prop(
@@ -1034,18 +1013,22 @@ def min_label_components(
     shortcut: bool = False,
     require_converged: bool = False,
     graph=None,
-) -> DataFrame:
+    spark: SparkSession | None = None,
+) -> tuple[DataFrame, int]:
     """Min-label propagation over a symmetric edge list (src, dst):
     every node repeatedly adopts the smallest label among itself and
     its neighbors for ``iters`` fixed rounds (≥ component diameter ⇒
-    connected components). Returns (node, label).
+    connected components). Returns (node, label) and the rounds run.
 
     Each round = one state join (broadcast under the `_state_mode`
     ceiling, co-partitioned shuffle above) + one hash aggregate —
     linear in |E|. The caller should pass a materialized, dst-partitioned
     ``sym``, or the CSR of a graph resolved under the kernel gate as
-    ``graph`` (the same rounds then run on the driver; nothing probes
-    here). Shared by G7 components and the dedup clusterer.
+    ``graph`` and the caller's session as ``spark`` (the same rounds then
+    run on the driver and ``spark`` builds the labels frame; nothing
+    probes here). Shared by G7 components and the dedup clusterer.
+    min-label is monotone, so a round that changes nothing is the
+    fixed point: the dense test graph converges in 2-3 of its 8 rounds.
 
     ``shortcut=True`` adds a pointer-doubling step per round
     (label ← min(label, label[label]), one extra |V|-sized state
@@ -1057,32 +1040,24 @@ def min_label_components(
     depends on full components (the leakage-safe cluster split) must
     set it, because a silently-truncated propagation leaves two linked
     docs with different canonical ids."""
-    global LAST_COMPONENT_ROUNDS
-    rounds_budget = UNTIL_CONVERGED_MAX_ROUNDS if until_converged else iters
     if graph is not None:
-        spark = SparkSession.getActiveSession()
+        budget = round_budget(iters, until_converged)
         nodes_arr, labels_arr, executed, converged = gk.min_label_kernel(
-            graph, rounds_budget, shortcut=shortcut
+            graph, budget, shortcut=shortcut
         )
-        LAST_COMPONENT_ROUNDS = executed
         if require_converged and not converged:
-            _raise_unconverged(rounds_budget, until_converged, shortcut)
-        if nodes_arr.shape[0] == 0:
-            return spark.createDataFrame([], "node long, label long")
+            raise unconverged(budget, until_converged=until_converged, shortcut=shortcut)
         import pandas as pd
 
-        return spark.createDataFrame(
-            pd.DataFrame({"node": nodes_arr, "label": labels_arr})
-        )
+        labels = pd.DataFrame({"node": nodes_arr, "label": labels_arr})
+        return spark.createDataFrame(labels, "node long, label long"), executed
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     mode = state_mode or _state_mode(labels.count())
-    rounds = rounds_budget
-    converged = False
-    executed_rounds = 0
-    for _ in range(rounds):
-        executed_rounds += 1
+
+    def relabel(r: Rounds) -> DataFrame:
+        labels = r.state.select("node", "label")
         neigh = (
             _join_state(sym, labels, sym.dst == labels.node, mode)
             .groupBy(F.col("src").alias("node"))
@@ -1108,61 +1083,18 @@ def min_label_components(
                     F.col("label1"), F.coalesce(F.col("plabel"), F.col("label1"))
                 ).alias("label1"),
             )
-        nxt = step.select(
+        return step.select(
             "node",
             F.col("label1").alias("label"),
             (F.col("label1") < F.col("label0")).alias("chg"),
         )
-        # nxt is referenced twice below — checkpoint or the plan
-        # doubles per iteration (2^iters blowup)
-        nxt = nxt.transform(materialize)
-        changed = nxt.where("chg").limit(1).count()
-        labels = nxt.select("node", "label")
-        # min-label is monotone: once a round changes nothing, every
-        # further round is a provable no-op — the fixed-round oracle
-        # stays bit-identical while the dense test graph converges in
-        # 2-3 of the 8 budgeted rounds. (With shortcut, a no-change
-        # round additionally certifies label[label] ≥ label, i.e. the
-        # label table is fully path-compressed.)
-        if changed == 0:
-            converged = True
-            break
-    LAST_COMPONENT_ROUNDS = executed_rounds
-    if require_converged and not converged:
-        _raise_unconverged(rounds, until_converged, shortcut)
-    return labels
 
-
-def _raise_unconverged(
-    rounds: int, until_converged: bool, shortcut: bool
-) -> None:
-    """Shared non-convergence diagnostic for both min-label paths:
-    include the ACTIVE settings so it never suggests a flag the caller
-    already passed (round-8 advice)."""
-    applied = [
-        f for f, on in (
-            ("until_converged", until_converged), ("shortcut", shortcut)
-        ) if on
-    ]
-    remedies = [
-        f for f, on in (
-            ("until_converged=True", until_converged),
-            ("shortcut=True", shortcut),
-        ) if not on
-    ]
-    detail = f" (already set: {', '.join(applied)})" if applied else ""
-    hint = (
-        f"; rerun with {' or '.join(remedies)}"
-        if remedies
-        else "; all convergence aids are already on — the graph's"
-        " diameter exceeds even the doubled-path budget, raise"
-        " UNTIL_CONVERGED_MAX_ROUNDS"
+    run = fixpoint(
+        labels, relabel, iters, until_converged=until_converged,
+        changed=lambda nxt, _: nxt.where("chg"),
+        require_converged=require_converged, aids={"shortcut": shortcut},
     )
-    raise RuntimeError(
-        f"min_label_components: no fixed point within {rounds} rounds"
-        f" — component labels may be truncated (diameter > budget)"
-        f"{detail}{hint}"
-    )
+    return run.state.select("node", "label"), run.rounds
 
 
 def _components_oracle() -> str:
@@ -1210,14 +1142,9 @@ def g7_connected_components(
     # gate the whole sym-DataFrame build (edge aggregate + union +
     # repartition + materialize + re-collect) disappears
     edges, g = gk.resolve_graph(spark, sf_dir, kernel=state_mode is None)
-    return _component_sizes(edges, g, state_mode=state_mode, until_converged=until_converged)
-
-
-def _component_sizes(edges: DataFrame | None, g, **loop) -> DataFrame:
-    """g7 components over a resolved graph: the kernel rounds on its
-    CSR, else the loop over the symmetric list of its edge frame."""
-    labels = min_label_components(
-        None if g is not None else _sym(edges, key="dst"), CC_ITERS, graph=g, **loop
+    labels, _ = min_label_components(
+        None if g is not None else _sym(edges, key="dst"), CC_ITERS,
+        state_mode=state_mode, until_converged=until_converged, graph=g, spark=spark,
     )
     return labels.groupBy(F.col("label").cast("long").alias("component")).agg(
         F.count("*").alias("n_nodes")
@@ -1240,8 +1167,7 @@ def _brandes_forward(
     (src, node, sigma) where sigma is the number of shortest s→node
     paths — the forward half of Brandes' algorithm, distributed: every
     level is one join on the frontier + one anti-join against the
-    visited set + one hash aggregate. Early exit when a frontier
-    empties (provably a no-op for deeper fixed-round oracles).
+    visited set + one hash aggregate.
 
     Direction-optimizing (Beamer-style): all parents of a level-l+1
     node sit at level l exactly, so when the still-unvisited (src,
@@ -1258,15 +1184,14 @@ def _brandes_forward(
     all_nodes = sym.select(F.col("dst").alias("node")).distinct()
     nodes_n = all_nodes.count()
     frontiers = [lvl0]
-    visited = lvl0.select("src", "node")
-    visited_n = srcs_n
     edges = sym.select(F.col("src").alias("mid"), "dst")
-    cur, cur_n = lvl0, srcs_n
-    rounds = UNTIL_CONVERGED_MAX_ROUNDS if until_converged else levels
-    for _ in range(rounds):
-        n_missing = srcs_n * nodes_n - visited_n
+
+    def level(r: Rounds) -> DataFrame | None:
+        cur, visited = r.state, r.acc
+        cur_n = r.counts[-1] if r.counts else srcs_n
+        n_missing = srcs_n * nodes_n - (srcs_n + sum(r.counts))
         if n_missing == 0:
-            break
+            return None
         if n_missing < cur_n:
             # repartition: the tiny missing set fans out deg× next —
             # without the spread the whole pull pipeline is one task
@@ -1281,29 +1206,28 @@ def _brandes_forward(
             )
             fk = cur.select("src", F.col("node").alias("nbr"), "sigma")
             fkeys = F.broadcast(fk) if cur_n <= STATE_BROADCAST_MAX_ROWS else fk
-            nxt = (
+            return (
                 cand.join(fkeys, ["src", "nbr"])
                 .groupBy("src", "node")
                 .agg(F.sum("sigma").alias("sigma"))
-                .transform(materialize)
             )
-        else:
-            expanded = cur.join(edges, cur.node == F.col("mid")).select(
-                "src", F.col("dst").alias("node"), "sigma"
-            )
-            nxt = (
-                expanded.join(visited, ["src", "node"], "left_anti")
-                .groupBy("src", "node")
-                .agg(F.sum("sigma").alias("sigma"))
-                .transform(materialize)
-            )
-        nxt_n = nxt.count()
-        if nxt_n == 0:
-            break
+        expanded = cur.join(edges, cur.node == F.col("mid")).select(
+            "src", F.col("dst").alias("node"), "sigma"
+        )
+        return (
+            expanded.join(visited, ["src", "node"], "left_anti")
+            .groupBy("src", "node")
+            .agg(F.sum("sigma").alias("sigma"))
+        )
+
+    def visit(visited: DataFrame, nxt: DataFrame) -> DataFrame:
         frontiers.append(nxt)
-        visited = visited.unionByName(nxt.select("src", "node")).transform(materialize)
-        visited_n += nxt_n
-        cur, cur_n = nxt, nxt_n
+        return visited.unionByName(nxt.select("src", "node"))
+
+    fixpoint(
+        lvl0, level, levels, until_converged=until_converged, rows=True,
+        acc=lvl0.select("src", "node"), fold=visit,
+    )
     return frontiers
 
 
@@ -1689,16 +1613,20 @@ def g12_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(2*median/3) in pure integer arithmetic — low enough that a
     dense core survives, high enough that peeling actually cascades
     (4 rounds / 81-node core at sf0.01; median-k peels this
-    degree-homogeneous graph to empty). The Spark side peels to the actual fixpoint as
-    an iterative dataflow: per round, one degree aggregate over
-    edges-with-both-endpoints-alive and a filter; the survivor set
-    is materialized per round (same lineage discipline as
-    PageRank/components). Each round is one shuffle on node id;
+    degree-homogeneous graph to empty). The Spark side peels to the
+    actual fixpoint as an iterative dataflow: per round, one degree
+    aggregate over edges-with-both-endpoints-alive and a filter. Each
+    round is one shuffle on node id;
     rounds needed = peel depth, typically tiny. The DuckDB oracle
     expresses the SAME peeling as a recursive CTE unrolled to
-    {KCORE_MAX_PEELS} rounds (the fixpoint is reached far earlier —
+    KCORE_MAX_PEELS rounds (the fixpoint is reached far earlier —
     asserted in tests), making this iterative-until-convergence
     operator fully hash-checked, not rows-only."""
+    return _kcore(spark, sf_dir)[0]
+
+
+def _kcore(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """`g12_kcore`'s rows and the peel rounds its loop ran."""
     e = _backbone(spark, sf_dir)
     sym = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1726,37 +1654,29 @@ def g12_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a").alias("node"),
             F.lit(None).cast("bigint").alias("core_degree"),
             F.lit(None).cast("bigint").alias("k"),
-        )
+        ), 0
     k_med = int(k_med_row)
     k = (2 * k_med + 2) // 3
     alive = deg.select("a").transform(materialize)
     n_alive = alive.count()
-    rounds = 0
-    while True:
-        surviving = (
+
+    def inner_degrees(alive: DataFrame) -> DataFrame:
+        return (
             sym.join(alive, "a")
             .join(alive.select(F.col("a").alias("b")), "b")
             .groupBy("a")
             .agg(F.count("*").alias("d"))
-            .where(F.col("d") >= k)
-            .select("a")
         )
-        surviving = surviving.transform(materialize)
-        n_new = surviving.count()
-        rounds += 1
-        if n_new == n_alive or n_new == 0:
-            alive = surviving
-            break
-        alive, n_alive = surviving, n_new
-        if rounds >= KCORE_MAX_PEELS:
-            break
-    g12_kcore.last_peel_rounds = rounds  # test hook: must be << MAX
-    core_deg = (
-        sym.join(alive, "a")
-        .join(alive.select(F.col("a").alias("b")), "b")
-        .groupBy("a")
-        .agg(F.count("*").cast("bigint").alias("core_degree"))
+
+    def peel(r: Rounds) -> DataFrame | None:
+        sizes = [n_alive, *r.counts]
+        if len(sizes) > 1 and sizes[-1] == sizes[-2]:
+            return None  # the last round peeled nothing: the core
+        return inner_degrees(r.state).where(F.col("d") >= k).select("a")
+
+    run = fixpoint(alive, peel, KCORE_MAX_PEELS, rows=True)
+    core = inner_degrees(run.state).select(
+        F.col("a").alias("node"), F.col("d").alias("core_degree"),
+        F.lit(k).cast("bigint").alias("k"),
     )
-    return core_deg.select(
-        F.col("a").alias("node"), "core_degree", F.lit(k).cast("bigint").alias("k")
-    )
+    return core, run.rounds

@@ -23,7 +23,7 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from reddit_can_bigdata_spark.operators.common import materialize, tables
+from reddit_can_bigdata_spark.operators.common import Rounds, fixpoint, tables
 from reddit_can_bigdata_spark.registry import register
 
 # Persisted trained codebook (seeded spherical k-means, k=8, seed=42,
@@ -1788,22 +1788,22 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.expr("transform(embedding, x -> cast(x as double))").alias("e"),
     )
-    cents = emb.where(F.col("vec_id") < KMEANS_K).select(
-        F.col("vec_id").cast("int").alias("cid"), F.col("e").alias("cv")
-    )
-    assigned = None
-    for _ in range(KMEANS_ROUNDS):
+    w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cid"))
+
+    def assigned(cents: DataFrame) -> DataFrame:
         scored = emb.join(F.broadcast(cents)).withColumn(
             "d2", F.expr(_SQDIST.format(a="e", b="cv"))
         )
-        w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cid"))
-        assigned = (
+        return (
             scored.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("vec_id", "e", "cid")
         )
+
+    def lloyd(r: Rounds) -> DataFrame:
         sums = (
-            assigned.select("cid", F.posexplode("e").alias("pos", "x"))
+            assigned(r.state)
+            .select("cid", F.posexplode("e").alias("pos", "x"))
             .groupBy("cid", (F.col("pos") + 1).alias("dim"))
             .agg(
                 F.sum(F.col("x").cast("decimal(28,12)")).alias("sx"),
@@ -1816,17 +1816,20 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " round(cast(sx as double) / n, 6) as m))), s -> s.m)"
             ).alias("ncv")
         )
-        cents = materialize(
-            cents.join(newc, "cid", "left").select(
-                "cid", F.coalesce("ncv", "cv").alias("cv")
-            )
+        return r.state.join(newc, "cid", "left").select(
+            "cid", F.coalesce("ncv", "cv").alias("cv")
         )
 
-    members = assigned.groupBy("cid").agg(
+    cents = emb.where(F.col("vec_id") < KMEANS_K).select(
+        F.col("vec_id").cast("int").alias("cid"), F.col("e").alias("cv")
+    )
+    run = fixpoint(cents, lloyd, KMEANS_ROUNDS)
+    # members: the last round's assignment, to the centroids it started from
+    members = assigned(run.prev).groupBy("cid").agg(
         F.count("*").cast("bigint").alias("n_members")
     )
     return (
-        cents.select(
+        run.state.select(
             "cid", F.posexplode("cv").alias("pos", "centroid_raw")
         )
         .select(

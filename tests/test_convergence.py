@@ -58,9 +58,9 @@ def test_min_label_components_converged_single_component(spark):
 
     sym = _path_sym(spark).select("src", "dst")
     # 2 rounds < diameter: min-label hasn't swept the whole path
-    trunc = min_label_components(sym, 2)
+    trunc, _ = min_label_components(sym, 2)
     assert trunc.select("label").distinct().count() > 1
-    conv = min_label_components(sym, 2, until_converged=True)
+    conv, _ = min_label_components(sym, 2, until_converged=True)
     rows = conv.collect()
     assert {r["label"] for r in rows} == {0}
     assert len(rows) == N
@@ -68,9 +68,9 @@ def test_min_label_components_converged_single_component(spark):
 
 @pytest.mark.parametrize("tier", ["kernel", "loop"])
 def test_min_label_components_records_rounds(spark, tier):
-    """``graph.LAST_COMPONENT_ROUNDS`` holds the rounds the last call ran,
-    the same on both tiers: on the path P_N the label of node 0 needs
-    N-1 rounds to reach node N-1, and one more round changes nothing."""
+    """``min_label_components`` returns the rounds it ran, the same on
+    both tiers: on the path P_N the label of node 0 needs N-1 rounds to
+    reach node N-1, and one more round changes nothing."""
     import numpy as np
 
     from reddit_can_bigdata_spark.operators import graph
@@ -81,13 +81,14 @@ def test_min_label_components_records_rounds(spark, tier):
         inputs = {"sym": None, "graph": build_arrays(u, u + 1, np.ones_like(u))}
     else:
         inputs = {"sym": _path_sym(spark).select("src", "dst"), "graph": None}
-    graph.LAST_COMPONENT_ROUNDS = 0
-    graph.min_label_components(inputs["sym"], 2, graph=inputs["graph"]).collect()
-    assert graph.LAST_COMPONENT_ROUNDS == 2
-    graph.min_label_components(
-        inputs["sym"], 2, until_converged=True, graph=inputs["graph"]
-    ).collect()
-    assert graph.LAST_COMPONENT_ROUNDS == N
+    labels, rounds = graph.min_label_components(**inputs, iters=2, spark=spark)
+    labels.collect()
+    assert rounds == 2
+    labels, rounds = graph.min_label_components(
+        **inputs, iters=2, until_converged=True, spark=spark
+    )
+    labels.collect()
+    assert rounds == N
 
 
 def test_brandes_converged_matches_closed_form(spark):

@@ -54,14 +54,15 @@ def test_min_label_long_chain_converges(spark):
     for inputs in _chain_inputs(spark).values():
         labels = min_label_components(
             **inputs, iters=0, until_converged=True, shortcut=True, require_converged=True
-        ).collect()
+        )[0].collect()
         assert {r["node"] for r in labels} == set(range(20))
         assert {r["label"] for r in labels} == {0}
 
 
 def _chain_inputs(spark) -> dict:
     """The 20-node path as min_label_components' input on each tier:
-    the symmetric pair list for the loop, the CSR for the kernel."""
+    the symmetric pair list for the loop, the CSR and the caller's
+    session for the kernel."""
     import numpy as np
 
     from reddit_can_bigdata_spark.operators.graphkernel import build_arrays
@@ -73,7 +74,11 @@ def _chain_inputs(spark) -> dict:
     u = np.arange(19, dtype=np.int64)
     return {
         "loop": {"sym": sym, "graph": None},
-        "kernel": {"sym": None, "graph": build_arrays(u, u + 1, np.ones_like(u))},
+        "kernel": {
+            "sym": None,
+            "graph": build_arrays(u, u + 1, np.ones_like(u)),
+            "spark": spark,
+        },
     }
 
 
@@ -84,9 +89,7 @@ def test_min_label_unconverged_raises(spark, tier):
     from reddit_can_bigdata_spark.operators.graph import min_label_components
 
     with pytest.raises(RuntimeError, match="no fixed point"):
-        min_label_components(
-            **_chain_inputs(spark)[tier], iters=2, require_converged=True
-        ).collect()
+        min_label_components(**_chain_inputs(spark)[tier], iters=2, require_converged=True)
 
 
 def test_cluster_split_pairs_share_split(spark, sf_dir):
@@ -131,3 +134,27 @@ def test_cluster_split_never_straddles_clusters(spark, sf_dir):
     assert {s for ss in by_cluster.values() for s in ss} == {
         "train", "val", "test"
     }
+
+
+def test_cluster_split_on_a_worker_thread(spark, duck, sf_dir):
+    """A pool thread has no active session (`getActiveSession` is
+    None there), as in a threaded dashboard or the DAG's concurrent
+    stages: the split, whose components take the kernel tier at the
+    test SF, still gives its oracle's rows when it runs on one."""
+    import threading
+
+    from test_oracle_parity import _check_oracle
+
+    errors = []
+
+    def check():
+        try:
+            _check_oracle("dedup_cluster_split", spark, duck, sf_dir)
+        except BaseException as e:  # re-raised on the test's thread
+            errors.append(e)
+
+    worker = threading.Thread(target=check)
+    worker.start()
+    worker.join()
+    if errors:
+        raise errors[0]

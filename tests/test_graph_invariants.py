@@ -416,12 +416,13 @@ def test_g12_kcore_invariants(spark, sf_dir):
     from reddit_can_bigdata_spark.operators.graph import (
         KCORE_MAX_PEELS,
         _backbone,
-        g12_kcore,
+        _kcore,
     )
 
-    rows = g12_kcore(spark, sf_dir).collect()
+    core, peel_rounds = _kcore(spark, sf_dir)
+    rows = core.collect()
     assert rows, "k-core must be non-vacuous at the test SF"
-    assert g12_kcore.last_peel_rounds < KCORE_MAX_PEELS / 2
+    assert peel_rounds < KCORE_MAX_PEELS / 2
     k = rows[0].k
     core = {r.node for r in rows}
     nbrs: dict[int, set] = {}
