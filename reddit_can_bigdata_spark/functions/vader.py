@@ -887,19 +887,13 @@ def _vader_join_plan(
     # Python tasks (guide §4: keep the boundary out of the hot path).
     import pandas as pd
 
-    lex_df = F.broadcast(
-        spark.createDataFrame(
-            pd.DataFrame(list(lexicon.items()), columns=["tok", "valence"]),
-            "tok string, valence double",
-        )
+    lex_df = spark.createDataFrame(
+        pd.DataFrame(list(lexicon.items()), columns=["tok", "valence"]),
+        "tok string, valence double",
     )
-    boost_df = F.broadcast(
-        spark.createDataFrame(
-            pd.DataFrame(
-                list(BOOSTER_DICT.items()), columns=["tok", "bval"]
-            ),
-            "tok string, bval double",
-        )
+    boost_df = spark.createDataFrame(
+        pd.DataFrame(list(BOOSTER_DICT.items()), columns=["tok", "bval"]),
+        "tok string, bval double",
     )
     text = f"coalesce({text_col}, '')"
     rawtoks = f"filter(split({text}, '{_ws_split_pattern('spark')}'), t -> t <> '')"

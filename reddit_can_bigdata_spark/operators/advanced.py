@@ -27,7 +27,6 @@ from reddit_can_bigdata_spark.operators.graph import (
     _join_state,
     _sym,
     _sym_sql,
-    _state_mode,
     _unrolled,
     STATE_BROADCAST_MAX_ROWS,
 )
@@ -393,7 +392,6 @@ def _eigenvector_oracle() -> str:
 def g5_eigenvector_centrality(
     spark: SparkSession,
     sf_dir: str,
-    state_mode: str | None = None,
     edges: DataFrame | None = None,
     graph=None,
 ) -> DataFrame:
@@ -403,26 +401,24 @@ def g5_eigenvector_centrality(
     Same Pregel-as-DataFrame loop as PageRank (G6): one shuffle per
     iteration on the destination key; the norm is a scalar aggregate
     broadcast back."""
-    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph, kernel=state_mode is None)
+    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph)
     if g is not None:
         return gk.eigenvector_kernel_df(spark, g, EIGEN_ITERS)
     sym = _sym(edges, "w", key="src")
     v = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("val")
     )
-    mode = state_mode or _state_mode(v.count())
+    n_nodes = v.count()
 
     def normalized(m: DataFrame) -> DataFrame:
         norm = m.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
-        return m.crossJoin(F.broadcast(norm)).select(
-            "node", (F.col("val") / F.col("nrm")).alias("val")
-        )
+        return m.crossJoin(norm).select("node", (F.col("val") / F.col("nrm")).alias("val"))
 
     def power(r: Rounds) -> DataFrame:
         # the state is A·v; the first round multiplies the all-ones v
         v = normalized(r.state) if r.rounds else r.state
         return (
-            _join_state(sym, v, sym.src == v.node, mode)
+            _join_state(sym, v, sym.src == v.node, n_nodes)
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("val") * F.col("w")).alias("val"))
         )
@@ -509,8 +505,8 @@ def _closeness(
     k = srcs.agg(F.count("*").cast("double").alias("k"))
     agg = dist.groupBy("node").agg(F.sum("dist").alias("sdist")).where(F.col("sdist") > 0)
     return (
-        agg.crossJoin(F.broadcast(n))
-        .crossJoin(F.broadcast(k))
+        agg.crossJoin(n)
+        .crossJoin(k)
         .select(
             "node",
             F.round(
@@ -642,7 +638,7 @@ def g4_closeness_centrality(
 # ~100 GB spread over the cluster — the practical upper bound before
 # the all-sources frontier join dominates the whole job. Above it the
 # Eppstein–Wang sampled estimator (O(K·N) state, same loop) takes
-# over. Mirrors the `_state_mode` broadcast/shuffle gate.
+# over. Mirrors the `graph._join_state` broadcast/shuffle gate.
 CLOSENESS_EXACT_MAX_NODES = 50_000
 
 # Second axis of the exact-closeness gate (round 11): the node ceiling

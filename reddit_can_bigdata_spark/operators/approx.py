@@ -122,7 +122,7 @@ def heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = tok.agg(F.count("*").cast("bigint").alias("total"))
     cnt = tok.groupBy("term").agg(F.count("*").cast("bigint").alias("freq"))
     return (
-        cnt.crossJoin(F.broadcast(n))
+        cnt.crossJoin(n)
         .where(F.col("freq") * HH_PHI_DEN > F.col("total"))
         .select("term", "freq", "total")
     )

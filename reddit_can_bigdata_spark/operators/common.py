@@ -112,6 +112,13 @@ def round_budget(
     return min(cap, UNTIL_CONVERGED_MAX_ROUNDS if until_converged else rounds)
 
 
+def must_converge(budget: int, until_converged: bool, require_converged: bool = False) -> bool:
+    """Whether a loop short of its fixed point after ``budget`` rounds
+    raises :func:`unconverged` (on both graph tiers): it requires the
+    fixed point, or the ``until_converged`` ceiling stopped it."""
+    return require_converged or (until_converged and budget == UNTIL_CONVERGED_MAX_ROUNDS)
+
+
 def unconverged(budget: int, **aids: bool) -> RuntimeError:
     """The error of a loop that must reach its fixed point and spent
     its ``budget``. ``aids`` are its convergence options and whether
@@ -175,8 +182,9 @@ def fixpoint(
     - ``fold(acc, new)`` adds a round that made progress to the
       accumulated result, materialized as well.
 
-    With ``require_converged``, spending the budget short of the fixed
-    point raises :func:`unconverged`, naming the loop's ``aids``."""
+    Spending the budget short of the fixed point raises
+    :func:`unconverged`, naming the loop's ``aids``, where
+    :func:`must_converge` says so."""
     budget = round_budget(rounds, until_converged, cap)
     run = Rounds(state, acc)
     while run.rounds < budget:
@@ -198,7 +206,7 @@ def fixpoint(
             break
         if fold is not None:
             run.acc = materialize(fold(run.acc, run.state))
-    if require_converged and not run.converged:
+    if not run.converged and must_converge(budget, until_converged, require_converged):
         raise unconverged(budget, until_converged=until_converged, **(aids or {}))
     return run
 

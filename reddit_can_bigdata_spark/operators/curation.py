@@ -212,9 +212,7 @@ def curate_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("h", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = toks.join(F.broadcast(budgets), "source").withColumn(
-        "cum_tokens", F.sum("n_tokens").over(w)
-    )
+    cum = toks.join(budgets, "source").withColumn("cum_tokens", F.sum("n_tokens").over(w))
     return cum.where(F.col("cum_tokens") <= F.col("src_budget")).select(
         "doc_id", "source", "n_tokens", "cum_tokens"
     )
@@ -379,7 +377,7 @@ def curate_dsir_logweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = hist.agg(
         F.sum("tc").alias("tt"), F.sum("rc").alias("rt")
     )
-    lr = hist.crossJoin(F.broadcast(totals)).select(
+    lr = hist.crossJoin(totals).select(
         "b",
         (
             F.log((F.col("tc") + 1.0) / (F.col("tt") + DSIR_BUCKETS))
@@ -388,7 +386,7 @@ def curate_dsir_logweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         gb.where(~is_eval)
-        .join(F.broadcast(lr), "b")
+        .join(lr, "b")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_grams"),
@@ -553,7 +551,7 @@ def curate_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", (portable_hash32(F.col("gram")) % CLF_DIM).alias("feature_id")
     )
     pooled = (
-        feats.join(F.broadcast(weights.where(F.col("feature_id") >= 0)), "feature_id")
+        feats.join(weights.where(F.col("feature_id") >= 0), "feature_id")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_feats"),
@@ -563,7 +561,7 @@ def curate_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     logit = F.col("bias") + F.col("wsum").cast("double") / F.col("n_feats")
     score = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
     return (
-        pooled.crossJoin(F.broadcast(bias))
+        pooled.crossJoin(bias)
         .select(
             "doc_id",
             "n_feats",

@@ -445,7 +445,7 @@ def skew_profile_orderkey(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return top.crossJoin(F.broadcast(stats)).select(
+    return top.crossJoin(stats).select(
         "rnk",
         "key",
         "cnt",
@@ -986,9 +986,7 @@ def robust_mad_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile("adev", F.lit(0.5)).alias("mad_raw")
     )
     flagged = (
-        dev.join(
-            F.broadcast(mad.select("event_type", "mad_raw")), "event_type"
-        )
+        dev.join(mad.select("event_type", "mad_raw"), "event_type")
         .groupBy("event_type")
         .agg(
             F.sum(
@@ -1002,7 +1000,7 @@ def robust_mad_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        mad.join(F.broadcast(flagged), "event_type")
+        mad.join(flagged, "event_type")
         .select(
             "event_type",
             F.round("med_v", 6).alias("median_value"),
@@ -1195,11 +1193,7 @@ def p9_flag_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ranked = w2_influencer_ranking(spark, sf_dir)
     cust = tables(spark, sf_dir)["customer"].select("c_custkey", "c_name")
-    flagged = cust.join(
-        F.broadcast(ranked),
-        cust.c_custkey == ranked.o_custkey,
-        "inner",
-    ).select(
+    flagged = cust.join(ranked, cust.c_custkey == ranked.o_custkey, "inner").select(
         "c_custkey",
         "c_name",
         F.col("o_custkey").isNotNull().alias("is_influencer"),

@@ -27,6 +27,7 @@ from reddit_can_bigdata_spark.operators.common import (
     Rounds,
     fixpoint,
     materialize,
+    must_converge,
     round_budget,
     tables,
     unconverged,
@@ -43,25 +44,21 @@ CC_ITERS = 8
 # unshuffled — the right trade while the vector fits in driver +
 # executor memory — but at 100x nodes it is the classic broadcast
 # OOM. Above this ceiling the loops switch to a shuffle join against
-# the key-partitioned edge table.
+# the key-partitioned edge table. The session's threshold cannot choose
+# here: it does not size a checkpointed state, and it never picks
+# the co-partitioned shuffle-hash join over a sort-merge one.
 STATE_BROADCAST_MAX_ROWS = 2_000_000
 
 
-def _state_mode(n_state_rows: float, override: str | None = None) -> str:
-    """Pick 'broadcast' or 'shuffle' for the per-iteration state join."""
-    if override is not None:
-        return override
-    return "broadcast" if n_state_rows <= STATE_BROADCAST_MAX_ROWS else "shuffle"
+def _join_state(edges: DataFrame, state: DataFrame, on, n_state_rows: int) -> DataFrame:
+    """Join the (big, materialized) edge table with the per-node state
+    vector of ``n_state_rows`` rows.
 
-
-def _join_state(edges: DataFrame, state: DataFrame, on, mode: str) -> DataFrame:
-    """Join the (big, materialized) edge table with the per-node state vector.
-
-    'broadcast': hash map of the state on every executor, edge table
-    never moves. 'shuffle': shuffle-hash join — the edge table is
+    Up to the ceiling: hash map of the state on every executor, edge
+    table never moves. Above it: shuffle-hash join — the edge table is
     already partitioned on its join key by the caller, so the exchange
     moves only the |nodes|-sized state side; no size ceiling."""
-    if mode == "broadcast":
+    if n_state_rows <= STATE_BROADCAST_MAX_ROWS:
         return edges.join(F.broadcast(state), on)
     return edges.join(state.hint("shuffle_hash"), on)
 
@@ -316,7 +313,7 @@ def g2_degree_centrality(
         eager=False,
     )
     n = deg.agg(F.count("*").cast("double").alias("n_nodes"))
-    return deg.crossJoin(F.broadcast(n)).select(
+    return deg.crossJoin(n).select(
         "node",
         "degree",
         "weighted_degree",
@@ -559,7 +556,7 @@ def _triangles_per_node_complement(e: DataFrame, deg: DataFrame) -> DataFrame:
         sym.select(F.col("src").alias("b"), F.col("dst").alias("vn")), "b"
     )
     witnessed = cand.join(
-        F.broadcast(sym.select(F.col("src").alias("a"), F.col("dst").alias("vn"))),
+        sym.select(F.col("src").alias("a"), F.col("dst").alias("vn")),
         ["a", "vn"],
         "left_semi",
     )
@@ -747,7 +744,6 @@ def _pagerank_oracle() -> str:
 def g6_pagerank(
     spark: SparkSession,
     sf_dir: str,
-    state_mode: str | None = None,
     edges: DataFrame | None = None,
     graph=None,
 ) -> DataFrame:
@@ -762,7 +758,7 @@ def g6_pagerank(
     teleport term). ``edges`` lets a composite share one materialized
     edge table across several centralities.
     """
-    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph, kernel=state_mode is None)
+    edges, g = gk.resolve_graph(spark, sf_dir, edges, graph)
     if g is not None:
         return gk.pagerank_kernel_df(spark, g, PAGERANK_ITERS, PAGERANK_DAMPING)
     sym = _sym(edges, "w")
@@ -786,7 +782,6 @@ def g6_pagerank(
         # empty graph: no nodes to rank — return the empty result with
         # the right schema instead of evaluating 1/N below
         return nodes.select("node", F.lit(None).cast("double").alias("pagerank"))
-    mode = _state_mode(n_nodes, state_mode)
     teleport = (1.0 - PAGERANK_DAMPING) / n_nodes
 
     def rank(r: Rounds) -> DataFrame:
@@ -797,7 +792,7 @@ def g6_pagerank(
         # ceiling it becomes a co-partitioned shuffle-hash join.
         ranks = r.state
         return (
-            _join_state(trans, ranks, trans.src == ranks.node, mode)
+            _join_state(trans, ranks, trans.src == ranks.node, n_nodes)
             .groupBy(F.col("dst").alias("node"))
             .agg(
                 (F.lit(teleport) + F.lit(PAGERANK_DAMPING) * F.sum(F.col("rank") * F.col("p"))).alias(
@@ -843,28 +838,26 @@ def _labelprop_oracle() -> str:
     FROM lp{LP_ITERS} GROUP BY label"""
 
 
-def label_prop_partition(
-    sym: DataFrame, state_mode: str | None = None, until_converged: bool = False
-) -> DataFrame:
+def label_prop_partition(sym: DataFrame, until_converged: bool = False) -> DataFrame:
     """Weighted label-propagation loop over a prepared symmetric edge
     list (src, dst, w) — every node synchronously adopts the label
     carrying the greatest total edge weight in its neighborhood (tie →
     smallest label), fixed 4 rounds. Each round = one state join
     (broadcast under the ceiling, co-partitioned shuffle above —
-    `_state_mode`) + one hash aggregate + one per-node window — linear
+    `_join_state`) + one hash aggregate + one per-node window — linear
     in |E|. Deterministic by construction (sync updates, total tie
     order), hence oracle-checkable: an unchanged round is a fixed point.
     Returns (node, label)."""
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    mode = state_mode or _state_mode(labels.count())
+    n_labels = labels.count()
     w = Window.partitionBy("node").orderBy(F.desc("wsum"), F.asc("label"))
 
     def vote(r: Rounds) -> DataFrame:
         labels = r.state
         votes = (
-            _join_state(sym, labels, sym.dst == labels.node, mode)
+            _join_state(sym, labels, sym.dst == labels.node, n_labels)
             .groupBy(F.col("src").alias("node"), F.col("label"))
             .agg(F.sum("w").alias("wsum"))
         )
@@ -884,24 +877,22 @@ def label_prop_partition(
     ).state
 
 
-def _label_prop(
-    spark: SparkSession, sf_dir: str, state_mode: str | None = None
-) -> tuple[DataFrame | tuple, DataFrame]:
+def _label_prop(spark: SparkSession, sf_dir: str) -> tuple[DataFrame | tuple, DataFrame]:
     """Label propagation over the event co-occurrence graph; returns
     (graph, labels), ``labels`` a frame with (node, label) columns.
 
-    Under the kernel gate (``state_mode`` unset) ``graph`` is
-    ``(GraphArrays, label array aligned with its nodes)``, so callers
-    sum edge weights on the driver, and ``labels`` also carries each
-    node's degree and engagement (`community_nodes_df`). Otherwise
+    Under the kernel gate ``graph`` is ``(GraphArrays, label array
+    aligned with its nodes)``, so callers sum edge weights on the
+    driver, and ``labels`` also carries each node's degree and
+    engagement (`community_nodes_df`). Otherwise
     ``graph`` is the dst-partitioned symmetric edge list (src, dst, w)
     that `label_prop_partition` ran over."""
-    edges, g = gk.resolve_graph(spark, sf_dir, kernel=state_mode is None)
+    edges, g = gk.resolve_graph(spark, sf_dir)
     if g is not None:
         lab = gk.label_prop_kernel(g, LP_ITERS)
         return (g, lab), gk.community_nodes_df(spark, g, lab)
     sym = _sym(edges, "w", key="dst")
-    return sym, label_prop_partition(sym, state_mode)
+    return sym, label_prop_partition(sym)
 
 
 @register(
@@ -909,18 +900,16 @@ def _label_prop(
     oracle=_labelprop_oracle(),
     tags=("graph", "community", "iterative"),
 )
-def g7_label_propagation(
-    spark: SparkSession, sf_dir: str, state_mode: str | None = None
-) -> DataFrame:
+def g7_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G7 (community structure): weighted label propagation — the
     scalable stand-in for Louvain (`louvain_communities(G, weight,
     seed=42)`, `network-analysis/network_analysis.py:194`), which is
     inherently sequential; community count/membership are asserted
     exactly only at test scale (SURVEY §7.3 risk 1). Under the kernel
-    gate the rounds run on the driver (`label_prop_kernel`); above it,
-    or with ``state_mode`` pinned, as the distributed loop
-    (`label_prop_partition`). Both tiers in `_label_prop`."""
-    _, labels = _label_prop(spark, sf_dir, state_mode)
+    gate the rounds run on the driver (`label_prop_kernel`); above it
+    as the distributed loop (`label_prop_partition`). Both tiers in
+    `_label_prop`."""
+    _, labels = _label_prop(spark, sf_dir)
     return labels.groupBy(F.col("label").cast("long").alias("community")).agg(
         F.count("*").alias("n_nodes")
     )
@@ -960,9 +949,7 @@ def _modularity_oracle() -> str:
     oracle=_modularity_oracle(),
     tags=("graph", "community", "modularity"),
 )
-def g7c_modularity(
-    spark: SparkSession, sf_dir: str, state_mode: str | None = None
-) -> DataFrame:
+def g7c_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted modularity Q of the label-propagation partition —
     the objective Louvain maximizes (Newman 2004), computed
     relationally: Q = Σ_c [w_in(c)/m − (deg(c)/2m)²]. This is the
@@ -972,7 +959,7 @@ def g7c_modularity(
     the loop tier they are two joins + two aggregates over the
     community assignment. Every node has an edge, so each community
     has one (label, deg_c, w_in2, two_m) row."""
-    graph, comm = _label_prop(spark, sf_dir, state_mode)
+    graph, comm = _label_prop(spark, sf_dir)
     if isinstance(graph, DataFrame):
         sym = graph
         ca = comm.select(F.col("node").alias("src"), F.col("label").alias("la"))
@@ -990,7 +977,7 @@ def g7c_modularity(
             .groupBy(F.col("la").alias("label"))
             .agg(F.sum("w").alias("deg_c"))
         )
-        terms = degs.join(internal, "label", "left").crossJoin(F.broadcast(two_m))
+        terms = degs.join(internal, "label", "left").crossJoin(two_m)
     else:
         terms = gk.modularity_terms_df(spark, *graph)
     return terms.agg(
@@ -1008,7 +995,6 @@ def g7c_modularity(
 def min_label_components(
     sym: DataFrame | None,
     iters: int,
-    state_mode: str | None = None,
     until_converged: bool = False,
     shortcut: bool = False,
     require_converged: bool = False,
@@ -1020,7 +1006,7 @@ def min_label_components(
     its neighbors for ``iters`` fixed rounds (≥ component diameter ⇒
     connected components). Returns (node, label) and the rounds run.
 
-    Each round = one state join (broadcast under the `_state_mode`
+    Each round = one state join (broadcast under the `_join_state`
     ceiling, co-partitioned shuffle above) + one hash aggregate —
     linear in |E|. The caller should pass a materialized, dst-partitioned
     ``sym``, or the CSR of a graph resolved under the kernel gate as
@@ -1045,7 +1031,7 @@ def min_label_components(
         nodes_arr, labels_arr, executed, converged = gk.min_label_kernel(
             graph, budget, shortcut=shortcut
         )
-        if require_converged and not converged:
+        if not converged and must_converge(budget, until_converged, require_converged):
             raise unconverged(budget, until_converged=until_converged, shortcut=shortcut)
         import pandas as pd
 
@@ -1054,12 +1040,12 @@ def min_label_components(
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    mode = state_mode or _state_mode(labels.count())
+    n_labels = labels.count()
 
     def relabel(r: Rounds) -> DataFrame:
         labels = r.state.select("node", "label")
         neigh = (
-            _join_state(sym, labels, sym.dst == labels.node, mode)
+            _join_state(sym, labels, sym.dst == labels.node, n_labels)
             .groupBy(F.col("src").alias("node"))
             .agg(F.min("label").alias("nlabel"))
         )
@@ -1076,7 +1062,7 @@ def min_label_components(
             lk = step.select(
                 F.col("node").alias("pnode"), F.col("label1").alias("plabel")
             )
-            step = _join_state(step, lk, step.label1 == lk.pnode, mode).select(
+            step = _join_state(step, lk, step.label1 == lk.pnode, n_labels).select(
                 "node",
                 "label0",
                 F.least(
@@ -1127,7 +1113,6 @@ def _components_oracle() -> str:
 def g7_connected_components(
     spark: SparkSession,
     sf_dir: str,
-    state_mode: str | None = None,
     until_converged: bool = False,
 ) -> DataFrame:
     """G7 (scalable path): community structure via min-label
@@ -1141,10 +1126,10 @@ def g7_connected_components(
     # the CSR's indices ARE the symmetric pair list — under the kernel
     # gate the whole sym-DataFrame build (edge aggregate + union +
     # repartition + materialize + re-collect) disappears
-    edges, g = gk.resolve_graph(spark, sf_dir, kernel=state_mode is None)
+    edges, g = gk.resolve_graph(spark, sf_dir)
     labels, _ = min_label_components(
         None if g is not None else _sym(edges, key="dst"), CC_ITERS,
-        state_mode=state_mode, until_converged=until_converged, graph=g, spark=spark,
+        until_converged=until_converged, graph=g, spark=spark,
     )
     return labels.groupBy(F.col("label").cast("long").alias("component")).agg(
         F.count("*").alias("n_nodes")
@@ -1160,14 +1145,15 @@ def _brandes_forward(
     sources: DataFrame,
     levels: int,
     until_converged: bool = False,
-) -> list[DataFrame]:
+) -> tuple[list[DataFrame], list[int]]:
     """Level-synchronous BFS with shortest-path counts from each source.
 
     Returns one frontier DataFrame per BFS level, each holding
     (src, node, sigma) where sigma is the number of shortest s→node
-    paths — the forward half of Brandes' algorithm, distributed: every
-    level is one join on the frontier + one anti-join against the
-    visited set + one hash aggregate.
+    paths, and each level's row count (the driver's progress counts,
+    so no level is counted again) — the forward half of Brandes'
+    algorithm, distributed: every level is one join on the frontier +
+    one anti-join against the visited set + one hash aggregate.
 
     Direction-optimizing (Beamer-style): all parents of a level-l+1
     node sit at level l exactly, so when the still-unvisited (src,
@@ -1224,14 +1210,17 @@ def _brandes_forward(
         frontiers.append(nxt)
         return visited.unionByName(nxt.select("src", "node"))
 
-    fixpoint(
+    run = fixpoint(
         lvl0, level, levels, until_converged=until_converged, rows=True,
         acc=lvl0.select("src", "node"), fold=visit,
     )
-    return frontiers
+    # a level joins `frontiers` only when its count is nonzero
+    return frontiers, [srcs_n, *run.counts[: len(frontiers) - 1]]
 
 
-def _brandes_backward(sym: DataFrame, frontiers: list[DataFrame]) -> list[DataFrame]:
+def _brandes_backward(
+    sym: DataFrame, frontiers: list[DataFrame], sizes: list[int]
+) -> list[DataFrame]:
     """Dependency accumulation — the backward half of Brandes.
 
     Walks the BFS levels deepest-first; a node u at level l receives
@@ -1246,13 +1235,13 @@ def _brandes_backward(sym: DataFrame, frontiers: list[DataFrame]) -> list[DataFr
     (u, v) pairs after the equi-join on the other level, so the sums
     are identical, but on the dense test graph the deepest levels are
     ~10x smaller than the widest (118M → 12M rows at the worst level).
+    ``sizes`` are the levels' row counts from the forward pass.
     """
     lv = frontiers[-1].select("src", "node", "sigma", F.lit(0.0).alias("delta"))
-    lv_n = lv.count()
+    lv_n = sizes[-1]
     out = [lv]
     edges = sym.select(F.col("src").alias("unode"), F.col("dst").alias("vnode"))
-    for f in reversed(frontiers[:-1]):
-        f_n = f.count()
+    for f, f_n in zip(reversed(frontiers[:-1]), reversed(sizes[:-1])):
         succ = lv.select(
             F.col("src").alias("vsrc"),
             F.col("node").alias("vnode"),
@@ -1410,8 +1399,9 @@ def g3b_betweenness_sampled(
     sym = _sym(edges)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     srcs = nodes.where(F.col("node") % sample_mod == 0)
-    frontiers = _brandes_forward(sym, srcs, BW_LEVELS, until_converged=until_converged)
-    levels = _brandes_backward(sym, frontiers)
+    levels = _brandes_backward(
+        sym, *_brandes_forward(sym, srcs, BW_LEVELS, until_converged=until_converged)
+    )
     all_lv = levels[0]
     for lv in levels[1:]:
         all_lv = all_lv.unionByName(lv)
@@ -1423,8 +1413,8 @@ def g3b_betweenness_sampled(
         .agg(F.sum("delta").alias("sdelta"))
     )
     return (
-        acc.crossJoin(F.broadcast(n))
-        .crossJoin(F.broadcast(k))
+        acc.crossJoin(n)
+        .crossJoin(k)
         .select(
             "node",
             F.round((F.col("n") / F.col("k")) * F.col("sdelta") / 2, 6).alias(
@@ -1473,12 +1463,12 @@ def _backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     q = (
-        cum.crossJoin(F.broadcast(n))
+        cum.crossJoin(n)
         .where(F.col("cs") >= F.ceil(BACKBONE_Q * F.col("n_edges")).cast("bigint"))
         .agg(F.min("weight").alias("q75"))
     )
     return (
-        e0.crossJoin(F.broadcast(q))
+        e0.crossJoin(q)
         .where(F.col("weight") > F.col("q75"))
         .select("u", "v")
     )
@@ -1643,7 +1633,7 @@ def _kcore(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
         ),
     )
     k_med_row = (
-        dcum.crossJoin(F.broadcast(nn))
+        dcum.crossJoin(nn)
         .where(F.col("cs") >= F.ceil(0.5 * F.col("n_nodes")).cast("bigint"))
         .agg(F.min("d"))
         .collect()[0][0]

@@ -1,7 +1,7 @@
 """Broadcast-tier vectorized graph kernels (optimization round 11).
 
 The graph operators' join/aggregate loops are correct and scale-honest
-(state joins size-gated by `_state_mode`, relax volume budgeted per
+(state joins size-gated by `graph._join_state`, relax volume budgeted per
 task slot), but at the bench scale they execute 10^8-10^9 relax rows
 through row-at-a-time codegen at ~200-500 ns each, where the same
 adjacency walk costs ~1 ns as a vectorized numpy kernel
@@ -29,9 +29,9 @@ native code). This module supplies that kernel tier:
 :func:`resolve_graph` is the one place that picks the tier for a graph
 query, a composite or `closeness_for_scale`: the raw collect, else one
 edge aggregate probed by :func:`collect_graph`, else the distributed
-loop over that same aggregate. Above the gate — or when a caller
-explicitly pins a ``state_mode`` — every operator falls back to the
-unchanged distributed loop, which remains the 100 TB path. Results
+loop over that same aggregate. Above the gate (a gate of ``0`` turns
+the tier off) every operator falls back to the unchanged distributed
+loop, which remains the 100 TB path. Results
 are IDENTICAL by construction: the kernels replicate the exact
 fixed-round semantics of the registered oracles (hop caps, level caps,
 early exits on converged / empty frontiers, min-label round
@@ -53,7 +53,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from reddit_can_bigdata_spark.operators.common import (
     ITER_CHECKPOINT_DIR_CONF,
     materialize,
+    must_converge,
+    round_budget,
     shared,
+    unconverged,
 )
 
 #: conf knob: queries use the vectorized broadcast kernels only while
@@ -344,9 +347,9 @@ def resolve_graph(
     ``(edges, graph)``, the edge aggregate (u, v, weight) and/or its
     CSR, building each at most once.
 
-    - ``kernel=False`` (the caller pinned ``state_mode``, or runs a
-      loop-only plan): the caller's ``edges``, else the plain lazy
-      edge aggregate — no probe, no checkpoint;
+    - ``kernel=False`` (the caller runs a loop-only plan): the
+      caller's ``edges``, else the plain lazy edge aggregate — no
+      probe, no checkpoint;
     - a passed-in ``graph`` wins (a composite resolved it once for all
       of its arms);
     - no ``edges``: the raw collect (:func:`collect_graph_raw`, a
@@ -482,22 +485,27 @@ def _sources_df(
 
 # ---------------------------------------------------------------- closeness
 # Both kernels walk the same BFS per source, capped at ``hops`` levels
-# (uncapped when ``until_converged``: identical once hops >= diameter,
-# exactly the loop/oracle contract), on the dense tier all sources at
+# (with ``until_converged``, the loop tier's `common.round_budget`
+# ceiling: identical once hops >= diameter, exactly the loop/oracle
+# contract), on the dense tier all sources at
 # once (`_dense_levels`), on the executor tier one source at a time
 # (`_bfs_levels`). Only the reduction differs. State stays integer
 # until one double division per node, rounded 6, so the result is
 # bit-identical to the DataFrame loop.
 
 
-def _bfs_levels(ga: GraphArrays, p: int, cap: int, visited: np.ndarray, nxt: np.ndarray):
+def _bfs_levels(
+    ga: GraphArrays, p: int, cap: int, visited: np.ndarray, nxt: np.ndarray,
+    strict: bool = False,
+):
     """One source's level-synchronous BFS: yields (depth, positions
     first reached at that depth). ``visited`` and ``nxt`` are O(V)
     boolean masks the caller reuses across sources: level-set
     membership through a mask, not np.unique's O(E log E) sort of the
     gathered edges. The walk stops as soon as every node is visited,
     since the next gather over a near-full frontier could touch all 2E
-    slots just to find nothing."""
+    slots just to find nothing. ``strict``: a walk the cap stops
+    raises :func:`unconverged`, as the loop tier does."""
     visited[:] = False
     visited[p] = True
     frontier = np.array([p], dtype=np.int64)
@@ -513,6 +521,8 @@ def _bfs_levels(ga: GraphArrays, p: int, cap: int, visited: np.ndarray, nxt: np.
         visited[frontier] = True
         nvis += frontier.shape[0]
         yield depth, frontier
+    if strict and nvis < ga.n_nodes:
+        raise unconverged(cap, until_converged=True)
 
 
 def closeness_kernel_df(
@@ -526,13 +536,14 @@ def closeness_kernel_df(
     sum, then (cnt − 1) / Σd."""
     if g.n_nodes == 0:
         return _empty_result(spark, f"node long, {out_col} double")
-    cap = (1 << 62) if until_converged else hops
+    cap = round_budget(hops, until_converged)
+    strict = must_converge(cap, until_converged)
     if g.n_nodes <= TRIANGLE_DENSE_MAX_NODES:
         import pandas as pd
 
         cnt = np.ones(g.n_nodes, dtype=np.int64)
         dsum = np.zeros(g.n_nodes, dtype=np.int64)
-        for depth, nxt in _dense_levels(g, np.arange(g.n_nodes), cap):
+        for depth, nxt in _dense_levels(g, np.arange(g.n_nodes), cap, strict):
             c = nxt.sum(axis=1)
             cnt += c
             dsum += depth * c
@@ -551,7 +562,7 @@ def closeness_kernel_df(
                 cnt = np.ones(srcs.shape[0], dtype=np.int64)
                 dsum = np.zeros(srcs.shape[0], dtype=np.int64)
                 for i, p in enumerate(np.searchsorted(ga.nodes, srcs)):
-                    for depth, level in _bfs_levels(ga, p, cap, visited, nxt):
+                    for depth, level in _bfs_levels(ga, p, cap, visited, nxt, strict):
                         cnt[i] += level.shape[0]
                         dsum[i] += depth * level.shape[0]
                 yield pa.RecordBatch.from_arrays(
@@ -581,7 +592,8 @@ def closeness_sampled_kernel_df(
     ids = g.nodes[g.nodes % sample_mod == 0]
     if ids.shape[0] == 0:
         return _empty_result(spark, f"node long, {out_col} double")
-    cap = (1 << 62) if until_converged else hops
+    cap = round_budget(hops, until_converged)
+    strict = must_converge(cap, until_converged)
     if g.n_nodes <= TRIANGLE_DENSE_MAX_NODES:
         import pandas as pd
 
@@ -589,7 +601,7 @@ def closeness_sampled_kernel_df(
         sdist = np.zeros(g.n_nodes, dtype=np.int64)
         touched = np.zeros(g.n_nodes, dtype=bool)
         touched[srcpos] = True
-        for depth, nxt in _dense_levels(g, srcpos, cap):
+        for depth, nxt in _dense_levels(g, srcpos, cap, strict):
             newly = nxt.sum(axis=0)
             sdist += depth * newly
             touched |= newly > 0
@@ -610,7 +622,7 @@ def closeness_sampled_kernel_df(
                 srcs = batch.column("node").to_numpy(zero_copy_only=False)
                 for p in np.searchsorted(ga.nodes, srcs):
                     touched[p] = True
-                    for depth, level in _bfs_levels(ga, p, cap, visited, nxt):
+                    for depth, level in _bfs_levels(ga, p, cap, visited, nxt, strict):
                         touched[level] = True
                         sdist[level] += depth
             sel = np.flatnonzero(touched)
@@ -652,13 +664,13 @@ def _dense_adj(g: GraphArrays, dtype=np.float32) -> np.ndarray:
     return dense
 
 
-def _dense_levels(g: GraphArrays, srcpos: np.ndarray, cap: int):
+def _dense_levels(g: GraphArrays, srcpos: np.ndarray, cap: int, strict: bool = False):
     """The BFS of every source in ``srcpos`` at once, one float32 matmul
     per level: yields (depth, the k x V mask of the pairs first reached
-    at that depth). Same level sets, hop cap and early exit as
-    `_bfs_levels` (a row whose frontier empties or whose BFS finishes
-    simply stops advancing), so an integer reduction over the masks is
-    bit-identical to the per-source loop."""
+    at that depth). Same level sets, hop cap, early exit and ``strict``
+    check as `_bfs_levels` (a row whose frontier empties or whose BFS
+    finishes simply stops advancing), so an integer reduction over the
+    masks is bit-identical to the per-source loop."""
     k = int(srcpos.shape[0])
     A = _dense_adj(g, np.float32)
     visited = np.zeros((k, g.n_nodes), dtype=bool)
@@ -674,10 +686,12 @@ def _dense_levels(g: GraphArrays, srcpos: np.ndarray, cap: int):
         visited |= nxt
         yield depth, nxt
         frontier = nxt
+    if strict and frontier.any():
+        raise unconverged(cap, until_converged=True)
 
 
 def _dense_brandes(
-    g: GraphArrays, srcpos: np.ndarray, cap: int
+    g: GraphArrays, srcpos: np.ndarray, cap: int, strict: bool = False
 ) -> tuple[np.ndarray, np.ndarray] | None:
     """Accumulated Brandes delta over all sources via per-level BLAS
     matmuls; returns (delta_acc, reached_any) or None when sigma could
@@ -710,6 +724,9 @@ def _dense_brandes(
         dist[nxt] = depth
         sigma += S * nxt
         cur = nxt
+    else:
+        if strict and cur.any():
+            raise unconverged(cap, until_converged=True)
     max_depth = int(dist.max(initial=0))
     delta = np.zeros((k, nv), dtype=np.float64)
     inv_sigma = np.divide(
@@ -756,10 +773,11 @@ def betweenness_kernel_df(
     k = int(ids.shape[0])
     if k == 0:
         return _empty_result(spark, "node long, betweenness_est double")
-    cap = (1 << 62) if until_converged else levels
+    cap = round_budget(levels, until_converged)
+    strict = must_converge(cap, until_converged)
     scale = float(n_nodes) / float(k)
     if n_nodes <= TRIANGLE_DENSE_MAX_NODES:
-        dense = _dense_brandes(g, np.searchsorted(g.nodes, ids), cap)
+        dense = _dense_brandes(g, np.searchsorted(g.nodes, ids), cap, strict)
         if dense is not None:
             import pandas as pd
 
@@ -828,6 +846,9 @@ def betweenness_kernel_df(
                     else:  # pragma: no cover - adversarial path counts
                         np.add.at(sigma, nbrs[sel], sigma[reps[sel]])
                     frontiers.append(nxt)
+                else:
+                    if strict and nvis < nv:
+                        raise unconverged(cap, until_converged=True)
                 if frontiers[-1].shape[0] == 0:
                     frontiers.pop()
                 delta = np.zeros(nv, dtype=np.float64)
@@ -956,7 +977,7 @@ def degree_kernel_df(spark: SparkSession, g: GraphArrays) -> DataFrame:
         )
     )
     n = deg.agg(F.count("*").cast("double").alias("n_nodes"))
-    return deg.crossJoin(F.broadcast(n)).select(
+    return deg.crossJoin(n).select(
         "node",
         "degree",
         "weighted_degree",

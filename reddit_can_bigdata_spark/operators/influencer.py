@@ -233,9 +233,7 @@ def _scored(spark: SparkSession, sf_dir: str, arms: tuple[_Arm, ...]) -> DataFra
     comp = reduce(
         operator.add, (F.lit(a.weight) * norm(i, a) for i, a in enumerate(arms))
     )
-    return m.crossJoin(F.broadcast(b)).select(
-        *m.columns, F.round(comp, 6).alias("composite_score")
-    )
+    return m.crossJoin(b).select(*m.columns, F.round(comp, 6).alias("composite_score"))
 
 
 def _top(spark: SparkSession, sf_dir: str, arms: tuple[_Arm, ...]) -> DataFrame:

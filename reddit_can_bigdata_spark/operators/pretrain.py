@@ -164,8 +164,8 @@ def pretrain_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = docs.agg(F.count("*").cast("double").alias("n_docs"))
     scored = (
-        tf.join(F.broadcast(df), "term")
-        .crossJoin(F.broadcast(n_docs))
+        tf.join(df, "term")
+        .crossJoin(n_docs)
         .select(
             "doc_id",
             "term",
@@ -366,8 +366,8 @@ def pretrain_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = tok.groupBy("term").agg(F.count("*").alias("cnt"))
     total = vocab.agg(F.sum("cnt").cast("double").alias("total_toks"))
     return (
-        tok.join(F.broadcast(vocab), "term")
-        .crossJoin(F.broadcast(total))
+        tok.join(vocab, "term")
+        .crossJoin(total)
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_tokens"),
@@ -471,7 +471,8 @@ DECONTAM_N = 5  # tokens per collision shingle (tuned to the short
 DECONTAM_EVAL_MOD = 97  # doc_id % 97 == 0 is the held-out "benchmark" set
 # Broadcast the deduped eval grams only below this row count (~60 MB
 # at ~30 B/gram, inside the session's 64 MB autoBroadcast budget);
-# above it the semi-join becomes a shuffle-hash join instead.
+# above it the semi-join becomes a shuffle-hash join instead, which the
+# session's threshold never picks (it would sort the corpus-sized side).
 DECONTAM_BROADCAST_MAX_GRAMS = 2_000_000
 
 
@@ -885,7 +886,7 @@ def pretrain_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size("grams").cast("bigint").alias("n_grams"),
             F.explode_outer("grams").alias("gr"),
         )
-        .crossJoin(F.broadcast(bloom_row))
+        .crossJoin(bloom_row)
         .select(
             "doc_id",
             "n_grams",
@@ -1191,10 +1192,10 @@ def pretrain_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("element_at(split(gr, ' '), 1)") == F.col("pterm"),
         )
         .join(
-            F.broadcast(cur),
+            cur,
             F.expr("element_at(split(gr, ' '), 2)") == F.col("cterm"),
         )
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select(
             "gr",
             (
@@ -1295,7 +1296,7 @@ def pretrain_eval_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ratio = F.col("n_common") * 1.0 / F.col("n_eval")
     return (
-        pairs.join(F.broadcast(evn), "eval_id")
+        pairs.join(evn, "eval_id")
         .where(ratio >= CONTAIN_THRESHOLD)
         .select(
             "doc_id",

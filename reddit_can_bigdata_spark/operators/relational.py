@@ -222,7 +222,7 @@ def j1_lookup_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(5)
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )
-    return F.broadcast(top5).join(
+    return top5.join(
         t["customer"], top5.o_custkey == F.col("c_custkey"), "inner"
     ).select("o_orderkey", "o_totalprice", "c_name", "c_mktsegment")
 
@@ -448,7 +448,7 @@ def a4_multi_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     return (
         t["customer"]
-        .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(t["nation"], F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(
             F.count("*").alias("n_customers"),
@@ -775,7 +775,7 @@ def w5_w6_normalized_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL on both engines, not ANSI-error the job (NULLIF in the
     # oracle pins DuckDB to the same rule regardless of its
     # division-by-zero setting)
-    return m.crossJoin(F.broadcast(bounds)).select(
+    return m.crossJoin(bounds).select(
         "user_id",
         F.round(
             0.5 * F.try_divide(F.col("n_events") - F.col("min_n"), F.col("max_n") - F.col("min_n"))

@@ -103,7 +103,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = cosine_expr("embedding", "qv")
     return (
         emb.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select("vec_id", "label", cos.alias("cos_raw"))
         .orderBy(F.desc("cos_raw"), F.asc("vec_id"))
         .limit(10)
@@ -171,7 +171,7 @@ def ivf_assign(emb: DataFrame, cents: DataFrame | None = None) -> DataFrame:
 
     if cents is None:
         cents = ivf_centroids(emb)
-    scored = emb.crossJoin(F.broadcast(cents)).select(
+    scored = emb.crossJoin(cents).select(
         "vec_id", "label", "embedding", "cid", cosine_expr("embedding", "cv").alias("sim")
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
@@ -223,7 +223,7 @@ def sim_ivf_cluster_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cos = cosine_expr("embedding", "qv")
     return (
-        clustered.join(F.broadcast(qc), "cid")
+        clustered.join(qc, "cid")
         .where(F.col("vec_id") != 0)
         .select("vec_id", "label", cos.alias("cos_raw"))
         .orderBy(F.desc("cos_raw"), F.asc("vec_id"))
@@ -351,7 +351,7 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         emb.where(F.col("vec_id") >= KNN_QUERIES)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select(
             "qid", "vec_id", "label",
             cosine_expr("embedding", "qv").alias("cos_raw"),
@@ -411,7 +411,7 @@ def sim_ivf_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cos = cosine_expr("embedding", "qv")
     return (
-        clustered.join(F.broadcast(qc), "cid")
+        clustered.join(qc, "cid")
         .where(F.col("vec_id") != 0)
         .select("vec_id", "label", cos.alias("cos_raw"))
         .orderBy(F.desc("cos_raw"), F.asc("vec_id"))
@@ -484,7 +484,7 @@ def sim_sq_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dq = (
-        emb.crossJoin(F.broadcast(scales))
+        emb.crossJoin(scales)
         .select(
             "vec_id",
             "label",
@@ -547,14 +547,14 @@ def sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     cents = ivf_centroids(emb)
     probe = (
-        cents.crossJoin(F.broadcast(qv))
+        cents.crossJoin(qv)
         .orderBy(F.desc(cosine_expr("cv", "qv")), F.asc("cid"))
         .limit(IVF_NPROBE)
         .select("cid", "qv")
     )
     cos = cosine_expr("embedding", "qv")
     return (
-        clustered.join(F.broadcast(probe), "cid")
+        clustered.join(probe, "cid")
         .where(F.col("vec_id") != 0)
         .select("vec_id", "label", cos.alias("cos_raw"))
         .orderBy(F.desc("cos_raw"), F.asc("vec_id"))
@@ -745,7 +745,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"slice(embedding, sub*{PQ_SUB_D}+1, {PQ_SUB_D})"
         ).alias("sv"),
     )
-    scored = sv.join(F.broadcast(cents), "sub").select(
+    scored = sv.join(cents, "sub").select(
         "vec_id",
         "sub",
         "cid",
@@ -888,9 +888,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sub", F.col("cid").alias("code"), F.col("cv").alias("pcv")
     )
     assigned = ivf_assign(emb, coarse)
-    resid = assigned.join(
-        F.broadcast(coarse.select("cid", F.col("cv").alias("ccv"))), "cid"
-    ).select(
+    resid = assigned.join(coarse.select("cid", F.col("cv").alias("ccv")), "cid").select(
         "vec_id",
         "cid",
         F.expr(
@@ -908,7 +906,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sub",
         F.expr(f"slice(rv, sub*{PQ_SUB_D}+1, {PQ_SUB_D})").alias("svv"),
     )
-    scored = sv.join(F.broadcast(pq), "sub").select(
+    scored = sv.join(pq, "sub").select(
         "vec_id", "cid", "sub", "code",
         F.expr(_SQL2_SPARK.format(a="svv", b="pcv")).alias("d2"),
     )
@@ -923,7 +921,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc(cosine_expr("embedding", "cv")), F.asc("cid")
     )
     probes = (
-        q.crossJoin(F.broadcast(coarse))
+        q.crossJoin(coarse)
         .withColumn("rn", F.row_number().over(wp))
         .where(F.col("rn") <= IVFPQ_NPROBE)
         .select(
@@ -942,13 +940,13 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sub",
         F.expr(f"slice(qrv, sub*{PQ_SUB_D}+1, {PQ_SUB_D})").alias("qsvv"),
     )
-    dtab = qsv.join(F.broadcast(pq), "sub").select(
+    dtab = qsv.join(pq, "sub").select(
         "cid", "sub", "code",
         F.expr(_SQL2_SPARK.format(a="qsvv", b="pcv")).alias("qd2"),
     )
     adc = (
         codes.where(F.col("vec_id") != 0)
-        .join(F.broadcast(dtab), ["cid", "sub", "code"])
+        .join(dtab, ["cid", "sub", "code"])
         .groupBy("vec_id")
         .agg(F.sum("qd2").alias("dist2"))
     )
@@ -1015,9 +1013,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cos = cosine_expr("embedding", "av")
     scored = (
-        emb.join(
-            F.broadcast(anchors), F.col("label") != F.col("anchor_label")
-        )
+        emb.join(anchors, F.col("label") != F.col("anchor_label"))
         .select(
             "anchor_id",
             F.col("vec_id").alias("neg_id"),
@@ -1134,7 +1130,7 @@ def sim_binary_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ham = (
         coded.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select(
             "vec_id",
             "label",
@@ -1197,7 +1193,7 @@ def sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     basis = spark.read.parquet(PCA_FIXTURE)
     score = dot_expr("embedding", "axis") - F.col("offset")
     return (
-        emb.crossJoin(F.broadcast(basis))
+        emb.crossJoin(basis)
         .select("vec_id", "pc", F.round(score, 6).alias("score"))
     )
 
@@ -1304,7 +1300,7 @@ def _register_rrf() -> None:
         w_vec = Window.orderBy(F.desc("cos_raw"), F.asc("doc_id"))
         vec = (
             emb.where(F.col("vec_id") != 0)
-            .crossJoin(F.broadcast(q))
+            .crossJoin(q)
             .select(F.col("vec_id").alias("doc_id"), cos.alias("cos_raw"))
             .orderBy(F.desc("cos_raw"), F.asc("doc_id"))
             .limit(RRF_POOL)
@@ -1456,7 +1452,7 @@ def _register_ivf_recall() -> None:
             F.desc("cos_raw"), F.asc("vec_id")
         )
         exact = (
-            corpus.crossJoin(F.broadcast(q))
+            corpus.crossJoin(q)
             .select(
                 "qid", "vec_id",
                 cosine_expr("embedding", "qv").alias("cos_raw"),
@@ -1481,7 +1477,7 @@ def _register_ivf_recall() -> None:
             ivf_corpus = ivf_corpus.where(F.col("vec_id") % sample_mod == 0)
         ivf = (
             ivf_corpus
-            .join(F.broadcast(qc), "cid")
+            .join(qc, "cid")
             .select(
                 "qid", "vec_id",
                 cosine_expr("embedding", "qv").alias("cos_raw"),
@@ -1510,7 +1506,7 @@ def _register_ivf_recall() -> None:
                 .cast("bigint")
                 .alias("n_overlap"),
             )
-            .join(F.broadcast(ivf_counts), "qid", "left")
+            .join(ivf_counts, "qid", "left")
             .select(
                 "qid",
                 "n_exact",
@@ -1607,7 +1603,7 @@ def _register_mrl_recall() -> None:
         )
         ranked = (
             emb.where(F.col("vec_id") >= RECALL_QUERIES)
-            .crossJoin(F.broadcast(q))
+            .crossJoin(q)
             .crossJoin(F.broadcast(dims))
             .select("d", "qid", "vec_id", cos.alias("cos_raw"))
             .withColumn("rn", F.row_number().over(w))
@@ -1791,9 +1787,7 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cid"))
 
     def assigned(cents: DataFrame) -> DataFrame:
-        scored = emb.join(F.broadcast(cents)).withColumn(
-            "d2", F.expr(_SQDIST.format(a="e", b="cv"))
-        )
+        scored = emb.join(cents).withColumn("d2", F.expr(_SQDIST.format(a="e", b="cv")))
         return (
             scored.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
@@ -1914,7 +1908,7 @@ def sim_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("k"),
         F.max("n_vectors").alias("mx"),
     )
-    return counts.crossJoin(F.broadcast(tot)).select(
+    return counts.crossJoin(tot).select(
         "cid",
         "n_vectors",
         F.round(F.col("n_vectors") * 1.0 / F.col("n"), 6).alias("share"),

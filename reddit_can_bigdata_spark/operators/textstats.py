@@ -503,8 +503,8 @@ def bm25_scored(docs: DataFrame) -> DataFrame:
         for i in range(len(BM25_QUERY))
     )
     return (
-        base.crossJoin(F.broadcast(dfs))
-        .crossJoin(F.broadcast(stats))
+        base.crossJoin(dfs)
+        .crossJoin(stats)
         .select("doc_id", F.expr(terms).alias("score"))
     )
 
@@ -567,9 +567,9 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         bcnt.withColumn("w1", w1)
         .withColumn("w2", w2)
         .join(F.broadcast(uni.selectExpr("term AS w1", "cnt AS c1")), "w1")
-        .join(F.broadcast(uni.selectExpr("term AS w2", "cnt AS c2")), "w2")
-        .crossJoin(F.broadcast(total))
-        .crossJoin(F.broadcast(btotal))
+        .join(uni.selectExpr("term AS w2", "cnt AS c2"), "w2")
+        .crossJoin(total)
+        .crossJoin(btotal)
         .select(
             "bigram",
             "pair_cnt",

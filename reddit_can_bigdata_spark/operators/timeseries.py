@@ -455,7 +455,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     for stage in FUNNEL_STAGES[1:]:
         nxt = (
             ev.where(F.col("event_type") == stage)
-            .join(F.broadcast(prev.select("user_id", F.col("t").alias("pt"))), "user_id")
+            .join(prev.select("user_id", F.col("t").alias("pt")), "user_id")
             .where(F.col("tus") > F.col("pt"))
             .groupBy("user_id")
             .agg(F.min("tus").alias("t"))
@@ -538,7 +538,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         active.groupBy("cohort_wk", "wk")
         .agg(F.count("*").cast("bigint").alias("n_active"))
-        .join(F.broadcast(sizes), "cohort_wk")
+        .join(sizes, "cohort_wk")
         .select(
             F.date_format("cohort_wk", "yyyy-MM-dd").alias("cohort_week"),
             (F.datediff(F.col("wk"), F.col("cohort_wk")) / 7)

@@ -53,9 +53,9 @@ def multiway_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     return (
         t["lineitem"]
-        .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(t["region"]), F.col("r_regionkey") == F.col("n_regionkey"))
+        .join(t["supplier"], F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(t["nation"], F.col("n_nationkey") == F.col("s_nationkey"))
+        .join(t["region"], F.col("r_regionkey") == F.col("n_regionkey"))
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
             F.count("*").alias("n_items"),
@@ -83,7 +83,7 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     promo = F.sum(F.when(F.col("p_type") == "PROMO", _rev())).cast("double")
     return (
         t["lineitem"]
-        .join(F.broadcast(t["part"]), F.col("p_partkey") == F.col("l_partkey"))
+        .join(t["part"], F.col("p_partkey") == F.col("l_partkey"))
         .agg(
             F.round(promo / F.sum(_rev()).cast("double"), 12).alias("promo_share"),
             F.count("*").alias("n_items"),
@@ -199,7 +199,7 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(
-            orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")),
+            orders.join(cust, F.col("o_custkey") == F.col("c_custkey")),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .groupBy(
@@ -292,9 +292,9 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = t["lineitem"].where(F.col("l_returnflag") == "R")
     return (
-        li.join(F.broadcast(orders), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("c_nationkey"))
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
+        .join(t["nation"], F.col("n_nationkey") == F.col("c_nationkey"))
         .groupBy("c_custkey", "c_name", F.col("n_name").alias("nation"))
         .agg(F.sum(_rev()).alias("rev_exact"))
         .orderBy(F.desc("rev_exact"), F.asc("c_custkey"))
@@ -348,8 +348,8 @@ def tpch_q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         t["orders"]
-        .join(F.broadcast(big), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
+        .join(big, F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(20)
         .select(
@@ -407,11 +407,11 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("sn_key") % 2 == 1) & (F.col("cn_key") % 2 == 0)
     )
     return (
-        li.join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(F.broadcast(t["orders"]), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(t["customer"]), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(sn), F.col("sn_key") == F.col("s_nationkey"))
-        .join(F.broadcast(cn), F.col("cn_key") == F.col("c_nationkey"))
+        li.join(t["supplier"], F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(t["orders"], F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
+        .join(sn, F.col("sn_key") == F.col("s_nationkey"))
+        .join(cn, F.col("cn_key") == F.col("c_nationkey"))
         .where(pair)
         .groupBy(
             "supp_nation",
@@ -472,13 +472,13 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vol = (
         t["lineitem"]
-        .join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(F.broadcast(orders), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(t["customer"]), F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(cn), F.col("cn_key") == F.col("c_nationkey"))
-        .join(F.broadcast(region), F.col("r_regionkey") == F.col("cn_rkey"))
-        .join(F.broadcast(sn), F.col("sn_key") == F.col("s_nationkey"))
+        .join(part, F.col("p_partkey") == F.col("l_partkey"))
+        .join(t["supplier"], F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
+        .join(cn, F.col("cn_key") == F.col("c_nationkey"))
+        .join(region, F.col("r_regionkey") == F.col("cn_rkey"))
+        .join(sn, F.col("sn_key") == F.col("s_nationkey"))
         .select(
             F.year("o_orderdate").cast("int").alias("o_year"),
             _rev().alias("vol"),

@@ -92,16 +92,16 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey")
     esupp = (
         t["supplier"]
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("s_nationkey"))
+        .join(t["nation"], F.col("n_nationkey") == F.col("s_nationkey"))
         .join(
-            F.broadcast(t["region"].where(F.col("r_name") == "EUROPE")),
+            t["region"].where(F.col("r_name") == "EUROPE"),
             F.col("r_regionkey") == F.col("n_regionkey"),
         )
         .select("s_suppkey", "s_acctbal", "s_name", F.col("n_name").alias("nation"))
     )
     sc = (
         _supply(t)
-        .join(F.broadcast(parts), F.col("p_partkey") == F.col("l_partkey"))
+        .join(parts, F.col("p_partkey") == F.col("l_partkey"))
         .join(F.broadcast(esupp), F.col("s_suppkey") == F.col("l_suppkey"))
     )
     minc = sc.groupBy(F.col("p_partkey").alias("mk")).agg(
@@ -196,17 +196,17 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
     return (
         t["lineitem"]
         .join(
-            orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")),
+            orders.join(cust, F.col("o_custkey") == F.col("c_custkey")),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .join(
-            F.broadcast(t["supplier"]),
+            t["supplier"],
             (F.col("s_suppkey") == F.col("l_suppkey"))
             & (F.col("s_nationkey") == F.col("c_nationkey")),
         )
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("s_nationkey"))
+        .join(t["nation"], F.col("n_nationkey") == F.col("s_nationkey"))
         .join(
-            F.broadcast(t["region"].where(F.col("r_name") == "ASIA")),
+            t["region"].where(F.col("r_name") == "ASIA"),
             F.col("r_regionkey") == F.col("n_regionkey"),
         )
         .groupBy(F.col("n_name").alias("nation"))
@@ -264,10 +264,10 @@ def tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t["orders"].select("o_orderkey", "o_orderdate")
     return (
         t["lineitem"]
-        .join(F.broadcast(parts), F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(parts, F.col("p_partkey") == F.col("l_partkey"))
+        .join(t["supplier"], F.col("s_suppkey") == F.col("l_suppkey"))
         .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("s_nationkey"))
+        .join(t["nation"], F.col("n_nationkey") == F.col("s_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("int").alias("o_year"),
@@ -306,9 +306,9 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tables(spark, sf_dir)
     afr = (
         t["supplier"]
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("s_nationkey"))
+        .join(t["nation"], F.col("n_nationkey") == F.col("s_nationkey"))
         .join(
-            F.broadcast(t["region"].where(F.col("r_name") == "AFRICA")),
+            t["region"].where(F.col("r_name") == "AFRICA"),
             F.col("r_regionkey") == F.col("n_regionkey"),
         )
         .select("s_suppkey")
@@ -316,7 +316,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two consumers: threshold + filter
     val = materialize(
         t["lineitem"]
-        .join(F.broadcast(afr), F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(afr, F.col("s_suppkey") == F.col("l_suppkey"))
         .groupBy("l_partkey")
         .agg(F.sum(_rev()).alias("value_dec")),
         eager=False,
@@ -325,7 +325,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("value_dec").cast("double") * F.lit(0.0008)).alias("thr")
     )
     return (
-        val.crossJoin(F.broadcast(thr))
+        val.crossJoin(thr)
         .where(F.col("value_dec").cast("double") > F.col("thr"))
         .select(
             F.col("l_partkey").alias("partkey"),
@@ -456,9 +456,9 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = rev.agg(F.max("total_dec").alias("max_dec"))
     return (
-        rev.crossJoin(F.broadcast(mx))
+        rev.crossJoin(mx)
         .where(F.col("total_dec") == F.col("max_dec"))
-        .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(t["supplier"], F.col("s_suppkey") == F.col("l_suppkey"))
         .select(
             "s_suppkey", "s_name", F.col("total_dec").cast("double").alias("total_revenue")
         )
@@ -496,8 +496,8 @@ def tpch_q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     bad = t["supplier"].where(F.col("s_acctbal") < 0.0).select("s_suppkey")
     return (
         _supply(t)
-        .join(F.broadcast(parts), F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(bad), F.col("s_suppkey") == F.col("l_suppkey"), "left_anti")
+        .join(parts, F.col("p_partkey") == F.col("l_partkey"))
+        .join(bad, F.col("s_suppkey") == F.col("l_suppkey"), "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").cast("bigint").alias("supplier_cnt"))
     )
@@ -532,9 +532,7 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     parts = t["part"].where(
         (F.col("p_brand") == "Brand#4") & (F.col("p_type") == "PROMO")
     ).select("p_partkey")
-    li = t["lineitem"].join(
-        F.broadcast(parts), F.col("p_partkey") == F.col("l_partkey")
-    )
+    li = t["lineitem"].join(parts, F.col("p_partkey") == F.col("l_partkey"))
     avg_qty = li.groupBy(F.col("l_partkey").alias("ak")).agg(
         F.avg("l_quantity").alias("avg_qty")
     )
@@ -601,7 +599,7 @@ def tpch_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t["lineitem"]
         .where(F.col("l_quantity").between(1, 30))  # envelope of the 3 ranges
-        .join(F.broadcast(parts), F.col("p_partkey") == F.col("l_partkey"))
+        .join(parts, F.col("p_partkey") == F.col("l_partkey"))
         .where(cond)
         .agg(
             F.sum(_rev()).cast("double").alias("revenue"),
@@ -650,7 +648,7 @@ def tpch_q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
         )
-        .join(F.broadcast(parts), F.col("p_partkey") == F.col("l_partkey"))
+        .join(parts, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("sq"))
         .where(F.col("sq") > Q20_MIN_QTY)
@@ -660,9 +658,9 @@ def tpch_q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t["supplier"]
         .join(F.broadcast(qual), F.col("l_suppkey") == F.col("s_suppkey"), "left_semi")
-        .join(F.broadcast(t["nation"]), F.col("n_nationkey") == F.col("s_nationkey"))
+        .join(t["nation"], F.col("n_nationkey") == F.col("s_nationkey"))
         .join(
-            F.broadcast(t["region"].where(F.col("r_name") == "EUROPE")),
+            t["region"].where(F.col("r_name") == "EUROPE"),
             F.col("r_regionkey") == F.col("n_regionkey"),
         )
         .select("s_name", F.col("n_name").alias("nation"))
@@ -718,7 +716,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ls = (
         t["lineitem"]
         .where(F.col("l_shipdate").isNotNull())
-        .join(F.broadcast(fo), F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
+        .join(fo, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
         .groupBy("l_orderkey", "l_suppkey")
         .agg(F.max("l_shipdate").alias("smax"))
     )
@@ -738,9 +736,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("n_at_max") == 1)
     )
     return (
-        blamed.join(
-            F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("l_suppkey")
-        )
+        blamed.join(t["supplier"], F.col("s_suppkey") == F.col("l_suppkey"))
         .groupBy("s_name")
         .agg(F.count("*").cast("bigint").alias("numwait"))
         # asc_nulls_last: Spark's ASC default is NULLS FIRST, DuckDB's
@@ -796,7 +792,7 @@ def tpch_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataF
         ).alias("avg_bal")
     )
     return (
-        cust.crossJoin(F.broadcast(avg_bal))
+        cust.crossJoin(avg_bal)
         .where(F.col("c_acctbal") > F.col("avg_bal"))
         .join(
             t["orders"]

@@ -239,6 +239,10 @@ def get_spark(app_name: str = "reddit-can-bigdata-spark", shuffle_partitions: in
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # The one join-strategy policy: sides planned under this size
+        # broadcast, and AQE re-plans from finished stages' sizes. A
+        # hint stays only where a stated reason says this cannot choose
+        # (tests/test_join_policy.py lists each one with its reason).
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -493,7 +493,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with BoundedRun(spark, os.path.join(sf_dir, "events.parquet")) as run:
         stream = parquet_stream(spark, run.src)
-        enriched = stream.join(F.broadcast(profile), "user_id")
+        enriched = stream.join(profile, "user_id")
         agg = enriched.groupBy("event_type").agg(
             F.count("*").cast("bigint").alias("n_events"),
             F.count(

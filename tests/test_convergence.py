@@ -102,13 +102,14 @@ def test_brandes_converged_matches_closed_form(spark):
     srcs = sym.select("src").distinct().select(F.col("src").alias("node"))
 
     # fixed rounds: BFS stops BW_LEVELS hops out -> truncated frontier list
-    fixed = _brandes_forward(sym, srcs, BW_LEVELS)
+    fixed, _ = _brandes_forward(sym, srcs, BW_LEVELS)
     assert len(fixed) == BW_LEVELS + 1  # level 0 + BW_LEVELS rounds
 
-    frontiers = _brandes_forward(sym, srcs, BW_LEVELS, until_converged=True)
+    frontiers, sizes = _brandes_forward(sym, srcs, BW_LEVELS, until_converged=True)
     assert len(frontiers) == N  # levels 0..diameter
+    assert sizes == [f.count() for f in frontiers]
 
-    levels = _brandes_backward(sym, frontiers)
+    levels = _brandes_backward(sym, frontiers, sizes)
     all_lv = levels[0]
     for lv in levels[1:]:
         all_lv = all_lv.unionByName(lv)
@@ -201,3 +202,32 @@ class TestReliableCheckpointMode:
             spark.conf.unset(ITER_CHECKPOINT_DIR_CONF)
         assert local, name
         assert local == reliable
+
+
+@pytest.mark.parametrize("tier", ["dense", "executor", "loop"])
+@pytest.mark.parametrize(
+    "name", ["g4_closeness_centrality", "g4c_closeness_sampled", "g3b_betweenness_sampled"]
+)
+def test_until_converged_ceiling_raises_on_every_tier(spark, sf_dir, monkeypatch, tier, name):
+    """One until-converged ceiling for both graph tiers: with it at 2
+    rounds, the path's BFS (diameter 11) stops short of its fixed point,
+    and every tier raises the loop driver's error instead of returning
+    truncated values (an executor-tier task raises it inside Spark)."""
+    import re
+
+    from test_oracle_parity import _conf
+
+    from reddit_can_bigdata_spark.operators import common, graphkernel as gk
+    from reddit_can_bigdata_spark.registry import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    monkeypatch.setattr(common, "UNTIL_CONVERGED_MAX_ROUNDS", 2)
+    if tier == "executor":
+        monkeypatch.setattr(gk, "TRIANGLE_DENSE_MAX_NODES", 0)
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1) for i in range(N - 1)], "u long, v long, weight long"
+    )
+    confs = {gk.GRAPH_KERNEL_MAX_EDGES_CONF: "0"} if tier == "loop" else {}
+    msg = str(common.unconverged(2, until_converged=True))
+    with _conf(spark, **confs), pytest.raises(Exception, match=re.escape(msg)):
+        REGISTRY[name].fn(spark, sf_dir, edges=edges, until_converged=True).collect()

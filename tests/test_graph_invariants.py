@@ -76,8 +76,7 @@ def test_distributed_brandes_full_sources_matches_exact(spark, sf_dir, edges):
         e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     ).cache()
     nodes = sym.select(F.col("src").alias("node")).distinct()
-    frontiers = _brandes_forward(sym, nodes, BW_LEVELS)
-    levels = _brandes_backward(sym, frontiers)
+    levels = _brandes_backward(sym, *_brandes_forward(sym, nodes, BW_LEVELS))
     all_lv = levels[0]
     for lv in levels[1:]:
         all_lv = all_lv.unionByName(lv)

@@ -231,21 +231,6 @@ def test_a7_table_counts_take_two_jobs(spark, duck, sf_dir):
     assert _jobs(spark, lambda: fn(spark, sf_dir).collect()) <= 2
 
 
-def test_pinned_state_mode_skips_the_count_job(spark, sf_dir):
-    """A caller that pins ``state_mode`` gets the loop without the
-    state-size count that only the unpinned choice needs, so it
-    submits fewer jobs than the unpinned loop tier."""
-    from reddit_can_bigdata_spark.operators.graph import g7_label_propagation
-
-    with _conf(spark, **{GRAPH_KERNEL_MAX_EDGES_CONF: "0"}):
-        unpinned = _jobs(spark, lambda: g7_label_propagation(spark, sf_dir).collect())
-    pinned = _jobs(
-        spark,
-        lambda: g7_label_propagation(spark, sf_dir, state_mode="broadcast").collect(),
-    )
-    assert 0 < pinned < unpinned, (pinned, unpinned)
-
-
 def test_g7_components_do_not_probe_twice(spark, sf_dir):
     """Above the kernel gate g7 components run the loop over the edge
     aggregate the resolver already probed, with no second count over

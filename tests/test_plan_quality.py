@@ -92,48 +92,50 @@ def test_fk_join_then_group_reuses_partitioning(spark, sf_dir):
     assert count_exchanges(df) <= 2, formatted_plan(df)
 
 
-def test_iterative_state_join_has_broadcast_ceiling(spark, sf_dir):
+def test_iterative_state_join_has_broadcast_ceiling(spark, sf_dir, monkeypatch):
     """G5/G6/G7 loops: below the state-size ceiling the per-iteration
     state join broadcasts (edge table never shuffles); above it the
     SAME code must switch to a shuffle join — the broadcast-OOM guard.
     One iteration both ways: expected join strategy AND identical
     results."""
     from pyspark.sql import functions as F
+    from test_oracle_parity import _conf
 
+    from reddit_can_bigdata_spark.operators import graph
     from reddit_can_bigdata_spark.operators.graph import (
         _edges,
         _join_state,
-        _state_mode,
         STATE_BROADCAST_MAX_ROWS,
         g6_pagerank,
     )
-
-    assert _state_mode(100) == "broadcast"
-    assert _state_mode(STATE_BROADCAST_MAX_ROWS + 1) == "shuffle"
-    assert _state_mode(10, override="shuffle") == "shuffle"
+    from reddit_can_bigdata_spark.operators.graphkernel import GRAPH_KERNEL_MAX_EDGES_CONF
 
     e = _edges(spark, sf_dir)
     sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst"), "weight")
     state = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("rank")
     )
-    one_bc = _join_state(sym, state, sym.src == state.node, "broadcast").groupBy(
+    below, above = STATE_BROADCAST_MAX_ROWS, STATE_BROADCAST_MAX_ROWS + 1
+    one_bc = _join_state(sym, state, sym.src == state.node, below).groupBy(
         "dst"
     ).agg(F.sum(F.col("rank") * F.col("weight")).alias("s"))
-    one_sh = _join_state(sym, state, sym.src == state.node, "shuffle").groupBy(
+    one_sh = _join_state(sym, state, sym.src == state.node, above).groupBy(
         "dst"
     ).agg(F.sum(F.col("rank") * F.col("weight")).alias("s"))
     assert "BroadcastHashJoin" in join_kinds(one_bc), join_kinds(one_bc)
     sh_kinds = join_kinds(one_sh)
-    assert "ShuffledHashJoin" in sh_kinds or "SortMergeJoin" in sh_kinds, sh_kinds
+    assert "ShuffledHashJoin" in sh_kinds, sh_kinds
 
     rows_bc = {(r["dst"], r["s"]) for r in one_bc.collect()}
     rows_sh = {(r["dst"], r["s"]) for r in one_sh.collect()}
     assert rows_bc == rows_sh
 
-    # full 10-iteration pagerank agrees across modes (rounded output)
-    pr_bc = {r["node"]: r["pagerank"] for r in g6_pagerank(spark, sf_dir, "broadcast").collect()}
-    pr_sh = {r["node"]: r["pagerank"] for r in g6_pagerank(spark, sf_dir, "shuffle").collect()}
+    # full 10-iteration pagerank on the loop tier agrees across modes
+    # (rounded output); the ceiling at 0 puts every state above it
+    with _conf(spark, **{GRAPH_KERNEL_MAX_EDGES_CONF: "0"}):
+        pr_bc = {r["node"]: r["pagerank"] for r in g6_pagerank(spark, sf_dir).collect()}
+        monkeypatch.setattr(graph, "STATE_BROADCAST_MAX_ROWS", 0)
+        pr_sh = {r["node"]: r["pagerank"] for r in g6_pagerank(spark, sf_dir).collect()}
     assert pr_bc == pr_sh
 
 

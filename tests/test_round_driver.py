@@ -13,6 +13,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from reddit_can_bigdata_spark.operators.graphkernel import GRAPH_KERNEL_MAX_EDGES_CONF
+
 PKG = Path(__file__).resolve().parent.parent / "reddit_can_bigdata_spark"
 OPERATORS = PKG / "operators"
 DRIVER = ("common.py", "fixpoint")
@@ -22,8 +24,9 @@ ALLOWED = {
     ("graph.py", "_brandes_backward"): (
         "a fold over the forward pass's known levels, deepest first: its"
         " length is fixed by the input list, so there is no budget, no"
-        " fixed-point test and no early exit; its count sizes the"
-        " push/pull choice of the level, it is not a progress test"
+        " fixed-point test and no early exit; it materializes each level"
+        " and counts nothing (the forward pass's counts size its push/pull"
+        " choice)"
     ),
 }
 
@@ -116,6 +119,8 @@ def test_no_thread_active_session_lookup():
 # --- jobs per round ------------------------------------------------------
 
 N = 12  # the path 0-1-...-11: no loop below reaches its fixed point early
+#: a registered graph query on its distributed loop: the kernel gate off
+LOOP_TIER = {GRAPH_KERNEL_MAX_EDGES_CONF: "0"}
 
 
 def _path_sym(spark, weighted: bool = False):
@@ -127,12 +132,15 @@ def _path_sym(spark, weighted: bool = False):
 
 def _loops(spark, sf_dir, monkeypatch):
     """name -> run(r): one call of the loop with r rounds."""
+    from test_oracle_parity import _conf
+
     from reddit_can_bigdata_spark.operators import advanced, graph, similarity
 
-    def registered(mod, const, fn, **kw):
+    def registered(mod, const, fn, **confs):
         def run(r):
             monkeypatch.setattr(mod, const, r)
-            fn(spark, sf_dir, **kw).collect()
+            with _conf(spark, **confs):
+                fn(spark, sf_dir).collect()
 
         return run
 
@@ -144,14 +152,9 @@ def _loops(spark, sf_dir, monkeypatch):
         graph.label_prop_partition(wsym)
 
     return {
-        "g6_pagerank": registered(
-            graph, "PAGERANK_ITERS", graph.g6_pagerank, state_mode="broadcast"
-        ),
+        "g6_pagerank": registered(graph, "PAGERANK_ITERS", graph.g6_pagerank, **LOOP_TIER),
         "g5_eigenvector_centrality": registered(
-            advanced,
-            "EIGEN_ITERS",
-            advanced.g5_eigenvector_centrality,
-            state_mode="broadcast",
+            advanced, "EIGEN_ITERS", advanced.g5_eigenvector_centrality, **LOOP_TIER
         ),
         "g12_kcore": registered(graph, "KCORE_MAX_PEELS", graph.g12_kcore),
         "sim_kmeans_lloyd": registered(
@@ -200,3 +203,4 @@ def test_jobs_per_round_are_pinned(name, spark, sf_dir, monkeypatch):
     jobs = [_jobs(spark, lambda r=r: run(r)) for r in ROUNDS.get(name, (1, 2, 3))]
     per_round = {b - a for a, b in zip(jobs, jobs[1:])}
     assert per_round == {JOBS_PER_ROUND[name]}, (name, jobs)
+
